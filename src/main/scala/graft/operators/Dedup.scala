@@ -595,11 +595,12 @@ object Dedup {
     * min-id is its deterministic tie-break). Returns the SURVIVING corpus
     * as (id, c_id).
     *
-    * Scale shape: the centroid set is O(N/stride) and broadcast, the
-    * assignment is one linear pass, and pairwise work is Σ cluster² — the
-    * whole point of SemDeDup is that k-means blocking bounds the quadratic
-    * term when no natural blocking key (label, source) exists. The drop
-    * set is an aggregated anti-join, never a driver collect.
+    * Scale shape: the centroid set is O(N/stride) and collected to the
+    * driver, the assignment is one map-only pass, and pairwise work is
+    * Σ cluster² — the whole point of SemDeDup is that k-means blocking
+    * bounds the quadratic term when no natural blocking key (label,
+    * source) exists. The drop set is an aggregated anti-join, never a
+    * driver collect.
     */
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
                stride: Long, tau: Double): DataFrame = {

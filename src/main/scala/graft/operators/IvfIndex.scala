@@ -1,9 +1,14 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
+import graft.expressions.{CentroidSet, VectorExpressions}
 import graft.functions.Vectors
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** IVF (inverted-file) approximate nearest neighbor — the classic
   * centroid-partitioned index (the structure behind FAISS's IVF family),
@@ -18,8 +23,10 @@ import org.apache.spark.sql.functions._
   *   3. a query probes only the `nProbe` centroids closest to it, and
   *      brute-forces the union of those lists.
   *
-  * Scale shape: corpus-side work is O(N·C) dot products (C = #centroids,
-  * typically √N) in one broadcast-join stage — no shuffle of the corpus;
+  * Scale shape: the centroid set (C = #centroids, typically √N) is
+  * collected to the driver and rides into every task inside one
+  * [[graft.expressions.NearestCentroid]] expression, so corpus-side work
+  * is O(N·C) dot products in a map-only projection — no shuffle, no join;
   * the probe join shuffles only candidate lists for the probed centroids.
   * Complementary to `Similarity.topKCosineLsh`: IVF gives tunable
   * list-level pruning and a reusable materialized index; LSH avoids the
@@ -62,7 +69,7 @@ object IvfIndex {
     Vectors.dot(a, a) - lit(2.0) * Vectors.dot(a, b) + Vectors.dot(b, b)
 
   /** Deterministic centroid subset: every `stride`-th id. Output:
-    * (c_id, c_v, c_nrm), intended for broadcast.
+    * (c_id, c_v, c_nrm), small enough to collect to the driver.
     */
   def centroids(corpus: DataFrame, idCol: String, vecCol: String,
                 stride: Long): DataFrame =
@@ -70,35 +77,103 @@ object IvfIndex {
       .select(col(idCol).as("c_id"), Vectors.toDoubleArray(col(vecCol)).as("c_v"))
       .withColumn("c_nrm", Vectors.norm(col("c_v")))
 
-  /** Inverted-list assignment: each corpus vector to its single max-cosine
-    * centroid (ties broken toward the smaller centroid id). Output:
-    * (id, v, nrm, c_id, cosine).
+  /** The most doubles a driver-held centroid set may carry: 256 MiB, on
+    * the driver and again in every task's copy of the expression. */
+  private val MaxCentroidDoubles = 32L * 1024 * 1024
+
+  /** A centroid held on the driver. The vector, its elements and the
+    * norm may each be null (a null vector or norm gives null cosines, a
+    * null element reads as 0.0); ids are INT or BIGINT widened to Long. */
+  private final case class Centroid(id: Long, v: Array[java.lang.Double],
+                                    nrm: java.lang.Double)
+
+  /** Collects a (c_id, c_v, c_nrm) frame — [[centroids]]'s shape. */
+  private def collectCentroids(cents: DataFrame): (DataType, Seq[Centroid]) = {
+    val idType = cents.schema("c_id").dataType
+    val cs = cents.select(col("c_id"), Vectors.toDoubleArray(col("c_v")),
+        col("c_nrm").cast(DoubleType))
+      .collect().toSeq.map { r =>
+        require(!r.isNullAt(0), "IvfIndex: centroid ids must be non-null")
+        Centroid(r.getAs[Number](0).longValue,
+          if (r.isNullAt(1)) null
+          else r.getSeq[java.lang.Double](1).toArray,
+          if (r.isNullAt(2)) null else r.getDouble(2))
+      }
+    (idType, cs)
+  }
+
+  /** The driver-held set as the expression's flat reference object,
+    * guarded in size. */
+  private def freeze(idType: DataType, cs: Seq[Centroid]): CentroidSet = {
+    val lens = cs.map(c => if (c.v == null || c.nrm == null) -1 else c.v.length).toArray
+    val total = lens.map(l => math.max(l, 0).toLong).sum
+    require(total <= MaxCentroidDoubles,
+      s"centroid set would be ${total * 8 / 1024 / 1024} MiB on the driver " +
+        "and in every task; raise the stride (fewer centroids) or shard the corpus")
+    val offs = lens.scanLeft(0)((o, l) => o + math.max(l, 0)).init
+    val flat = new Array[Double](total.toInt)
+    cs.zip(offs).zip(lens).foreach { case ((c, o), l) =>
+      var i = 0
+      while (i < l) { flat(o + i) = if (c.v(i) == null) 0.0 else c.v(i); i += 1 }
+    }
+    new CentroidSet(idType, cs.map(_.id).toArray, flat, offs, lens,
+      cs.map(c => if (c.nrm == null) 0.0 else c.nrm.doubleValue).toArray)
+  }
+
+  private def frozen(cents: DataFrame): CentroidSet = {
+    val (idType, cs) = collectCentroids(cents)
+    freeze(idType, cs)
+  }
+
+  /** (id, v) → (id, v, nrm, c_id, cosine) against a frozen set. */
+  private def assignTo(v: DataFrame, set: CentroidSet): DataFrame = {
+    val scored = v.withColumn("nrm", Vectors.norm(col("v")))
+      .withColumn("__nc", VectorExpressions.nearestCentroid(col("v"), col("nrm"), set))
+      .select(col("id"), col("v"), col("nrm"), col("__nc.c_id").as("c_id"),
+        col("__nc.cosine").as("cosine"))
+    // the expression is null only for an empty set; deciding that here
+    // keeps a null filter (which would re-evaluate it) out of the plan
+    if (set.size == 0) scored.where(lit(false)) else scored
+  }
+
+  private def asVectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), Vectors.toDoubleArray(col(vecCol)).as("v"))
+
+  /** Inverted-list assignment: each corpus row to its single max-cosine
+    * centroid (ties broken toward the smaller centroid id; a NaN cosine
+    * ranks highest and a null one lowest, so a null or wrong-length
+    * vector gets the smallest c_id with a null cosine). Output:
+    * (id, v, nrm, c_id, cosine), exactly one row per input row — two rows
+    * sharing an id are assigned independently, each to its own nearest
+    * centroid. An empty centroid set gives no rows.
+    *
+    * Scale shape: `cents` is collected to the driver (size-guarded) and
+    * the assignment is one projection over the corpus — no exchange, no
+    * join, no aggregate.
     */
   def assign(corpus: DataFrame, cents: DataFrame, idCol: String,
-             vecCol: String): DataFrame = {
-    val v = corpus.select(col(idCol).as("id"), Vectors.toDoubleArray(col(vecCol)).as("v"))
-      .withColumn("nrm", Vectors.norm(col("v")))
-    // score with the vector payload PROJECTED AWAY before any exchange
-    // (guide: project before the exchange): the former row_number window
-    // shuffled every (row x centroid) candidate WITH its full vector —
-    // C x corpus bytes. Here the argmax runs over three scalars per
-    // candidate as a partial-aggregating max over (cosine, -c_id), which
-    // also collapses the C-way explosion map-side; the winning vector is
-    // re-attached by one id-equi-join (the payload crosses the wire at
-    // most once, and not at all when the narrow winner set broadcasts).
-    // max(struct) reproduces the window's (cosine DESC, c_id ASC) choice
-    // exactly, including NaN-sorts-largest.
-    val winners = v.crossJoin(broadcast(cents))
-      .select(col("id"),
-        (Vectors.dot(col("v"), col("c_v")) / (col("nrm") * col("c_nrm"))).as("cosine"),
-        col("c_id"))
-      .groupBy(col("id"))
-      .agg(max(struct(col("cosine"), (-col("c_id")).as("__negc"))).as("__m"))
-      .select(col("id").as("__wid"), (-col("__m.__negc")).as("c_id"),
-        col("__m.cosine").as("cosine"))
-    v.join(winners, col("id") === col("__wid")).drop("__wid")
-      .select(col("id"), col("v"), col("nrm"), col("c_id"), col("cosine"))
-  }
+             vecCol: String): DataFrame =
+    assignTo(asVectors(corpus, idCol, vecCol), frozen(cents))
+
+  /** The `nProbe` closest centroids of each query — cosine DESC, then c_id
+    * ASC, as [[assign]] ranks them. Output: (q_id, q_v, q_nrm, c_id), up
+    * to `nProbe` rows per query.
+    *
+    * Scale shape: `cents` is collected to the driver and each query is
+    * scored against it inside one expression, then exploded — no cross
+    * join, no window.
+    */
+  def probes(queries: DataFrame, cents: DataFrame, idCol: String,
+             vecCol: String, nProbe: Int): DataFrame =
+    probeWith(queries, frozen(cents), idCol, vecCol, nProbe)
+
+  private def probeWith(queries: DataFrame, set: CentroidSet, idCol: String,
+                        vecCol: String, nProbe: Int): DataFrame =
+    queries.select(col(idCol).as("q_id"), Vectors.toDoubleArray(col(vecCol)).as("q_v"))
+      .withColumn("q_nrm", Vectors.norm(col("q_v")))
+      .select(col("q_id"), col("q_v"), col("q_nrm"), explode(
+        VectorExpressions.nearestCentroids(col("q_v"), col("q_nrm"), set, nProbe)).as("__p"))
+      .select(col("q_id"), col("q_v"), col("q_nrm"), col("__p.c_id").as("c_id"))
 
   /** Product-quantization encode: split each vector into `m` contiguous
     * subvectors and snap each to its nearest codebook entry by squared L2
@@ -196,8 +271,10 @@ object IvfIndex {
     * scans every code row per query; [[topKCosineIvf]] alone still reads
     * full vectors for the probed lists — this is the missing quadrant.
     *
-    * Scale shape: candidate build is inverted-lists ⋈ broadcast(probes) —
-    * corpus-partition-local, no corpus shuffle; scoring joins the codes
+    * Scale shape: the lists and the probes are projections against the
+    * driver-held centroid set ([[assign]], [[probes]]); candidate build is
+    * inverted-lists ⋈ broadcast(probes) — corpus-partition-local, no
+    * corpus shuffle; scoring joins the codes
     * table on id (both sides corpus-keyed; at scale the codes table is
     * bucketed by id and the join is exchange-free) with the broadcast
     * (q, sub, code) → d² LUT; the per-(q, id) sum is the fixed-order
@@ -209,21 +286,12 @@ object IvfIndex {
                   k: Int = 16, nProbe: Int = 8, topK: Int = 5): DataFrame = {
     require(dim % m == 0, s"dim $dim must split into $m equal subspaces")
     val subDim = dim / m
-    val cents = centroids(corpus, idCol, vecCol, stride)
-    val lists = assign(corpus, cents, idCol, vecCol)
+    val set = frozen(centroids(corpus, idCol, vecCol, stride))
+    val lists = assignTo(asVectors(corpus, idCol, vecCol), set)
       .select(col("id"), col("c_id"))
-      .localCheckpoint(eager = true)
-    val q = queries.select(col(idCol).as("q_id"),
-        Vectors.toDoubleArray(col(vecCol)).as("q_v"))
-      .withColumn("q_nrm", Vectors.norm(col("q_v")))
-    val probeW = Window.partitionBy("q_id").orderBy(col("p_cos").desc, col("c_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("c_id"),
-        (Vectors.dot(col("q_v"), col("c_v")) / (col("q_nrm") * col("c_nrm"))).as("p_cos"))
-      .withColumn("__pr", row_number().over(probeW))
-      .where(col("__pr") <= nProbe)
+    val probed = probeWith(queries, set, idCol, vecCol, nProbe)
       .select(col("q_id"), col("c_id"))
-    val cand = lists.join(broadcast(probes), Seq("c_id"))
+    val cand = lists.join(broadcast(probed), Seq("c_id"))
       .where(col("q_id") =!= col("id"))
       .select(col("q_id"), col("id"))
     val codes = pqEncode(corpus, idCol, vecCol, m, dim, stride, k)
@@ -250,37 +318,92 @@ object IvfIndex {
       .select(col("q_id"), col("id").as("n_id"), col("adc_d2"), col("rank"))
   }
 
+  /** One centroid's members summed per position: `counts(p)` members
+    * have a coordinate at p, and `sums(p)` is their left fold from 0.0 in
+    * member-id order (null elements skipped; `seen(p)` is false when all
+    * were null, and the mean is then null).
+    */
+  private final class Members(val cId: Long) extends Serializable {
+    var counts = new Array[Long](0)
+    var sums = new Array[Double](0)
+    var seen = new Array[Boolean](0)
+    def len: Int = counts.length
+    def add(x: ArrayData): Unit = {
+      val n = x.numElements()
+      if (n > len) {
+        counts = java.util.Arrays.copyOf(counts, n)
+        sums = java.util.Arrays.copyOf(sums, n)
+        seen = java.util.Arrays.copyOf(seen, n)
+      }
+      var i = 0
+      while (i < n) {
+        counts(i) += 1
+        if (!x.isNullAt(i)) { sums(i) += x.getDouble(i); seen(i) = true }
+        i += 1
+      }
+    }
+    def mean(p: Int): java.lang.Double =
+      if (seen(p)) sums(p) / counts(p).toDouble else null
+  }
+
+  /** The Lloyd means pass over (id, v): the map-only assignment, ONE
+    * shuffle on c_id, and per centroid an ordered fold of its members
+    * (rows sorted by (c_id, id): the association of the oracle's running
+    * SUM window ordered by id). C rows come back to the driver; a
+    * centroid none of whose members has a coordinate is absent.
+    */
+  private def lloydMembers(v: DataFrame, set: CentroidSet): Seq[Members] = {
+    val intIds = set.idType == IntegerType
+    assignTo(v, set).select(col("c_id"), col("id"), col("v"))
+      .repartition(col("c_id"))
+      .sortWithinPartitions(col("c_id"), col("id"))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val out = scala.collection.mutable.ArrayBuffer[Members]()
+        rows.foreach { r =>
+          val cId = if (intIds) r.getInt(0).toLong else r.getLong(0)
+          if (out.isEmpty || out.last.cId != cId) out += new Members(cId)
+          if (!r.isNullAt(2)) out.last.add(r.getArray(2))
+        }
+        out.iterator.filter(_.len > 0)
+      }
+      .collect().toSeq
+  }
+
+  private def idValue(idType: DataType, id: Long): Any =
+    if (idType == IntegerType) id.toInt else id
+
   /** One Lloyd (k-means) refinement step over the stride-seeded centroids:
     * assign every vector to its max-cosine centroid, then recompute each
     * centroid as the per-dimension mean of its members. Output exploded as
     * (c_id, pos, n_members, mean) so every recomputed coordinate is
-    * oracle-checkable.
+    * oracle-checkable; `n_members` counts the members with a coordinate
+    * at `pos`.
     *
-    * Scale shape: the assignment is the same broadcast-centroid linear pass
-    * as [[assign]]; the mean is a per-(centroid, dimension) sorted window —
-    * each group holds one inverted list's coordinates, so the sort is a
-    * bounded per-group pass after ONE shuffle on (c_id, pos). The sum is an
-    * ORDERED left-to-right double fold (member-id order): pinning the
-    * association is what makes the float mean reproducible across engines
-    * and retries — an unordered SUM(double) is free to re-associate and
-    * drift ulps per run. (A decimal-exact unordered sum was measured as a
-    * dead end: decimal(38,15)→double conversion itself differs across
-    * engines by 1 ulp, so exactness upstream doesn't survive the cast.)
+    * Scale shape: the seeds are collected to the driver; the assignment
+    * is [[assign]]'s map-only projection, followed by ONE shuffle on c_id
+    * and a per-centroid fold, and the C folded rows are collected — the
+    * driver divides them into means. The fold is ORDERED, left to right in
+    * member-id order from 0.0: pinning the association is what makes the
+    * float mean reproducible across engines and retries — an unordered
+    * SUM(double) is free to re-associate and drift ulps per run. (A
+    * decimal-exact unordered sum was measured as a dead end:
+    * decimal(38,15)→double conversion itself differs across engines by
+    * 1 ulp, so exactness upstream doesn't survive the cast.)
     */
   def lloydStep(corpus: DataFrame, idCol: String, vecCol: String,
                 stride: Long): DataFrame = {
-    val wCum = Window.partitionBy("c_id", "pos").orderBy("id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    assign(corpus, centroids(corpus, idCol, vecCol, stride), idCol, vecCol)
-      .select(col("id"), col("c_id"), posexplode(col("v")).as(Seq("pos", "x")))
-      .withColumn("__cum", sum(col("x")).over(wCum))
-      .groupBy(col("c_id"), col("pos"))
-      // max over (id, cum) structs picks the fold's FINAL value — ids are
-      // unique so the struct max is the last-by-id row's cum
-      .agg(count(lit(1)).as("n_members"),
-        max(struct(col("id"), col("__cum"))).getField("__cum").as("__sx"))
-      .select(col("c_id"), col("pos"), col("n_members"),
-        (col("__sx") / col("n_members")).as("mean"))
+    val v = asVectors(corpus, idCol, vecCol)
+    val set = frozen(centroids(v, "id", "v", stride))
+    val rows = for {
+      m <- lloydMembers(v, set)
+      p <- 0 until m.len
+    } yield Row(idValue(set.idType, m.cId), p, m.counts(p), m.mean(p))
+    corpus.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("c_id", set.idType, nullable = false),
+      StructField("pos", IntegerType, nullable = false),
+      StructField("n_members", LongType, nullable = false),
+      StructField("mean", DoubleType))))
   }
 
   /** k-means TRAINING loop: `iters` Lloyd refinements from the stride
@@ -288,86 +411,78 @@ object IvfIndex {
     * (iter, c_id, n_members, shift) where `shift` is ‖c_new − c_old‖²
     * (the quantity a production trainer thresholds to stop early).
     *
-    * Scale shape per iteration: ONE broadcast-centroid linear pass over
-    * the corpus (the [[assign]] shape — the corpus is prepared once and
-    * localCheckpoint'd, so iterations re-read materialized blocks, not
-    * the parquet scan), one (c_id, pos) shuffle for the ordered-fold
-    * means, and centroid-sized (C rows, C ≈ √N) maintenance joins. The
-    * recomputed centroid ARRAYS are reassembled with a bounded per-
-    * centroid sort (dim entries) and checkpointed — each iteration's
-    * lineage is cut, so the plan does not grow with `iters`.
+    * Scale shape per iteration: the centroids stay on the driver (C ≈ √N
+    * vectors, size-guarded), and each iteration is [[lloydStep]]'s pass
+    * over the corpus — the map-only assignment, ONE shuffle on c_id, a
+    * per-centroid fold and a collect of C rows — after which the driver
+    * computes the means, the shifts and the next centroid set. No plan
+    * spans iterations and nothing is checkpointed, so nothing grows with
+    * `iters`.
     *
-    * Determinism: means use the same member-id-pinned fold as
-    * [[lloydStep]]; `shift` is a pos-pinned left fold of exact squared
-    * differences; a centroid that loses every member simply drops out of
-    * that iteration's trace and the following assignments (both engines
-    * replay the same rule).
+    * Determinism: means use [[lloydStep]]'s member-id-pinned fold;
+    * `shift` is a pos-pinned left fold from 0.0 of exact squared
+    * differences over the positions both vectors have (null if any is
+    * null), and `n_members` the largest count over those positions; a
+    * centroid that loses every member simply drops out of that
+    * iteration's trace and the following assignments (both engines replay
+    * the same rule).
     */
   def lloydTrain(corpus: DataFrame, idCol: String, vecCol: String,
                  stride: Long, iters: Int = 3): DataFrame = {
-    val wCum = Window.partitionBy("c_id", "pos").orderBy("id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val v = corpus
-      .select(col(idCol).as("id"), Vectors.toDoubleArray(col(vecCol)).as("v"))
-      .localCheckpoint(eager = true)
-    var cents = centroids(corpus, idCol, vecCol, stride)
-    val trace = (1 to iters).map { it =>
-      val means = assign(v, cents, "id", "v")
-        .select(col("id"), col("c_id"), posexplode(col("v")).as(Seq("pos", "x")))
-        .withColumn("__cum", sum(col("x")).over(wCum))
-        .groupBy(col("c_id"), col("pos"))
-        .agg(count(lit(1)).as("n_members"),
-          max(struct(col("id"), col("__cum"))).getField("__cum").as("__sx"))
-        .select(col("c_id"), col("pos"), col("n_members"),
-          (col("__sx") / col("n_members")).as("mean"))
-        .localCheckpoint(eager = true) // C·dim rows; cut the per-iter lineage
-      val old = cents.select(col("c_id"), posexplode(col("c_v")).as(Seq("pos", "old_x")))
-      val shifted = means.join(old, Seq("c_id", "pos"))
-        .select(col("c_id"), col("pos"), col("n_members"),
-          ((col("mean") - col("old_x")) * (col("mean") - col("old_x"))).as("d2"))
-        .groupBy(col("c_id"))
-        .agg(max(col("n_members")).as("n_members"),
-          aggregate(
-            transform(array_sort(collect_list(struct(col("pos"), col("d2")))),
-              x => x.getField("d2")),
-            lit(0.0), (acc, x) => acc + x).as("shift"))
-        .select(lit(it).as("iter"), col("c_id"), col("n_members"), col("shift"))
-      cents = means.groupBy(col("c_id"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mean")))),
-          x => x.getField("mean")).as("c_v"))
-        .withColumn("c_nrm", Vectors.norm(col("c_v")))
-      shifted
+    val v = asVectors(corpus, idCol, vecCol)
+    val (idType, seeds) = collectCentroids(centroids(v, "id", "v", stride))
+    val trace = scala.collection.mutable.ArrayBuffer[Row]()
+    (1 to iters).foldLeft(seeds) { (cents, it) =>
+      val old = cents.map(c => c.id -> c.v).toMap
+      lloydMembers(v, freeze(idType, cents)).map { m =>
+        val means = Array.tabulate(m.len)(m.mean)
+        val ov = old(m.cId)
+        val n = if (ov == null) 0 else math.min(ov.length, m.len)
+        if (n > 0) {
+          var nMembers = 0L
+          var shift: java.lang.Double = 0.0
+          for (p <- 0 until n) {
+            nMembers = math.max(nMembers, m.counts(p))
+            shift =
+              if (shift == null || means(p) == null || ov(p) == null) null
+              else {
+                val d = means(p) - ov(p)
+                shift + d * d
+              }
+          }
+          trace += Row(it, idValue(idType, m.cId), nMembers, shift)
+        }
+        var sq = 0.0
+        means.foreach(x => if (x != null) sq += x * x)
+        Centroid(m.cId, means, math.sqrt(sq))
+      }
     }
-    trace.reduce(_ unionAll _)
+    corpus.sparkSession.createDataFrame(trace.asJava, StructType(Seq(
+      StructField("iter", IntegerType, nullable = false),
+      StructField("c_id", idType, nullable = false),
+      StructField("n_members", LongType, nullable = false),
+      StructField("shift", DoubleType))))
   }
 
   /** Approximate top-k cosine neighbors via IVF probing. `queries` must be
     * small (broadcast). Output: (q_id, n_id, cosine, rank).
+    *
+    * Scale shape: the centroid set is collected once; the inverted lists
+    * ([[assign]]) and the `nProbe` probes per query ([[probes]]) are both
+    * projections against it, so the brute-force scoring within the probed
+    * lists is one broadcast join of the probes onto the corpus stream,
+    * followed by the per-query rank window.
     */
   def topKCosineIvf(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, k: Int, stride: Long = 32,
                     nProbe: Int = 8): DataFrame = {
-    val cents = centroids(corpus, idCol, vecCol, stride)
-    // inverted lists, built once; reused across every query probe. Eager
-    // localCheckpoint rather than persist: blocks are ContextCleaner-
-    // reclaimed when the result is dropped, so repeated calls in one
-    // session don't accumulate cache entries.
-    val lists = assign(corpus, cents, idCol, vecCol)
+    val set = frozen(centroids(corpus, idCol, vecCol, stride))
+    val lists = assignTo(asVectors(corpus, idCol, vecCol), set)
       .select(col("id").as("n_id"), col("v").as("n_v"), col("nrm").as("n_nrm"),
         col("c_id"))
-      .localCheckpoint(eager = true)
-    val q = queries.select(col(idCol).as("q_id"), Vectors.toDoubleArray(col(vecCol)).as("q_v"))
-      .withColumn("q_nrm", Vectors.norm(col("q_v")))
-    // nProbe closest centroids per query
-    val probeW = Window.partitionBy("q_id").orderBy(col("p_cos").desc, col("c_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("q_v"), col("q_nrm"), col("c_id"),
-        (Vectors.dot(col("q_v"), col("c_v")) / (col("q_nrm") * col("c_nrm"))).as("p_cos"))
-      .withColumn("__pr", row_number().over(probeW))
-      .where(col("__pr") <= nProbe)
-      .select(col("q_id"), col("q_v"), col("q_nrm"), col("c_id"))
     // brute-force within the probed lists only
-    val scored = lists.join(broadcast(probes), Seq("c_id"))
+    val scored = lists.join(broadcast(probeWith(queries, set, idCol, vecCol, nProbe)),
+        Seq("c_id"))
       .where(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"),
         (Vectors.dot(col("q_v"), col("n_v")) /

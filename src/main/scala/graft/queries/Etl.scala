@@ -3459,18 +3459,9 @@ object Etl {
         .select(col("vec_id"), col("label"), col("list_id"), col("embedding"))
         .writeTo("graft_ei.db.emb").append()
       // probe: top-2 centroids per query — few lists by construction
-      val q = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").cast("long").as("q_id"),
-          V.toDoubleArray(col("embedding")).as("q_v"))
-        .withColumn("q_nrm", V.norm(col("q_v")))
-      val probes = q.crossJoin(broadcast(cents))
-        .select(col("q_id"), col("q_v"), col("q_nrm"), col("c_id"),
-          (V.dot(col("q_v"), col("c_v")) /
-            (col("q_nrm") * col("c_nrm"))).as("p_cos"))
-        .withColumn("__pr", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("p_cos").desc, col("c_id"))))
-        .where(col("__pr") <= 2)
-        .select(col("q_id"), col("q_v"), col("q_nrm"),
+      val probes = graft.operators.IvfIndex
+        .probes(emb.where(col("vec_id") < 10), cents, "vec_id", "embedding", 2)
+        .select(col("q_id").cast("long").as("q_id"), col("q_v"), col("q_nrm"),
           col("c_id").cast("long").as("list_id"))
         .localCheckpoint(eager = true)
       // queries × nProbe is tiny by construction — this is the partition

@@ -810,9 +810,9 @@ object SimilarityQueries {
     },
 
     // one Lloyd (k-means) refinement step over the stride-seeded IVF
-    // centroids: broadcast-assign + per-(centroid, dim) ordered-fold means
-    // — the double summation order is PINNED by the member-id window, so
-    // the recomputed coordinates are engine/retry-reproducible (see
+    // centroids: map-only assign + per-centroid ordered-fold means — the
+    // double summation order is PINNED to member-id order, so the
+    // recomputed coordinates are engine/retry-reproducible (see
     // IvfIndex.lloydStep for why exact decimals were a dead end here)
     "sim_kmeans_step" -> { (s, dir) =>
       IvfIndex.lloydStep(Tables.embeddings(s, dir), "vec_id", "embedding",
@@ -824,12 +824,11 @@ object SimilarityQueries {
     // one turn of): three Lloyd iterations from the stride seeds, each
     // emitting (iter, c_id, n_members, shift=‖c_new − c_old‖²) — the
     // convergence trace a production trainer thresholds to stop early.
-    // Per iteration: one broadcast-centroid pass over the checkpointed
-    // corpus + one (c_id, pos) fold shuffle; centroid reassembly is a
-    // bounded per-centroid sort and each iteration's lineage is cut, so
-    // the plan does not grow with the iteration count. Every mean is the
-    // member-id-pinned fold and every shift a pos-pinned fold — the
-    // whole 3-deep iteration replays bit-exactly in the oracle
+    // Per iteration: one map-only assignment pass over the corpus + one
+    // c_id shuffle for the per-centroid folds; the centroids
+    // stay on the driver, so no plan grows with the iteration count.
+    // Every mean is the member-id-pinned fold and every shift a pos-pinned
+    // fold — the whole 3-deep iteration replays bit-exactly in the oracle
     "sim_kmeans_train" -> { (s, dir) =>
       IvfIndex.lloydTrain(Tables.embeddings(s, dir), "vec_id", "embedding",
         stride = 32, iters = 3)
@@ -838,8 +837,8 @@ object SimilarityQueries {
 
     // cluster-label purity audit (the "is this clustering meaningful"
     // check run after any IVF/kmeans build): per centroid, member count
-    // and the majority label's share. Assignment reuses the broadcast
-    // argmax-cosine pass; purity is count-then-argmax (the q51_mode
+    // and the majority label's share. Assignment reuses the map-only
+    // nearest-centroid pass; purity is count-then-argmax (the q51_mode
     // shape, map-side combinable, tie-pinned toward the smaller label) —
     // never a per-cluster sort
     "sim_cluster_purity" -> { (s, dir) =>

@@ -609,11 +609,12 @@ object StreamingQueries {
     // and land in the IVF-list-PARTITIONED catalog table etl_embed_ivf
     // serves from — per batch, the SAME IvfIndex.assign computes the list
     // and the append routes rows into list_id= partition dirs
-    // (foreachBatch: the assignment argmax needs a non-time window, which
-    // the direct streaming sink cannot express). After three batches the
-    // on-disk layout is asserted partition-routed, and the SAME probe
-    // (top-2 lists per query, partition-pruned scan, exact in-list rank)
-    // must produce the batch pipeline's answer — same oracle SQL.
+    // (foreachBatch: assign collects the centroid set, a batch action the
+    // direct streaming sink cannot run). After three batches the on-disk
+    // layout is asserted partition-routed, and the SAME probe
+    // (IvfIndex.probes: top-2 lists per query, partition-pruned scan,
+    // exact in-list rank) must produce the batch pipeline's answer — same
+    // oracle SQL.
     "stream_embed_ivf" -> { (s, dir) =>
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
@@ -673,18 +674,9 @@ object StreamingQueries {
         "stream_embed_ivf: streamed files must land in list_id= dirs")
       // probe exactly like etl_embed_ivf — pruned scan over the streamed
       // table must equal the batch pipeline's answer
-      val q2 = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").cast("long").as("q_id"),
-          V.toDoubleArray(col("embedding")).as("q_v"))
-        .withColumn("q_nrm", V.norm(col("q_v")))
-      val probes = q2.crossJoin(broadcast(cents))
-        .select(col("q_id"), col("q_v"), col("q_nrm"), col("c_id"),
-          (V.dot(col("q_v"), col("c_v")) /
-            (col("q_nrm") * col("c_nrm"))).as("p_cos"))
-        .withColumn("__pr", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("p_cos").desc, col("c_id"))))
-        .where(col("__pr") <= 2)
-        .select(col("q_id"), col("q_v"), col("q_nrm"),
+      val probes = graft.operators.IvfIndex
+        .probes(emb.where(col("vec_id") < 10), cents, "vec_id", "embedding", 2)
+        .select(col("q_id").cast("long").as("q_id"), col("q_v"), col("q_nrm"),
           col("c_id").cast("long").as("list_id"))
         .localCheckpoint(eager = true)
       val probedLists = probes.select("list_id").distinct()

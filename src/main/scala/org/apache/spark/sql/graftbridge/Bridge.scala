@@ -27,6 +27,11 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Spark's own divide-by-zero error (ANSI mode), for custom expressions
+    * that fold a division in. */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** EAGER ColumnNode → Expression conversion. `expression` wraps the
     * column tree in a lazy ColumnNodeExpression, which is fine as a child
     * of a custom expression inside a Dataset plan (the analyzer converts

@@ -471,4 +471,41 @@ class OperatorsSpec extends SparkSpec {
     assert(math.abs(m((0L, 0))._2 - (1.0 + 0.9f.toDouble) / 2) < 1e-12)
     assert(math.abs(m((2L, 1))._2 - (1.0 + 0.9f.toDouble) / 2) < 1e-12)
   }
+
+  test("lloydStep and lloydTrain: bit-identical to the relational window " +
+    "formulation on ties, NaN, null and wrong-length vectors, an empty " +
+    "centroid set and a centroid emptied by iteration 2") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    def v(xs: Double*): Seq[java.lang.Double] = xs.map(Double.box)
+    val nan = Double.NaN
+    for (idType <- Seq(LongType, IntegerType)) {
+      val corpora = Seq(
+        // centroid 0 has members 0 and 1 in iteration 1 and none in 2
+        "emptied by iteration 2" -> RelationalIvf.vectors(spark, idType,
+          0L -> v(-2, -4), 1L -> v(-1, 5), 2L -> v(1, -2), 3L -> v(2, 5),
+          4L -> v(-1, -5)),
+        "ties, NaN, null, wrong length" -> RelationalIvf.vectors(spark, idType,
+          0L -> v(1, 1), 2L -> v(1, 1), 4L -> v(1, -1), 6L -> v(-2, 0.25),
+          1L -> v(1, 0), 3L -> v(nan, 1), 5L -> null, 7L -> v(1, 2, 3),
+          9L -> v(0.5, -2), 11L -> Seq(null, 1.0), 13L -> v(-3, 0.5),
+          15L -> v(0.25, 4)),
+        "empty centroid set" -> RelationalIvf.vectors(spark, idType,
+          1L -> v(1, 0), 3L -> v(0, 1)))
+      for ((name, df) <- corpora) {
+        val step = IvfIndex.lloydStep(df, "vec_id", "embedding", 2)
+        val stepRef = RelationalIvf.lloydStep(df, "vec_id", "embedding", 2)
+        assert(step.schema.map(_.dataType) == stepRef.schema.map(_.dataType), name)
+        assert(RelationalIvf.rawBits(step) == RelationalIvf.rawBits(stepRef), s"$name ($idType)")
+        val train = IvfIndex.lloydTrain(df, "vec_id", "embedding", 2, iters = 3)
+        val trainRef = RelationalIvf.lloydTrain(df, "vec_id", "embedding", 2, iters = 3)
+        assert(train.schema.map(_.dataType) == trainRef.schema.map(_.dataType), name)
+        assert(RelationalIvf.rawBits(train) == RelationalIvf.rawBits(trainRef), s"$name ($idType)")
+      }
+    }
+    val emptied = IvfIndex.lloydTrain(RelationalIvf.vectors(spark, LongType,
+        0L -> v(-2, -4), 1L -> v(-1, 5), 2L -> v(1, -2), 3L -> v(2, 5),
+        4L -> v(-1, -5)), "vec_id", "embedding", 2, iters = 2)
+      .select("iter", "c_id").collect().map(r => (r.getInt(0), r.getLong(1))).toSet
+    assert(emptied(1 -> 0L) && !emptied(2 -> 0L), emptied)
+  }
 }

@@ -106,6 +106,121 @@ class SimilaritySpec extends SparkSpec {
     assert(approx.forall { case (qid, nid) => qid != nid })
   }
 
+  /** Edge-case corpora for the fused assignment, each with its centroid
+    * stride: exact ties (0 and 2 identical, 1 equidistant from 0 and 4),
+    * a NaN coordinate, a null vector, a null element, a wrong-length
+    * vector; a NaN centroid; no centroid at all (every id odd).
+    */
+  private def edgeCorpora(idType: org.apache.spark.sql.types.DataType) = {
+    def v(xs: Double*): Seq[java.lang.Double] = xs.map(Double.box)
+    val nan = Double.NaN
+    Seq(
+      "ties, NaN, null, wrong length" -> RelationalIvf.vectors(spark, idType,
+        0L -> v(1, 1), 2L -> v(1, 1), 4L -> v(1, -1), 6L -> v(-2, 0.25),
+        1L -> v(1, 0), 3L -> v(nan, 1), 5L -> null, 7L -> v(1, 2, 3),
+        9L -> v(0.5, -2), 11L -> Seq(null, 1.0), 13L -> v(-3, 0.5)),
+      "NaN centroid" -> RelationalIvf.vectors(spark, idType,
+        0L -> v(1, 0), 2L -> v(nan, 1), 1L -> v(0.5, 0.5), 3L -> v(1, -1),
+        5L -> null),
+      "empty centroid set" -> RelationalIvf.vectors(spark, idType,
+        1L -> v(1, 0), 3L -> v(0, 1)))
+  }
+
+  test("assign and probes: bit-identical to the relational cross join on " +
+    "ties, NaN, null and wrong-length vectors and an empty centroid set") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    for (idType <- Seq(LongType, IntegerType); (name, df) <- edgeCorpora(idType)) {
+      val cents = IvfIndex.centroids(df, "vec_id", "embedding", stride = 2)
+      val got = IvfIndex.assign(df, cents, "vec_id", "embedding")
+      val want = RelationalIvf.assign(df, cents, "vec_id", "embedding")
+      assert(got.schema.map(_.dataType) == want.schema.map(_.dataType), name)
+      assert(RelationalIvf.rawBits(got) == RelationalIvf.rawBits(want), s"$name ($idType)")
+      for (n <- Seq(1, 2, 10)) {
+        val pg = IvfIndex.probes(df, cents, "vec_id", "embedding", n)
+        val pw = RelationalIvf.probes(df, cents, "vec_id", "embedding", n)
+        assert(pg.schema.map(_.dataType) == pw.schema.map(_.dataType), name)
+        assert(RelationalIvf.rawBits(pg) == RelationalIvf.rawBits(pw),
+          s"$name ($idType) nProbe=$n")
+      }
+    }
+    // the exact ties go to the smallest c_id, and so does a null vector
+    val ties = edgeCorpora(LongType).head._2
+    val asg = IvfIndex.assign(ties, IvfIndex.centroids(ties, "vec_id", "embedding", 2),
+        "vec_id", "embedding")
+      .select("id", "c_id", "cosine").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.get(2))).toMap
+    assert(asg(1L)._1 == 0L && asg(2L)._1 == 0L && asg(5L) == ((0L, null)) &&
+      asg(13L)._1 == 6L, asg)
+    // and on real embeddings
+    val emb = Tables.embeddings(spark, dir)
+    val cents = IvfIndex.centroids(emb, "vec_id", "embedding", stride = 16)
+    assert(RelationalIvf.rawBits(IvfIndex.assign(emb, cents, "vec_id", "embedding")) ==
+      RelationalIvf.rawBits(RelationalIvf.assign(emb, cents, "vec_id", "embedding")))
+    val q = emb.where($"vec_id" < 20)
+    assert(RelationalIvf.rawBits(IvfIndex.probes(q, cents, "vec_id", "embedding", 8)) ==
+      RelationalIvf.rawBits(RelationalIvf.probes(q, cents, "vec_id", "embedding", 8)))
+  }
+
+  test("lloydStep and lloydTrain: bit-identical to the relational window " +
+    "formulation on the embeddings table") {
+    val emb = Tables.embeddings(spark, dir)
+    assert(RelationalIvf.rawBits(IvfIndex.lloydStep(emb, "vec_id", "embedding", 32)) ==
+      RelationalIvf.rawBits(RelationalIvf.lloydStep(emb, "vec_id", "embedding", 32)))
+    assert(RelationalIvf.rawBits(IvfIndex.lloydTrain(emb, "vec_id", "embedding", 16, 3)) ==
+      RelationalIvf.rawBits(RelationalIvf.lloydTrain(emb, "vec_id", "embedding", 16, 3)))
+  }
+
+  test("assign: a zero vector raises divide-by-zero under ANSI, as the " +
+    "relational division does") {
+    val df = RelationalIvf.vectors(spark, org.apache.spark.sql.types.LongType,
+      0L -> Seq(1.0, 0.0).map(Double.box), 1L -> Seq(0.0, 0.0).map(Double.box))
+    val cents = IvfIndex.centroids(df, "vec_id", "embedding", stride = 2)
+    def cause(body: => Any): String = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" / ")
+    }
+    assert(cause(IvfIndex.assign(df, cents, "vec_id", "embedding").collect())
+      .contains("DIVIDE_BY_ZERO"))
+    assert(cause(RelationalIvf.assign(df, cents, "vec_id", "embedding").collect())
+      .contains("DIVIDE_BY_ZERO"))
+  }
+
+  test("assign: one id on two rows with different vectors gives one row " +
+    "per input row, each with its own nearest centroid") {
+    val df = Seq(
+      (0L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)),
+      (7L, Array(0.9f, 0.1f)), (7L, Array(0.1f, 0.9f)))
+      .toDF("vec_id", "embedding")
+    val out = IvfIndex.assign(df, IvfIndex.centroids(df, "vec_id", "embedding", 2),
+        "vec_id", "embedding")
+      .where($"id" === 7L).select($"v"(0).as("x"), $"c_id").collect()
+      .map(r => r.getDouble(0) -> r.getLong(1)).toMap
+    assert(out == Map(0.9f.toDouble -> 0L, 0.1f.toDouble -> 2L))
+  }
+
+  test("assign: the executed plan is map-only — no exchange, no join, no aggregate") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val emb = Tables.embeddings(spark, dir)
+    val out = IvfIndex.assign(emb, IvfIndex.centroids(emb, "vec_id", "embedding", 16),
+      "vec_id", "embedding")
+    out.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val all = nodes(out.queryExecution.executedPlan)
+    val bad = all.filter {
+      case _: Exchange | _: BaseJoinExec | _: BaseAggregateExec => true
+      case _ => false
+    }
+    assert(bad.isEmpty, out.queryExecution.executedPlan.treeString)
+  }
+
   test("pqEncode: codebook vectors self-encode with d2 = 0; full coverage; codes are centroid ids") {
     val emb = Tables.embeddings(spark, dir)
     val out = IvfIndex.pqEncode(emb, "vec_id", "embedding", m = 8, dim = 64, stride = 16)
