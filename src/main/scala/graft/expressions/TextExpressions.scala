@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -116,6 +116,83 @@ case class WordNgrams(child: Expression, n: Int, distinct: Boolean)
     copy(child = newChild)
 }
 
+/** The portable 60-bit hash graft maps tokens and shingles to: the first
+  * 15 hex digits of the md5 digest read as an integer, i.e. the value of
+  * `conv(substring(md5(s), 1, 15), 16, 10)` — so any SQL engine with md5
+  * replays it exactly.
+  */
+private[expressions] object Md5Prefix60 {
+  /** Completes (and resets) `md5` over the bytes fed to it so far. */
+  def finish(md5: java.security.MessageDigest): Long = {
+    val d = md5.digest()
+    // first 15 hex chars = top 60 bits of the first 8 digest bytes
+    var h = 0L
+    var i = 0
+    while (i < 8) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
+    h >>> 4
+  }
+}
+
+/** The distinct, ascending 60-bit md5 hashes ([[Md5Prefix60]]) of every
+  * word n-gram of a string — the per-document shingle SET the exact
+  * similarity joins work on, as one `array<bigint>` per row.
+  *
+  * Tokenizes exactly as [[WordNgrams]] (split on single spaces, empty
+  * tokens dropped, fewer than n tokens → empty array) and hashes each
+  * n-gram's UTF-8 bytes with its tokens joined by single spaces, so the
+  * result equals `sort_array(array_distinct(transform(word_ngrams(s, n,
+  * true), g -> conv(substring(md5(g), 1, 15), 16, 10)::bigint)))` — without
+  * building one n-gram string, and without the hash's round trip through
+  * hex text: the digest is fed each n-gram's token bytes and separators.
+  */
+case class ShingleHashes(child: Expression, n: Int)
+    extends UnaryExpression with CodegenFallback {
+
+  require(n >= 1, s"n-gram size must be positive, got $n")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"shingle_hashes requires a string input, got ${other.simpleString}")
+  }
+  override def dataType: DataType =
+    org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.LongType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "shingle_hashes"
+
+  // one digest per deserialized (= per-task) instance; digest() resets it
+  @transient private lazy val md5 = java.security.MessageDigest.getInstance("MD5")
+
+  override def nullSafeEval(input: Any): Any = {
+    val toks = input.asInstanceOf[UTF8String].toString.split(" ").filter(_.nonEmpty)
+      .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val hs = new Array[Long](math.max(toks.length - n + 1, 0))
+    var i = 0
+    while (i < hs.length) {
+      var j = 0
+      while (j < n) {
+        if (j > 0) md5.update(' '.toByte)
+        md5.update(toks(i + j))
+        j += 1
+      }
+      hs(i) = Md5Prefix60.finish(md5)
+      i += 1
+    }
+    java.util.Arrays.sort(hs)
+    var m = 0
+    i = 0
+    while (i < hs.length) {
+      if (m == 0 || hs(i) != hs(m - 1)) { hs(m) = hs(i); m += 1 }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(hs, m))
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** Per-row 60-bit SimHash of a space-tokenized string: ONE tokenize, one
   * md5 per token, and a tight bit-vote loop. Replaces both the relational
   * explode→SimHashAgg build (a whole extra aggregate stage + join-back)
@@ -150,12 +227,8 @@ case class SimHash(child: Expression, bits: Int = 60)
     while (t < toks.length) {
       val s = toks(t)
       if (s.nonEmpty) {
-        val d = md5.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        // first 15 hex chars = top 60 bits of the first 8 digest bytes
-        var h = 0L
-        var i = 0
-        while (i < 8) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
-        h >>>= 4
+        md5.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val h = Md5Prefix60.finish(md5)
         var b = 0
         while (b < bits) {
           votes(b) += (if (((h >> b) & 1L) == 1L) 1 else -1)
@@ -322,6 +395,9 @@ object TextExpressions {
 
   def wordNgrams(c: Column, n: Int, distinct: Boolean): Column =
     Bridge.column(WordNgrams(Bridge.expression(c), n, distinct))
+
+  def shingleHashes(c: Column, n: Int): Column =
+    Bridge.column(ShingleHashes(Bridge.expression(c), n))
 
   def tokenDiversity(c: Column): Column =
     Bridge.column(TokenDiversity(Bridge.expression(c)))

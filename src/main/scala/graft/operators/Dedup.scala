@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.{Text, Vectors}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for document / embedding corpora.
@@ -26,8 +27,7 @@ object Dedup {
     * `exact`. One shuffle on the fingerprint.
     */
   def keepFirst(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(Text.fingerprint(col(textCol))).orderBy(col(idCol))
+    val w = Window.partitionBy(Text.fingerprint(col(textCol))).orderBy(col(idCol))
     df.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
       .drop("__rn")
@@ -179,6 +179,9 @@ object Dedup {
     * verified output equals the brute-force pair set w.h.p., which is what
     * the oracle checks — while a j=0.1 pair is a candidate with p≈0.003,
     * keeping the verify stage linear-ish at corpus scale.
+    *
+    * Ids must be unique: a pair is keyed by its two ids, and each id
+    * stands for one shingle set in the verify.
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       tau: Double, n: Int = 3, k: Int = 128, bands: Int = 32): DataFrame = {
@@ -186,14 +189,12 @@ object Dedup {
     val r = k / bands
     // ONE WordNgrams eval per doc into an array column, materialized
     // (eager localCheckpoint — ContextCleaner-reclaimed, no session cache
-    // leak) because it feeds BOTH the signature projection and the verify
-    // postings, and exchange reuse does not fire across the
-    // differently-aliased branches. Shingle-less docs are dropped here:
-    // their empty-set signatures would otherwise all collide (round-3 bug).
-    val docShingles = df.select(col(idCol).as("id"),
-      graft.expressions.TextExpressions.wordNgrams(
-        col(textCol), n, distinct = true).as("arr"))
-      .where(size(col("arr")) > 0)
+    // leak) because it feeds BOTH the signature projection and both verify
+    // sides, and exchange reuse does not fire across the differently-
+    // aliased branches. Shingle-less docs are dropped here: their empty-set
+    // signatures would otherwise all collide (round-3 bug).
+    val docShingles = shingleSets(df, idCol,
+        graft.expressions.TextExpressions.wordNgrams(col(textCol), n, distinct = true))
       .localCheckpoint(eager = true)
     // Per-ROW signature: the native MinHashSignature expression computes
     // the whole k-long minhash in one eval over the shingle array — no
@@ -203,13 +204,11 @@ object Dedup {
     // whose JIT scheduling made the same query swing 2.8s-53s). The same
     // expression drives the streaming twin, so batch and stream
     // signatures are bit-identical by construction (asserted in specs).
-    // sig feeds four branches (both band-join sides, both size lookups);
-    // tiny (one row per doc) so materializing is cheap.
+    // sig feeds both band-join sides; tiny (one row per doc) so
+    // materializing is cheap.
     val sig = docShingles.select(col("id"),
-      graft.expressions.MinHashExpressions.minHashSignature(col("arr"), k).as("sig"),
-      size(col("arr")).as("sz"))
+      graft.expressions.MinHashExpressions.minHashSignature(col("tk"), k).as("sig"))
       .localCheckpoint(eager = true)
-    val posts = docShingles.select(col("id"), explode(col("arr")).as("s"))
     // band hash: xxhash64 over the r-element signature slice (codegen'd
     // hash over the array value — no per-column fan-out); the SHARED
     // bandHashes definition keeps batch and streaming banding identical
@@ -223,30 +222,44 @@ object Dedup {
           col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"))
       .distinct()
-    // exact-jaccard verify as a postings join over the candidate set; no
+    // exact-Jaccard verify against the materialized shingle arrays; no
     // broadcast hint — candidates scale with the dup rate, so AQE decides
-    val sizes = sig.select(col("id"), col("sz"))
-    val inter = posts.select(col("id").as("a_id"), col("s").as("a_s"))
-      .join(cand, "a_id")
-      .join(posts.select(col("id").as("bb_id"), col("s").as("b_s")),
-        col("b_id") === col("bb_id") && col("a_s") === col("b_s"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("id").as("a_id"), col("sz").as("a_sz")), "a_id")
-      .join(sizes.select(col("id").as("b_id"), col("sz").as("b_sz")), "b_id")
+    verifyJaccard(cand, docShingles, tau)
+  }
+
+  /** `(id, tk, sz)`: each document's distinct shingle array `tk` (built
+    * by `shingles` from the row) and its size as a long, documents without
+    * a shingle dropped — the `sets` input of [[verifyJaccard]].
+    */
+  private[graft] def shingleSets(df: DataFrame, idCol: String, shingles: Column): DataFrame =
+    df.select(col(idCol).as("id"), shingles.as("tk"))
+      .where(size(col("tk")) > 0)
+      .select(col("id"), col("tk"), size(col("tk")).cast("long").as("sz"))
+
+  /** The exact-Jaccard verify of candidate pairs, shared by the pair joins
+    * and the streaming MinHash twin: each candidate `(a_id, b_id)` is joined
+    * to both documents' rows of `sets` — `(id, tk, sz)`, `tk` the
+    * document's distinct shingle array and `sz` its size as a long — and
+    * |A∩B| is one `array_intersect`. Output `(a_id, b_id, jaccard)` with
+    * jaccard = inter / (a_sz + b_sz − inter) ≥ tau. Work is O(candidates ×
+    * doc size); ids of `sets` must be unique.
+    */
+  private[graft] def verifyJaccard(cand: DataFrame, sets: DataFrame, tau: Double): DataFrame =
+    cand
+      .join(sets.select(col("id").as("a_id"), col("tk").as("a_tk"), col("sz").as("a_sz")), "a_id")
+      .join(sets.select(col("id").as("b_id"), col("tk").as("b_tk"), col("sz").as("b_sz")), "b_id")
+      .withColumn("inter", size(array_intersect(col("a_tk"), col("b_tk"))).cast("long"))
       .select(col("a_id"), col("b_id"),
         (col("inter").cast("double") /
           (col("a_sz") + col("b_sz") - col("inter"))).as("jaccard"))
       .where(col("jaccard") >= tau)
-  }
 
   /** EXACT similarity self-join via prefix filtering (the All-Pairs /
     * PPJoin family): all pairs with n-gram-shingle Jaccard ≥ tau, with NO
     * block key and NO probabilistic recall caveat.
     *
     * Every document's shingles are ordered by ascending global document
-    * frequency (rarest first, shingle string as tiebreaker — a total
+    * frequency (rarest first, shingle hash as tiebreaker — a total
     * order); if J(A,B) ≥ tau then A and B must share a shingle within
     * their first |d| − ⌈tau·|d|⌉ + 1 shingles of that order (the prefix-
     * filter lemma), so joining ONLY the prefixes yields a candidate
@@ -259,18 +272,24 @@ object Dedup {
     * full postings join of [[jaccardPairsBlocked]] while staying exact
     * (vs [[minhashLshPairs]]'s w.h.p. recall). Candidates additionally
     * pass the PPJoin LENGTH filter (J ≥ tau forces min(|A|,|B|) ≥
-    * tau·max(|A|,|B|)) before any verify payload ships. Verification
-    * carries the per-doc shingle arrays through two hash joins (no second
-    * postings shuffle); work is O(candidates × doc size).
+    * tau·max(|A|,|B|)) before any verify payload ships.
     *
-    * Shingles are mapped to portable 60-bit md5 longs at the postings
-    * stage: every downstream shuffle/sort/intersect moves 8-byte longs
-    * instead of ~25-byte strings (measured 11.8s → ~4s at sf0.1), and
+    * Each document's shingle set is built once, as one sorted array of
+    * portable 60-bit md5 longs from the native ShingleHashes expression
+    * (one eval per row, no shingle strings), and materialized as (id, tk,
+    * sz). Everything else reads it: the document frequencies explode it and
+    * count per hash, the prefix is a `row_number` window over each
+    * document's postings ordered by (frequency, hash), and the verify is
+    * [[verifyJaccard]]'s array_intersect over the same arrays. Longs make
+    * every shuffle, sort and intersect cheaper than ~25-byte strings, and
     * the oracle replays the identical hash, so cross-engine parity is
     * unconditional. Set semantics are exact up to md5-60bit aliasing
     * INSIDE one document pair's shingle union (≪ 10⁻⁹ at any realistic
     * doc size; the prefix lemma itself holds exactly over the hashed
     * domain since any global total order works).
+    *
+    * Ids must be unique: the prefix window partitions by id, and each id
+    * stands for one shingle set in the verify.
     *
     * `tau` should be exactly representable in binary (0.5, 0.75, ...) so
     * the prefix lengths are reproducible across platforms; correctness
@@ -278,33 +297,19 @@ object Dedup {
     */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                          n: Int, tau: Double): DataFrame = {
-    // posts feeds the frequency count and the per-doc rebuild; docs feeds
-    // the prefix explode and both verify sides — materialize each once
-    // (ContextCleaner-reclaimed, same rationale as pairOverlaps).
-    val posts = shingleRows(df, idCol, textCol, n)
-      .select(col("id"),
-        conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long").as("h"))
-      .distinct() // re-assert set semantics over the HASHED domain
+    val width = df.sparkSession.sessionState.conf.numShufflePartitions
+    // docs feeds the postings (frequency count and prefix rank) and both
+    // verify sides — materialize once (ContextCleaner-reclaimed, same
+    // rationale as pairOverlaps)
+    val docs = shingleSets(df, idCol,
+        graft.expressions.TextExpressions.shingleHashes(col(textCol), n))
       .localCheckpoint(eager = true)
+    val posts = docs.select(col("id"), col("sz"), explode(col("tk")).as("h"))
     val freq = posts.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    // the per-doc rebuild (collect_list + array_sort over every shingle of
-    // the doc) is CPU-bound while its shuffled bytes are small — AQE's
-    // byte-based coalescing packs it onto 1-2 tasks and serializes seconds
-    // of sort work. An explicit repartition on the group key pins the
-    // aggregation's parallelism to the session shuffle width (the agg
-    // reuses the partitioning, no extra exchange).
-    val docs = posts.join(freq, "h")
-      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        col("id"))
-      .groupBy(col("id"))
-      .agg(array_sort(collect_list(struct(col("df"), col("h")))).as("ord"))
-      .select(col("id"),
-        expr("transform(ord, x -> x.h)").as("tk"),
-        size(col("ord")).cast("long").as("sz"))
-      .withColumn("p", col("sz") - ceil(lit(tau) * col("sz")).cast("long") + 1)
-      .localCheckpoint(eager = true)
-    val pre = docs.select(col("id"), col("sz"),
-      explode(slice(col("tk"), lit(1), col("p"))).as("h"))
+    val rarestFirst = Window.partitionBy(col("id")).orderBy(col("df"), col("h"))
+    val pre = posts.join(freq, "h")
+      .withColumn("rk", row_number().over(rarestFirst))
+      .where(col("rk") <= col("sz") - ceil(lit(tau) * col("sz")).cast("long") + 1)
     val cand = pre.select(col("id").as("a_id"), col("sz").as("a_sz"), col("h"))
       .join(pre.select(col("id").as("b_id"), col("sz").as("b_sz"), col("h")), Seq("h"))
       .where(col("a_id") < col("b_id") &&
@@ -322,23 +327,14 @@ object Dedup {
       // expression distinct from the distinct-aggregate's, so the
       // optimizer can't remove this exchange as redundant and AQE can't
       // coalesce it (REPARTITION_BY_NUM).
-      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        struct(col("a_id"), col("b_id")))
-    cand
-      .join(docs.select(col("id").as("a_id"), col("tk").as("a_tk"), col("sz").as("a_sz")), "a_id")
-      .join(docs.select(col("id").as("b_id"), col("tk").as("b_tk"), col("sz").as("b_sz")), "b_id")
-      .withColumn("inter", size(array_intersect(col("a_tk"), col("b_tk"))).cast("long"))
-      .select(col("a_id"), col("b_id"),
-        (col("inter").cast("double") /
-          (col("a_sz") + col("b_sz") - col("inter"))).as("jaccard"))
-      .where(col("jaccard") >= tau)
+      .repartition(width, struct(col("a_id"), col("b_id")))
+    verifyJaccard(cand, docs, tau)
       // materialize the verified pairs behind one exchange: callers
       // ORDER BY the result, and a range sort SAMPLES its child before
       // partitioning it — without this boundary the sampling pass
       // re-executes the whole candidate-verify map stage (measured as a
       // duplicated multi-second job)
-      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        struct(col("a_id"), col("b_id")))
+      .repartition(width, struct(col("a_id"), col("b_id")))
   }
 
   /** Sorted-neighborhood dedup blocking (the classic SNM): docs are

@@ -320,6 +320,8 @@ object Similarity {
                         upperBeam: Int = 4, degree: Int = 3,
                         beamWidth: Int = 8, rounds: Int = 3,
                         topK: Int = 5): DataFrame = {
+    require(upperBeam <= beamWidth,
+      "layeredBeamSearch: upperBeam must not exceed beamWidth")
     val v = corpus.select(col(idCol).as("__id"), col(blockCol).as("__blk"),
         Vectors.toDoubleArray(col(vecCol)).as("__v"))
       .withColumn("__nrm", Vectors.norm(col("__v")))
@@ -382,40 +384,45 @@ object Similarity {
         col("a_id").as("b_id")))
       .distinct()
       .localCheckpoint(eager = true))
-    // entry: exact over the top level's node set
-    var beam = top(score(q.select(col("q_id")).crossJoin(
-        levelNodes(maxLevel).select(col("__id").as("id"))),
-        excludeSelf = false), upperBeam)
-      .select(col("q_id"), col("id"))
-      .localCheckpoint(eager = true)
-    // greedy descent through the upper levels' within-level graphs
-    for (l <- (maxLevel - 1) to 1 by -1) {
-      val und = Await.result(undF(l), Duration.Inf)
-      val cand = beam.unionAll(
-          beam.join(und.withColumnRenamed("a_id", "id"), "id")
-            .select(col("q_id"), col("b_id").as("id")))
-        .distinct()
-      beam = top(score(cand, excludeSelf = false), upperBeam)
+    try {
+      // entry: exact over the top level's node set
+      var beam = top(score(q.select(col("q_id")).crossJoin(
+          levelNodes(maxLevel).select(col("__id").as("id"))),
+          excludeSelf = false), upperBeam)
         .select(col("q_id"), col("id"))
         .localCheckpoint(eager = true)
+      // greedy descent through the upper levels' within-level graphs
+      for (l <- (maxLevel - 1) to 1 by -1) {
+        val und = Await.result(undF(l), Duration.Inf)
+        val cand = beam.unionAll(
+            beam.join(und.withColumnRenamed("a_id", "id"), "id")
+              .select(col("q_id"), col("b_id").as("id")))
+          .distinct()
+        beam = top(score(cand, excludeSelf = false), upperBeam)
+          .select(col("q_id"), col("id"))
+          .localCheckpoint(eager = true)
+      }
+      // level 0: the flat beam search, entered from the positioned beam.
+      // No re-rank stage first: upperBeam <= beamWidth, so the entry beam
+      // IS the round-0 beam — re-scoring it would keep the same set at the
+      // cost of an extra checkpointed job
+      val und0 = Await.result(und0F, Duration.Inf)
+      var beam0 = beam
+      for (_ <- 1 to rounds) {
+        val cand = beam0.unionAll(
+            beam0.join(und0.withColumnRenamed("a_id", "id"), "id")
+              .select(col("q_id"), col("b_id").as("id")))
+          .distinct()
+        beam0 = top(score(cand, excludeSelf = false), beamWidth)
+          .select(col("q_id"), col("id"))
+          .localCheckpoint(eager = true)
+      }
+      top(score(beam0, excludeSelf = true), topK)
+    } finally {
+      // a failed descent leaves level-graph builds running: wait them out,
+      // so no background job outlives the call and their checkpoint blocks
+      // become unreachable (a successful descent has awaited them all)
+      (undF.values ++ Seq(und0F)).foreach(Await.ready(_, Duration.Inf))
     }
-    // level 0: the flat beam search, entered from the positioned beam.
-    // No re-rank stage first: upperBeam <= beamWidth, so the entry beam
-    // IS the round-0 beam — re-scoring it would keep the same set at the
-    // cost of an extra checkpointed job
-    val und0 = Await.result(und0F, Duration.Inf)
-    require(upperBeam <= beamWidth,
-      "layeredBeamSearch: upperBeam must not exceed beamWidth")
-    var beam0 = beam
-    for (_ <- 1 to rounds) {
-      val cand = beam0.unionAll(
-          beam0.join(und0.withColumnRenamed("a_id", "id"), "id")
-            .select(col("q_id"), col("b_id").as("id")))
-        .distinct()
-      beam0 = top(score(cand, excludeSelf = false), beamWidth)
-        .select(col("q_id"), col("id"))
-        .localCheckpoint(eager = true)
-    }
-    top(score(beam0, excludeSelf = true), topK)
   }
 }

@@ -1607,8 +1607,8 @@ object StreamingQueries {
     // (per-row native signature, shared bandHashes — bit-identical to the
     // batch banding by construction); state stores band-bucket members so
     // pairs form ACROSS batches. Streamed candidates are then verified
-    // with the exact shingle Jaccard (the same verify the batch operator
-    // fuses in), so the oracle is dd_minhash_lsh's, verbatim
+    // with the exact shingle Jaccard (Dedup.verifyJaccard, the batch
+    // operator's own verify), so the oracle is dd_minhash_lsh's, verbatim
     "stream_minhash_pairs" -> { (s, dir) =>
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
@@ -1632,22 +1632,9 @@ object StreamingQueries {
         // removed as redundant with the distinct's partitioning)
         .repartition(s.sessionState.conf.numShufflePartitions,
           struct(col("a_id"), col("b_id")))
-      val shing = docs.select(col("doc_id").as("id"),
-          graft.expressions.TextExpressions.wordNgrams(
-            col("text"), 3, distinct = true).as("arr"))
-        .where(size(col("arr")) > 0)
-        .select(col("id"), col("arr"), size(col("arr")).cast("long").as("sz"))
-      cand
-        .join(shing.select(col("id").as("a_id"), col("arr").as("a_arr"),
-          col("sz").as("a_sz")), "a_id")
-        .join(shing.select(col("id").as("b_id"), col("arr").as("b_arr"),
-          col("sz").as("b_sz")), "b_id")
-        .withColumn("inter",
-          size(array_intersect(col("a_arr"), col("b_arr"))).cast("long"))
-        .select(col("a_id"), col("b_id"),
-          (col("inter").cast("double") /
-            (col("a_sz") + col("b_sz") - col("inter"))).as("jaccard"))
-        .where(col("jaccard") >= 0.8)
+      val shing = graft.operators.Dedup.shingleSets(docs, "doc_id",
+        graft.expressions.TextExpressions.wordNgrams(col("text"), 3, distinct = true))
+      graft.operators.Dedup.verifyJaccard(cand, shing, tau = 0.8)
         .orderBy("a_id", "b_id")
     },
 

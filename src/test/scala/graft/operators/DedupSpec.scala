@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.expressions.TextExpressions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -55,6 +57,123 @@ class DedupSpec extends SparkSpec {
     val lsh = Dedup.minhashLshPairs(corpus, "doc_id", "text", tau = 0.5)
       .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(brute.nonEmpty && lsh == brute)
+  }
+
+  // the array-native pair joins' edge cases: runs of spaces, leading and
+  // trailing spaces, a tab inside a token, text shorter than n tokens,
+  // empty and null text, n-grams repeated inside one document, multi-byte
+  // and malformed UTF-8, and rotations whose shingles tie exactly on
+  // document frequency, so the hash tie-break decides the prefix
+  private def edgeDocs: DataFrame = Seq[(Long, String)](
+    (1L, "a b c d e f g h"), (2L, "a  b   c d e f g h"),
+    (3L, " a b c d e f g x "), (4L, "a\tb c d e f g h"),
+    (5L, "x"), (6L, "x y"), (7L, ""), (8L, null),
+    (9L, "p q p q p q p q"), (10L, "p q p q p q r"),
+    (11L, "é ü 日本 語 テキスト é ü 日本"), (12L, "é ü 日本 語 テキスト 😀 é ü"),
+    (13L, "t1 t2 t3 t4 t5"), (14L, "t2 t3 t4 t5 t1"),
+    (15L, "t3 t4 t5 t1 t2"), (16L, "t4 t5 t1 t2 t3")
+  ).toDF("doc_id", "text")
+    .union(spark.range(1).select(lit(17L), unhex(lit("61FF2062206320FF")).cast("string")))
+
+  test("shingleHashes: the sorted distinct md5-60 of every word n-gram") {
+    for (n <- 1 to 3) {
+      val got = edgeDocs.select($"doc_id", TextExpressions.shingleHashes($"text", n))
+      val want = edgeDocs.select($"doc_id", expr("sort_array(array_distinct(transform(" +
+        s"word_ngrams(text, $n, true), s -> conv(substring(md5(s), 1, 15), 16, 10)::bigint)))"))
+      // the reference's conv may be null; a shingle hash never is
+      assert(got.schema.last.dataType ==
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, false))
+      assert(RelationalIvf.rawBits(got) == RelationalIvf.rawBits(want), s"n=$n")
+    }
+  }
+
+  test("prefix and MinHash pair joins: raw jaccard bits equal the relational " +
+    "prefix join and postings verify") {
+    for (n <- 1 to 3; tau <- Seq(0.5, 0.75)) {
+      val got = Dedup.prefixJaccardPairs(edgeDocs, "doc_id", "text", n, tau)
+      val want = RelationalDedup.prefixJaccardPairs(edgeDocs, "doc_id", "text", n, tau)
+      assert(RelationalIvf.rawBits(got) == RelationalIvf.rawBits(want), s"prefix n=$n tau=$tau")
+      val gotLsh = Dedup.minhashLshPairs(edgeDocs, "doc_id", "text", tau, n)
+      val wantLsh = RelationalDedup.minhashLshPairs(edgeDocs, "doc_id", "text", tau, n)
+      assert(RelationalIvf.rawBits(gotLsh) == RelationalIvf.rawBits(wantLsh),
+        s"minhash n=$n tau=$tau")
+    }
+    // the edge corpus has pairs to compare: spacing variants, the
+    // rotations, and the repeated-bigram documents
+    val pairs = Dedup.prefixJaccardPairs(edgeDocs, "doc_id", "text", 1, 0.5)
+      .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(Set((1L, 2L), (1L, 4L), (9L, 10L), (11L, 12L), (13L, 16L)).subsetOf(pairs), pairs)
+    // and a seeded corpus of mutated copies of a few base texts, so that
+    // many documents share shingles at many frequencies
+    val r = new scala.util.Random(7)
+    val vocab = (0 until 40).map(i => s"w$i")
+    val bases = Seq.fill(20)(Seq.fill(30)(vocab(r.nextInt(vocab.size))))
+    val docs = (0 until 200).map { i =>
+      val b = bases(r.nextInt(bases.size)).toArray
+      (0 until r.nextInt(4)).foreach(_ => b(r.nextInt(b.length)) = vocab(r.nextInt(vocab.size)))
+      (i.toLong, b.mkString(" "))
+    }.toDF("doc_id", "text")
+    for (tau <- Seq(0.5, 0.8)) {
+      val want = RelationalIvf.rawBits(RelationalDedup.prefixJaccardPairs(docs, "doc_id", "text", 3, tau))
+      assert(want.nonEmpty && RelationalIvf.rawBits(
+        Dedup.prefixJaccardPairs(docs, "doc_id", "text", 3, tau)) == want, s"prefix tau=$tau")
+      assert(RelationalIvf.rawBits(Dedup.minhashLshPairs(docs, "doc_id", "text", tau)) ==
+        RelationalIvf.rawBits(RelationalDedup.minhashLshPairs(docs, "doc_id", "text", tau)),
+        s"minhash tau=$tau")
+    }
+  }
+
+  /** Every physical-plan node of every query `body` executes, its result's
+    * collect and the eager checkpoints inside the operator included. */
+  private def executedNodes(body: => DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.graftbridge.TestBridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    TestBridge.drainListeners(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body.collect()
+      TestBridge.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.flatMap(qe => nodes(qe.executedPlan))
+  }
+
+  test("pair join plans: the prefix join has no collect_list, array_sort or " +
+    "md5; the MinHash join has one Generate, the band posexplode") {
+    import org.apache.spark.sql.catalyst.expressions.{ArraySort, Md5}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.window.WindowExec
+    def relational(nodes: Seq[SparkPlan]): Seq[String] = nodes.flatMap(_.expressions)
+      .flatMap(_.collect { case e @ (_: CollectList | _: ArraySort | _: Md5) => e.prettyName })
+    val prefix = executedNodes(Dedup.prefixJaccardPairs(corpus, "doc_id", "text", 3, 0.5))
+    assert(prefix.exists(_.isInstanceOf[WindowExec]), "no rank window in the prefix join")
+    assert(relational(prefix).isEmpty, relational(prefix))
+    // the capture sees through the checkpoints: the reference has all three
+    assert(relational(executedNodes(
+      RelationalDedup.prefixJaccardPairs(corpus, "doc_id", "text", 3, 0.5))).toSet ==
+      Set("collect_list", "array_sort", "md5"))
+    // distinct by canonical plan: a broadcast band join runs the one band
+    // Generate on each side, a shuffled one reuses its exchange
+    def generates(df: => DataFrame) = executedNodes(df)
+      .collect { case g: GenerateExec => g.canonicalized.asInstanceOf[GenerateExec] }.distinct
+    val lsh = generates(Dedup.minhashLshPairs(corpus, "doc_id", "text", 0.5))
+    assert(lsh.map(_.generator.prettyName) == Seq("posexplode"), lsh)
+    // the postings verify explodes the shingle strings besides
+    assert(generates(RelationalDedup.minhashLshPairs(corpus, "doc_id", "text", 0.5))
+      .map(_.generator.prettyName).sorted == Seq("explode", "posexplode"))
   }
 
   test("simhashPairs: finds near-identical pair, rejects maxDist > 3") {

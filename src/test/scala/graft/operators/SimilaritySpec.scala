@@ -221,6 +221,31 @@ class SimilaritySpec extends SparkSpec {
     assert(bad.isEmpty, out.queryExecution.executedPlan.treeString)
   }
 
+  test("layeredBeamSearch: a failing entry beam leaves no active job; a bad " +
+    "beam width fails before any job starts") {
+    import org.apache.spark.sql.graftbridge.TestBridge
+    val sc = spark.sparkContext
+    val emb = Tables.embeddings(spark, dir)
+    val graph = Similarity.knnJoinBlocked(emb, "vec_id", "embedding", blockCol = "label", k = 3)
+      .select("a_id", "b_id")
+    // zero query vectors: the entry beam's cosine divides by zero (ANSI)
+    // while the level-graph builds over the corpus are still running
+    val zeros = emb.where($"vec_id" < 3).withColumn("embedding", transform($"embedding", _ * 0.0f))
+    val e = intercept[Exception](Similarity.layeredBeamSearch(emb, zeros,
+      "vec_id", "embedding", graph, blockCol = "label"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("DIVIDE_BY_ZERO")), e)
+    TestBridge.drainListeners(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      s"jobs still running: ${sc.statusTracker.getActiveJobIds.mkString(",")}")
+    val jobsBefore = sc.statusTracker.getJobIdsForGroup(null).length
+    intercept[IllegalArgumentException](Similarity.layeredBeamSearch(emb,
+      emb.where($"vec_id" < 3), "vec_id", "embedding", graph, blockCol = "label",
+      upperBeam = 9, beamWidth = 8))
+    TestBridge.drainListeners(sc)
+    assert(sc.statusTracker.getJobIdsForGroup(null).length == jobsBefore)
+  }
+
   test("pqEncode: codebook vectors self-encode with d2 = 0; full coverage; codes are centroid ids") {
     val emb = Tables.embeddings(spark, dir)
     val out = IvfIndex.pqEncode(emb, "vec_id", "embedding", m = 8, dim = 64, stride = 16)
