@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *      is the step that turns billions of rows into thousands of calls;
   *   2. batch keys into chunks of `chunkSize` per partition and call the
   *      enricher once per chunk (`mapPartitions` + `grouped`);
-  *   3. join the small enriched dictionary back (broadcast).
+  *   3. join the enriched dictionary back (broadcast at runtime when
+  *      small — see [[BatchEnrich.enrich]]).
   *
   * The Enricher SPI is where a real LLM/API client plugs in; it must be
   * deterministic for replay/retry safety (Spark may re-run tasks).
@@ -45,13 +46,13 @@ object BatchEnrich {
 
   /** Left-join `df` with enrichment outputs keyed on `keyCol`.
     *
-    * Join-back strategy is SIZE-AWARE: up to `broadcastMaxKeys` distinct
-    * keys the dictionary is broadcast (the common LLM-enrichment shape —
-    * thousands of keys); above it the hint is dropped and the join plans
-    * as a shuffle, with AQE free to convert at runtime from OBSERVED
-    * stats. An unconditional broadcast() of a 100M-key dictionary OOMs
-    * the driver. The key count reuses the distinct's shuffle files, so it
-    * costs one reduce pass, not a second scan of `df`.
+    * The join-back carries no hint and plans as a shuffle join; adaptive
+    * execution turns it into a broadcast join at runtime whenever the
+    * OBSERVED dictionary is below
+    * `spark.sql.adaptive.autoBroadcastJoinThreshold` (the common
+    * LLM-enrichment shape — thousands of keys). A huge dictionary never
+    * broadcasts, so it cannot OOM the driver, and no eager key count
+    * re-runs `df`'s upstream chain to decide.
     *
     * Failed chunks degrade to the miss fallback (the reference logs and
     * continues, main.py:213-214) — but never silently: each failure is
@@ -59,13 +60,12 @@ object BatchEnrich {
     * (visible in the Spark UI as `graft.enrich.failedChunks`).
     */
   def enrich(df: DataFrame, keyCol: String, enricher: BatchEnricher,
-             chunkSize: Int = 200,
-             broadcastMaxKeys: Long = 2_000_000L): DataFrame =
-    enrichCounted(df, keyCol, enricher, chunkSize, broadcastMaxKeys)._1
+             chunkSize: Int = 200): DataFrame =
+    enrichCounted(df, keyCol, enricher, chunkSize)._1
 
   /** [[enrich]] + the failed-chunk accumulator for operators that alert. */
   def enrichCounted(df: DataFrame, keyCol: String, enricher: BatchEnricher,
-                    chunkSize: Int = 200, broadcastMaxKeys: Long = 2_000_000L)
+                    chunkSize: Int = 200)
       : (DataFrame, org.apache.spark.util.LongAccumulator) = {
     val spark = df.sparkSession
     val failedChunks = spark.sparkContext.longAccumulator("graft.enrich.failedChunks")
@@ -93,9 +93,6 @@ object BatchEnrich {
       }
     }
     val dict = spark.createDataFrame(dictRdd, keySchema)
-    val joined =
-      if (keys.count() <= broadcastMaxKeys) df.join(broadcast(dict), Seq(keyCol), "left")
-      else df.join(dict, Seq(keyCol), "left") // AQE decides from runtime stats
-    (joined, failedChunks)
+    (df.join(dict, Seq(keyCol), "left"), failedChunks)
   }
 }

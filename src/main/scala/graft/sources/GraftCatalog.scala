@@ -591,6 +591,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                                      dir: Path): Table = {
     require(!viewExists(ident),
       s"cannot create table $ident: a VIEW with that name exists")
+    GraftTable.forgetCachedLog(dir)
     // IDENTITY partition transforms (PARTITIONED BY (col, ...)) or ONE
     // bucket transform (PARTITIONED BY (bucket(n, col))): identity covers
     // the dominant date/tenant layout with `col=value/` dirs; bucket hashes
@@ -1092,7 +1093,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (isRegistered(ident)) fs.delete(stubDir(ident), true)
     else {
       val dir = stubDir(ident)
-      isTableDir(dir) && fs.delete(dir, true)
+      try isTableDir(dir) && fs.delete(dir, true)
+      finally GraftTable.forgetCachedLog(dir)
     }
   }
 
@@ -1537,9 +1539,11 @@ object GraftTable {
   /** Committed manifests are immutable (the exclusive create IS the
     * commit point), so their lines are cacheable per driver. The entry is
     * validated against the file's (mtime, length) from one getFileStatus,
-    * so drop-and-recreate at the same path, the post-commit setTimes
-    * monotonicity touch-up, and vacuum all invalidate naturally. This
-    * bounds every timestamp surface (commitTimeMillis, versionAtOrBefore,
+    * so the post-commit setTimes monotonicity touch-up and vacuum
+    * invalidate naturally; a table dropped, created or installed at a
+    * directory forgets that directory's entries ([[forgetCachedLog]]), so
+    * a recreated log never matches a stale (mtime, length). This bounds
+    * every timestamp surface (commitTimeMillis, versionAtOrBefore,
     * graft_history) and every snapshot read (readFullEntries) at one
     * manifest READ per version per driver — repeat lookups cost a stat,
     * the same price the pre-meta mtime path paid.
@@ -1547,6 +1551,16 @@ object GraftTable {
   private case class CachedManifest(mtime: Long, len: Long, lines: Seq[String])
   private val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[String, CachedManifest]()
+
+  /** Forget the cached manifests of every log under `dir` (branches
+    * included). Called when a catalog verb ends or starts a table there;
+    * a drop or create that bypasses this driver's catalog is still only
+    * caught by the (mtime, length) check.
+    */
+  private[sources] def forgetCachedLog(dir: Path): Unit = {
+    val prefix = dir.toUri.getPath.stripSuffix("/") + "/"
+    manifestCache.keySet.removeIf(k => new Path(k).toUri.getPath.startsWith(prefix))
+  }
 
   private def rawManifestLines(fs: FileSystem, dir: Path, v: Long,
                                branch: Option[String] = None): Seq[String] = {

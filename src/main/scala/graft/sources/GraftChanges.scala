@@ -8,8 +8,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -37,16 +38,20 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   *     row-multiset-neutral reorganization and is SKIPPED outright.
   *
   * Schema = base schema + `_change_type` (insert|delete) +
-  * `_commit_version`. Batch reads serve the full retained changelog
-  * (changes since the earliest retained snapshot — vacuum moves that
-  * baseline); streaming reads resume from a manifest version offset, so
-  * a pipeline can tail a table that receives MERGEs — the thing the
-  * plain append source must refuse.
+  * `_commit_version`. A batch read plans only the commits inside the
+  * `(lo, hi]` window folded from its pushed `_commit_version` comparisons
+  * (`graft_changes(cat, t, from, to)` pushes `(from, to]`); with no
+  * bound it serves the full retained changelog (changes since the
+  * earliest retained snapshot — vacuum moves that baseline). Streaming
+  * reads resume from a manifest version offset, so a pipeline can tail a
+  * table that receives MERGEs — the thing the plain append source must
+  * refuse.
   *
   * Scale shape: planning one commit is two manifest reads + a set/bitmap
-  * difference (driver-side metadata, O(files changed)); the data read is
-  * exactly the changed files, one task each, through the same pruned
-  * parquet reader as the batch scan.
+  * difference (driver-side metadata, O(files changed)), and only the
+  * commits in the window are planned; the data read is exactly their
+  * changed files, one task each, through the same pruned parquet reader
+  * as the batch scan.
   */
 object GraftChanges {
   val Suffix = "changes"
@@ -76,15 +81,39 @@ object GraftChanges {
       if (bm.isEmpty) None else Some(GraftDv.toBytes(bm))
     }
 
-  /** Change partitions for every commit in `(fromExclusive, toInclusive]`
-    * (consecutive pairs of the RETAINED version list — vacuum gaps fold
-    * into their successor's diff, which is still a correct delta).
+  /** The `(lo, hi]` version window of one `_commit_version` comparison
+    * against a BIGINT literal, or None for any other filter (which then
+    * only filters rows after the scan).
     */
-  def commitPartitions(fs: FileSystem, dir: Path, fromExclusive: Long,
-                       toInclusive: Long): Array[InputPartition] = {
-    val versions = GraftTable.manifestVersions(fs, dir)
-    val pairs = versions.zip(versions.tail)
+  private[sources] def versionWindow(f: Filter): Option[(Long, Long)] = {
+    def below(v: Long) = if (v == Long.MinValue) v else v - 1
+    f match {
+      case GreaterThan(VersionCol, v: Long) => Some((v, Long.MaxValue))
+      case GreaterThanOrEqual(VersionCol, v: Long) => Some((below(v), Long.MaxValue))
+      case LessThan(VersionCol, v: Long) => Some((Long.MinValue, below(v)))
+      case LessThanOrEqual(VersionCol, v: Long) => Some((Long.MinValue, v))
+      case EqualTo(VersionCol, v: Long) => Some((below(v), v))
+      case _ => None
+    }
+  }
+
+  /** Consecutive pairs `(predecessor, commit)` of the RETAINED version
+    * list whose commit lies in `(fromExclusive, toInclusive]` — a vacuum
+    * gap folds into its successor's diff, which is still a correct delta.
+    */
+  def commitPairs(versions: Seq[Long], fromExclusive: Long,
+                  toInclusive: Long): Seq[(Long, Long)] =
+    versions.zip(versions.drop(1))
       .filter { case (_, v) => v > fromExclusive && v <= toInclusive }
+
+  /** Change partitions for every commit in `(fromExclusive, toInclusive]`. */
+  def commitPartitions(fs: FileSystem, dir: Path, fromExclusive: Long,
+                       toInclusive: Long): Array[InputPartition] =
+    pairPartitions(fs, dir, commitPairs(GraftTable.manifestVersions(fs, dir),
+      fromExclusive, toInclusive))
+
+  private[sources] def pairPartitions(fs: FileSystem, dir: Path,
+                                      pairs: Seq[(Long, Long)]): Array[InputPartition] =
     pairs.flatMap { case (prev, v) =>
       if (GraftTable.commitKind(fs, dir, v).contains(GraftTable.KindCompact))
         Nil // multiset-neutral reorganization: nothing changed, emit nothing
@@ -142,7 +171,6 @@ object GraftChanges {
         inserts ++ deletes ++ dvChanges ++ eqChanges
       }
     }.toArray
-  }
 }
 
 /** One changed file (or DV-diff slice of a file) of one commit.
@@ -178,35 +206,75 @@ class GraftChangesTable(base: GraftTable) extends Table with SupportsRead {
 }
 
 class GraftChangesScanBuilder(base: GraftTable, limits: GraftStreamLimits)
-  extends ScanBuilder with SupportsPushDownRequiredColumns {
+  extends ScanBuilder with SupportsPushDownRequiredColumns
+    with SupportsPushDownFilters {
   private var required: StructType =
     GraftChanges.schemaFor(base.schema(), base.rowLineage)
+  private var pushed: Array[Filter] = Array.empty
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = new GraftChangesScan(base, required, limits)
+
+  /** Folds every `_commit_version` comparison with a BIGINT literal into
+    * one `(lo, hi]` window the batch scan plans against. Every filter is
+    * also returned as residual, so Spark re-applies them all and the
+    * window only decides which commits are read, never which rows pass.
+    */
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    pushed = filters.filter(GraftChanges.versionWindow(_).isDefined)
+    filters
+  }
+  override def pushedFilters(): Array[Filter] = pushed
+
+  override def build(): Scan = {
+    val (lo, hi) = pushed.flatMap(GraftChanges.versionWindow)
+      .foldLeft((Long.MinValue, Long.MaxValue)) { case ((l, h), (l2, h2)) =>
+        (math.max(l, l2), math.min(h, h2))
+      }
+    new GraftChangesScan(base, required, limits, lo, hi)
+  }
 }
 
+/** `(fromExclusive, toInclusive]` is the pushed version window (an
+  * unbounded side is Long.MinValue / Long.MaxValue); the batch plan clamps
+  * it to the retained log.
+  */
 class GraftChangesScan(base: GraftTable, required: StructType,
-                       limits: GraftStreamLimits = GraftStreamLimits.Unlimited)
+                       limits: GraftStreamLimits, fromExclusive: Long,
+                       toInclusive: Long)
   extends Scan with Batch {
 
   private def fs = new Path(base.dir)
     .getFileSystem(SparkSession.active.sessionState.newHadoopConf())
+  // a micro-batch stream plans from its offsets, never from this window
+  @volatile private var streaming = false
+
+  /** The batch plan — the window clamped to the retained versions, the
+    * number of commits inside it and their partitions — made once, so
+    * description() can report it without planning twice.
+    */
+  private lazy val plan: (Long, Long, Int, Array[InputPartition]) = {
+    val dir = new Path(base.dir)
+    val versions = GraftTable.manifestVersions(fs, dir)
+    val from = versions.headOption.fold(fromExclusive)(math.max(_, fromExclusive))
+    val to = versions.lastOption.fold(toInclusive)(math.min(_, toInclusive))
+    val pairs = GraftChanges.commitPairs(versions, from, to)
+    (from, to, pairs.size, GraftChanges.pairPartitions(fs, dir, pairs))
+  }
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"graft ${base.name()}.changes cols=${required.fieldNames.mkString(",")}"
+    s"graft ${base.name()}.changes cols=${required.fieldNames.mkString(",")}" +
+      (if (streaming) "" else {
+        val (from, to, commits, parts) = plan
+        s" versions=($from,$to] commits=$commits partitions=${parts.length}"
+      })
 
-  /** Batch read: the full retained changelog (vacuum's earliest kept
-    * snapshot is the baseline and contributes no images).
+  /** Batch read: the commits of the pushed window that the log retains
+    * (vacuum's earliest kept snapshot is the baseline and contributes no
+    * images); a window of compaction commits only plans nothing.
     */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val versions = GraftTable.manifestVersions(fs, new Path(base.dir))
-    if (versions.size < 2) return Array.empty
-    GraftChanges.commitPartitions(fs, new Path(base.dir),
-      versions.head, versions.last)
-  }
+  override def planInputPartitions(): Array[InputPartition] = plan._4
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftChangesReaderFactory(required, base.physicalSchema, base.dir,
@@ -214,10 +282,12 @@ class GraftChangesScan(base: GraftTable, required: StructType,
       new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
       base.aliases, base.existenceDefaults)
 
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+    streaming = true
     new GraftChangesMicroBatchStream(base, required,
       new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
       limits)
+  }
 }
 
 /** Streaming half: offsets are manifest versions (same resume contract as

@@ -58,7 +58,9 @@ class GraftStagedTable(catalog: GraftCatalog, ident: Identifier,
       }
       if (had) fs.delete(trash, true)
     }
-    // a replaced table's cached catalog/plan state is stale now
+    // a replaced table's cached manifests and catalog/plan state are
+    // stale now
+    GraftTable.forgetCachedLog(finalDir)
     org.apache.spark.sql.SparkSession.active.catalog.clearCache()
   }
 

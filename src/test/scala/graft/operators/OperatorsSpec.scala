@@ -61,21 +61,49 @@ class OperatorsSpec extends SparkSpec {
     assert(failed.value == 3L, s"expected 3 failed chunks, got ${failed.value}")
   }
 
-  test("batch enrich: dictionary above broadcastMaxKeys does NOT plan a broadcast") {
-    val df = (1 to 50).map(i => (i.toLong, s"key$i")).toDF("id", "raw_name")
-    // 50 distinct keys > cap of 10 → no broadcast hint; the initial
-    // physical plan must be a shuffle join (AQE may still convert at
-    // runtime from OBSERVED stats — that path cannot OOM the driver on a
-    // mis-estimated dictionary, the unconditional hint could)
-    val big = BatchEnrich.enrich(df, "raw_name", new NameRuleEnricher,
-      chunkSize = 7, broadcastMaxKeys = 10L)
-    assert(!big.queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"),
-      "oversized dictionary still planned as a broadcast")
-    assert(big.count() == 50)
-    // under the cap the broadcast hint stays (the dim-sized fast path)
-    val small = BatchEnrich.enrich(df, "raw_name", new NameRuleEnricher,
-      chunkSize = 7, broadcastMaxKeys = 1000L)
-    assert(small.queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"))
+  test("batch enrich: AQE broadcasts the join-back only when dict is small") {
+    class CountingEnricher(seen: org.apache.spark.util.CollectionAccumulator[String])
+      extends NameRuleEnricher {
+      override def enrichBatch(keys: Seq[String]): Map[String, Seq[String]] = {
+        keys.foreach(seen.add)
+        super.enrichBatch(keys)
+      }
+    }
+    val df = (1 to 200).map(i => (i.toLong, s"key${i % 50} forte"))
+      .toDF("id", "raw_name")
+    val expected = (1 to 200).map(i => s"key${i % 50} forte").distinct.sorted
+    def run(): (Array[org.apache.spark.sql.Row], String, String, Seq[String]) = {
+      val seen = spark.sparkContext.collectionAccumulator[String]("seen")
+      val out = BatchEnrich.enrich(df, "raw_name", new CountingEnricher(seen),
+        chunkSize = 7)
+      val rows = out.collect()
+      import scala.jdk.CollectionConverters._
+      (rows, out.queryExecution.sparkPlan.toString,
+        out.queryExecution.executedPlan.toString, seen.value.asScala.toSeq)
+    }
+    // no hint: the static plan never broadcasts, so an oversized
+    // dictionary cannot OOM the driver; AQE converts from OBSERVED stats
+    val (rows, initial, finalPlan, seen) = run()
+    assert(rows.length == 200)
+    assert(!initial.contains("BroadcastHashJoin"), initial)
+    assert(finalPlan.contains("isFinalPlan=true") &&
+      finalPlan.contains("BroadcastHashJoin"), finalPlan)
+    // every distinct key reaches the enricher exactly once: no eager key
+    // count, and the runtime broadcast reuses the dictionary's shuffle
+    assert(seen.sorted == expected, seen)
+    val prev = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10")
+    try {
+      // a dictionary above AQE's threshold stays a shuffle join
+      val (bigRows, _, bigFinal, bigSeen) = run()
+      assert(bigRows.length == 200)
+      assert(bigFinal.contains("isFinalPlan=true") &&
+        !bigFinal.contains("BroadcastHashJoin"), bigFinal)
+      assert(bigSeen.sorted == expected, bigSeen)
+    } finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
+      case None => spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+    }
   }
 
   test("sessionize: gap splits sessions, counts and bounds correct") {

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** The change-data feed (`graft.db.t.changes` metadata table): row-level
@@ -43,6 +44,44 @@ class GraftChangesSpec extends SparkSpec {
 
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** The whole feed read with no pushed filter, then bounded on the driver. */
+  private def unpushed(table: String, keep: Long => Boolean): Seq[String] =
+    spark.table(s"$table.changes").collect()
+      .filter(r => keep(r.getAs[Long]("_commit_version")))
+      .map(_.toString).toSeq.sorted
+
+  private def changeScan(df: DataFrame): BatchScanExec =
+    df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b } match {
+      case Seq(b) => b
+      case other => fail(s"expected one change scan, got $other")
+    }
+
+  /** Every single-bound comparison (`>`, `>=`, `<`, `<=`, `=`) at every
+    * version from `from` to `to`, plus a conjunction with non-version
+    * predicates, each read pushed and compared with the unpushed feed.
+    */
+  private def checkBounds(table: String, from: Long, to: Long,
+                          other: String): Unit = {
+    val ops: Seq[(String, (Long, Long) => Boolean)] = Seq(
+      ">" -> (_ > _), ">=" -> (_ >= _), "<" -> (_ < _), "<=" -> (_ <= _),
+      "=" -> (_ == _))
+    for ((op, holds) <- ops; k <- from to to) {
+      val df = spark.table(s"$table.changes").where(s"_commit_version $op $k")
+      assert(rowsOf(df) == unpushed(table, holds(_, k)), s"$table: $op $k")
+    }
+    val mid = (from + to) / 2
+    val conj = spark.table(s"$table.changes")
+      .where(s"_commit_version >= $mid AND _commit_version <= $to AND $other")
+    val otherRows = spark.table(s"$table.changes").where(other).collect()
+      .filter { r => val v = r.getAs[Long]("_commit_version"); v >= mid && v <= to }
+    assert(rowsOf(conj) == otherRows.map(_.toString).toSeq.sorted, s"$table: $other")
+    assert(changeScan(conj).scan.description()
+      .contains(s"versions=(${mid - 1},"), changeScan(conj).scan.description())
+  }
 
   test("append commits yield exact insert images; COW rewrites fold to state") {
     sql("""CREATE TABLE graft_cdf.db.t (id BIGINT, v BIGINT)
@@ -231,9 +270,8 @@ class GraftChangesSpec extends SparkSpec {
     // (from, to]: exactly the commits that move state v2 -> v4
     assert(byVersion.select("_commit_version").distinct()
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
-    val manual = spark.table("graft_cdf.db.tb.changes")
-      .where(col("_commit_version") > 2 && col("_commit_version") <= 4)
-    assert(sameRows(byVersion, manual))
+    // the reference is the UNPUSHED feed, bounded on the driver
+    assert(rowsOf(byVersion) == unpushed("graft_cdf.db.tb", v => v > 2 && v <= 4))
     // tag bound = its version; timestamp bounds resolve at-or-before
     val byTag = spark.sql(
       "SELECT * FROM graft_changes('graft_cdf', 'db.tb', 'mid', 4)")
@@ -267,5 +305,138 @@ class GraftChangesSpec extends SparkSpec {
     val counts = spark.table("graft_cdf.db.t.changes")
       .groupBy("_change_type").count().collect()
     assert(counts.nonEmpty)
+  }
+
+  test("pushed _commit_version bounds plan only the named commits and " +
+    "equal the unpushed feed: COW, MOR, eq-delta and row-lineage tables") {
+    import spark.implicits._
+    // copy-on-write history table: appends, a DELETE and an UPDATE
+    sql("""CREATE TABLE graft_cdf.db.pc (id BIGINT, v BIGINT)
+          |TBLPROPERTIES('history'='true')""".stripMargin)
+    sql("INSERT INTO graft_cdf.db.pc SELECT id, id FROM range(0, 40)") // v2
+    sql("INSERT INTO graft_cdf.db.pc SELECT id, id FROM range(40, 60)") // v3
+    sql("DELETE FROM graft_cdf.db.pc WHERE id % 7 = 0") // v4
+    sql("UPDATE graft_cdf.db.pc SET v = -v WHERE id < 12") // v5
+    checkBounds("graft_cdf.db.pc", 0, 6, "id % 2 = 0 AND _change_type = 'insert'")
+    // merge-on-read: the DELETE and UPDATE commits are deletion-vector diffs
+    sql("""CREATE TABLE graft_cdf.db.pm (id BIGINT, v BIGINT)
+          |TBLPROPERTIES('history'='true', 'merge-on-read'='true')""".stripMargin)
+    sql("INSERT INTO graft_cdf.db.pm SELECT id, id FROM range(0, 40)") // v2
+    sql("DELETE FROM graft_cdf.db.pm WHERE id % 5 = 0") // v3, DV commit
+    sql("UPDATE graft_cdf.db.pm SET v = v + 100 WHERE id % 5 = 1") // v4
+    val pmDir = new org.apache.hadoop.fs.Path(s"$warehouse/db/pm")
+    val fs = pmDir.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(GraftTable.readFullEntries(fs, pmDir, 3L).exists(_.dv.nonEmpty),
+      "v3 must be a deletion-vector commit")
+    checkBounds("graft_cdf.db.pm", 1, 5, "_change_type = 'delete'")
+    // equality-delta upserts: the delete images are the masked keys' rows
+    sql("""CREATE TABLE graft_cdf.db.pe (k BIGINT, v STRING)
+          |TBLPROPERTIES('history'='true')""".stripMargin)
+    sql("INSERT INTO graft_cdf.db.pe SELECT id, concat('a', id) FROM range(0, 30)") // v2
+    GraftEqDelete.upsert(spark, "graft_cdf", "db.pe",
+      Seq((3L, "b3"), (7L, "b7"), (100L, "b100")).toDF("k", "v"), Seq("k")) // v3
+    GraftEqDelete.upsert(spark, "graft_cdf", "db.pe",
+      Seq((7L, "c7"), (8L, "c8")).toDF("k", "v"), Seq("k")) // v4
+    checkBounds("graft_cdf.db.pe", 1, 5, "k < 10")
+    // row lineage: the feed carries _row_id through the pushed read
+    sql("""CREATE TABLE graft_cdf.db.pr (id BIGINT, v BIGINT)
+          |TBLPROPERTIES('history'='true', 'rowid'='true')""".stripMargin)
+    sql("INSERT INTO graft_cdf.db.pr SELECT id, id FROM range(0, 30)") // v2
+    sql("UPDATE graft_cdf.db.pr SET v = 0 WHERE id < 5") // v3
+    sql("DELETE FROM graft_cdf.db.pr WHERE id > 25") // v4
+    assert(spark.table("graft_cdf.db.pr.changes").columns.contains("_row_id"))
+    checkBounds("graft_cdf.db.pr", 1, 5, "_row_id % 3 = 0")
+
+    // OR stays residual: the scan plans the whole retained log
+    val disj = spark.table("graft_cdf.db.pc.changes")
+      .where("_commit_version = 2 OR _commit_version = 5")
+    assert(rowsOf(disj) == unpushed("graft_cdf.db.pc", v => v == 2 || v == 5))
+    assert(changeScan(disj).scan.description().contains("versions=(1,5] commits=4"),
+      changeScan(disj).scan.description())
+  }
+
+  test("a one-commit window plans exactly that commit's changed files; a " +
+    "compaction-only window plans none; EXPLAIN of graft_changes shows it") {
+    graft.GraftExtensions.register(spark)
+    sql("""CREATE TABLE graft_cdf.db.pw (id BIGINT, v BIGINT)
+          |TBLPROPERTIES('history'='true')""".stripMargin)
+    for (i <- 0 until 4) // v2..v5, one file or more each
+      sql(s"INSERT INTO graft_cdf.db.pw SELECT id, id FROM range(${i * 25}, ${i * 25 + 25})")
+    val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/pw")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    GraftMaintenance.compactTable(spark, dir.toString)
+    val vc = GraftTable.manifestVersions(fs, dir).last
+    assert(vc == 6L && GraftTable.commitKind(fs, dir, vc).contains(GraftTable.KindCompact))
+
+    val one = spark.table("graft_cdf.db.pw.changes").where(col("_commit_version") === 4)
+    val added = GraftTable.readFullEntries(fs, dir, 4L).map(_.file).toSet --
+      GraftTable.readFullEntries(fs, dir, 3L).map(_.file)
+    val planned = changeScan(one).inputPartitions
+      .map(_.asInstanceOf[GraftChangePartition])
+    assert(planned.map(_.file).toSet == added && planned.size == added.size &&
+      planned.forall(_.version == 4L), planned)
+    assert(changeScan(one).scan.description().contains(
+      s"versions=(3,4] commits=1 partitions=${added.size}"))
+    assert(rowsOf(one) == unpushed("graft_cdf.db.pw", _ == 4L))
+    // the unbounded feed plans every retained commit
+    assert(changeScan(spark.table("graft_cdf.db.pw.changes")).inputPartitions.size >
+      planned.size)
+
+    val compactOnly = spark.sql(
+      s"SELECT * FROM graft_changes('graft_cdf', 'db.pw', ${vc - 1}, $vc)")
+    assert(changeScan(compactOnly).inputPartitions.isEmpty)
+    assert(compactOnly.collect().isEmpty)
+    val explain = spark.sql(
+      s"EXPLAIN SELECT * FROM graft_changes('graft_cdf', 'db.pw', ${vc - 1}, $vc)")
+      .collect().head.getString(0)
+    assert(explain.contains(s"versions=(${vc - 1},$vc] commits=1 partitions=0"), explain)
+    // an empty window plans nothing either
+    val empty = spark.table("graft_cdf.db.pw.changes")
+      .where("_commit_version > 4 AND _commit_version < 5")
+    assert(changeScan(empty).inputPartitions.isEmpty && empty.collect().isEmpty)
+
+    // after a vacuum a window starting before the earliest retained
+    // version is clamped to it; the baseline still contributes nothing
+    GraftMaintenance.vacuum(spark, dir.toString, keepLast = 3)
+    val kept = GraftTable.manifestVersions(fs, dir)
+    assert(kept.head > 2L, kept)
+    for (lo <- Seq(0L, 1L, kept.head - 1, kept.head)) {
+      val df = spark.table("graft_cdf.db.pw.changes").where(col("_commit_version") > lo)
+      assert(rowsOf(df) == unpushed("graft_cdf.db.pw", _ > lo), s"> $lo")
+      assert(changeScan(df).scan.description().contains(
+        s"versions=(${kept.head},${kept.last}] commits=${kept.size - 1}"),
+        changeScan(df).scan.description())
+    }
+  }
+
+  test("drop and recreate at the same path never serves the old table's " +
+    "cached manifest lines") {
+    graft.GraftExtensions.register(spark)
+    val t = "graft_cdf.db.mc"
+    val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/mc")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    def manifests = GraftTable.manifestVersions(fs, dir)
+      .map(v => fs.getFileStatus(GraftTable.manifestPath(dir, v)))
+    sql(s"CREATE TABLE $t (id BIGINT, v BIGINT) TBLPROPERTIES('history'='true')")
+    sql(s"INSERT INTO $t VALUES (1, 10)")
+    // warm the manifest cache through a snapshot read and the change feed
+    assert(spark.table(t).collect().map(_.getLong(0)).toSeq == Seq(1L))
+    assert(spark.sql(s"SELECT id FROM graft_changes('graft_cdf', 'db.mc', 1, 2)")
+      .collect().map(_.getLong(0)).toSeq == Seq(1L))
+    val old = manifests
+    sql(s"DROP TABLE $t")
+    sql(s"CREATE TABLE $t (id BIGINT, v BIGINT) TBLPROPERTIES('history'='true')")
+    sql(s"INSERT INTO $t VALUES (2, 20)")
+    // same paths, same lengths, and (forced) the same mtimes: the
+    // (mtime, length) check alone cannot tell the logs apart
+    val now = manifests
+    assert(now.map(_.getPath) == old.map(_.getPath))
+    assert(now.map(_.getLen) == old.map(_.getLen),
+      s"${now.map(_.getLen)} vs ${old.map(_.getLen)}")
+    old.foreach(st => fs.setTimes(st.getPath, st.getModificationTime, -1))
+    assert(manifests.map(_.getModificationTime) == old.map(_.getModificationTime))
+    assert(spark.table(t).collect().map(_.getLong(0)).toSeq == Seq(2L))
+    assert(spark.sql(s"SELECT id FROM graft_changes('graft_cdf', 'db.mc', 1, 2)")
+      .collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 }
