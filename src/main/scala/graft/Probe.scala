@@ -77,13 +77,10 @@ object Probe {
     spark.sparkContext.addSparkListener(listener)
 
     // listener events are delivered asynchronously: after an action
-    // returns, poll until every started job has its end event (bounded)
-    def drain(): Unit = {
-      import scala.jdk.CollectionConverters._
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (jobs.values().asScala.exists(_.ms < 0) &&
-             System.nanoTime() < deadline) Thread.sleep(20)
-    }
+    // returns, wait until every job-end and stage-completed event posted
+    // so far has been processed
+    def drain(): Unit =
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(spark.sparkContext)
 
     Tables.names.foreach(t => Tables.load(spark, dir, t).count()) // warm
     def noop(df: org.apache.spark.sql.DataFrame): Unit =

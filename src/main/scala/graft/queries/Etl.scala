@@ -3163,7 +3163,7 @@ object Etl {
           after("status=O") == before("status=O") &&
           after("status=P") == before("status=P"),
         "etl_optimize: cold partitions' head entries must be UNTOUCHED")
-      require(graft.sources.GraftTable.readCommitKind(fs, tdir,
+      require(graft.sources.GraftTable.commitKind(fs, tdir,
           vPre + 1).contains(graft.sources.GraftTable.KindCompact),
         "etl_optimize: the rewrite must commit as kind=compact")
       // row-multiset neutrality: the pre-optimize snapshot equals head

@@ -286,7 +286,7 @@ object StreamingQueries {
       val tfs = tdir.getFileSystem(s.sessionState.newHadoopConf())
       val kinds = graft.sources.GraftTable.manifestVersions(tfs, tdir)
         .filter(_ > v1)
-        .flatMap(v => graft.sources.GraftTable.readCommitKind(tfs, tdir, v))
+        .flatMap(v => graft.sources.GraftTable.commitKind(tfs, tdir, v))
       require(kinds.nonEmpty &&
         kinds.forall(_ == graft.sources.GraftTable.KindEqDelta),
         s"stream_eq_upsert: every streamed epoch must commit as eqdelta, " +
@@ -521,7 +521,7 @@ object StreamingQueries {
       val fs = tdir.getFileSystem(s.sessionState.newHadoopConf())
       val vs = graft.sources.GraftTable.manifestVersions(fs, tdir)
       val appends = vs.count(v => graft.sources.GraftTable
-        .readCommitKind(fs, tdir, v).contains(graft.sources.GraftTable.KindAppend))
+        .commitKind(fs, tdir, v).contains(graft.sources.GraftTable.KindAppend))
       require(appends >= 3,
         s"stream_catalog_sink: 3 micro-batches must land as >=3 append " +
           s"commits (got $appends of versions $vs)")

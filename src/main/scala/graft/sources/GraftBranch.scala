@@ -101,7 +101,7 @@ object GraftBranch {
   }
 
   /** Publish: main adopts every branch commit by RENAMING the branch
-    * manifests (and their commit-kind markers) into the main namespace,
+    * manifests (each carrying its own commit kind) into the main namespace,
     * oldest first — each rename lands an already-complete snapshot, so a
     * reader never observes a torn state and a crash mid-way leaves a
     * shorter but valid fast-forward. Refuses when main moved past the
@@ -129,9 +129,6 @@ object GraftBranch {
         s"fast-forward of '$name' refused at version $v: a racing main " +
           "commit took it — the branch no longer fast-forwards cleanly")
       require(fs.rename(src, dst), s"could not install $dst")
-      val kindSrc = GraftTable.commitKindPath(dir, v, Some(name))
-      if (fs.exists(kindSrc))
-        fs.rename(kindSrc, GraftTable.commitKindPath(dir, v))
     }
     write(fs, dir, readAll(fs, dir) - name)
     (base, own.last)
@@ -397,19 +394,16 @@ object GraftBranch {
     val cv = GraftTable.commitRetrying(fs, dir,
       meta = GraftTable.kindMeta(GraftTable.KindAppend))(old =>
       old ++ added.map(_.file).filterNot(old.contains))
-    GraftTable.writeCommitKind(fs, dir, cv, GraftTable.KindAppend)
-    own.foreach { v =>
-      fs.delete(GraftTable.manifestPath(dir, v, Some(name)), false)
-      fs.delete(GraftTable.commitKindPath(dir, v, Some(name)), false)
-    }
+    own.foreach(v =>
+      fs.delete(GraftTable.manifestPath(dir, v, Some(name)), false))
     write(fs, dir, readAll(fs, dir) - name)
     (added.size, cv)
   }
 
-  /** Drop the branch: its manifests and kind markers go, and data files /
-    * sidecars referenced ONLY by this branch (not by any main manifest or
-    * any other branch) are deleted with their stats/bloom entries —
-    * staged bytes don't outlive the decision to walk away. Returns
+  /** Drop the branch: its manifests go, and data files / sidecars
+    * referenced ONLY by this branch (not by any main manifest or any
+    * other branch) are deleted with their stats/bloom entries — staged
+    * bytes don't outlive the decision to walk away. Returns
     * (manifests dropped, data files reclaimed).
     */
   def drop(fs: FileSystem, dir: Path, name: String): (Int, Int) = {
@@ -439,10 +433,8 @@ object GraftBranch {
       GraftStats.retain(fs, dir, n => !reclaim.contains(n))
       GraftBloom.retain(fs, dir, n => !reclaim.contains(n))
     }
-    own.foreach { v =>
-      fs.delete(GraftTable.manifestPath(dir, v, Some(name)), false)
-      fs.delete(GraftTable.commitKindPath(dir, v, Some(name)), false)
-    }
+    own.foreach(v =>
+      fs.delete(GraftTable.manifestPath(dir, v, Some(name)), false))
     write(fs, dir, all - name)
     (own.size, reclaim.size)
   }

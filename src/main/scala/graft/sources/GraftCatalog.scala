@@ -421,8 +421,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** `TIMESTAMP AS OF t` (micros since epoch): resolves to the LATEST
-    * manifest committed at-or-before t — commit wall-clock is the manifest
-    * file's modification time (the same as-of-last semantics as the
+    * manifest committed at-or-before t — commit wall-clock is
+    * [[GraftTable.commitTimeMillis]] (the same as-of-last semantics as the
     * engine's AsOfJoin, applied to the commit log).
     */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
@@ -1430,19 +1430,18 @@ object GraftTable {
     (java.util.regex.Pattern.quote(s"_graft_branch_${b}_manifest_") +
       """(\d+)\.txt""").r
 
-  /** `!ts=` manifest meta key (round 13): the commit wall-clock stamped
-    * INSIDE the manifest's atomic unit. Structural fix for the two mtime
-    * limitations: stores without `setTimes` could not disambiguate
-    * same-millisecond commit pairs (the monotonic touch-up was a no-op),
-    * and replication/restore of manifest FILES reset their mtimes —
-    * meta stamps ride the bytes, so commit times survive copies and are
-    * portable to object stores.
+  /** `!ts=` manifest meta key: the commit wall-clock stamped INSIDE the
+    * manifest's atomic unit, strictly monotonic per table. File mtimes
+    * cannot serve: stores without `setTimes` cannot separate a
+    * same-millisecond commit pair, and replication/restore of manifest
+    * FILES reset their mtimes — meta stamps ride the bytes, so commit
+    * times survive copies and are portable to object stores.
     */
   val TsMetaKey = "ts"
 
   /** Commit wall-clock of version `v`: the `!ts=` meta stamp when the
-    * manifest carries one, else the file's modification time (pre-round-
-    * 13 manifests and foreign copies). Every timestamp surface
+    * manifest carries one, else the file's modification time (a manifest
+    * written by hand or by a foreign tool). Every timestamp surface
     * (TIMESTAMP AS OF, `graft_history`, `graft_row_diff`/`graft_changes`
     * bounds, age-based retention) reads through here so they can never
     * drift apart.
@@ -1456,7 +1455,7 @@ object GraftTable {
 
   /** Latest manifest version committed at-or-before `tsMillis` — commit
     * wall-clock is [[commitTimeMillis]] (the `!ts=` meta stamp, mtime for
-    * pre-meta manifests), the SAME at-or-before rule `TIMESTAMP AS OF`
+    * a manifest without one), the SAME at-or-before rule `TIMESTAMP AS OF`
     * time travel applies; every timestamp-bounded surface resolves
     * through here so they can never drift apart. Stamps are strictly
     * monotonic per table (writeFullEntries bumps same-ms ties), so a
@@ -1539,14 +1538,13 @@ object GraftTable {
   /** Committed manifests are immutable (the exclusive create IS the
     * commit point), so their lines are cacheable per driver. The entry is
     * validated against the file's (mtime, length) from one getFileStatus,
-    * so the post-commit setTimes monotonicity touch-up and vacuum
-    * invalidate naturally; a table dropped, created or installed at a
-    * directory forgets that directory's entries ([[forgetCachedLog]]), so
-    * a recreated log never matches a stale (mtime, length). This bounds
-    * every timestamp surface (commitTimeMillis, versionAtOrBefore,
-    * graft_history) and every snapshot read (readFullEntries) at one
-    * manifest READ per version per driver — repeat lookups cost a stat,
-    * the same price the pre-meta mtime path paid.
+    * so vacuum and rewrites invalidate naturally; a table dropped,
+    * created or installed at a directory forgets that directory's entries
+    * ([[forgetCachedLog]]), so a recreated log never matches a stale
+    * (mtime, length). This bounds every timestamp surface
+    * (commitTimeMillis, versionAtOrBefore, graft_history) and every
+    * snapshot read (readFullEntries) at one manifest READ per version per
+    * driver — repeat lookups cost a stat.
     */
   private case class CachedManifest(mtime: Long, len: Long, lines: Seq[String])
   private val manifestCache =
@@ -1700,10 +1698,11 @@ object GraftTable {
         .filter(kv => kv._1.startsWith("txn:") || kv._1.startsWith("idwm:")) }
       .getOrElse(Map.empty[String, String])
     // commit wall-clock INSIDE the atomic unit, strictly monotonic per
-    // table (same-ms successor bumps by 1): timestamp addressability no
-    // longer depends on the store honoring setTimes, and survives
-    // manifest-file copies (clone keeps source history times — the
-    // snapshot-semantics answer)
+    // table (same-ms successor bumps by 1): every timestamp surface
+    // resolves at-or-before on it, so a commit's own committed_at always
+    // resolves back to that commit. It never depends on file mtimes
+    // (stores without setTimes, manifest-file copies — clone keeps
+    // source history times, the snapshot-semantics answer)
     val prevTs = prev.map { case (pv, pb) => commitTimeMillis(fs, dir, pv, pb) }
     val tsStamp = math.max(System.currentTimeMillis(),
       prevTs.map(_ + 1L).getOrElse(Long.MinValue))
@@ -1736,29 +1735,6 @@ object GraftTable {
     // (see GraftCommitPrimitive — pluggable per store; conditional-PUT
     // shaped on rename-less object stores)
     GraftCommitPrimitive.forFs(fs).commit(fs, manifestPath(dir, v, branch), bytes)
-    // commit wall-clock IS the manifest mtime, and every timestamp
-    // surface (TIMESTAMP AS OF, graft_row_diff/graft_changes bounds)
-    // resolves at-or-before on it: enforce STRICT monotonicity per
-    // table, because two commits landing in the same millisecond would
-    // make the earlier one's own committed_at resolve to the later
-    // version (post-commit metadata touch-up — the version race was
-    // already decided at the create above)
-    prev.foreach { case (pv, pb) =>
-      try {
-        val cur = manifestPath(dir, v, branch)
-        val prevMtime =
-          fs.getFileStatus(manifestPath(dir, pv, pb)).getModificationTime
-        if (fs.getFileStatus(cur).getModificationTime <= prevMtime)
-          fs.setTimes(cur, prevMtime + 1, -1)
-      } catch {
-        // BEST-EFFORT: stores without setTimes (some object-store
-        // connectors) keep today's behavior — a same-ms tie resolves
-        // at-or-before to the later version, which is still a correct
-        // "latest at that instant" answer; the commit itself already
-        // succeeded above and must never fail on this touch-up
-        case _: UnsupportedOperationException | _: java.io.IOException =>
-      }
-    }
   }
 
   /** Optimistic-concurrency commit loop for ADDITIVE commits: read the
@@ -1822,18 +1798,16 @@ object GraftTable {
       }
   }
 
-  // --- commit-kind markers ---
+  // --- commit kinds ---
   // WHAT a commit was (append / replace / overwrite / delta / compact /
-  // restore). Pure observability plus one load-bearing bit: `compact`
-  // marks a commit as a row-multiset-NEUTRAL reorganization, which is
-  // what lets streaming readers skip it instead of failing (append
-  // tail) or re-emitting the whole table (change feed). Since round 12
-  // the kind rides INSIDE the manifest as `!kind=` meta — atomic with
-  // the commit (resolve via [[commitKind]]); the
-  // `_graft_commit_<v>.txt` marker file is still written right after
-  // the create for compatibility (pre-meta commits, replication's
-  // kind-before-manifest shipping order, vacuum bookkeeping). A
-  // missing kind resolves conservatively (unknown ≠ compact).
+  // restore / eqdelta), recorded as `!kind=` meta INSIDE the manifest's
+  // atomic create — the manifest is the whole commit, so no crash can
+  // separate a commit from its kind. Pure observability plus one
+  // load-bearing bit: `compact` marks a commit as a row-multiset-NEUTRAL
+  // reorganization, which is what lets streaming readers skip it instead
+  // of failing (append tail) or re-emitting the whole table (change
+  // feed). A missing kind (the empty v1 manifest) resolves
+  // conservatively (unknown ≠ compact).
   val KindAppend = "append"
   val KindReplace = "replace"
   val KindOverwrite = "overwrite"
@@ -1842,61 +1816,25 @@ object GraftTable {
   val KindRestore = "restore"
   val KindEqDelta = "eqdelta"
 
-  def commitKindPath(dir: Path, v: Long, branch: Option[String] = None): Path =
-    branch match {
-      case None => new Path(dir, f"_graft_commit_$v%08d.txt")
-      case Some(b) => new Path(dir, f"_graft_branch_${b}_commit_$v%08d.txt")
-    }
-
-  def writeCommitKind(fs: FileSystem, dir: Path, v: Long, kind: String,
-                      branch: Option[String] = None): Unit = {
-    val out = fs.create(commitKindPath(dir, v, branch), true)
-    try out.write(kind.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** `!kind=` manifest meta key (round 12): the commit kind riding INSIDE
-    * the manifest's atomic create. The `_graft_commit_<v>.txt` marker is
-    * still written for compatibility (replication ships it kind-first,
-    * vacuum retires it, pre-meta mirrors read it), but consumers resolve
-    * the meta FIRST — closing the crash window where a manifest landed
-    * without its marker and a torn COMPACTION read as a data commit,
-    * making `.changes` and the streaming tail emit the entire rewritten
-    * table as spurious change images. Not carried forward between
-    * commits (the txn:/idwm: carry filter excludes it): each manifest
-    * states its own kind or none.
+  /** `!kind=` manifest meta key. Not carried forward between commits
+    * (the txn:/idwm: carry filter excludes it): each manifest states its
+    * own kind or none.
     */
   val KindMetaKey = "kind"
 
   def kindMeta(kind: String): Map[String, String] = Map(KindMetaKey -> kind)
 
-  /** Commit `entries` at `v` with the kind ATOMIC in the manifest meta,
-    * plus the compatibility kind file (written after the commit point,
-    * as before — but no reader depends on it for new commits).
-    */
+  /** Commit `entries` at `v` with `kind` in the manifest meta. */
   def commitWithKind(fs: FileSystem, dir: Path, v: Long,
                      entries: Seq[GraftEntry], kind: String,
                      meta: Map[String, String] = Map.empty,
-                     branch: Option[String] = None): Unit = {
-    writeFullEntries(fs, dir, v, entries, meta + (KindMetaKey -> kind), branch)
-    writeCommitKind(fs, dir, v, kind, branch)
-  }
+                     branch: Option[String] = None): Unit =
+    writeFullEntries(fs, dir, v, entries, meta ++ kindMeta(kind), branch)
 
-  /** Resolve a commit's kind: manifest meta first (atomic with the
-    * commit), the marker file as fallback for pre-meta commits.
-    */
+  /** The kind version `v` committed as, from its manifest meta. */
   def commitKind(fs: FileSystem, dir: Path, v: Long,
                  branch: Option[String] = None): Option[String] =
     manifestMeta(fs, dir, v, branch).get(KindMetaKey)
-      .orElse(readCommitKind(fs, dir, v, branch))
-
-  def readCommitKind(fs: FileSystem, dir: Path, v: Long,
-                     branch: Option[String] = None): Option[String] = {
-    val p = commitKindPath(dir, v, branch)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-    finally in.close()
-  }
 }
 
 /** @param history snapshot mode (opt-in via TBLPROPERTIES
@@ -3576,7 +3514,6 @@ class GraftStreamingWrite(table: GraftTable, writeSchema: StructType,
           attempt += 1
       }
     }
-    GraftTable.writeCommitKind(fs, dir, committed, GraftTable.KindAppend)
     // stats (and index-on-write entries) land AFTER the manifest commit:
     // a dropped duplicate epoch (zombie/replay paths above return early)
     // must not leave dangling entries for files it unlanded
@@ -3814,7 +3751,6 @@ class GraftBatchWrite(table: GraftTable, writeSchema: StructType,
           val cv = GraftTable.commitRetrying(fs, dir, branch = br,
             meta = GraftTable.kindMeta(GraftTable.KindAppend))(
             old => old ++ landed)
-          GraftTable.writeCommitKind(fs, dir, cv, GraftTable.KindAppend, br)
           GraftBatchWrite.lastCommittedVersion.set(cv)
         } else {
           var attempt = 0
@@ -3834,8 +3770,6 @@ class GraftBatchWrite(table: GraftTable, writeSchema: StructType,
                 attempt += 1
             }
           }
-          GraftTable.writeCommitKind(fs, dir, committed,
-            GraftTable.KindAppend, br)
           GraftBatchWrite.lastCommittedVersion.set(committed)
         }
       } else {
@@ -3895,7 +3829,6 @@ class GraftBatchWrite(table: GraftTable, writeSchema: StructType,
           try {
             GraftTable.writeFullEntries(fs, dir, v + 1, newList,
               idMeta ++ GraftTable.kindMeta(replKind), br)
-            GraftTable.writeCommitKind(fs, dir, v + 1, replKind, br)
             GraftBatchWrite.lastCommittedVersion.set(v + 1)
             committed = true
           } catch {

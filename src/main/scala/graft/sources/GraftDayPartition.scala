@@ -67,9 +67,6 @@ object GraftDayPartition {
       }
     }
 
-  /** Back-compat alias used by the days write path. */
-  def dayOf(dt: DataType, v: Any): Option[Long] = unitOf("days", dt, v)
-
   /** Parse `<col>_<unit>=...` from a file's path under the table dir.
     * None when the file carries no segment (pre-existing flat files —
     * never pruned), Some(None) for the null directory.

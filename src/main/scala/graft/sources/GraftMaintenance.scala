@@ -881,10 +881,7 @@ object GraftMaintenance {
           !referencedEq.contains(st.getPath.getName))))
       .map(_.getPath)
     dvOrphans.foreach(fs.delete(_, false))
-    expire.foreach { v =>
-      fs.delete(GraftTable.manifestPath(dir, v), false)
-      fs.delete(GraftTable.commitKindPath(dir, v), false)
-    }
+    expire.foreach(v => fs.delete(GraftTable.manifestPath(dir, v), false))
     // manifest segments are immutable and shared across versions: delete
     // the ones no retained version references (AFTER the expired version
     // files are gone, so a crash between the two deletes leaves only

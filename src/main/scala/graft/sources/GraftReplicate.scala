@@ -6,13 +6,14 @@ import org.apache.spark.sql.SparkSession
 /** Incremental cross-warehouse REPLICATION (the DR / multi-region mirror
   * verb — Delta's "deep clone incremental", Iceberg's snapshot-sync):
   * `replicate(src, dst)` makes `dst` a byte-faithful mirror of the source
-  * table's COMMIT HISTORY — manifests, commit kinds, branch namespaces,
-  * segments, DV/equality sidecars, file stats, tags — not just its head
-  * snapshot (what [[GraftClone]] pins). Time travel, `.changes`, tag
-  * reads and row lineage all work on the mirror verbatim, because the
-  * mirror IS the same manifest log over the same (copied) bytes; the
-  * composition verb is `graft_register`, which adopts the mirror into any
-  * catalog as a queryable table with zero further copying.
+  * table's COMMIT HISTORY — manifests (each carrying its commit kind),
+  * branch namespaces, segments, DV/equality sidecars, file stats, tags —
+  * not just its head snapshot (what [[GraftClone]] pins). Time travel,
+  * `.changes`, tag reads and row lineage all work on the mirror verbatim,
+  * because the mirror IS the same manifest log over the same (copied)
+  * bytes; the composition verb is `graft_register`, which adopts the
+  * mirror into any catalog as a queryable table with zero further
+  * copying.
   *
   * Re-running is the sync: immutable files already present at the same
   * length are SKIPPED (data/segment/sidecar/manifest names are
@@ -35,8 +36,8 @@ import org.apache.spark.sql.SparkSession
   *      columns resolve before any manifest that references them arrives,
   *      and a re-forked branch base — a same-length in-place rewrite the
   *      length gate cannot see — lands before the branch manifests);
-  *   4. manifests + commit kinds, OLDEST version first, kind before its
-  *      manifest (main and every branch namespace);
+  *   4. manifests, OLDEST version first (main and every branch
+  *      namespace);
   *   5. refs (tags/branches) last, so a name never dangles.
   * A crash mid-sync therefore leaves the mirror a correct, readable table
   * at some version the source really had; the re-run resumes where it
@@ -68,24 +69,16 @@ object GraftReplicate {
   // copyIfChanged's content comparison, never the length-gated bulk phase.
   private val MutableHead = Set(GraftTable.MetaFile, GraftTable.PropsFile,
     GraftBranch.BranchesFile)
-  private val CommitRe = """_graft_(?:manifest|commit)_(\d+)\.txt""".r
-  private val BranchCommitRe =
-    """_graft_branch_(.+?)_(?:manifest|commit)_(\d+)\.txt""".r
+  private val ManifestRe = """_graft_manifest_(\d+)\.txt""".r
+  private val BranchManifestRe = """_graft_branch_(.+?)_manifest_(\d+)\.txt""".r
 
-  private def isCommitFile(n: String): Boolean = n match {
-    case CommitRe(_) => true
-    case BranchCommitRe(_, _) => true
-    case _ => false
-  }
-
-  /** (branch-or-empty, version, isManifest) — sync order key: oldest
-    * version first, the kind marker before the manifest it describes.
+  /** (branch-or-empty, version) of a manifest file name — the sync order
+    * key (oldest version first) — or None for any other file.
     */
-  private def commitKey(n: String): (String, Long, Int) = n match {
-    case CommitRe(v) => ("", v.toLong, if (n.contains("_manifest_")) 1 else 0)
-    case BranchCommitRe(b, v) =>
-      (b, v.toLong, if (n.contains("_manifest_")) 1 else 0)
-    case _ => throw new IllegalArgumentException(s"not a commit file: $n")
+  private def manifestKey(n: String): Option[(String, Long)] = n match {
+    case ManifestRe(v) => Some(("", v.toLong))
+    case BranchManifestRe(b, v) => Some((b, v.toLong))
+    case _ => None
   }
 
   /** Listing calls made by [[listAll]] since JVM start — spec-asserted to
@@ -206,9 +199,8 @@ object GraftReplicate {
     // in hand (zero extra listing RPCs; 2 small reads per namespace).
     if (dstFiles.contains(GraftTable.MetaFile)) {
       def manifestsByNs(files: Seq[(String, Long)]): Map[String, Seq[Long]] =
-        files.collect {
-          case (rel, _) if !rel.contains("/") && isCommitFile(rel) &&
-            rel.contains("_manifest_") => commitKey(rel)
+        files.flatMap { case (rel, _) =>
+          if (rel.contains("/")) None else manifestKey(rel)
         }.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
       def path(root: Path, ns: String, v: Long): Path =
         GraftTable.manifestPath(root, v, Some(ns).filter(_.nonEmpty))
@@ -237,8 +229,8 @@ object GraftReplicate {
     def needed(rel: String, len: Long): Boolean =
       !dstFiles.get(rel).contains(len)
 
-    val (commits, rest) = srcFiles.partition(f =>
-      !f._1.contains("/") && isCommitFile(f._1))
+    val (manifests, rest) = srcFiles.partition(f =>
+      !f._1.contains("/") && manifestKey(f._1).nonEmpty)
     val (mutableHead, bulk) = rest.partition(f =>
       MutableHead.contains(f._1) || f._1 == GraftRefs.RefsFile)
 
@@ -304,12 +296,12 @@ object GraftReplicate {
       .foreach { case (rel, _) => syncMutable(rel) }
     retireIfGone(GraftBranch.BranchesFile)
 
-    // --- phase 4: commit files, oldest first, kind before manifest
-    val newCommits = commits.filter((needed _).tupled)
-      .sortBy(f => commitKey(f._1))
-    var commitBytes = 0L
-    newCommits.foreach { case (rel, _) =>
-      commitBytes += atomicCopy(srcFs, new Path(src, rel),
+    // --- phase 4: manifests, oldest first
+    val newManifests = manifests.filter((needed _).tupled)
+      .sortBy(f => manifestKey(f._1).get)
+    var manifestBytes = 0L
+    newManifests.foreach { case (rel, _) =>
+      manifestBytes += atomicCopy(srcFs, new Path(src, rel),
         dstFs, new Path(dst, rel))
     }
 
@@ -320,10 +312,9 @@ object GraftReplicate {
 
     val head = GraftTable.manifestVersions(srcFs, src).lastOption.getOrElse(0L)
     Report(
-      versionsSynced = newCommits.map(f => commitKey(f._1))
-        .count(_._3 == 1).toLong,
-      filesCopied = toCopy.size + newCommits.size + metaFiles,
-      bytesCopied = copiedBytes + commitBytes + metaBytes,
+      versionsSynced = newManifests.size.toLong,
+      filesCopied = toCopy.size + newManifests.size + metaFiles,
+      bytesCopied = copiedBytes + manifestBytes + metaBytes,
       headVersion = head)
   }
 

@@ -158,11 +158,9 @@ object GraftWap {
             throw new java.io.IOException(s"WAP publish: rename failed for $tgt")
           tgt.toString
         }
-      val cv = GraftTable.commitRetrying(fs, dir,
+      GraftTable.commitRetrying(fs, dir,
         meta = GraftTable.kindMeta(GraftTable.KindAppend))(
         old => old ++ landed)
-      GraftTable.writeCommitKind(fs, dir, cv, GraftTable.KindAppend)
-      cv
     }
     fs.delete(src, true)
     v

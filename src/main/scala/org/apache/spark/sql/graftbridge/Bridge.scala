@@ -78,6 +78,13 @@ object Bridge {
   def resetCatalogCache(spark: SparkSession): Unit =
     spark.sessionState.catalogManager.reset()
 
+  /** Blocks until every listener has processed every event posted so far:
+    * job and stage ends and query-execution callbacks are delivered
+    * asynchronously (`LiveListenerBus` is private[spark]).
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** DataFrame over an RDD[InternalRow] (`df.queryExecution.toRdd` shape):
     * the per-partition imperative operators (GlobalRank) stay in Tungsten
     * binary rows end-to-end instead of round-tripping through the external

@@ -44,8 +44,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("every query is documented in SURVEY §2 (the judge's checklist)") {
+    // the forked test JVM runs in the build's base directory
     val text = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/repo/SURVEY.md"))
+      java.nio.file.Paths.get("SURVEY.md"))
     val mentioned = """`([a-z0-9_]+)`""".r.findAllMatchIn(text).map(_.group(1)).toSet
     val undocumented = SparkEntry.queries.keySet -- mentioned
     assert(undocumented.isEmpty, s"queries missing from SURVEY.md: $undocumented")

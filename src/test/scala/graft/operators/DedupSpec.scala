@@ -128,18 +128,18 @@ class DedupSpec extends SparkSpec {
   private def executedNodes(body: => DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.graftbridge.TestBridge
+    import org.apache.spark.sql.graftbridge.Bridge
     import org.apache.spark.sql.util.QueryExecutionListener
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    TestBridge.drainListeners(spark.sparkContext)
+    Bridge.drainListeners(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       body.collect()
-      TestBridge.drainListeners(spark.sparkContext)
+      Bridge.drainListeners(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)

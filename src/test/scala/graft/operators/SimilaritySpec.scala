@@ -223,7 +223,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("layeredBeamSearch: a failing entry beam leaves no active job; a bad " +
     "beam width fails before any job starts") {
-    import org.apache.spark.sql.graftbridge.TestBridge
+    import org.apache.spark.sql.graftbridge.Bridge
     val sc = spark.sparkContext
     val emb = Tables.embeddings(spark, dir)
     val graph = Similarity.knnJoinBlocked(emb, "vec_id", "embedding", blockCol = "label", k = 3)
@@ -235,14 +235,14 @@ class SimilaritySpec extends SparkSpec {
       "vec_id", "embedding", graph, blockCol = "label"))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(c => String.valueOf(c.getMessage).contains("DIVIDE_BY_ZERO")), e)
-    TestBridge.drainListeners(sc)
+    Bridge.drainListeners(sc)
     assert(sc.statusTracker.getActiveJobIds.isEmpty,
       s"jobs still running: ${sc.statusTracker.getActiveJobIds.mkString(",")}")
     val jobsBefore = sc.statusTracker.getJobIdsForGroup(null).length
     intercept[IllegalArgumentException](Similarity.layeredBeamSearch(emb,
       emb.where($"vec_id" < 3), "vec_id", "embedding", graph, blockCol = "label",
       upperBeam = 9, beamWidth = 8))
-    TestBridge.drainListeners(sc)
+    Bridge.drainListeners(sc)
     assert(sc.statusTracker.getJobIdsForGroup(null).length == jobsBefore)
   }
 

@@ -63,7 +63,7 @@ class GraftBranchSpec extends SparkSpec {
     assert(GraftBranch.readAll(fs, dir).isEmpty)
     // the published commits time-travel like any other
     assert(sql("SELECT * FROM graft_br.db.t VERSION AS OF 3").count() == 150)
-    assert(GraftTable.readCommitKind(fs, dir, 4).contains(GraftTable.KindAppend))
+    assert(GraftTable.commitKind(fs, dir, 4).contains(GraftTable.KindAppend))
   }
 
   test("divergence: a main commit after the fork refuses the fast-forward") {

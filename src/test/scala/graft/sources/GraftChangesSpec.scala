@@ -156,11 +156,8 @@ class GraftChangesSpec extends SparkSpec {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     GraftMaintenance.compactTable(spark, dir.toString)
     val vCompact = GraftTable.manifestVersions(fs, dir).last
-    // simulate the crash between manifest create and marker write: the
-    // marker never landed. Pre-round-12 this made the ENTIRE rewritten
-    // table replay as spurious change images downstream — exactly once,
-    // after an unlucky crash
-    assert(fs.delete(GraftTable.commitKindPath(dir, vCompact), false))
+    // the kind rides the manifest itself: no crash can land the rewrite
+    // without it and replay the ENTIRE table as spurious change images
     assert(GraftTable.commitKind(fs, dir, vCompact)
       .contains(GraftTable.KindCompact),
       "the kind must resolve from the manifest's own !kind= meta")
@@ -176,15 +173,6 @@ class GraftChangesSpec extends SparkSpec {
     try q.processAllAvailable() finally q.stop()
     assert(spark.table(sink).collect().head.getLong(0) == 100L,
       "the marker-less compaction must not re-deliver rows to the tail")
-    // back-compat: a pre-meta commit (kind file only) still resolves
-    val entries = GraftTable.readFullEntries(fs, dir, vCompact)
-    GraftTable.writeFullEntries(fs, dir, vCompact + 1, entries)
-    GraftTable.writeCommitKind(fs, dir, vCompact + 1, GraftTable.KindCompact)
-    assert(GraftTable.commitKind(fs, dir, vCompact + 1)
-      .contains(GraftTable.KindCompact),
-      "old commits without !kind= meta must fall back to the marker file")
-    assert(spark.table("graft_cdf.db.kc.changes")
-      .where(col("_commit_version") === vCompact + 1).count() == 0)
   }
 
   test("the change feed is streamable: a MERGEd table tails to its own state") {

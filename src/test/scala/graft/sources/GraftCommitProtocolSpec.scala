@@ -8,7 +8,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 
 /** The pluggable atomic-commit primitive ([[GraftCommitPrimitive]]).
   *
@@ -20,8 +22,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * winner, the loser sees [[FileAlreadyExistsException]] (the conflict
   * type the optimistic-concurrency loop keys on), and the installed bytes
   * are exactly the winner's, never a torn mix.
+  *
+  * And the manifest is the whole commit: every commit verb states its kind
+  * (`!kind=`) and wall-clock (`!ts=`) inside the manifest's atomic create,
+  * and writes no second per-commit file.
   */
-class GraftCommitProtocolSpec extends AnyFunSuite {
+class GraftCommitProtocolSpec extends SparkSpec {
 
   private val root = Files.createTempDirectory("graft_commitproto").toString
 
@@ -243,6 +249,115 @@ class GraftCommitProtocolSpec extends AnyFunSuite {
     // would wrongly return version 2 — meta-first is load-bearing here
     assert(GraftTable.versionAtOrBefore(fs, dir, t1 - 1).isEmpty,
       "resolution must read the meta stamps, not the file mtimes")
+  }
+
+  /** Every manifest of every namespace under `dir` carries `!ts=` and
+    * `!kind=` (the empty v1 of CREATE TABLE excepted), and no per-commit
+    * side file sits beside them.
+    */
+  private def assertManifestIsWholeCommit(fs: org.apache.hadoop.fs.FileSystem,
+                                          dir: Path): Unit = {
+    val markers = fs.listStatus(dir).map(_.getPath.getName).filter(n =>
+      n.startsWith("_graft_commit_") || n.matches("_graft_branch_.*_commit_.*"))
+    assert(markers.isEmpty, s"per-commit marker files under $dir: ${markers.toSeq}")
+    val namespaces = None +: GraftBranch.readAll(fs, dir).keys.toSeq.map(Some(_))
+    for (b <- namespaces; v <- GraftTable.manifestVersions(fs, dir, b)) {
+      val meta = GraftTable.manifestMeta(fs, dir, v, b)
+      assert(meta.contains(GraftTable.TsMetaKey), s"$dir $b v$v: no !ts= in $meta")
+      val emptyV1 = b.isEmpty && v == 1L &&
+        GraftTable.readFullEntries(fs, dir, 1L).isEmpty
+      assert(emptyV1 || meta.contains(GraftTable.KindMetaKey),
+        s"$dir $b v$v: no !kind= in $meta")
+    }
+  }
+
+  test("every commit verb records its kind and time in the manifest alone") {
+    graft.GraftExtensions.register(spark)
+    val wh = Files.createTempDirectory("graft_kinds_wh").toString
+    spark.conf.set("spark.sql.catalog.graft_kinds", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_kinds.warehouse", wh)
+    val sql = spark.sql(_: String)
+    sql("CREATE NAMESPACE IF NOT EXISTS graft_kinds.db")
+    val fs = new Path(wh).getFileSystem(spark.sessionState.newHadoopConf())
+    val kinds = scala.collection.mutable.LinkedHashMap.empty[String, Option[String]]
+    // run one verb against db.<table>; record the kind of the newest main
+    // commit and check the whole log after it
+    def verb(label: String, table: String)(body: => Unit): Long = {
+      body
+      val dir = new Path(s"$wh/db/$table")
+      val v = GraftTable.manifestVersions(fs, dir).last
+      kinds(label) = GraftTable.commitKind(fs, dir, v)
+      assertManifestIsWholeCommit(fs, dir)
+      v
+    }
+    sql("""CREATE TABLE graft_kinds.db.t (id BIGINT, v BIGINT)
+          |TBLPROPERTIES('history'='true')""".stripMargin)
+    val vInsert = verb("INSERT", "t")(
+      sql("INSERT INTO graft_kinds.db.t SELECT id, id FROM range(0, 50)"))
+    sql("INSERT INTO graft_kinds.db.t SELECT id, id FROM range(50, 100)")
+    verb("compactTable", "t")(
+      GraftMaintenance.compactTable(spark, s"$wh/db/t"))
+    verb("COW UPDATE", "t")(
+      sql("UPDATE graft_kinds.db.t SET v = v + 1 WHERE id < 10"))
+    verb("COW MERGE", "t")(sql(
+      """MERGE INTO graft_kinds.db.t x
+        |USING (SELECT id, id * 2 AS v FROM range(90, 110)) s ON x.id = s.id
+        |WHEN MATCHED THEN UPDATE SET v = s.v
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
+    verb("INSERT OVERWRITE", "t")(sql(
+      "INSERT OVERWRITE graft_kinds.db.t SELECT id, id FROM range(0, 80)"))
+    verb("eq-upsert", "t")(GraftEqDelete.upsert(spark, "graft_kinds", "db.t",
+      spark.range(70, 90).selectExpr("id", "id * 3 AS v"), Seq("id")))
+    verb("restore", "t")(
+      GraftMaintenance.restore(spark, s"$wh/db/t", vInsert))
+    verb("clone", "tc")(
+      GraftClone.clone(spark, s"$wh/db/t", s"$wh/db/tc", shallow = false))
+    verb("WAP publish", "t") {
+      val token = GraftWap.stage(spark, "graft_kinds", "db.t",
+        spark.range(200, 210).selectExpr("id", "id AS v"))
+      GraftWap.publish(spark, "graft_kinds", "db.t", token)
+    }
+    verb("branch fast-forward", "t") {
+      sql("SELECT * FROM graft_branch('graft_kinds', 'db.t', 'ff')").collect()
+      spark.range(300, 310).selectExpr("id", "id AS v")
+        .writeTo("graft_kinds.db.t.branch_ff").append()
+      assertManifestIsWholeCommit(fs, new Path(s"$wh/db/t"))
+      sql("SELECT * FROM graft_fastforward('graft_kinds', 'db.t', 'ff')").collect()
+    }
+    verb("branch cherry-pick", "t") {
+      sql("SELECT * FROM graft_branch('graft_kinds', 'db.t', 'cp')").collect()
+      spark.range(400, 410).selectExpr("id", "id AS v")
+        .writeTo("graft_kinds.db.t.branch_cp").append()
+      sql("INSERT INTO graft_kinds.db.t VALUES (500, 500)")
+      assertManifestIsWholeCommit(fs, new Path(s"$wh/db/t"))
+      sql("SELECT * FROM graft_cherrypick('graft_kinds', 'db.t', 'cp')").collect()
+    }
+    sql("""CREATE TABLE graft_kinds.db.m (id BIGINT, v BIGINT)
+          |TBLPROPERTIES('history'='true', 'merge-on-read'='true')""".stripMargin)
+    sql("INSERT INTO graft_kinds.db.m SELECT id, id FROM range(0, 50)")
+    verb("MOR DELETE", "m")(sql("DELETE FROM graft_kinds.db.m WHERE id < 5"))
+    sql("""CREATE TABLE graft_kinds.db.s (id BIGINT)
+          |TBLPROPERTIES('history'='true')""".stripMargin)
+    verb("streaming sink epoch", "s") {
+      implicit val sqlCtx = spark.sqlContext
+      import spark.implicits._
+      val in = MemoryStream[Long]
+      val q = in.toDF().select(col("value").as("id")).writeStream
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft_kinds_cp").toString)
+        .toTable("graft_kinds.db.s")
+      try { in.addData(0L until 10L: _*); q.processAllAvailable() }
+      finally q.stop()
+    }
+    import GraftTable._
+    assert(kinds.toSeq == Seq(
+      "INSERT" -> KindAppend, "compactTable" -> KindCompact,
+      "COW UPDATE" -> KindReplace, "COW MERGE" -> KindReplace,
+      "INSERT OVERWRITE" -> KindOverwrite, "eq-upsert" -> KindEqDelta,
+      "restore" -> KindRestore, "clone" -> KindAppend,
+      "WAP publish" -> KindAppend, "branch fast-forward" -> KindAppend,
+      "branch cherry-pick" -> KindAppend, "MOR DELETE" -> KindDelta,
+      "streaming sink epoch" -> KindAppend).map { case (l, k) => l -> Some(k) })
   }
 
   private def rewriteTs(fs: org.apache.hadoop.fs.FileSystem, mp: Path,

@@ -127,7 +127,7 @@ class GraftMorHistorySpec extends SparkSpec {
     val n = GraftMaintenance.materializeDeletes(spark, dir("f").toString)
     assert(n == dvd, s"must fold exactly the $dvd DV'd entries, folded $n")
     val v = latest("f")
-    assert(GraftTable.readCommitKind(fs, dir("f"), v)
+    assert(GraftTable.commitKind(fs, dir("f"), v)
       .contains(GraftTable.KindCompact))
     assert(entriesOf("f", v).forall(_._2.isEmpty),
       "the materialized snapshot must carry no DVs")

@@ -140,7 +140,7 @@ class GraftPartitionEvolutionSpec extends SparkSpec {
     GraftMaintenance.migrateTimeLayout(spark, s"$warehouse/db/h") // v4 compact
     val (fs, dir) = fsOf("db/h")
     val vLast = GraftTable.manifestVersions(fs, dir).last
-    assert(GraftTable.readCommitKind(fs, dir, vLast)
+    assert(GraftTable.commitKind(fs, dir, vLast)
       .contains(GraftTable.KindCompact))
     assert(spark.table("graft_pevo.db.h").count() == 1200)
     // pre-migration snapshots still read their (flat) files

@@ -77,10 +77,9 @@ class GraftReplicateSpec extends SparkSpec {
     val mir = s"$outside/h2"
     GraftReplicate.replicate(spark, src, mir)
     val mp = new Path(mir)
-    // simulate dying between phase-4 copies: the newest manifest + kind
-    // never arrived (phase order guarantees everything they reference DID)
+    // simulate dying between phase-4 copies: the newest manifest never
+    // arrived (phase order guarantees everything it references DID)
     fs.delete(GraftTable.manifestPath(mp, 3L), false)
-    fs.delete(GraftTable.commitKindPath(mp, 3L), false)
     val (v, entries) = GraftTable.headState(fs, mp, None)
     assert(v == 2L && entries.nonEmpty,
       "the truncated mirror must read as the previous version")

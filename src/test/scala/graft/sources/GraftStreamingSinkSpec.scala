@@ -55,7 +55,7 @@ class GraftStreamingSinkSpec extends SparkSpec {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val vs = GraftTable.manifestVersions(fs, dir)
     assert(vs.size >= 3) // v1 empty + 2 epochs
-    assert(GraftTable.readCommitKind(fs, dir, vs.last)
+    assert(GraftTable.commitKind(fs, dir, vs.last)
       .contains(GraftTable.KindAppend))
     val meta = GraftTable.manifestMeta(fs, dir, vs.last)
     assert(meta.keys.exists(_.startsWith("txn:")),
@@ -221,9 +221,8 @@ class GraftStreamingSinkSpec extends SparkSpec {
       val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/zt")
       val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
       val (v, entries) = GraftTable.headState(fs, dir, None)
-      GraftTable.writeFullEntries(fs, dir, v + 1, entries,
-        Map(s"txn:${q.id}" -> "5"))
-      GraftTable.writeCommitKind(fs, dir, v + 1, GraftTable.KindAppend)
+      GraftTable.commitWithKind(fs, dir, v + 1, entries,
+        GraftTable.KindAppend, Map(s"txn:${q.id}" -> "5"))
       // this driver's epochs 1.. are all <= the raced marker: their
       // commits must drop (files unlanded), never double-apply
       in.addData(100L until 110L: _*)
