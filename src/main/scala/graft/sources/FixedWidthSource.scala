@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -200,20 +201,47 @@ object FixedWidthFilters {
   private def refs(f: Filter): Seq[String] = f.references.toSeq
 }
 
-/** Java-serializable Hadoop Configuration carrier (Configuration itself is
-  * Writable, not Serializable) — ships the DRIVER's conf to partition
-  * readers so s3a credentials / custom filesystem settings survive the
-  * executor hop.
+/** Ships the DRIVER's Hadoop conf to executor code (partition readers,
+  * data writers, maintenance closures) so s3a credentials / custom
+  * filesystem settings survive the executor hop. Built on the driver
+  * (it needs the active SparkContext), it ships the conf as a Spark
+  * broadcast, the way Spark's own file scans do: the conf is serialized
+  * once per scan or write, a task carries only the broadcast handle, and
+  * every task of the scan on one executor shares one deserialized conf.
+  * Shared means read-only: `value` must never be mutated — copy it first.
   */
-class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
+class SerializableHadoopConf(conf: Configuration) extends Serializable {
+  private val shipped =
+    SparkContext.getOrCreate().broadcast(new SerializableHadoopConf.Shipped(conf))
+
+  def value: Configuration = shipped.value.conf
+
+  /** `value` prepared to read `requestedSchema` rows
+    * ([[ParquetRowIO.readConf]]), built once per executor per schema and
+    * shared by every reader opened from this conf.
+    */
+  def readConf(requestedSchema: StructType): Configuration =
+    shipped.value.readConf(requestedSchema)
+}
+
+object SerializableHadoopConf {
+  /** The broadcast value: Configuration is Writable, not Serializable. */
+  private class Shipped(@transient var conf: Configuration) extends Serializable {
+    @transient private lazy val readConfs =
+      new java.util.concurrent.ConcurrentHashMap[StructType, Configuration]()
+
+    def readConf(schema: StructType): Configuration =
+      readConfs.computeIfAbsent(schema, ParquetRowIO.readConf(conf, _))
+
+    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
+      out.defaultWriteObject()
+      conf.write(out)
+    }
+    private def readObject(in: java.io.ObjectInputStream): Unit = {
+      in.defaultReadObject()
+      conf = new Configuration(false)
+      conf.readFields(in)
+    }
   }
 }
 

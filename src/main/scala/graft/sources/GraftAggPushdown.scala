@@ -149,10 +149,7 @@ object GraftAggPushdown {
       case LongType | TimestampType | TimestampNTZType => Some(Ordering.Long)
       case FloatType => Some(Ordering.Float.TotalOrdering)
       case DoubleType => Some(Ordering.Double.TotalOrdering)
-      case StringType => Some(Ordering.comparatorToOrdering(
-        new java.util.Comparator[UTF8String] {
-          override def compare(a: UTF8String, b: UTF8String): Int = a.compareTo(b)
-        }))
+      case StringType => Some(Ordering.comparatorToOrdering(GraftStats.Utf8Order))
       case _: DecimalType => Some(Ordering.ordered[Decimal](identity))
       case BooleanType => Some(Ordering.Boolean)
       case _ => None

@@ -395,7 +395,7 @@ object GraftBloom {
         val p = new Path(f)
         val expected = math.max(1000L, rowsByName.getOrElse(p.getName, 1000000L))
         val blooms = dts.map(_ => BloomFilter.create(expected, fpp))
-        val reader = ParquetRowIO.reader(p, readSchema, conf.value, None, aliases)
+        val reader = ParquetRowIO.reader(p, conf.readConf(readSchema), None, aliases)
         try {
           var r = reader.read()
           while (r != null) {
@@ -465,7 +465,7 @@ object GraftBloom {
       .flatMap { f =>
         val p = new Path(f)
         val sets = colNames.map(_ => new scala.collection.mutable.HashSet[String])
-        val reader = ParquetRowIO.reader(p, readSchema, conf.value, None, aliases)
+        val reader = ParquetRowIO.reader(p, conf.readConf(readSchema), None, aliases)
         try {
           var r = reader.read()
           while (r != null) {

@@ -2497,13 +2497,15 @@ class GraftScan(table: GraftTable, required: StructType, rowLevel: Boolean,
   private[sources] lazy val snapshotEntryByName: Map[String, GraftTable.GraftEntry] =
     allEntries.map(e => (new Path(e.file).getName, e)).toMap
 
-  /** Manifest-lifted per-file stats, read once per scan (a handful of
-    * sequential metadata-log reads — never per data file).
+  /** Manifest-lifted stats of the snapshot's files, read once per scan (a
+    * handful of sequential metadata-log reads — never per data file);
+    * entries of files outside the snapshot are skipped undecoded.
     */
-  private lazy val statsByName: Map[String, GraftStats.FileStats] = {
+  private[sources] lazy val statsByName: Map[String, GraftStats.FileStats] = {
     val p = new Path(table.dir)
     GraftStats.readAll(
-      p.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), p)
+      p.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), p,
+      snapshotEntryByName.contains)
   }
 
   /** Per-file bloom index (point-lookup pruning), read once per scan. */
@@ -3087,7 +3089,7 @@ class GraftPartitionReader(required: StructType, physicalSchema: StructType,
     if (existDefaults.isEmpty) null
     else new java.util.concurrent.atomic.AtomicReference[Set[String]](Set.empty)
   private val reader =
-    ParquetRowIO.reader(new Path(file), readDataSchema, conf.value,
+    ParquetRowIO.reader(new Path(file), conf.readConf(readDataSchema),
       GraftParquetFilters.predicate(physicalSchema,
         GraftEvolution.parquetSafe(pushedFilters.toSeq, aliases,
           defaulted = existDefaults.keySet)),

@@ -115,7 +115,8 @@ object GraftEqDelete {
     // request the STORED name (what the sidecar file holds bytes under)
     // at the CURRENT type (what the data probe compares against)
     val schema = StructType(resolved.map { case (n, f) => f.copy(name = n) })
-    val reader = ParquetRowIO.reader(new Path(eqFile), schema, conf, None)
+    val reader = ParquetRowIO.reader(new Path(eqFile),
+      ParquetRowIO.readConf(conf, schema))
     val set = Set.newBuilder[Vector[Any]]
     try {
       var r = reader.read()

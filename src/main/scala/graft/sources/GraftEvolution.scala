@@ -245,8 +245,14 @@ class GraftAliasReadSupport(aliases: Map[String, Seq[String]],
         missingOut.set(requested.fields.zip(remapped.fields).collect {
           case (orig, eff) if !fileCols.contains(eff.name) => orig.name
         }.toSet)
-      if (remapped != requested)
-        conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, remapped.json)
+      // the read conf is shared with the other readers opened from it:
+      // a remap goes into a private copy, never into the shared conf
+      if (remapped != requested) {
+        val own = new org.apache.hadoop.conf.Configuration(conf)
+        own.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, remapped.json)
+        return super.init(new InitContext(own, context.getKeyValueMetadata,
+          context.getFileSchema))
+      }
     }
     super.init(context)
   }

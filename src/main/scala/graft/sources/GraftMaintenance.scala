@@ -332,8 +332,11 @@ object GraftMaintenance {
     if (files.isEmpty) return (0, 0)
     val byDay = files.groupBy(f => new Path(f).getParent.getName)
       .filter(_._1.startsWith(s"${dayCol}_$unitSeg=")) // pre-layout flat files stay
-    val staging = new Path(dir, s".compact-${UUID.randomUUID()}")
     val rewritten = byDay.toSeq.sortBy(_._1).filter(_._2.size > 1)
+    // every day already at one file: nothing to stage, nothing to commit
+    // (a history table gains no version)
+    if (rewritten.isEmpty) return (files.size, files.size)
+    val staging = new Path(dir, s".compact-${UUID.randomUUID()}")
     // ONE distributed job for every multi-file day — not a job per day
     // (30 days ≙ 30 driver round-trips; 10k day-partitions at the 100 TB
     // tier ≙ a wall-clock cliff): each row re-derives its unit index with
@@ -341,7 +344,7 @@ object GraftMaintenance {
     // in ts_day=N has unit(ts)=N by construction), repartition-by-unit
     // gives one task per day, sortWithinPartitions keeps the in-file
     // time order, partitionBy lands exactly one file per day dir.
-    val landed: Seq[(Path, Path)] = if (rewritten.isEmpty) Nil else {
+    val landed: Seq[(Path, Path)] = {
       val schema = GraftTable.readTableSchema(fs, dir).get
       val dt = schema.fields.find(_.name == dayCol).get.dataType
       val unit = props.getOrElse(GraftTable.TimeUnitProp, "days")
@@ -390,18 +393,14 @@ object GraftMaintenance {
     } else {
       replaced.foreach(f => fs.delete(new Path(f), false))
       landed.foreach { case (src, tgt) => fs.rename(src, tgt) }
-      if (replaced.nonEmpty) {
-        val gone = replaced.map(f => new Path(f).getName)
-        GraftStats.retain(fs, dir, n => !gone.contains(n))
+      val gone = replaced.map(f => new Path(f).getName)
+      GraftStats.retain(fs, dir, n => !gone.contains(n))
       GraftBloom.retain(fs, dir, n => !gone.contains(n))
-      }
     }
-    if (landed.nonEmpty) {
-      val landedPaths = landed.map(_._2.toString)
-      GraftStats.liftFromFooters(spark, dir, landedPaths,
-        spark.read.parquet(landedPaths.head).schema)
-      reindexDeclared(spark, dir, landedPaths)
-    }
+    val landedPaths = landed.map(_._2.toString)
+    GraftStats.liftFromFooters(spark, dir, landedPaths,
+      spark.read.parquet(landedPaths.head).schema)
+    reindexDeclared(spark, dir, landedPaths)
     fs.delete(staging, true)
     (files.size, files.size - replaced.size + landed.size)
   }

@@ -27,8 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Soundness notes:
   *  - values are canonical strings; BOTH producer and consumer order them
-  *    with the same comparator per type (strings: unsigned byte-wise, the
-  *    UTF8String/parquet ordering; floats: widened exactly to double), so
+  *    with the same comparator per type (strings: unsigned byte-wise,
+  *    `UTF8String.binaryCompare` — [[Utf8Order]], the Spark sort and
+  *    parquet statistics order; floats: widened exactly to double), so
   *    a pruning decision can never disagree with the data.
   *  - a float/double column that ever sees NaN is poisoned (no min/max —
   *    NaN breaks total ordering); null counts remain.
@@ -180,8 +181,12 @@ object GraftStats {
     * for the file's lifetime). Reading is O(segments) tiny sequential
     * metadata reads — writeCommitStats' amortized consolidation bounds
     * the file count at [[MaxStatsFiles]] regardless of commit count.
+    * Only entries whose name passes `live` are decoded: a history table's
+    * log keeps the entries of every file it ever had, and decoding their
+    * sketches would make a scan's planning grow with the history.
     */
-  def readAll(fs: FileSystem, dir: Path): Map[String, FileStats] = {
+  def readAll(fs: FileSystem, dir: Path,
+              live: String => Boolean = _ => true): Map[String, FileStats] = {
     val d = statsDir(dir)
     if (!fs.exists(d)) return Map.empty
     val files = fs.listStatus(d).toSeq
@@ -192,7 +197,10 @@ object GraftStats {
       val lines =
         try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
         finally in.close()
-      lines.filter(_.nonEmpty).flatMap(decodeLine)
+      lines.filter { l =>
+        val tab = l.indexOf('\t')
+        tab >= 0 && live(dec(l.substring(0, tab)))
+      }.flatMap(decodeLine)
     }.toMap
   }
 
@@ -302,10 +310,9 @@ object GraftStats {
         case _ => null
       }
     // STRING quantile sketches (round 13): a KllItemsSketch over
-    // UTF8String in Spark's own sort order (unsigned UTF-8 byte compare
-    // — UTF8String.compareTo, also the order cmpStored prunes with), so
-    // range selectivity on string columns is servable metadata-first
-    // like the numeric kinds. Items are cloned before update: the
+    // UTF8String in Spark's own sort order ([[Utf8Order]], also the
+    // order cmpStored prunes with), so range selectivity on string
+    // columns is servable metadata-first like the numeric kinds. Items are cloned before update: the
     // sketch retains references, and the row's string points into a
     // reused buffer.
     private val kllStrs: Array[
@@ -313,8 +320,7 @@ object GraftStats {
       kinds.map {
         case KindString =>
           org.apache.datasketches.kll.KllItemsSketch.newHeapInstance(
-            KllK, java.util.Comparator.naturalOrder[UTF8String](),
-            Utf8ItemsSerDe)
+            KllK, Utf8Order, Utf8ItemsSerDe)
         case _ => null
       }
 
@@ -355,10 +361,10 @@ object GraftStats {
             case KindString =>
               val v = row.getUTF8String(i)
               if (mins(i) == null ||
-                  v.compareTo(mins(i).asInstanceOf[UTF8String]) < 0)
+                  v.binaryCompare(mins(i).asInstanceOf[UTF8String]) < 0)
                 mins(i) = v.clone()
               if (maxs(i) == null ||
-                  v.compareTo(maxs(i).asInstanceOf[UTF8String]) > 0)
+                  v.binaryCompare(maxs(i).asInstanceOf[UTF8String]) > 0)
                 maxs(i) = v.clone()
               ndvs(i).update(v.getBytes)
               kllStrs(i).update(strSketchItem(v))
@@ -515,6 +521,16 @@ object GraftStats {
     Some(m)
   }
 
+  /** The one string order of the stats layer — min/max tracking, the
+    * string quantile sketches, pruning and aggregate pushdown: unsigned
+    * UTF-8 byte order via `UTF8String.binaryCompare`, the order Spark
+    * sorts strings by and parquet's string statistics use. Not
+    * `compareTo`: in Spark 4 that looks up the environment on every call
+    * and throws when `spark.testing` is set.
+    */
+  private[sources] val Utf8Order: java.util.Comparator[UTF8String] =
+    (a: UTF8String, b: UTF8String) => a.binaryCompare(b)
+
   /** Length-prefixed UTF-8 item codec for the string quantile sketch.
     * Lengths are written in the platform's native order — the same
     * convention the library's own ArrayOfStringsSerDe uses — because
@@ -572,12 +588,11 @@ object GraftStats {
       : Option[org.apache.datasketches.kll.KllItemsSketch[UTF8String]] = {
     val sketches = stats.map(_.cols.get(col).flatMap(_.kllStr))
     if (sketches.isEmpty || sketches.exists(_.isEmpty)) return None
-    val cmp = java.util.Comparator.naturalOrder[UTF8String]()
     val m = org.apache.datasketches.kll.KllItemsSketch
-      .newHeapInstance(KllK, cmp, Utf8ItemsSerDe)
+      .newHeapInstance(KllK, Utf8Order, Utf8ItemsSerDe)
     sketches.flatten.foreach(b => m.merge(
       org.apache.datasketches.kll.KllItemsSketch.heapify(
-        org.apache.datasketches.memory.Memory.wrap(b), cmp, Utf8ItemsSerDe)))
+        org.apache.datasketches.memory.Memory.wrap(b), Utf8Order, Utf8ItemsSerDe)))
     Some(m)
   }
 
@@ -727,10 +742,10 @@ object GraftStats {
         val kllSs = dts.map(dt => kindOf(dt) match {
           case KindString => org.apache.datasketches.kll.KllItemsSketch
             .newHeapInstance(KllK,
-              java.util.Comparator.naturalOrder[UTF8String](), Utf8ItemsSerDe)
+              Utf8Order, Utf8ItemsSerDe)
           case _ => null
         })
-        val reader = ParquetRowIO.reader(p, readSchema, conf.value, None, aliases)
+        val reader = ParquetRowIO.reader(p, conf.readConf(readSchema), None, aliases)
         try {
           var r = reader.read()
           while (r != null) {
@@ -828,7 +843,7 @@ object GraftStats {
     case FloatType | DoubleType =>
       Some(java.lang.Double.compare(a.toDouble, b.toDouble))
     case StringType =>
-      Some(UTF8String.fromString(a).compareTo(UTF8String.fromString(b)))
+      Some(UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)))
     case _: DecimalType =>
       Some(new java.math.BigDecimal(a).compareTo(new java.math.BigDecimal(b)))
     case BooleanType => Some(a.compareTo(b)) // "false" < "true"
@@ -876,8 +891,8 @@ object GraftStats {
     case StringType =>
       v match {
         case s: String => Some(UTF8String.fromString(stored)
-          .compareTo(UTF8String.fromString(s)))
-        case u: UTF8String => Some(UTF8String.fromString(stored).compareTo(u))
+          .binaryCompare(UTF8String.fromString(s)))
+        case u: UTF8String => Some(UTF8String.fromString(stored).binaryCompare(u))
         case _ => None
       }
     case _: DecimalType =>
@@ -914,7 +929,7 @@ object GraftStats {
       case FloatType | DoubleType =>
         Some(java.lang.Double.compare(a.toDouble, b.toDouble))
       case StringType =>
-        Some(UTF8String.fromString(a).compareTo(UTF8String.fromString(b)))
+        Some(UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)))
       case _: DecimalType =>
         Some(new java.math.BigDecimal(a).compareTo(new java.math.BigDecimal(b)))
       case BooleanType =>

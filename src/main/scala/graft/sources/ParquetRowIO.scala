@@ -2,8 +2,11 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
@@ -25,6 +28,15 @@ import org.apache.spark.sql.types.StructType
   * identical on any executor regardless of cluster defaults: standard
   * (non-legacy) layout, TIMESTAMP_MICROS, CORRECTED rebase — the Spark 4
   * defaults.
+  *
+  * Readers open from a read conf the caller built once
+  * ([[readConf]], usually through [[SerializableHadoopConf.readConf]]),
+  * never from a conf of their own: parquet's path-based builder starts
+  * from a default `new Configuration()`, whose first lookup loads the
+  * default resources by probing every jar on the classpath — a fixed
+  * cost per opened file larger than reading a small file's rows. Several
+  * readers may share one read conf, so nothing on the read path sets a
+  * key in it.
   */
 object ParquetRowIO {
 
@@ -55,6 +67,15 @@ object ParquetRowIO {
     override def getWriteSupport(conf: Configuration) = new ParquetWriteSupport
   }
 
+  /** The reader twin of [[RowWriterBuilder]]: opens `file` under the
+    * given conf as is.
+    */
+  private class RowReaderBuilder(file: HadoopInputFile, conf: Configuration,
+                                 support: ReadSupport[InternalRow])
+    extends ParquetReader.Builder[InternalRow](file, new HadoopParquetConfiguration(conf)) {
+    override protected def getReadSupport(): ReadSupport[InternalRow] = support
+  }
+
   /** Open a snappy parquet writer for `schema` rows at `path`. */
   def writer(path: Path, schema: StructType, base: Configuration): ParquetWriter[InternalRow] =
     new RowWriterBuilder(path)
@@ -62,13 +83,14 @@ object ParquetRowIO {
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
 
-  /** Open a reader producing `requestedSchema`-shaped InternalRows
-    * (column-pruned at the parquet level — unprojected columns are never
-    * decoded; an optional pushed predicate prunes row groups by min/max
-    * stats before any page is read). The returned rows may be reused
-    * between `read()` calls, per the `PartitionReader.get` contract.
+  /** Open a reader producing the InternalRows `readConf` (a [[readConf]])
+    * requests (column-pruned at the parquet level — unprojected columns
+    * are never decoded; an optional pushed predicate prunes row groups by
+    * min/max stats before any page is read). The returned rows may be
+    * reused between `read()` calls, per the `PartitionReader.get`
+    * contract.
     */
-  def reader(path: Path, requestedSchema: StructType, base: Configuration,
+  def reader(path: Path, readConf: Configuration,
              predicate: Option[org.apache.parquet.filter2.predicate.FilterPredicate] = None,
              aliases: Map[String, Seq[String]] = Map.empty,
              missingOut: java.util.concurrent.atomic.AtomicReference[Set[String]] = null)
@@ -84,9 +106,9 @@ object ParquetRowIO {
         None, enableVectorizedReader = false,
         RebaseSpec(LegacyBehaviorPolicy.CORRECTED),
         RebaseSpec(LegacyBehaviorPolicy.CORRECTED))
-    val b = ParquetReader.builder[InternalRow](support, path)
-      .withConf(readConf(base, requestedSchema))
-    predicate.fold(b)(p =>
+    val b = new RowReaderBuilder(
+      HadoopInputFile.fromPath(path, readConf), readConf, support)
+    predicate.fold(b: ParquetReader.Builder[InternalRow])(p =>
         b.withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(p)))
       .build()
   }
