@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * prints one JSON line. Optional args restrict to the named queries
   * (local profiling aid; the driver passes none).
@@ -9,25 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine, not an arbitrary small number: if the
-    // driver omits SPARK_GRAFT_CPUS the run should still use every core
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.sorting.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the 128-aggregate minhash signature row must stay in codegen
-      .config("spark.sql.codegen.maxFields", "300")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     // warm up codegen/JIT/parquet footers so the first timed query isn't
     // charged for session initialization
     Tables.names.foreach(t => Tables.load(spark, sfDir, t).count())

@@ -21,6 +21,33 @@ object SparkEntry {
       DedupQueries.queries ++ SimilarityQueries.queries ++
       QualityQueries.queries ++ StreamingQueries.queries
 
+  /** The session of the CLI mains (Bench, Verify, Probe, ExplainFinal):
+    * `local[SPARK_GRAFT_CPUS]`, else every core of the machine, with the
+    * shuffle width equal to the core count, the graft extensions and
+    * storage-partitioned joins — so a plan or a timing from any of them is
+    * the gate's.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+      .config("spark.sql.sources.v2.bucketing.sorting.enabled", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      // the 128-aggregate minhash signature row must stay in codegen
+      .config("spark.sql.codegen.maxFields", "300")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def oracleSql: Map[String, String] =
     Relational.oracle ++ Etl.oracle ++ TextQueries.oracle ++
       DedupQueries.oracle ++ SimilarityQueries.oracle ++

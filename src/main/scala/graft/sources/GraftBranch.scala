@@ -392,8 +392,10 @@ object GraftBranch {
     require(added.forall(e => e.dv.isEmpty && e.eqs.isEmpty),
       s"cherry-pick of '$name': appended entries carry row-level masks")
     val cv = GraftTable.commitRetrying(fs, dir,
-      meta = GraftTable.kindMeta(GraftTable.KindAppend))(old =>
-      old ++ added.map(_.file).filterNot(old.contains))
+      meta = GraftTable.kindMeta(GraftTable.KindAppend)) { head =>
+      val have = head.entries.map(_.file).toSet
+      head.entries ++ added.filterNot(e => have.contains(e.file))
+    }
     own.foreach(v =>
       fs.delete(GraftTable.manifestPath(dir, v, Some(name)), false))
     write(fs, dir, readAll(fs, dir) - name)

@@ -450,13 +450,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // touches only the metadata log; getFileStatus covers stray files
     val stats = GraftStats.readAll(fs, dir)
     GraftTable.manifestVersions(fs, dir).map { v =>
-      val files = GraftTable.readManifest(fs, dir, v)
-      val bytes = files.map { f =>
-        stats.get(new Path(f).getName).map(_.size)
-          .getOrElse(fs.getFileStatus(new Path(f)).getLen)
+      val snap = GraftTable.snapshotAt(fs, dir, v)
+      val bytes = snap.entries.map { e =>
+        stats.get(new Path(e.file).getName).map(_.size)
+          .getOrElse(fs.getFileStatus(new Path(e.file)).getLen)
       }.sum
-      (v, GraftTable.commitTimeMillis(fs, dir, v),
-        files.size.toLong, bytes)
+      (v, snap.commitMillis, snap.entries.size.toLong, bytes)
     }
   }
 
@@ -1448,10 +1447,7 @@ object GraftTable {
     */
   def commitTimeMillis(fs: FileSystem, dir: Path, v: Long,
                        branch: Option[String] = None): Long =
-    manifestMeta(fs, dir, v, branch).get(TsMetaKey)
-      .flatMap(t => scala.util.Try(t.toLong).toOption)
-      .getOrElse(fs.getFileStatus(manifestPath(dir, v, branch))
-        .getModificationTime)
+    snapshotAt(fs, dir, v, branch).commitMillis
 
   /** Latest manifest version committed at-or-before `tsMillis` — commit
     * wall-clock is [[commitTimeMillis]] (the `!ts=` meta stamp, mtime for
@@ -1482,7 +1478,7 @@ object GraftTable {
     * masked when its key appears in any of them). Both are VERSIONED with
     * the entry, so every snapshot keeps its own delete state.
     */
-  case class GraftEntry(file: String, dv: Option[String],
+  case class GraftEntry(file: String, dv: Option[String] = None,
                         eqs: Seq[String] = Nil)
 
   /** Manifest entries of version `v`: (absolute data file, optional
@@ -1533,7 +1529,7 @@ object GraftTable {
   /** Segment names referenced by version `v` (empty for inline manifests). */
   def segmentRefs(fs: FileSystem, dir: Path, v: Long,
                   branch: Option[String] = None): Seq[String] =
-    rawManifestLines(fs, dir, v, branch).filter(isSegmentRef).map(_.substring(1))
+    snapshotAt(fs, dir, v, branch).segmentRefs
 
   /** Committed manifests are immutable (the exclusive create IS the
     * commit point), so their lines are cacheable per driver. The entry is
@@ -1560,22 +1556,20 @@ object GraftTable {
     manifestCache.keySet.removeIf(k => new Path(k).toUri.getPath.startsWith(prefix))
   }
 
-  private def rawManifestLines(fs: FileSystem, dir: Path, v: Long,
-                               branch: Option[String] = None): Seq[String] = {
-    val p = manifestPath(dir, v, branch)
+  private def cachedManifest(p: Path, fs: FileSystem): CachedManifest = {
     val st = fs.getFileStatus(p)
     val key = p.toString
     val cached = manifestCache.get(key)
     if (cached != null && cached.mtime == st.getModificationTime &&
-        cached.len == st.getLen) return cached.lines
+        cached.len == st.getLen) return cached
     val in = fs.open(p)
     val lines =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
       finally in.close()
-    val kept = lines.filter(_.nonEmpty)
+    val read = CachedManifest(st.getModificationTime, st.getLen, lines.filter(_.nonEmpty))
     if (manifestCache.size > 8192) manifestCache.clear()
-    manifestCache.put(key, CachedManifest(st.getModificationTime, st.getLen, kept))
-    kept
+    manifestCache.put(key, read)
+    read
   }
 
   private def parseEntryLine(dir: Path, l: String): GraftEntry = {
@@ -1588,36 +1582,67 @@ object GraftTable {
     GraftEntry(new Path(dir, parts(0)).toString, dv, eqs)
   }
 
-  /** Full manifest entries of version `v` (absolute paths). Entry line
-    * format: `file[\tdv[\teq1,eq2,...]]` — the dv field may be empty when
-    * only equality masks apply; `@segment` lines expand to the segment's
-    * entries; `!key=value` lines are commit METADATA (e.g. streaming
-    * transaction markers), not entries.
+  private def isMetaLine(l: String): Boolean = l.startsWith("!")
+
+  /** One manifest of a log, read by ONE cached lookup (one stat, at most
+    * one open): everything a commit or a history row needs derives from
+    * its lines. `version` 0 is the empty log (no manifest yet).
     */
-  def readFullEntries(fs: FileSystem, dir: Path, v: Long,
-                      branch: Option[String] = None): Seq[GraftEntry] =
-    rawManifestLines(fs, dir, v, branch).flatMap { l =>
+  final class Snapshot private[GraftTable] (fs: FileSystem, dir: Path,
+                                            val version: Long,
+                                            read: CachedManifest) {
+    /** Entries (absolute paths). Entry line format:
+      * `file[\tdv[\teq1,eq2,...]]` — the dv field may be empty when only
+      * equality masks apply; `@segment` lines expand to the segment's
+      * entries; `!key=value` lines are meta, not entries.
+      */
+    lazy val entries: Seq[GraftEntry] = read.lines.flatMap { l =>
       if (isMetaLine(l)) Nil
       else if (isSegmentRef(l))
         segmentLines(fs, dir, l.substring(1)).map(parseEntryLine(dir, _))
       else Seq(parseEntryLine(dir, l))
     }
 
-  private def isMetaLine(l: String): Boolean = l.startsWith("!")
+    /** Commit metadata carried INSIDE the manifest's atomic unit (`!k=v`
+      * lines): the streaming `txn:` markers, the `idwm:` watermarks, the
+      * `!kind=` and `!ts=` stamps — each commits (or doesn't) atomically
+      * WITH its files.
+      */
+    lazy val meta: Map[String, String] =
+      read.lines.filter(isMetaLine).flatMap { l =>
+        l.substring(1).split("=", 2) match {
+          case Array(k, value) => Some(k -> value)
+          case _ => None
+        }
+      }.toMap
 
-  /** Commit metadata carried INSIDE the manifest's atomic unit (`!k=v`
-    * lines). The streaming sink's exactly-once marker lives here: being
-    * part of the exclusive manifest create, a transaction id commits (or
-    * doesn't) atomically WITH its files — no second-file race window.
-    */
+    def segmentRefs: Seq[String] =
+      read.lines.filter(isSegmentRef).map(_.substring(1))
+
+    /** The `!ts=` stamp, else the manifest file's mtime (a manifest
+      * written by hand or by a foreign tool).
+      */
+    def commitMillis: Long =
+      meta.get(TsMetaKey).flatMap(_.toLongOption).getOrElse(read.mtime)
+  }
+
+  private def emptySnapshot(fs: FileSystem, dir: Path): Snapshot =
+    new Snapshot(fs, dir, 0L, CachedManifest(0L, 0L, Nil))
+
+  /** Version `v` of `branch` (main when None), one manifest lookup. */
+  def snapshotAt(fs: FileSystem, dir: Path, v: Long,
+                 branch: Option[String] = None): Snapshot =
+    new Snapshot(fs, dir, v, cachedManifest(manifestPath(dir, v, branch), fs))
+
+  /** Full manifest entries of version `v` (absolute paths). */
+  def readFullEntries(fs: FileSystem, dir: Path, v: Long,
+                      branch: Option[String] = None): Seq[GraftEntry] =
+    snapshotAt(fs, dir, v, branch).entries
+
+  /** Commit metadata of version `v` ([[Snapshot.meta]]). */
   def manifestMeta(fs: FileSystem, dir: Path, v: Long,
                    branch: Option[String] = None): Map[String, String] =
-    rawManifestLines(fs, dir, v, branch).filter(isMetaLine).flatMap { l =>
-      l.substring(1).split("=", 2) match {
-        case Array(k, value) => Some(k -> value)
-        case _ => None
-      }
-    }.toMap
+    snapshotAt(fs, dir, v, branch).meta
 
   def readManifest(fs: FileSystem, dir: Path, v: Long): Seq[String] =
     readEntries(fs, dir, v).map(_._1)
@@ -1666,55 +1691,44 @@ object GraftTable {
                        entries: Seq[GraftEntry]): Unit =
     writeFullEntries(fs, dir, v, entries, Map.empty)
 
-  /** (version, namespace) of the snapshot a commit at `v` on `branch`
-    * builds on: the branch's own previous manifest when it has one, else
-    * the MAIN manifest the branch was forked at (txn carry and segment
-    * reuse then chain across the fork point — segments are shared files).
+  /** Single-shot create of manifest `v` of `branch` over its current head:
+    * a racer that already took `v` fails it loudly (no retry).
     */
-  private def prevRef(fs: FileSystem, dir: Path, v: Long,
-                      branch: Option[String]): Option[(Long, Option[String])] =
-    branch match {
-      case None =>
-        manifestVersions(fs, dir).filter(_ < v).lastOption.map(pv => (pv, None))
-      case Some(b) =>
-        manifestVersions(fs, dir, branch).filter(_ < v).lastOption
-          .map(pv => (pv, branch))
-          .orElse(GraftBranch.baseOf(fs, dir, b).filter(_ > 0L)
-            .map(bv => (bv, None)))
-    }
-
   def writeFullEntries(fs: FileSystem, dir: Path, v: Long,
                        entries: Seq[GraftEntry],
                        meta: Map[String, String],
-                       branch: Option[String] = None): Unit = {
+                       branch: Option[String] = None): Unit =
+    createManifest(fs, dir, readHead(fs, dir, branch), v, entries, meta, branch)
+
+  /** Exclusive create of manifest `v` over `prev`, the snapshot it builds
+    * on (a branch's first commit builds on the main manifest it was forked
+    * at, so txn carry and segment reuse chain across the fork point).
+    */
+  private def createManifest(fs: FileSystem, dir: Path, prev: Snapshot,
+                             v: Long, entries: Seq[GraftEntry],
+                             meta: Map[String, String],
+                             branch: Option[String]): Unit = {
     // streaming transaction markers are DURABLE state: every commit
     // carries the previous manifest's `txn:` entries forward (newer value
     // wins), so the newest manifest always knows every query's last
     // committed epoch — vacuum can expire any prefix of the log without
     // opening a replay-duplication window
-    val prev = prevRef(fs, dir, v, branch)
-    val carried = prev
-      .map { case (pv, pb) => manifestMeta(fs, dir, pv, pb)
-        .filter(kv => kv._1.startsWith("txn:") || kv._1.startsWith("idwm:")) }
-      .getOrElse(Map.empty[String, String])
+    val carried = prev.meta
+      .filter(kv => kv._1.startsWith("txn:") || kv._1.startsWith("idwm:"))
     // commit wall-clock INSIDE the atomic unit, strictly monotonic per
     // table (same-ms successor bumps by 1): every timestamp surface
     // resolves at-or-before on it, so a commit's own committed_at always
     // resolves back to that commit. It never depends on file mtimes
     // (stores without setTimes, manifest-file copies — clone keeps
     // source history times, the snapshot-semantics answer)
-    val prevTs = prev.map { case (pv, pb) => commitTimeMillis(fs, dir, pv, pb) }
-    val tsStamp = math.max(System.currentTimeMillis(),
-      prevTs.map(_ + 1L).getOrElse(Long.MinValue))
+    val tsStamp = math.max(System.currentTimeMillis(), prev.commitMillis + 1L)
     val allMeta = carried ++ meta + (TsMetaKey -> tsStamp.toString)
     val lines = entries.map(entryLine(dir, _))
     val lineSet = lines.toSet
     // reuse the previous version's segments whose entries ALL survive
     // verbatim (file + masks): the commit then writes only the residual
     val prevSegs: Seq[(String, Seq[String])] =
-      prev.toSeq.flatMap { case (pv, pb) =>
-        segmentRefs(fs, dir, pv, pb).map(n => n -> segmentLines(fs, dir, n))
-      }
+      prev.segmentRefs.map(n => n -> segmentLines(fs, dir, n))
     val covered = scala.collection.mutable.Set.empty[String]
     val reused = prevSegs.filter { case (_, segLines) =>
       val ok = segLines.nonEmpty && segLines.forall(l =>
@@ -1737,65 +1751,97 @@ object GraftTable {
     GraftCommitPrimitive.forFs(fs).commit(fs, manifestPath(dir, v, branch), bytes)
   }
 
-  /** Optimistic-concurrency commit loop for ADDITIVE commits: read the
-    * latest snapshot, derive the next file list via `update`, attempt the
-    * exclusive manifest create; when a racing committer wins the version,
-    * re-derive against ITS snapshot and try again (the standard
-    * append-vs-append resolution — additive updates commute, so replaying
-    * `update` on the refreshed list is exactly the serial outcome). Callers
-    * whose `update` is NOT a pure addition must not use this: replaying a
-    * snapshot-derived replacement over a newer snapshot is a lost update.
-    * Returns the committed version.
+  /** Retries of [[commitRetrying]] after lost version races. */
+  private[sources] val CommitRetries = 20
+
+  /** THE commit protocol of a history-table log: batch appends,
+    * overwrites and copy-on-write replaces, streaming epochs,
+    * merge-on-read deltas, WAP publishes and branch cherry-picks all
+    * commit here.
+    *
+    * One attempt reads the head ONCE ([[readHead]]: version, entries and
+    * meta from one manifest lookup) and hands it to `next`, which
+    * validates it and returns the entry list of version v+1, or throws
+    * to refuse the commit. The exclusive create of manifest v+1
+    * ([[GraftCommitPrimitive]]) carries `meta`, the head's `txn:`/`idwm:`
+    * markers and a strictly monotonic `!ts=` stamp. A failed create
+    * retries only when `manifestPath(v + 1)` now exists (a racer took the
+    * version), at most [[CommitRetries]] times; any other IO failure is
+    * rethrown at once.
+    *
+    * So `next` sees every head it may commit over. An additive `next`
+    * (append, streaming epoch) rebases for free: additive commits
+    * commute, so replaying it on the racer's snapshot is exactly the
+    * serial outcome. A validating one (the write-serializable replace's
+    * read-set check, the identity/row-id watermark check) refuses when a
+    * racer touched what it depends on. A [[singleShot]] one (INSERT
+    * OVERWRITE, a delta) refuses any second head.
+    *
+    * Writers land their data files before the loop and write the files'
+    * stats-log and bloom entries only AFTER the create succeeds; a refused
+    * commit deletes the files it landed ([[GraftWriteJob.Landing]]). So no
+    * log names a file that no manifest references. Returns the committed
+    * version.
     */
-  def commitRetrying(fs: FileSystem, dir: Path, maxRetries: Int = 20,
+  def commitRetrying(fs: FileSystem, dir: Path,
                      branch: Option[String] = None,
                      meta: Map[String, String] = Map.empty)(
-      update: Seq[String] => Seq[String]): Long = {
+      next: Snapshot => Seq[GraftEntry]): Long = {
     var attempt = 0
     while (true) {
-      val (v, oldEntries) = headState(fs, dir, branch)
-      // the file-list update function preserves the DV/equality masks of
-      // every surviving file (additive updates never touch delete state)
-      val oldByFile = oldEntries.map(e => e.file -> e).toMap
+      val head = readHead(fs, dir, branch)
+      val v = head.version + 1
+      val entries = next(head)
       try {
-        writeFullEntries(fs, dir, v + 1,
-          update(oldEntries.map(_.file)).map(f =>
-            oldByFile.getOrElse(f, GraftEntry(f, None))),
-          meta, branch)
-        return v + 1
+        createManifest(fs, dir, head, v, entries, meta, branch)
+        return v
       } catch {
-        case e: java.io.IOException =>
-          // conflict iff the version we raced for now exists; anything
-          // else (permissions, disk) stays loud
-          if (!fs.exists(manifestPath(dir, v + 1, branch)) ||
-              attempt >= maxRetries)
-            throw e
+        case _: java.io.IOException if attempt < CommitRetries &&
+            fs.exists(manifestPath(dir, v, branch)) =>
           attempt += 1
       }
     }
     -1L // unreachable
   }
 
-  /** Current snapshot of `branch` (main when None): (version, entries).
-    * A branch with no commits of its own reads the MAIN manifest it was
-    * forked at; branch versions CONTINUE main's numbering from there, so
-    * one monotone version axis spans the fork.
+  /** `next` for a commit derived from ONE snapshot that must not rebase
+    * (INSERT OVERWRITE, a merge-on-read delta): a second head means a
+    * racer took the version, and the commit refuses.
     */
+  def singleShot(table: String)(
+      next: Snapshot => Seq[GraftEntry]): Snapshot => Seq[GraftEntry] = {
+    var seen = false
+    head => {
+      if (seen) throw new IllegalStateException(
+        s"concurrent commit conflict on $table: a racing commit took " +
+          s"version ${head.version} — re-run the statement against the " +
+          "current snapshot")
+      seen = true
+      next(head)
+    }
+  }
+
+  /** Head of `branch` (main when None) by ONE manifest lookup; version 0
+    * when the log is empty. A branch with no commits of its own reads the
+    * MAIN manifest it was forked at; branch versions CONTINUE main's
+    * numbering from there, so one monotone version axis spans the fork.
+    */
+  def readHead(fs: FileSystem, dir: Path, branch: Option[String]): Snapshot =
+    manifestVersions(fs, dir, branch).lastOption match {
+      case Some(v) => snapshotAt(fs, dir, v, branch)
+      case None =>
+        val base = branch.fold(0L)(b => GraftBranch.baseOf(fs, dir, b)
+          .getOrElse(throw new IllegalArgumentException(
+            s"no branch '$b' on table at $dir (have: " +
+              s"${GraftBranch.readAll(fs, dir).keys.toSeq.sorted.mkString(", ")})")))
+        if (base == 0L) emptySnapshot(fs, dir) else snapshotAt(fs, dir, base)
+    }
+
+  /** Current snapshot of `branch` as (version, entries) — [[readHead]]. */
   def headState(fs: FileSystem, dir: Path,
-                branch: Option[String]): (Long, Seq[GraftEntry]) = branch match {
-    case None =>
-      val v = manifestVersions(fs, dir).lastOption.getOrElse(0L)
-      (v, if (v == 0L) Nil else readFullEntries(fs, dir, v))
-    case Some(b) =>
-      manifestVersions(fs, dir, branch).lastOption match {
-        case Some(v) => (v, readFullEntries(fs, dir, v, branch))
-        case None =>
-          val base = GraftBranch.baseOf(fs, dir, b).getOrElse(
-            throw new IllegalArgumentException(
-              s"no branch '$b' on table at $dir (have: " +
-                s"${GraftBranch.readAll(fs, dir).keys.toSeq.sorted.mkString(", ")})"))
-          (base, if (base == 0L) Nil else readFullEntries(fs, dir, base))
-      }
+                branch: Option[String]): (Long, Seq[GraftEntry]) = {
+    val head = readHead(fs, dir, branch)
+    (head.version, head.entries)
   }
 
   // --- commit kinds ---
@@ -3287,8 +3333,7 @@ class GraftWriteBuilder(table: GraftTable, writeSchema: StructType,
     new Write with GraftWriteDistribution {
       override def table: GraftTable = t
       override def toBatch: BatchWrite =
-        new GraftBatchWrite(t, writeSchema, replaceFiles = None,
-          truncateAll = truncate)
+        new GraftBatchWrite(t, writeSchema, truncateAll = truncate)
       override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
         require(t.history,
           s"streaming write to ${t.name()}: only history tables have the " +
@@ -3303,7 +3348,7 @@ class GraftWriteBuilder(table: GraftTable, writeSchema: StructType,
             "foreachBatch if a branch epoch is needed")
         // identity tables stream natively: micro-batch epochs are serial,
         // and each epoch's writer factory re-reads the watermark exactly
-        // like a batch append (see GraftStreamingWrite.idWrite)
+        // like a batch append (see GraftStreamingWrite.alloc)
         new GraftStreamingWrite(t, writeSchema, queryId)
       }
     }
@@ -3334,73 +3379,24 @@ class GraftStreamingWrite(table: GraftTable, writeSchema: StructType,
   private def hadoopConf = SparkSession.active.sessionState.newHadoopConf()
   private def txnKey = s"txn:$queryId"
 
-  /** Identity state of the CURRENT epoch: (spec, watermark the epoch's
-    * tasks allocate against). Micro-batch execution calls
-    * createStreamingWriterFactory once per epoch with that epoch's
-    * PhysicalWriteInfo, and epochs of one query are serial — so the
-    * per-epoch driver-side watermark read is exactly the batch-append
-    * allocation protocol, once per micro-batch.
+  /** Identity/row-id allocation of the CURRENT epoch. Micro-batch
+    * execution calls createStreamingWriterFactory once per epoch, and
+    * epochs of one query are serial — so each epoch plans against the
+    * head watermark exactly like a batch append. Streamed appends are
+    * plain inserts: every row mints a fresh row id.
     */
-  @volatile private var idWrite: Option[(GraftIdentity.Spec, Long)] = None
-
-  /** Row-lineage watermark the CURRENT epoch allocates against — same
-    * per-epoch protocol as identity (epochs of one query are serial).
-    */
-  @volatile private var rowWrite: Option[Long] = None
+  @volatile private var alloc: Option[GraftWriteJob.Allocation] = None
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
-    val fs = stagingDir.getFileSystem(hadoopConf)
+    val conf = hadoopConf
+    val fs = stagingDir.getFileSystem(conf)
     fs.mkdirs(stagingDir)
-    // row lineage: streamed appends are plain inserts — every row mints
-    // a fresh id (streams never carry `_row_id`; srcIdx = -1)
-    val ioSchema =
-      if (table.rowLineage) GraftRowId.ioSchema(table.physicalSchema)
-      else table.physicalSchema
-    // the identity column may be wholly absent from the stream's
-    // attributes (-1 → generate), like the batch append path
-    val proj = table.physicalSchema.fields.map(f =>
-      if (table.identity.exists(_.col == f.name) &&
-          !writeSchema.fieldNames.contains(f.name)) -1
-      else writeSchema.fieldIndex(f.name)) ++
-      (if (table.rowLineage) Array(-1) else Array.empty[Int])
-    val partIdx = table.partitionFields.map(f => writeSchema.fieldIndex(f.name))
-    val bucket = table.bucketSpec.map { case (c, n) =>
-      val i = writeSchema.fieldIndex(c)
-      (i, writeSchema.fields(i).dataType, n)
-    }
-    val day = table.dayCol.map { c =>
-      val i = writeSchema.fieldIndex(c)
-      (i, writeSchema.fields(i).dataType, c, table.timeUnit)
-    }
-    val idGen: Option[GraftIdentity.WriteGen] = table.identity.map { sp =>
-      val wm0 = GraftIdentity.watermark(
-        GraftIdentity.headMeta(fs, new Path(table.dir), table.branch), sp)
-      idWrite = Some((sp, wm0))
-      GraftIdentity.WriteGen(sp.col,
-        table.physicalSchema.fieldIndex(sp.col),
-        if (writeSchema.fieldNames.contains(sp.col))
-          writeSchema.fieldIndex(sp.col) else -1,
-        wm0, sp.step, info.numPartitions, sp.allowExplicit)
-    }
-    val rowGen: Option[GraftIdentity.WriteGen] =
-      if (!table.rowLineage) None
-      else {
-        val wm0 = GraftRowId.watermark(
-          GraftIdentity.headMeta(fs, new Path(table.dir), table.branch))
-        rowWrite = Some(wm0)
-        Some(GraftRowId.writeGen(wm0, -1, ioSchema.length - 1,
-          info.numPartitions))
-      }
-    val inner = new GraftWriterFactory(stagingDir.toString, ioSchema,
-      writeSchema, proj, table.partitionFields, partIdx.toArray,
-      new SerializableHadoopConf(hadoopConf), bucket,
-      GraftConstraints.violationPredicates(SparkSession.active, table, writeSchema),
-      day, idGen,
-      GraftGenerated.boundGenerators(SparkSession.active, table, writeSchema),
-      rowGen = rowGen,
-      indexCols = GraftBloom.indexOnWriteCols(
-        GraftTable.readProps(fs, new Path(table.dir)), table.physicalSchema))
+    val a = new GraftWriteJob.Allocation(table, fs, writeSchema,
+      info.numPartitions, ids = true, rows = true)
+    alloc = Some(a)
+    val inner = GraftWriteJob.writerFactory(table, writeSchema, stagingDir,
+      conf, a, rewrite = false)
     (partitionId: Int, taskId: Long, epochId: Long) =>
       inner.createWriter(partitionId, taskId)
   }
@@ -3421,109 +3417,29 @@ class GraftStreamingWrite(table: GraftTable, writeSchema: StructType,
                       messages: Array[WriterCommitMessage]): Unit = {
     val fs = stagingDir.getFileSystem(hadoopConf)
     val dir = new Path(table.dir)
-    val staged = messages.flatMap { case g: GraftCommit => g.files }
+    val commits = GraftWriteJob.commits(messages)
     if (lastCommittedEpoch(fs, dir).exists(_ >= epochId)) {
       // checkpoint-recovery replay of an epoch that already committed:
       // drop the restaged bytes, change nothing — exactly-once
-      staged.foreach(f => fs.delete(new Path(f), false))
+      commits.flatMap(_.files).foreach(f => fs.delete(new Path(f), false))
       return
     }
-    val stagedStats: Map[String, GraftStats.FileStats] =
-      messages.flatMap { case g: GraftCommit => g.stats }.toMap
-    val landed = staged.toSeq.map { f =>
-      val p = new Path(f)
-      val tgt = new Path(dir, GraftTable.relativize(stagingDir, p))
-      if (tgt.getParent != dir) fs.mkdirs(tgt.getParent)
-      fs.rename(p, tgt)
-      tgt.toString
-    }
-    // identity: the furthest value any task allocated this epoch rides
-    // the SAME atomic manifest create as the files and the txn marker
-    val idMeta: Map[String, String] = (idWrite match {
-      case Some((sp, _)) =>
-        val lasts = messages.flatMap { case g: GraftCommit => g.idLast }
-        if (lasts.isEmpty) Map.empty[String, String]
-        else Map(GraftIdentity.wmKey(sp.col) ->
-          (if (sp.step > 0) lasts.max else lasts.min).toString)
-      case None => Map.empty[String, String]
-    }) ++ (rowWrite match {
-      // row lineage: the epoch's furthest minted id rides the same
-      // atomic manifest create (an epoch that minted nothing writes no
-      // key — carry-forward keeps the old watermark)
-      case Some(_) =>
-        val lasts = messages.flatMap { case g: GraftCommit => g.rowLast }
-        if (lasts.isEmpty) Map.empty[String, String]
-        else Map(GraftRowId.WmKey -> lasts.max.toString)
-      case None => Map.empty[String, String]
-    })
-    // additive commit with the txn marker in the SAME atomic manifest;
-    // races with other writers retry like any append (additive commits
-    // commute), re-checking the marker against the refreshed log
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      val v = GraftTable.manifestVersions(fs, dir).lastOption.getOrElse(0L)
-      // re-check the marker against the REFRESHED log, not the cached
-      // knownEpoch: after a failover a zombie driver of the same query can
-      // race the replacement — if the refreshed head already carries an
-      // equal-or-newer epoch for this query, the batch landed; unland our
-      // duplicate bytes and change nothing (exactly-once)
-      if (v > 0L && GraftTable.manifestMeta(fs, dir, v).get(txnKey)
-          .exists(_.toLong >= epochId)) {
-        landed.foreach(f => fs.delete(new Path(f), false))
-        knownEpoch = Some(epochId)
-        return
-      }
-      // an identity epoch that raced a concurrent identity writer fails
-      // loudly: its values were allocated against a watermark that moved
-      // (the batch path draws the same line); restart replays the epoch
-      // against the fresh watermark under the exactly-once marker
-      idWrite.foreach { case (sp, wm0) =>
-        val cur = GraftIdentity.watermark(
-          GraftIdentity.headMeta(fs, dir, table.branch), sp)
-        if (cur != wm0) {
-          landed.foreach(f => fs.delete(new Path(f), false))
-          throw new IllegalStateException(
-            s"identity allocation on ${table.name()} epoch $epochId " +
-              s"raced a concurrent identity write (watermark $wm0 -> " +
-              s"$cur since this epoch planned) — the epoch replays on " +
-              "restart")
-        }
-      }
-      // row-id allocation races fail the same loud way as identity
-      rowWrite.foreach { wm0 =>
-        val cur = GraftRowId.watermark(
-          GraftIdentity.headMeta(fs, dir, table.branch))
-        if (cur != wm0) {
-          landed.foreach(f => fs.delete(new Path(f), false))
-          throw new IllegalStateException(
-            s"row-id allocation on ${table.name()} epoch $epochId raced " +
-              s"a concurrent lineage write (watermark $wm0 -> $cur since " +
-              "this epoch planned) — the epoch replays on restart")
-        }
-      }
-      val old = if (v == 0L) Nil else GraftTable.readFullEntries(fs, dir, v)
-      try {
-        GraftTable.writeFullEntries(fs, dir, v + 1,
-          old ++ landed.map(GraftTable.GraftEntry(_, None)),
-          Map(txnKey -> epochId.toString) ++ idMeta ++
-            GraftTable.kindMeta(GraftTable.KindAppend))
-        committed = v + 1
-      } catch {
-        case e: java.io.IOException =>
-          if (!fs.exists(GraftTable.manifestPath(dir, v + 1)) || attempt >= 20)
-            throw e
-          attempt += 1
-      }
-    }
-    // stats (and index-on-write entries) land AFTER the manifest commit:
-    // a dropped duplicate epoch (zombie/replay paths above return early)
-    // must not leave dangling entries for files it unlanded
-    GraftStats.writeCommitStats(fs, dir,
-      stagedStats.toSeq.map { case (p, st) => new Path(p).getName -> st })
-    GraftBloom.writeRawEntries(fs, dir,
-      messages.flatMap { case g: GraftCommit => g.indexes }.toSeq
-        .map { case (p, c, b) => (new Path(p).getName, c, b) })
+    val landing = GraftWriteJob.landing(fs, dir, stagingDir, commits)
+    val published = alloc.fold(Map.empty[String, String])(
+      _.published(commits.flatMap(_.idLast), commits.flatMap(_.rowLast)))
+    // an additive commit with the txn marker in the SAME atomic manifest.
+    // Each head it may commit over is re-checked for the marker, not the
+    // cached knownEpoch: after a failover a zombie driver of the same
+    // query can race the replacement, and a head already carrying an
+    // equal-or-newer epoch for this query means the batch landed — the
+    // duplicate unlands and nothing changes (exactly-once)
+    try landing.commit(None, Map(txnKey -> epochId.toString) ++ published ++
+        GraftTable.kindMeta(GraftTable.KindAppend)) { head =>
+      if (head.meta.get(txnKey).exists(_.toLong >= epochId))
+        throw GraftStreamingWrite.EpochLanded
+      alloc.foreach(_.check(head, published))
+      head.entries ++ landing.entries
+    } catch { case GraftStreamingWrite.EpochLanded => }
     knownEpoch = Some(epochId)
   }
 
@@ -3533,6 +3449,11 @@ class GraftStreamingWrite(table: GraftTable, writeSchema: StructType,
     messages.filter(_ != null).flatMap { case g: GraftCommit => g.files }
       .foreach(f => fs.delete(new Path(f), false))
   }
+}
+
+object GraftStreamingWrite {
+  /** An epoch's commit found its own marker in the head: already landed. */
+  private object EpochLanded extends scala.util.control.ControlThrowable
 }
 
 /** ReplaceData write for the row-level operation: commit swaps exactly the
@@ -3549,8 +3470,7 @@ class GraftReplaceDataWriteBuilder(table: GraftTable, writeSchema: StructType,
       override def toBatch: BatchWrite = {
         val scan = op.configuredScan.getOrElse(throw new IllegalStateException(
           "row-level write built before its scan — no affected groups known"))
-        new GraftBatchWrite(t, writeSchema,
-          replaceFiles = Some(() => scan.currentFiles), truncateAll = false,
+        new GraftBatchWrite(t, writeSchema, truncateAll = false,
           replaceScan = Some(scan))
       }
     }
@@ -3578,272 +3498,102 @@ object GraftBatchWrite {
 }
 
 class GraftBatchWrite(table: GraftTable, writeSchema: StructType,
-                      replaceFiles: Option[() => Seq[String]],
                       truncateAll: Boolean,
                       replaceScan: Option[GraftScan] = None) extends BatchWrite {
 
   private val stagingDir = new Path(table.dir, s".staging-${UUID.randomUUID()}")
   private def hadoopConf = SparkSession.active.sessionState.newHadoopConf()
 
-  /** (spec, watermark the job allocated against) — commit re-checks it. */
-  @volatile private var idWrite: Option[(GraftIdentity.Spec, Long)] = None
-
-  /** Row-lineage watermark the job allocated against — commit re-checks. */
-  @volatile private var rowWrite: Option[Long] = None
+  /** Identity/row-id allocation the job's tasks drew on — commit
+    * re-checks it against every head it may commit over.
+    */
+  @volatile private var alloc: Option[GraftWriteJob.Allocation] = None
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val fs = stagingDir.getFileSystem(hadoopConf)
+    val conf = hadoopConf
+    val fs = stagingDir.getFileSystem(conf)
     fs.mkdirs(stagingDir)
-    // row lineage: the physical file schema gains the trailing hidden id;
-    // a COW rewrite's incoming attributes include the projected `_row_id`
-    // metadata column (carry), a plain append's never do (allocate)
-    val ioSchema =
-      if (table.rowLineage) GraftRowId.ioSchema(table.physicalSchema)
-      else table.physicalSchema
-    // replacement rows may carry metadata columns (_file) — write only the
-    // table's PHYSICAL columns (partition values become directories),
-    // whatever the incoming attribute order. The identity column may be
-    // wholly absent from the incoming attributes (-1 → generate).
-    val rowSrcIdx =
-      if (writeSchema.fieldNames.contains(GraftRowId.Col))
-        writeSchema.fieldIndex(GraftRowId.Col) else -1
-    // COW rewrite: carried rows arrive via the TWO-ARG write — their
-    // metadata row is shaped by requiredMetadataAttributes, i.e.
-    // [_file, _row_id] on a lineage table, so the id sits at index 1
-    val metaRowIdIdx =
-      if (table.rowLineage && replaceFiles.nonEmpty) 1 else -1
-    val proj = table.physicalSchema.fields.map(f =>
-      if (table.identity.exists(_.col == f.name) &&
-          !writeSchema.fieldNames.contains(f.name)) -1
-      else writeSchema.fieldIndex(f.name)) ++
-      (if (table.rowLineage) Array(rowSrcIdx) else Array.empty[Int])
-    val partIdx = table.partitionFields.map(f => writeSchema.fieldIndex(f.name))
-    val bucket = table.bucketSpec.map { case (c, n) =>
-      val i = writeSchema.fieldIndex(c)
-      (i, writeSchema.fields(i).dataType, n)
-    }
-    val day = table.dayCol.map { c =>
-      val i = writeSchema.fieldIndex(c)
-      (i, writeSchema.fields(i).dataType, c, table.timeUnit)
-    }
-    // identity allocation plan: appends and INSERT OVERWRITE generate;
-    // row-level REWRITES carry existing values verbatim (replaceFiles)
-    val idGen: Option[GraftIdentity.WriteGen] =
-      if (replaceFiles.nonEmpty) None
-      else table.identity.map { sp =>
-        val dir = new Path(table.dir)
-        val wm0 = GraftIdentity.watermark(
-          GraftIdentity.headMeta(fs, dir, table.branch), sp)
-        idWrite = Some((sp, wm0))
-        GraftIdentity.WriteGen(sp.col,
-          table.physicalSchema.fieldIndex(sp.col),
-          if (writeSchema.fieldNames.contains(sp.col))
-            writeSchema.fieldIndex(sp.col) else -1,
-          wm0, sp.step, info.numPartitions, sp.allowExplicit)
-      }
-    // row lineage: every batch flavor (append, overwrite, COW replace)
-    // may mint ids — appends for every row, COW replaces only for
-    // merge-inserted rows (carried rows arrive with a non-null source)
-    val rowGen: Option[GraftIdentity.WriteGen] =
-      if (!table.rowLineage) None
-      else {
-        val wm0 = GraftRowId.watermark(
-          GraftIdentity.headMeta(fs, new Path(table.dir), table.branch))
-        rowWrite = Some(wm0)
-        Some(GraftRowId.writeGen(wm0, rowSrcIdx, ioSchema.length - 1,
-          info.numPartitions))
-      }
-    new GraftWriterFactory(stagingDir.toString, ioSchema,
-      writeSchema, proj, table.partitionFields, partIdx.toArray,
-      new SerializableHadoopConf(hadoopConf), bucket,
-      GraftConstraints.violationPredicates(SparkSession.active, table, writeSchema),
-      day, idGen,
-      GraftGenerated.boundGenerators(SparkSession.active, table, writeSchema),
-      genStrict = replaceFiles.isEmpty,
-      indexCols = GraftBloom.indexOnWriteCols(
-        GraftTable.readProps(
-          stagingDir.getFileSystem(hadoopConf), new Path(table.dir)),
-        table.physicalSchema),
-      rowGen = rowGen, metaRowIdIdx = metaRowIdIdx)
+    // identity: appends and INSERT OVERWRITE generate, row-level REWRITES
+    // carry existing values verbatim. Row lineage: every flavor may mint —
+    // appends for every row, COW replaces only for merge-inserted rows
+    // (carried rows arrive with a non-null `_row_id`)
+    val a = new GraftWriteJob.Allocation(table, fs, writeSchema,
+      info.numPartitions, ids = replaceScan.isEmpty, rows = true)
+    alloc = Some(a)
+    GraftWriteJob.writerFactory(table, writeSchema, stagingDir, conf, a,
+      rewrite = replaceScan.nonEmpty)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = stagingDir.getFileSystem(hadoopConf)
     val dir = new Path(table.dir)
-    val staged = messages.flatMap { case g: GraftCommit => g.files }
-    val stagedStats: Map[String, GraftStats.FileStats] =
-      messages.flatMap { case g: GraftCommit => g.stats }.toMap
-    // land under the same staging-relative subpath (partition dirs)
-    def land(f: String): Path = {
-      val p = new Path(f)
-      val tgt = new Path(dir, GraftTable.relativize(stagingDir, p))
-      if (tgt.getParent != dir) fs.mkdirs(tgt.getParent)
-      fs.rename(p, tgt)
-      tgt
-    }
-    // stats entries are keyed by landed file NAME (uuid-unique for the
-    // file's lifetime; rename preserves the name)
-    def landStats(): Unit = {
-      GraftStats.writeCommitStats(fs, dir,
-        stagedStats.toSeq.map { case (p, st) => new Path(p).getName -> st })
-      // index-on-write entries (declared bloom/trigram columns) ride the
-      // same commit, keyed by the same landed names
-      GraftBloom.writeRawEntries(fs, dir,
-        messages.flatMap { case g: GraftCommit => g.indexes }.toSeq
-          .map { case (p, c, b) => (new Path(p).getName, c, b) })
-    }
+    val commits = GraftWriteJob.commits(messages)
     if (table.history) {
       // snapshot commit: staged files land, NOTHING is deleted, and the
-      // exclusive create of manifest v+1 is the atomic (and loudly
-      // conflict-detecting) commit point. Pure APPENDS retry against the
-      // refreshed manifest on conflict (additive commits cannot conflict
-      // logically — the optimistic-concurrency protocol every table
-      // format runs); replace/truncate commits stay LOUD, because their
-      // file list was derived from a snapshot a racing commit just made
-      // stale — blind retry there is the lost-update bug.
-      val landed: Seq[String] = staged.toSeq.map(f => land(f).toString)
-      landStats()
-      // identity watermark: the furthest value any task allocated rides
-      // the SAME atomic manifest create; an identity append that RACED
-      // another identity append fails loudly (its values were allocated
-      // against a watermark that moved), while non-identity appends keep
-      // the plain optimistic retry
-      val idMeta: Map[String, String] = (idWrite match {
-        case Some((sp, _)) =>
-          val lasts = messages.flatMap { case g: GraftCommit => g.idLast }
-          if (lasts.isEmpty) Map.empty[String, String]
-          else Map(GraftIdentity.wmKey(sp.col) ->
-            (if (sp.step > 0) lasts.max else lasts.min).toString)
-        case None => Map.empty[String, String]
-      }) ++ (rowWrite match {
-        // row lineage: the job's furthest MINTED id rides the same atomic
-        // manifest create. A job that minted nothing (pure-carry COW
-        // rewrite) writes no key — `idwm:` carry-forward keeps the old
-        // watermark, so the line never regresses.
-        case Some(_) =>
-          val lasts = messages.flatMap { case g: GraftCommit => g.rowLast }
-          if (lasts.isEmpty) Map.empty[String, String]
-          else Map(GraftRowId.WmKey -> lasts.max.toString)
-        case None => Map.empty[String, String]
-      })
-      def checkIdNotRaced(): Unit = {
-        idWrite.foreach { case (sp, wm0) =>
-          val cur = GraftIdentity.watermark(
-            GraftIdentity.headMeta(fs, dir, table.branch), sp)
-          if (cur != wm0) throw new IllegalStateException(
-            s"identity allocation on ${table.name()} raced a concurrent " +
-              s"identity write (watermark $wm0 -> $cur since this job " +
-              "planned) — re-run the insert")
-        }
-        // row-id mints drew against the planned watermark the same way
-        rowWrite.foreach { wm0 =>
-          val cur = GraftRowId.watermark(
-            GraftIdentity.headMeta(fs, dir, table.branch))
-          if (cur != wm0) throw new IllegalStateException(
-            s"row-id allocation on ${table.name()} raced a concurrent " +
-              s"lineage write (watermark $wm0 -> $cur since this job " +
-              "planned) — re-run the statement")
-        }
-      }
-      // branch writes are the SAME commits in the branch's manifest
+      // manifest create is the commit point ([[GraftTable.commitRetrying]]).
+      // Branch writes are the SAME commits in the branch's manifest
       // namespace: isolation from main comes from the namespace alone
-      val br = table.branch
-      if (!truncateAll && replaceFiles.isEmpty) {
-        if (idMeta.isEmpty) {
-          val cv = GraftTable.commitRetrying(fs, dir, branch = br,
-            meta = GraftTable.kindMeta(GraftTable.KindAppend))(
-            old => old ++ landed)
-          GraftBatchWrite.lastCommittedVersion.set(cv)
-        } else {
-          var attempt = 0
-          var committed = -1L
-          while (committed < 0) {
-            checkIdNotRaced()
-            val (v, old) = GraftTable.headState(fs, dir, br)
-            try {
-              GraftTable.writeFullEntries(fs, dir, v + 1,
-                old ++ landed.map(GraftTable.GraftEntry(_, None)),
-                idMeta ++ GraftTable.kindMeta(GraftTable.KindAppend), br)
-              committed = v + 1
-            } catch {
-              case e: java.io.IOException =>
-                if (!fs.exists(GraftTable.manifestPath(dir, v + 1, br)) ||
-                    attempt >= 20) throw e
-                attempt += 1
-            }
+      val landing = GraftWriteJob.landing(fs, dir, stagingDir, commits)
+      val published = alloc.fold(Map.empty[String, String])(
+        _.published(commits.flatMap(_.idLast), commits.flatMap(_.rowLast)))
+      def checked(head: GraftTable.Snapshot): Unit =
+        alloc.foreach(_.check(head, published))
+      def commitAs(kind: String)(
+          next: GraftTable.Snapshot => Seq[GraftTable.GraftEntry]): Long =
+        landing.commit(table.branch, published ++ GraftTable.kindMeta(kind))(next)
+      val cv =
+        if (!truncateAll && replaceScan.isEmpty)
+          // additive: rebases over any racer that left the watermarks alone
+          commitAs(GraftTable.KindAppend) { head =>
+            checked(head)
+            head.entries ++ landing.entries
           }
-          GraftBatchWrite.lastCommittedVersion.set(committed)
-        }
-      } else {
-        // WRITE-SERIALIZABLE REPLACE (row-level COW): the rewrite's file
-        // list was derived from the SCAN-time snapshot; commits that land
-        // in the scan→commit window are fine iff they left every affected
-        // file's entry VERBATIM (same file, same DV, same equality masks
-        // — a racing pure append, or a rewrite of disjoint files). Those
-        // commits rebase: the head's untouched entries survive filterNot
-        // and the replace retries the exclusive create against the new
-        // head — the 3-hour DELETE racing a streaming append commits
-        // instead of dying (Delta's WriteSerializable default). A racing
-        // commit that DID touch an affected file (rewrote it, masked rows
-        // with a new DV, or removed it) is a real lost-update conflict
-        // and fails loudly — blind retry there would resurrect its
-        // deletions or duplicate its rewrites. INSERT OVERWRITE
-        // (truncateAll) carries no read set and keeps the single-shot
-        // loud behavior.
-        val ip = GraftBatchWrite.replaceInterposer
-        GraftBatchWrite.replaceInterposer = None
-        ip.foreach(_())
-        val affected: Set[String] =
-          if (truncateAll) Set.empty
-          else replaceFiles.get().map(new Path(_).getName).toSet
-        val scanEntries = replaceScan.map(_.snapshotEntryByName)
-        var attempt = 0
-        var committed = false
-        while (!committed) {
-          val (v, old) = GraftTable.headState(fs, dir, br)
-          scanEntries.foreach { se =>
-            val headByName =
-              old.map(e => (new Path(e.file).getName, e)).toMap
-            affected.foreach { n =>
-              if (headByName.get(n) != se.get(n))
-                throw new IllegalStateException(
-                  s"concurrent update conflict on ${table.name()}: data " +
-                    s"file $n was read by this row-level rewrite but a " +
-                    "racing commit " +
-                    (if (headByName.contains(n)) "modified its delete state"
-                     else "rewrote or removed it") +
-                    " — committing would lose that update; re-run the " +
-                    "statement against the current snapshot")
-            }
-          }
-          val newList: Seq[GraftTable.GraftEntry] =
-            if (truncateAll) landed.map(GraftTable.GraftEntry(_, None))
-            else {
-              // surviving files keep their DV/equality masks; replaced
-              // ones drop (their rows were read mask-filtered + rewritten)
-              old.filterNot(e => affected.contains(new Path(e.file).getName)) ++
-                landed.map(GraftTable.GraftEntry(_, None))
-            }
-          if (idMeta.nonEmpty) checkIdNotRaced()
-          val replKind =
-            if (truncateAll) GraftTable.KindOverwrite
-            else GraftTable.KindReplace
-          try {
-            GraftTable.writeFullEntries(fs, dir, v + 1, newList,
-              idMeta ++ GraftTable.kindMeta(replKind), br)
-            GraftBatchWrite.lastCommittedVersion.set(v + 1)
-            committed = true
-          } catch {
-            case e: java.io.IOException =>
-              // retry only a validated row-level replace that lost the
-              // version race; overwrites and non-collision IO stay loud
-              if (scanEntries.isEmpty || attempt >= 20 ||
-                  !fs.exists(GraftTable.manifestPath(dir, v + 1, br)))
-                throw e
-              attempt += 1
+        else {
+          val ip = GraftBatchWrite.replaceInterposer
+          GraftBatchWrite.replaceInterposer = None
+          ip.foreach(_())
+          replaceScan match {
+            // INSERT OVERWRITE carries no read set: any race refuses
+            case None =>
+              commitAs(GraftTable.KindOverwrite)(GraftTable.singleShot(table.name()) {
+                head => checked(head); landing.entries
+              })
+            // WRITE-SERIALIZABLE REPLACE (row-level COW): the rewrite's
+            // file list was derived from the SCAN-time snapshot. A racing
+            // commit that left every affected file's entry VERBATIM (same
+            // file, same DV, same equality masks — a pure append, or a
+            // rewrite of disjoint files) is rebased over: the 3-hour DELETE
+            // racing a streaming append commits instead of dying (Delta's
+            // WriteSerializable default). One that DID touch an affected
+            // file (rewrote it, masked rows with a new DV, or removed it) is
+            // a real lost-update conflict and refuses — committing would
+            // resurrect its deletions or duplicate its rewrites
+            case Some(scan) =>
+              val affected = scan.currentFiles.map(new Path(_).getName).toSet
+              val scanEntries = scan.snapshotEntryByName
+              commitAs(GraftTable.KindReplace) { head =>
+                val headByName =
+                  head.entries.map(e => (new Path(e.file).getName, e)).toMap
+                affected.foreach { n =>
+                  if (headByName.get(n) != scanEntries.get(n))
+                    throw new IllegalStateException(
+                      s"concurrent update conflict on ${table.name()}: data " +
+                        s"file $n was read by this row-level rewrite but a " +
+                        "racing commit " +
+                        (if (headByName.contains(n)) "modified its delete state"
+                         else "rewrote or removed it") +
+                        " — committing would lose that update; re-run the " +
+                        "statement against the current snapshot")
+                }
+                checked(head)
+                // surviving files keep their DV/equality masks; replaced
+                // ones drop (their rows were read mask-filtered + rewritten)
+                head.entries.filterNot(e =>
+                  affected.contains(new Path(e.file).getName)) ++ landing.entries
+              }
           }
         }
-      }
+      GraftBatchWrite.lastCommittedVersion.set(cv)
     } else {
       // eager commit: delete-then-rename — replaced groups (row-level) or
       // everything (truncate) leave before the replacements land, and the
@@ -3863,15 +3613,15 @@ class GraftBatchWrite(table: GraftTable, writeSchema: StructType,
             !st.getPath.getName.startsWith("."))
           .foreach(st => fs.delete(st.getPath, true))
       }
-      val replaced = replaceFiles.map(_.apply().map { f =>
+      val replaced = replaceScan.map(_.currentFiles.map { f =>
         fs.delete(new Path(f), false); new Path(f).getName
       }.toSet)
-      staged.foreach(land)
-      landStats()
+      val landing = GraftWriteJob.landing(fs, dir, stagingDir, commits)
+      landing.publish()
       // destroyed files take their statistics with them (min/max hold
       // real data values — a purge/overwrite must not leave them behind)
       if (truncateAll) {
-        val live = staged.map(f => new Path(f).getName).toSet
+        val live = landing.landed.map(f => new Path(f).getName).toSet
         GraftStats.retain(fs, dir, live.contains)
         GraftBloom.retain(fs, dir, live.contains)
       } else replaced.filter(_.nonEmpty).foreach { gone =>

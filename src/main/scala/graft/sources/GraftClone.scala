@@ -45,7 +45,8 @@ object GraftClone {
       s"graft_clone: $dstDir already is a table")
     val schema = GraftTable.readTableSchema(fs, src).getOrElse(
       throw new IllegalArgumentException(s"graft_clone: $srcDir has no schema"))
-    val (v, entries) = GraftTable.headState(fs, src, None)
+    val head = GraftTable.readHead(fs, src, None)
+    val (v, entries) = (head.version, head.entries)
     require(v > 0, s"graft_clone: $srcDir has no snapshot")
     fs.mkdirs(dst)
     val out = fs.create(new Path(dst, GraftTable.MetaFile), true)
@@ -95,8 +96,7 @@ object GraftClone {
       }
     // identity watermark + any txn markers ride into the clone's first
     // manifest, so generated keys continue past the source's
-    val carried = GraftIdentity.headMeta(fs, src, None)
-      .filter(kv => kv._1.startsWith("idwm:"))
+    val carried = head.meta.filter(kv => kv._1.startsWith("idwm:"))
     GraftTable.commitWithKind(fs, dst, 1L, cloned, GraftTable.KindAppend,
       carried)
     // lift the source's stats for the referenced files (names are

@@ -142,13 +142,10 @@ class GraftDeltaBatchWrite(table: GraftTable, rowSchema: StructType,
     new Path(table.dir, s".staging-${java.util.UUID.randomUUID()}")
   private def hadoopConf = SparkSession.active.sessionState.newHadoopConf()
 
-  /** (spec, watermark the job allocated against) — commit re-checks it
-    * (the batch-append identity protocol, on the delta path).
+  /** Identity/row-id allocation of the job's genuine inserts — commit
+    * re-checks it (the batch-append protocol, on the delta path).
     */
-  @volatile private var idWrite: Option[(GraftIdentity.Spec, Long)] = None
-
-  /** Row-lineage watermark the job's genuine inserts minted against. */
-  @volatile private var rowWrite: Option[Long] = None
+  @volatile private var alloc: Option[GraftWriteJob.Allocation] = None
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     val fs = stagingDir.getFileSystem(hadoopConf)
@@ -170,75 +167,45 @@ class GraftDeltaBatchWrite(table: GraftTable, rowSchema: StructType,
     // delta INSERTS route through the table's layout exactly like the
     // batch writer: bucket prefix in the file name, days() subdirs —
     // a MOR MERGE's appended rows must not break pruning or SPJ placement
-    val bucket =
-      if (rowSchema.isEmpty) None
-      else table.bucketSpec.map { case (c, n) =>
-        val i = rowSchema.fieldIndex(c)
-        (i, rowSchema.fields(i).dataType, n)
-      }
-    val day =
-      if (rowSchema.isEmpty) None
-      else table.dayCol.map { c =>
-        val i = rowSchema.fieldIndex(c)
-        (i, rowSchema.fields(i).dataType, c, table.timeUnit)
-      }
+    val (bucket, day) =
+      if (rowSchema.isEmpty) (None, None)
+      else GraftWriteJob.layout(table, rowSchema)
     val genProjs =
       if (rowSchema.isEmpty) Nil
       else GraftGenerated.boundGenerators(SparkSession.active, table, rowSchema)
-    // identity on the DELTA path: genuine inserts (MERGE ... INSERT)
-    // allocate against the head watermark exactly like a batch append;
-    // update-REINSERTED rows carry their existing key (idCarry). A pure
-    // DELETE plans no data columns and allocates nothing.
-    val idGen: Option[GraftIdentity.WriteGen] =
-      if (rowSchema.isEmpty) None
-      else table.identity.map { sp =>
-        val dir = new Path(table.dir)
-        val wm0 = GraftIdentity.watermark(
-          GraftIdentity.headMeta(fs, dir, table.branch), sp)
-        idWrite = Some((sp, wm0))
-        GraftIdentity.WriteGen(sp.col,
-          table.physicalSchema.fieldIndex(sp.col),
-          if (rowSchema.fieldNames.contains(sp.col))
-            rowSchema.fieldIndex(sp.col) else -1,
-          wm0, sp.step, info.numPartitions, sp.allowExplicit)
-      }
-    // row lineage: insert files carry the trailing hidden id; genuine
-    // inserts mint against the head watermark (srcIdx = -1 — the DATA row
-    // never carries `_row_id`), update-reinserts carry the original id
-    // from the METADATA row (rowCarry side-channel). Pure DELETEs write
-    // no files and allocate nothing.
+    // identity and row lineage on the DELTA path: genuine inserts (MERGE
+    // ... INSERT) allocate against the head watermark exactly like a batch
+    // append (the DATA row never carries `_row_id`); update-REINSERTED
+    // rows carry their existing key and id (idCarry / the rowCarry
+    // side-channel from the METADATA row). A pure DELETE plans no data
+    // columns, writes no files and allocates nothing.
+    val a = new GraftWriteJob.Allocation(table, fs, rowSchema,
+      info.numPartitions, ids = rowSchema.nonEmpty, rows = rowSchema.nonEmpty)
+    alloc = Some(a)
     val ioSchema =
       if (table.rowLineage && rowSchema.nonEmpty)
         GraftRowId.ioSchema(table.physicalSchema)
       else table.physicalSchema
-    val rowGen: Option[GraftIdentity.WriteGen] =
-      if (!table.rowLineage || rowSchema.isEmpty) None
-      else {
-        val wm0 = GraftRowId.watermark(
-          GraftIdentity.headMeta(fs, new Path(table.dir), table.branch))
-        rowWrite = Some(wm0)
-        Some(GraftRowId.writeGen(wm0, -1, ioSchema.length - 1,
-          info.numPartitions))
-      }
     val metaRowIdIdx =
       if (table.rowLineage && metaSchema.fieldNames.contains(GraftRowId.Col))
         metaSchema.fieldIndex(GraftRowId.Col) else -1
     new GraftDeltaWriterFactory(stagingDir.toString, ioSchema,
-      rowSchema, if (rowGen.isEmpty) proj else proj ++ Array(-1),
+      rowSchema, if (a.rowGen.isEmpty) proj else proj ++ Array(-1),
       if (rowSchema.isEmpty) Nil else table.partitionFields, partIdx,
       rowIdSchema.fieldIndex(GraftTable.FileCol),
       rowIdSchema.fieldIndex(GraftTable.PosCol),
       new SerializableHadoopConf(hadoopConf), violations, bucket, day, genProjs,
-      idGen, rowGen, metaRowIdIdx)
+      a.idGen, a.rowGen, metaRowIdIdx)
   }
 
   /** Commit: OR each file's new delete positions into its existing
-    * sidecar (idempotent merge), then land appended files. Single-writer,
-    * like every commit on this catalog. On a HISTORY table the merged
-    * bitmaps land under fresh VERSIONED sidecar names and the next
-    * manifest re-points the affected entries — past snapshots keep their
-    * own delete state, so `VERSION AS OF` a pre-delete version resurrects
-    * the rows and vacuum expires superseded sidecars like data files.
+    * sidecar (idempotent merge), then land appended files. On a HISTORY
+    * table the merged bitmaps land under fresh VERSIONED sidecar names and
+    * the next manifest re-points the affected entries — past snapshots
+    * keep their own delete state, so `VERSION AS OF` a pre-delete version
+    * resurrects the rows and vacuum expires superseded sidecars like data
+    * files. The bitmaps were merged against one head, so a racing commit
+    * refuses the delta ([[GraftTable.singleShot]]).
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = stagingDir.getFileSystem(hadoopConf)
@@ -261,81 +228,43 @@ class GraftDeltaBatchWrite(table: GraftTable, rowSchema: StructType,
         }
       }
     }
-    def landStaged(): Seq[String] = {
-      val landed = staged.toSeq.map { f =>
-        val p = new Path(f)
-        val tgt = new Path(dir, GraftTable.relativize(stagingDir, p))
-        if (tgt.getParent != dir) fs.mkdirs(tgt.getParent)
-        fs.rename(p, tgt)
-        tgt.toString
-      }
-      // delta INSERTS carry tracked stats like batch appends (keyed by
-      // landed name — rename preserves it)
-      GraftStats.writeCommitStats(fs, dir,
-        stagedStats.toSeq.map { case (p, st) => new Path(p).getName -> st })
-      landed
-    }
+    def land() = new GraftWriteJob.Landing(fs, dir, stagingDir, staged.toSeq,
+      stagedStats.toMap)
     if (table.history) {
+      val landing = land()
       // branch deltas read the branch head and commit into the branch
       // namespace — MERGE INTO db.t.branch_<b> on a MOR table stages DV
-      // sidecars exactly like main, invisible to main until fast-forward
-      val br = table.branch
-      val (v, headEntries) = GraftTable.headState(fs, dir, br)
-      require(v > 0L, s"history table ${table.name()} has no manifest")
-      val mergedByName = merged.map { case (f, bm) =>
-        new Path(f).getName -> bm
-      }
-      val updated = headEntries.map { e =>
-        mergedByName.get(new Path(e.file).getName) match {
-          case Some(bm) =>
-            e.dv.foreach(d => bm.or(GraftDv.read(fs, new Path(d))))
-            val dvPath = new Path(dir,
-              GraftDv.versionedDvName(new Path(e.file).getName))
-            GraftDv.write(fs, dvPath, bm)
-            e.copy(dv = Some(dvPath.toString)) // equality masks survive
-          case None => e
+      // sidecars exactly like main, invisible to main until fast-forward.
+      // The identity/row-id watermarks ride the SAME manifest
+      val published = alloc.fold(Map.empty[String, String])(
+        _.published(idLasts.toSeq, rowLasts.toSeq))
+      landing.commit(table.branch,
+          published ++ GraftTable.kindMeta(GraftTable.KindDelta))(
+          GraftTable.singleShot(table.name()) { head =>
+        require(head.version > 0L, s"history table ${table.name()} has no manifest")
+        alloc.foreach(_.check(head, published))
+        val mergedByName = merged.map { case (f, bm) =>
+          new Path(f).getName -> bm
         }
-      }
-      val landed = landStaged()
-      // identity watermark rides the SAME manifest as the delta commit;
-      // a delta that allocated against a watermark a concurrent identity
-      // write moved fails loudly (re-run re-reads the fresh head)
-      val idMeta: Map[String, String] = (idWrite match {
-        case Some((sp, wm0)) if idLasts.nonEmpty =>
-          val cur = GraftIdentity.watermark(
-            GraftIdentity.headMeta(fs, dir, table.branch), sp)
-          if (cur != wm0) throw new IllegalStateException(
-            s"identity allocation on ${table.name()} raced a concurrent " +
-              s"identity write (watermark $wm0 -> $cur since this delta " +
-              "planned) — re-run the statement")
-          Map(GraftIdentity.wmKey(sp.col) ->
-            (if (sp.step > 0) idLasts.max else idLasts.min).toString)
-        case _ => Map.empty[String, String]
-      }) ++ (rowWrite match {
-        // a delta whose genuine inserts minted row ids advances the
-        // lineage watermark under the same loud race rule; a pure
-        // delete/reinsert delta (no mints) writes no key — carry-forward
-        // keeps the old line
-        case Some(wm0) if rowLasts.nonEmpty =>
-          val cur = GraftRowId.watermark(
-            GraftIdentity.headMeta(fs, dir, table.branch))
-          if (cur != wm0) throw new IllegalStateException(
-            s"row-id allocation on ${table.name()} raced a concurrent " +
-              s"lineage write (watermark $wm0 -> $cur since this delta " +
-              "planned) — re-run the statement")
-          Map(GraftRowId.WmKey -> rowLasts.max.toString)
-        case _ => Map.empty[String, String]
+        head.entries.map { e =>
+          mergedByName.get(new Path(e.file).getName) match {
+            case Some(bm) =>
+              e.dv.foreach(d => bm.or(GraftDv.read(fs, new Path(d))))
+              val dvPath = new Path(dir,
+                GraftDv.versionedDvName(new Path(e.file).getName))
+              GraftDv.write(fs, dvPath, bm)
+              e.copy(dv = Some(dvPath.toString)) // equality masks survive
+            case None => e
+          }
+        } ++ landing.entries
       })
-      GraftTable.commitWithKind(fs, dir, v + 1,
-        updated ++ landed.map(GraftTable.GraftEntry(_, None)),
-        GraftTable.KindDelta, idMeta, br)
     } else {
       merged.foreach { case (file, bm) =>
         val dvPath = new Path(dir, GraftDv.dvName(new Path(file).getName))
         if (fs.exists(dvPath)) bm.or(GraftDv.read(fs, dvPath))
         GraftDv.write(fs, dvPath, bm)
       }
-      landStaged()
+      land().publish()
     }
     fs.delete(stagingDir, true)
   }

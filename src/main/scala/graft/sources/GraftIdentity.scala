@@ -70,22 +70,6 @@ object GraftIdentity {
   def watermark(meta: Map[String, String], spec: Spec): Long =
     meta.get(wmKey(spec.col)).map(_.toLong).getOrElse(spec.start - spec.step)
 
-  /** Commit metadata of the current head of `branch` (main when None) —
-    * where the watermark (and txn markers) live.
-    */
-  def headMeta(fs: FileSystem, dir: Path,
-               branch: Option[String]): Map[String, String] = branch match {
-    case None =>
-      GraftTable.manifestVersions(fs, dir).lastOption
-        .map(v => GraftTable.manifestMeta(fs, dir, v)).getOrElse(Map.empty)
-    case Some(b) =>
-      GraftTable.manifestVersions(fs, dir, branch).lastOption
-        .map(v => GraftTable.manifestMeta(fs, dir, v, branch))
-        .orElse(GraftBranch.baseOf(fs, dir, b).filter(_ > 0L)
-          .map(v => GraftTable.manifestMeta(fs, dir, v)))
-        .getOrElse(Map.empty)
-  }
-
   /** Job-level generation plan, resolved once at write build: task p of
     * numParts starts at `wm + step·(1+p)` and strides `step·numParts`.
     */
@@ -118,8 +102,9 @@ object GraftIdentity {
     val props = GraftTable.readProps(fs, dir)
     val spec = specOf(props).getOrElse(throw new IllegalArgumentException(
       s"graft_sync_identity: $tableDir has no identity column"))
-    val (v, entries) = GraftTable.headState(fs, dir, None)
-    val wm0 = watermark(headMeta(fs, dir, None), spec)
+    val head = GraftTable.readHead(fs, dir, None)
+    val (v, entries) = (head.version, head.entries)
+    val wm0 = watermark(head.meta, spec)
     if (entries.isEmpty) return (wm0, wm0)
     val stats = GraftStats.readAll(fs, dir)
     val perFile = entries.map(e =>

@@ -160,7 +160,7 @@ object GraftWap {
         }
       GraftTable.commitRetrying(fs, dir,
         meta = GraftTable.kindMeta(GraftTable.KindAppend))(
-        old => old ++ landed)
+        _.entries ++ landed.map(GraftTable.GraftEntry(_)))
     }
     fs.delete(src, true)
     v

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Plan auditor for the FINAL adaptive plan: executes each named query to
@@ -13,20 +12,7 @@ object ExplainFinal {
     val (flags, names) = args.partition(_.startsWith("--"))
     val dir = flags.find(_.startsWith("--sf=")).map(_.drop(5))
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.sorting.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.maxFields", "300")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n================ $name (final adaptive plan) ================")

@@ -41,13 +41,14 @@ class GraftConcurrencySpec extends SparkSpec {
     // manifest and our exclusive create, a "racing committer" wins the
     // next version with its own appended file
     var raced = false
-    val committed = GraftTable.commitRetrying(f, dir) { old =>
+    val committed = GraftTable.commitRetrying(f, dir) { head =>
       if (!raced) {
         raced = true
-        GraftTable.writeManifest(f, dir, v0 + 1,
-          old ++ Seq(new Path(dir, "part-racer.parquet").toString))
+        GraftTable.writeManifest(f, dir, v0 + 1, head.entries.map(_.file) ++
+          Seq(new Path(dir, "part-racer.parquet").toString))
       }
-      old ++ Seq(new Path(dir, "part-mine.parquet").toString)
+      head.entries :+
+        GraftTable.GraftEntry(new Path(dir, "part-mine.parquet").toString)
     }
     assert(committed == v0 + 2,
       s"retry must land on the version AFTER the racer's, got $committed")
@@ -63,15 +64,19 @@ class GraftConcurrencySpec extends SparkSpec {
   test("append retry gives up loudly after maxRetries") {
     val dir = new Path(s"$warehouse/db/h")
     val f = fs(dir)
+    var attempts = 0
     intercept[java.io.IOException] {
-      GraftTable.commitRetrying(f, dir, maxRetries = 3) { old =>
+      GraftTable.commitRetrying(f, dir) { head =>
         // a pathological racer that always wins: pre-create the version
         // we are about to target
-        val v = GraftTable.manifestVersions(f, dir).last
-        GraftTable.writeManifest(f, dir, v + 1, old)
-        old
+        attempts += 1
+        GraftTable.writeManifest(f, dir, head.version + 1,
+          head.entries.map(_.file))
+        head.entries
       }
     }
+    assert(attempts == GraftTable.CommitRetries + 1,
+      s"one first attempt plus ${GraftTable.CommitRetries} retries, got $attempts")
   }
 
   test("non-manifest IO errors are NOT retried") {
@@ -82,7 +87,7 @@ class GraftConcurrencySpec extends SparkSpec {
     val f = fs(dir)
     val out = f.create(dir, true); out.write(1); out.close()
     intercept[java.io.IOException] {
-      GraftTable.commitRetrying(f, dir) { old => old }
+      GraftTable.commitRetrying(f, dir)(_.entries)
     }
   }
 
@@ -166,5 +171,50 @@ class GraftConcurrencySpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("base" -> 90L, "won" -> 10L),
       s"the losing rewrite must leave no effect: $got")
+    assertNoDebris(new Path(s"$warehouse/db/ws2"))
+  }
+
+  test("write-serializable replace: a row-id allocation race refuses, no debris") {
+    sql("""CREATE TABLE graft_cc.db.rid (id BIGINT, v STRING)
+          |TBLPROPERTIES ('history'='true', 'rowid'='true')""".stripMargin)
+    sql("INSERT INTO graft_cc.db.rid SELECT id, 'base' FROM range(0, 100)")
+    spark.range(50, 150).selectExpr("id", "'merged' AS v")
+      .createOrReplaceTempView("rid_src")
+    // the racing INSERT mints row ids inside the MERGE's scan→commit
+    // window: it touches none of the files the MERGE read, but the ids
+    // the MERGE's inserts minted were drawn against a stale watermark
+    GraftBatchWrite.replaceInterposer = Some(() =>
+      sql("INSERT INTO graft_cc.db.rid SELECT id, 'raced' FROM range(1000, 1010)"))
+    val e = intercept[Exception] {
+      sql("""MERGE INTO graft_cc.db.rid t USING rid_src s ON t.id = s.id
+            |WHEN MATCHED THEN UPDATE SET t.v = s.v
+            |WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)""".stripMargin)
+    }
+    assert(GraftBatchWrite.replaceInterposer.isEmpty, "interposer must fire")
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+    assert(chain(e).exists(m => m.contains("row-id allocation") && m.contains("raced")),
+      s"expected the row-id allocation race, got: ${chain(e).mkString(" | ")}")
+    val got = sql("SELECT v, count(*) FROM graft_cc.db.rid GROUP BY v")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == Map("base" -> 100L, "raced" -> 10L),
+      s"the refused MERGE must leave base plus the raced rows: $got")
+    assertNoDebris(new Path(s"$warehouse/db/rid"))
+  }
+
+  /** A refused commit leaves nothing behind: no data file outside every
+    * retained manifest (fsck's `orphan_files`), and no stats-log entry
+    * for one.
+    */
+  private def assertNoDebris(dir: Path): Unit = {
+    val f = fs(dir)
+    val orphans = GraftFsck.audit(spark, dir.toString)
+      .find(_.check == "orphan_files").get.n
+    assert(orphans == 0L, s"a refused commit must unland its files: $orphans orphans")
+    val referenced = GraftTable.manifestVersions(f, dir)
+      .flatMap(GraftTable.readFullEntries(f, dir, _))
+      .map(e => new Path(e.file).getName).toSet
+    val stray = GraftStats.readAll(f, dir).keySet -- referenced
+    assert(stray.isEmpty, s"stats entries for unreferenced files: $stray")
   }
 }

@@ -435,7 +435,7 @@ class GraftRowIdSpec extends SparkSpec {
     // the watermark advanced by exactly the number of MINTS (2), riding
     // the eqdelta manifest
     assert(GraftRowId.watermark(
-      GraftIdentity.headMeta(fs, dir, None)) == wm + 2)
+      GraftTable.readHead(fs, dir, None).meta) == wm + 2)
     // row diff classifies by id: the 3 carried ids pair as updates, the
     // 2 minted ids are inserts — no phantom delete+insert churn
     val v2 = GraftTable.manifestVersions(fs, dir).last
@@ -449,7 +449,7 @@ class GraftRowIdSpec extends SparkSpec {
     GraftEqDelete.upsert(spark, "graft_rid", "db.equ",
       Seq((10L, "uu")).toDF("k", "v"), Seq("k"))
     assert(GraftRowId.watermark(
-      GraftIdentity.headMeta(fs, dir, None)) == wm + 2)
+      GraftTable.readHead(fs, dir, None).meta) == wm + 2)
     val after2 = ids("graft_rid.db.equ")
     assert(after2 == after, "a pure-update upsert must not move any id")
     // folding the eq masks into rewritten files carries ids verbatim
