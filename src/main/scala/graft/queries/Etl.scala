@@ -2691,12 +2691,13 @@ object Etl {
       val racedN = s.sql(
         "SELECT COUNT(*) FROM graft_wsr_src WHERE id % 100 = 2")
         .collect()(0).getLong(0)
-      graft.sources.GraftBatchWrite.replaceInterposer = Some(() =>
+      val accDir = new org.apache.hadoop.fs.Path(wh, "db/acc")
+      graft.sources.GraftTable.interposeOnce(accDir)(
         s.sql("""INSERT INTO graft_wsr.db.acc
                 |SELECT id + 10000000, status, cents FROM graft_wsr_src
                 |WHERE id % 100 = 2""".stripMargin))
       s.sql("DELETE FROM graft_wsr.db.acc WHERE id % 10 = 2")
-      require(graft.sources.GraftBatchWrite.replaceInterposer.isEmpty,
+      require(!graft.sources.GraftTable.interposePending(accDir),
         "etl_replace_rebase: the racing append must have fired inside " +
           "the DELETE's commit")
       val survivors = s.table("graft_wsr.db.acc")

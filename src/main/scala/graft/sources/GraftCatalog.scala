@@ -798,8 +798,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               Map(GraftSort.SortColsProp -> sortCols.mkString(","))
             else Map.empty)
         ++ govProps ++ retProps))
-      if (history)
-        GraftTable.writeManifest(fs, dir, 1L, Nil) // v1 = the empty table
+      if (history) // v1 = the empty table
+        GraftTable.commitRetrying(fs, dir)(
+          GraftTable.pinnedAt(ident.toString, 0L)(Nil))
     }
     new GraftTable(ident.toString, dir.toString, schema, history, mor = mor,
       partitionCols = pcols, bucketSpec = bucket, checks = checks,
@@ -1454,7 +1455,7 @@ object GraftTable {
     * a manifest without one), the SAME at-or-before rule `TIMESTAMP AS OF`
     * time travel applies; every timestamp-bounded surface resolves
     * through here so they can never drift apart. Stamps are strictly
-    * monotonic per table (writeFullEntries bumps same-ms ties), so a
+    * monotonic per table (createManifest bumps same-ms ties), so a
     * commit's own committed_at always resolves back to that commit.
     */
   def versionAtOrBefore(fs: FileSystem, dir: Path,
@@ -1647,22 +1648,6 @@ object GraftTable {
   def readManifest(fs: FileSystem, dir: Path, v: Long): Seq[String] =
     readEntries(fs, dir, v).map(_._1)
 
-  /** Exclusive create: a concurrent committer racing to the same version
-    * fails LOUDLY here instead of silently clobbering the snapshot — the
-    * optimistic-concurrency commit point every table format centers on.
-    * The atomic primitive itself is store-dependent and PLUGGABLE
-    * ([[GraftCommitPrimitive]]): HDFS-like `create(overwrite=false)`,
-    * POSIX hard-link on the local filesystem (whose Hadoop `create` is
-    * check-then-open), or a conditional PUT on rename-less object stores.
-    */
-  def writeManifest(fs: FileSystem, dir: Path, v: Long, files: Seq[String]): Unit =
-    writeEntries(fs, dir, v, files.map(_ -> None))
-
-  def writeEntries(fs: FileSystem, dir: Path, v: Long,
-                   entries: Seq[(String, Option[String])]): Unit =
-    writeFullEntries(fs, dir, v,
-      entries.map { case (f, dv) => GraftEntry(f, dv) })
-
   private def entryLine(dir: Path, e: GraftEntry): String = {
     // entries are dir-relative (plain names for flat tables, col=value/
     // subpaths for partitioned ones); DV and equality sidecars live at
@@ -1687,22 +1672,15 @@ object GraftTable {
     name
   }
 
-  def writeFullEntries(fs: FileSystem, dir: Path, v: Long,
-                       entries: Seq[GraftEntry]): Unit =
-    writeFullEntries(fs, dir, v, entries, Map.empty)
-
-  /** Single-shot create of manifest `v` of `branch` over its current head:
-    * a racer that already took `v` fails it loudly (no retry).
-    */
-  def writeFullEntries(fs: FileSystem, dir: Path, v: Long,
-                       entries: Seq[GraftEntry],
-                       meta: Map[String, String],
-                       branch: Option[String] = None): Unit =
-    createManifest(fs, dir, readHead(fs, dir, branch), v, entries, meta, branch)
-
   /** Exclusive create of manifest `v` over `prev`, the snapshot it builds
     * on (a branch's first commit builds on the main manifest it was forked
-    * at, so txn carry and segment reuse chain across the fork point).
+    * at, so txn carry and segment reuse chain across the fork point). A
+    * concurrent committer racing to the same version fails LOUDLY here
+    * instead of silently clobbering the snapshot. The atomic primitive is
+    * store-dependent and PLUGGABLE ([[GraftCommitPrimitive]]): HDFS-like
+    * `create(overwrite=false)`, POSIX hard-link on the local filesystem
+    * (whose Hadoop `create` is check-then-open), or a conditional PUT on
+    * rename-less object stores. [[commitRetrying]] is its only caller.
     */
   private def createManifest(fs: FileSystem, dir: Path, prev: Snapshot,
                              v: Long, entries: Seq[GraftEntry],
@@ -1754,10 +1732,13 @@ object GraftTable {
   /** Retries of [[commitRetrying]] after lost version races. */
   private[sources] val CommitRetries = 20
 
-  /** THE commit protocol of a history-table log: batch appends,
-    * overwrites and copy-on-write replaces, streaming epochs,
-    * merge-on-read deltas, WAP publishes and branch cherry-picks all
-    * commit here.
+  /** THE commit protocol of a history-table log and the only path to a
+    * manifest create. Every commit lands here: batch appends, overwrites
+    * and copy-on-write replaces, streaming epochs, merge-on-read deltas,
+    * equality upserts, WAP publishes and branch cherry-picks; CREATE's
+    * empty v1 and a clone's v1; and the maintenance verbs — compaction
+    * (flat, bucketed, days()), OPTIMIZE, time-layout migration, the
+    * deletion-vector and equality-mask folds, restore and identity sync.
     *
     * One attempt reads the head ONCE ([[readHead]]: version, entries and
     * meta from one manifest lookup) and hands it to `next`, which
@@ -1772,10 +1753,11 @@ object GraftTable {
     * So `next` sees every head it may commit over. An additive `next`
     * (append, streaming epoch) rebases for free: additive commits
     * commute, so replaying it on the racer's snapshot is exactly the
-    * serial outcome. A validating one (the write-serializable replace's
-    * read-set check, the identity/row-id watermark check) refuses when a
-    * racer touched what it depends on. A [[singleShot]] one (INSERT
-    * OVERWRITE, a delta) refuses any second head.
+    * serial outcome. A [[rebasing]] one (the copy-on-write replace and
+    * every rewrite verb) refuses when a racer touched a file it
+    * replaced. A [[singleShot]] one (INSERT OVERWRITE, a delta) refuses
+    * any second head, a [[pinnedAt]] one (restore, identity sync, v1)
+    * any head but the one it was derived from.
     *
     * Writers land their data files before the loop and write the files'
     * stats-log and bloom entries only AFTER the create succeeds; a refused
@@ -1787,6 +1769,7 @@ object GraftTable {
                      branch: Option[String] = None,
                      meta: Map[String, String] = Map.empty)(
       next: Snapshot => Seq[GraftEntry]): Long = {
+    Option(commitHooks.remove(hookKey(dir))).foreach(_())
     var attempt = 0
     while (true) {
       val head = readHead(fs, dir, branch)
@@ -1804,6 +1787,31 @@ object GraftTable {
     -1L // unreachable
   }
 
+  /** TEST SEAM: one-shot hooks keyed by table directory. A hook runs at
+    * the top of the next [[commitRetrying]] on its directory and is
+    * dropped first, so the racing commit it lands takes the normal path
+    * — the deterministic way for specs and driver-gate queries to race a
+    * commit inside another's optimistic window. A commit to another
+    * table never consumes it. Production never sets one.
+    */
+  private val commitHooks =
+    new java.util.concurrent.ConcurrentHashMap[String, () => Unit]()
+
+  private def hookKey(dir: Path): String = dir.toUri.getPath.stripSuffix("/")
+
+  private[graft] def interposeOnce(dir: Path)(hook: => Unit): Unit =
+    commitHooks.put(hookKey(dir), () => hook)
+
+  /** Whether the [[interposeOnce]] hook on `dir` has not fired yet. */
+  private[graft] def interposePending(dir: Path): Boolean =
+    commitHooks.containsKey(hookKey(dir))
+
+  private def raced(table: String, head: Snapshot): Nothing =
+    throw new IllegalStateException(
+      s"concurrent commit conflict on $table: a racing commit took " +
+        s"version ${head.version} — re-run the statement against the " +
+        "current snapshot")
+
   /** `next` for a commit derived from ONE snapshot that must not rebase
     * (INSERT OVERWRITE, a merge-on-read delta): a second head means a
     * racer took the version, and the commit refuses.
@@ -1812,12 +1820,47 @@ object GraftTable {
       next: Snapshot => Seq[GraftEntry]): Snapshot => Seq[GraftEntry] = {
     var seen = false
     head => {
-      if (seen) throw new IllegalStateException(
-        s"concurrent commit conflict on $table: a racing commit took " +
-          s"version ${head.version} — re-run the statement against the " +
-          "current snapshot")
+      if (seen) raced(table, head)
       seen = true
       next(head)
+    }
+  }
+
+  /** `next` for a commit derived from version `base` that must not rebase
+    * (restore, identity sync, CREATE's and a clone's v1): any other head
+    * refuses.
+    */
+  def pinnedAt(table: String, base: Long)(
+      entries: => Seq[GraftEntry]): Snapshot => Seq[GraftEntry] =
+    head => if (head.version != base) raced(table, head) else entries
+
+  /** `next` of a WRITE-SERIALIZABLE rewrite (Delta's default isolation):
+    * `replaced` are the base snapshot's entries of the files it rewrote,
+    * `added` the entries it landed. A head that kept every replaced entry
+    * VERBATIM (same file, DV and equality masks — a racing append, or a
+    * rewrite of other files) is rebased over: `head − replaced ++ added`
+    * is exactly the serial outcome, so a long rewrite racing a streaming
+    * append commits instead of dying. A head where a racer rewrote,
+    * removed or re-masked a replaced file refuses: committing would
+    * resurrect its deletions or duplicate its rewrites. The copy-on-write
+    * replace, the rewrite verbs and the mask folds all commit through it.
+    */
+  def rebasing(table: String, replaced: Seq[GraftEntry],
+               added: Seq[GraftEntry]): Snapshot => Seq[GraftEntry] = {
+    def name(e: GraftEntry) = new Path(e.file).getName
+    val base = replaced.map(e => name(e) -> e).toMap
+    head => {
+      val headByName = head.entries.map(e => name(e) -> e).toMap
+      base.foreach { case (n, e) =>
+        if (!headByName.get(n).contains(e)) throw new IllegalStateException(
+          s"concurrent update conflict on $table: data file $n was read " +
+            "by this rewrite but a racing commit " +
+            (if (headByName.contains(n)) "modified its delete state"
+             else "rewrote or removed it") +
+            " — committing would lose that update; re-run the statement " +
+            "against the current snapshot")
+      }
+      head.entries.filterNot(e => base.contains(name(e))) ++ added
     }
   }
 
@@ -1869,13 +1912,6 @@ object GraftTable {
   val KindMetaKey = "kind"
 
   def kindMeta(kind: String): Map[String, String] = Map(KindMetaKey -> kind)
-
-  /** Commit `entries` at `v` with `kind` in the manifest meta. */
-  def commitWithKind(fs: FileSystem, dir: Path, v: Long,
-                     entries: Seq[GraftEntry], kind: String,
-                     meta: Map[String, String] = Map.empty,
-                     branch: Option[String] = None): Unit =
-    writeFullEntries(fs, dir, v, entries, meta ++ kindMeta(kind), branch)
 
   /** The kind version `v` committed as, from its manifest meta. */
   def commitKind(fs: FileSystem, dir: Path, v: Long,
@@ -2534,8 +2570,8 @@ class GraftScan(table: GraftTable, required: StructType, rowLevel: Boolean,
   @volatile private var files: Seq[String] = allFiles
 
   /** Scan-time snapshot entries keyed by file NAME — the read set a
-    * row-level commit validates against the head snapshot (see the
-    * write-serializable replace loop in [[GraftBatchWrite]]): an affected
+    * row-level commit validates against the head snapshot (see
+    * [[GraftTable.rebasing]]): an affected
     * file whose head entry differs from this one (rewritten, masked by a
     * new DV, or gone) was concurrently modified, and committing the
     * rewrite would lose that update.
@@ -3478,14 +3514,6 @@ class GraftReplaceDataWriteBuilder(table: GraftTable, writeSchema: StructType,
 }
 
 object GraftBatchWrite {
-  /** TEST SEAM: interposed ONCE at the start of a row-level replace
-    * commit, then cleared — the deterministic way for specs and
-    * driver-gate queries to land a racing commit inside the scan→commit
-    * window the write-serializable validation exists for. Production
-    * never sets it.
-    */
-  @volatile private[graft] var replaceInterposer: Option[() => Unit] = None
-
   /** Version of the most recent HISTORY-table manifest commit THIS
     * thread's batch write landed (V2 command commits execute on the
     * caller's thread): a verb that just issued `writeTo(...).overwrite`
@@ -3548,50 +3576,26 @@ class GraftBatchWrite(table: GraftTable, writeSchema: StructType,
             checked(head)
             head.entries ++ landing.entries
           }
-        else {
-          val ip = GraftBatchWrite.replaceInterposer
-          GraftBatchWrite.replaceInterposer = None
-          ip.foreach(_())
-          replaceScan match {
-            // INSERT OVERWRITE carries no read set: any race refuses
-            case None =>
-              commitAs(GraftTable.KindOverwrite)(GraftTable.singleShot(table.name()) {
-                head => checked(head); landing.entries
-              })
-            // WRITE-SERIALIZABLE REPLACE (row-level COW): the rewrite's
-            // file list was derived from the SCAN-time snapshot. A racing
-            // commit that left every affected file's entry VERBATIM (same
-            // file, same DV, same equality masks — a pure append, or a
-            // rewrite of disjoint files) is rebased over: the 3-hour DELETE
-            // racing a streaming append commits instead of dying (Delta's
-            // WriteSerializable default). One that DID touch an affected
-            // file (rewrote it, masked rows with a new DV, or removed it) is
-            // a real lost-update conflict and refuses — committing would
-            // resurrect its deletions or duplicate its rewrites
-            case Some(scan) =>
-              val affected = scan.currentFiles.map(new Path(_).getName).toSet
-              val scanEntries = scan.snapshotEntryByName
-              commitAs(GraftTable.KindReplace) { head =>
-                val headByName =
-                  head.entries.map(e => (new Path(e.file).getName, e)).toMap
-                affected.foreach { n =>
-                  if (headByName.get(n) != scanEntries.get(n))
-                    throw new IllegalStateException(
-                      s"concurrent update conflict on ${table.name()}: data " +
-                        s"file $n was read by this row-level rewrite but a " +
-                        "racing commit " +
-                        (if (headByName.contains(n)) "modified its delete state"
-                         else "rewrote or removed it") +
-                        " — committing would lose that update; re-run the " +
-                        "statement against the current snapshot")
-                }
-                checked(head)
-                // surviving files keep their DV/equality masks; replaced
-                // ones drop (their rows were read mask-filtered + rewritten)
-                head.entries.filterNot(e =>
-                  affected.contains(new Path(e.file).getName)) ++ landing.entries
-              }
-          }
+        else replaceScan match {
+          // INSERT OVERWRITE carries no read set: any race refuses
+          case None =>
+            commitAs(GraftTable.KindOverwrite)(GraftTable.singleShot(table.name()) {
+              head => checked(head); landing.entries
+            })
+          // WRITE-SERIALIZABLE REPLACE (row-level COW): the rewrite's file
+          // list was derived from the SCAN-time snapshot; surviving files
+          // keep their DV/equality masks, replaced ones drop (their rows
+          // were read mask-filtered and rewritten)
+          case Some(scan) =>
+            val rebase = GraftTable.rebasing(table.name(),
+              scan.currentFiles.map(f =>
+                scan.snapshotEntryByName(new Path(f).getName)),
+              landing.entries)
+            commitAs(GraftTable.KindReplace) { head =>
+              val entries = rebase(head)
+              checked(head)
+              entries
+            }
         }
       GraftBatchWrite.lastCommittedVersion.set(cv)
     } else {

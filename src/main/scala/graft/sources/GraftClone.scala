@@ -77,11 +77,8 @@ object GraftClone {
           })
         val conf = new SerializableHadoopConf(
           spark.sessionState.newHadoopConf())
-        val par = spark.conf.getOption("spark.graft.maintenance.parallelism")
-          .map(_.toInt)
-          .getOrElse(spark.sparkContext.defaultParallelism)
         spark.sparkContext
-          .parallelize(pairs, math.max(1, math.min(pairs.size, par)))
+          .parallelize(pairs, GraftMaintenance.parallelism(spark, pairs.size))
           .foreach { case (from, to) =>
             val p = new Path(from)
             val fsx = p.getFileSystem(conf.value)
@@ -97,8 +94,9 @@ object GraftClone {
     // identity watermark + any txn markers ride into the clone's first
     // manifest, so generated keys continue past the source's
     val carried = head.meta.filter(kv => kv._1.startsWith("idwm:"))
-    GraftTable.commitWithKind(fs, dst, 1L, cloned, GraftTable.KindAppend,
-      carried)
+    GraftTable.commitRetrying(fs, dst,
+        meta = carried ++ GraftTable.kindMeta(GraftTable.KindAppend))(
+      GraftTable.pinnedAt(dstDir, 0L)(cloned))
     // lift the source's stats for the referenced files (names are
     // uuid-unique — keys stay valid whether referenced or copied)
     val srcStats = GraftStats.readAll(fs, src)

@@ -205,7 +205,8 @@ class GraftDeltaBatchWrite(table: GraftTable, rowSchema: StructType,
     * keep their own delete state, so `VERSION AS OF` a pre-delete version
     * resurrects the rows and vacuum expires superseded sidecars like data
     * files. The bitmaps were merged against one head, so a racing commit
-    * refuses the delta ([[GraftTable.singleShot]]).
+    * refuses the delta ([[GraftTable.singleShot]]), as does a first head
+    * that no longer holds a file the delta masks.
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = stagingDir.getFileSystem(hadoopConf)
@@ -245,6 +246,16 @@ class GraftDeltaBatchWrite(table: GraftTable, rowSchema: StructType,
         alloc.foreach(_.check(head, published))
         val mergedByName = merged.map { case (f, bm) =>
           new Path(f).getName -> bm
+        }
+        // a racer that rewrote or removed a file before the first head
+        // read would silently drop that file's delete positions
+        val headNames = head.entries.map(e => new Path(e.file).getName).toSet
+        mergedByName.keys.find(n => !headNames.contains(n)).foreach { n =>
+          throw new IllegalStateException(
+            s"concurrent update conflict on ${table.name()}: data file $n " +
+              "holds rows this delta deletes but a racing commit rewrote " +
+              "or removed it — committing would lose those deletes; " +
+              "re-run the statement against the current snapshot")
         }
         head.entries.map { e =>
           mergedByName.get(new Path(e.file).getName) match {

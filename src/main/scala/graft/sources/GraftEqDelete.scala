@@ -368,15 +368,16 @@ object GraftEqDelete {
     // keeps the loud refusal: replaying a snapshot-derived replacement
     // over one of those is a lost update.
     def attemptOnce(): Long = {
-    val v0 = GraftTable.manifestVersions(fs, dir).lastOption.getOrElse(
-      throw new IllegalStateException(s"$catalog.$table has no manifest"))
+    val base = GraftTable.readHead(fs, dir, None)
+    val v0 = base.version
+    if (v0 == 0L)
+      throw new IllegalStateException(s"$catalog.$table has no manifest")
     val carryCol = "__graft_carry"
     val (toLand, rowWmMeta): (DataFrame, Map[String, String]) =
       if (!t.rowLineage) (casted, Map.empty)
       else {
         // watermark OF the pinned snapshot, not of whatever is newest
-        val wm0 = GraftRowId.watermark(
-          GraftTable.manifestMeta(fs, dir, v0))
+        val wm0 = GraftRowId.watermark(base.meta)
         var existing = spark.table(s"$catalog.$table")
           .select((col(GraftRowId.Col) +: keyCols.map(col)): _*)
         keyMinMax.foreach { case (c, mn, mx) =>
@@ -599,8 +600,7 @@ object GraftEqDelete {
     // any file whose NAME claims a bucket no change key hashes to (pure
     // metadata, composes with the stats box)
     val stats = GraftStats.readAll(fs, dir)
-    val old = GraftTable.readFullEntries(fs, dir, v0)
-    val updated = old.map { e =>
+    val updated = base.entries.map { e =>
       val name = new Path(e.file).getName
       val statsSkip = bounds.nonEmpty &&
         stats.get(name)
@@ -623,17 +623,16 @@ object GraftEqDelete {
       else e.copy(eqs = e.eqs :+ eqTarget.toString)
     }
     // the lineage watermark (when this upsert minted ids) rides the SAME
-    // exclusive manifest create as the files — a racing committer takes
-    // v0+1 first, this create fails loudly, and nothing of the
-    // allocation is visible
-    preCommitHook()
-    try {
-      GraftTable.commitWithKind(fs, dir, v0 + 1,
-        updated ++ landed.map(GraftTable.GraftEntry(_, None)),
-        GraftTable.KindEqDelta, rowWmMeta)
-      v0 + 1
+    // exclusive manifest create as the files — any head but v0 (a racing
+    // committer took v0+1) refuses, and nothing of the allocation is
+    // visible
+    try GraftTable.commitRetrying(fs, dir,
+        meta = rowWmMeta ++ GraftTable.kindMeta(GraftTable.KindEqDelta)) {
+      head =>
+        if (head.version != v0) throw new UpsertRace(v0, head.version)
+        updated ++ landed.map(GraftTable.GraftEntry(_, None))
     } catch {
-      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
+      case r: UpsertRace =>
         // this attempt's landed files and sidecar are unreferenced by
         // any manifest — retract them (and their lifted stats/index
         // entries) before the caller decides whether to re-derive
@@ -647,7 +646,7 @@ object GraftEqDelete {
           GraftStats.retain(fs, dir, n => !goneNames.contains(n))
           GraftBloom.retain(fs, dir, n => !goneNames.contains(n))
         } catch { case _: java.io.IOException => }
-        throw new UpsertRace(v0, e)
+        throw r
     }
     } // attemptOnce
 
@@ -677,8 +676,8 @@ object GraftEqDelete {
             s"upsert: $catalog.$table commit race lost to a non-additive " +
               "winner (or the schema moved) — a snapshot-derived upsert " +
               "cannot replay over it; re-run the epoch against the new " +
-              "head", r.getCause)
-          raceCause = r.getCause
+              "head", r)
+          raceCause = r
       }
     }
     throw new IllegalStateException(
@@ -695,19 +694,12 @@ object GraftEqDelete {
   val StageMaxTaskRowsKey = "graft.upsert.stage.maxTaskRows"
   val DefaultStageMaxTaskRows = 4000000L
 
-  /** Internal signal: the exclusive create at `pinned`+1 lost a race and
-    * this attempt's files were retracted; the retry loop decides whether
-    * the winner was additive enough to re-derive over.
+  /** Internal signal: a racing commit took `pinned`+1 (the head is at
+    * `head`) and this attempt's files were retracted; the retry loop
+    * decides whether the winner was additive enough to re-derive over.
     */
-  private final class UpsertRace(val pinned: Long, cause: Throwable)
-    extends Exception(cause)
-
-  /** TEST HOOK: runs between an attempt's staging and its exclusive
-    * manifest create — the only deterministic way to interleave a racing
-    * committer inside the optimistic window (same pattern as the commit
-    * protocol spec's barrier filesystem). No-op in production.
-    */
-  private[sources] var preCommitHook: () => Unit = () => ()
+  private final class UpsertRace(val pinned: Long, head: Long)
+    extends Exception(s"version ${pinned + 1} was taken: the head is at $head")
 
   /** Fold equality masks into rewritten data files (the eq analog of
     * materializeDeletes): every masked entry's file is rewritten without
@@ -722,13 +714,15 @@ object GraftEqDelete {
     val props = GraftTable.readProps(fs, dir)
     require(props.get(GraftTable.HistoryProp).contains("true"),
       s"materializeEqDeletes: $tableDir is not a history table")
-    if (GraftTable.manifestVersions(fs, dir).isEmpty) return 0
-    def latest = GraftTable.manifestVersions(fs, dir).last
-    if (GraftTable.readFullEntries(fs, dir, latest).exists(_.dv.nonEmpty))
-      GraftMaintenance.materializeDeletes(spark, tableDir)
-    val v = latest
-    val entries = GraftTable.readFullEntries(fs, dir, v)
-    val masked = entries.filter(_.eqs.nonEmpty)
+    val head0 = GraftTable.readHead(fs, dir, None)
+    if (head0.version == 0L) return 0
+    val head =
+      if (!head0.entries.exists(_.dv.nonEmpty)) head0
+      else {
+        GraftMaintenance.materializeDeletes(spark, tableDir)
+        GraftTable.readHead(fs, dir, None)
+      }
+    val masked = head.entries.filter(_.eqs.nonEmpty)
     if (masked.isEmpty) return 0
     val staging = new Path(dir, s".eqfold-${UUID.randomUUID()}")
     // RENAME/WIDEN history: the fold forward-maps every column to its
@@ -808,13 +802,8 @@ object GraftEqDelete {
       }
     }
     fs.delete(staging, true)
-    val updated = entries.flatMap { e =>
-      if (e.eqs.isEmpty) Seq(e)
-      else rewrittenByName(new Path(e.file).getName)
-        .map(GraftTable.GraftEntry(_, None))
-    }
-    GraftTable.commitWithKind(fs, dir, v + 1, updated,
-      GraftTable.KindCompact)
+    GraftMaintenance.commitRewrite(fs, dir, masked, masked.flatMap(e =>
+      rewrittenByName(new Path(e.file).getName).map(GraftTable.GraftEntry(_))))
     val allLanded = rewrittenByName.values.flatten.toSeq
     if (allLanded.nonEmpty) {
       GraftStats.liftFromFooters(spark, dir, allLanded,

@@ -126,8 +126,9 @@ object GraftIdentity {
     val wm1 = if (spec.step > 0) math.max(wm0, observed)
       else math.min(wm0, observed)
     if (wm1 == wm0) return (wm0, wm0)
-    GraftTable.commitWithKind(fs, dir, v + 1, entries,
-      GraftTable.KindCompact, Map(wmKey(spec.col) -> wm1.toString))
+    GraftTable.commitRetrying(fs, dir, meta = GraftTable.kindMeta(
+        GraftTable.KindCompact) + (wmKey(spec.col) -> wm1.toString))(
+      GraftTable.pinnedAt(tableDir, v)(entries))
     (wm0, wm1)
   }
 }

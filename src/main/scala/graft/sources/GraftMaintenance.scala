@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Maintenance passes for graft-catalog tables. Copy-on-write MERGE plus
@@ -26,17 +26,96 @@ object GraftMaintenance {
       s"$what on $dir")
   }
 
-  /** Partition count for distributed maintenance jobs (deep-clone copy,
-    * stats/NDV backfill, bloom build): `spark.graft.maintenance.parallelism`
-    * when set, else the cluster's default parallelism — a 1000-executor
-    * cluster spreads the work; local mode keeps its core count. Never a
+  /** Partition count for distributed maintenance jobs (deep-clone and
+    * replication copies, stats/NDV backfill, bloom build): one per item,
+    * at most the cluster's default parallelism — a 1000-executor cluster
+    * spreads the work; local mode keeps its core count. Never a
     * hardcoded cap.
     */
-  def parallelism(spark: SparkSession, items: Int): Int = {
-    val par = spark.conf.getOption("spark.graft.maintenance.parallelism")
-      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-    math.max(1, math.min(items, par))
+  def parallelism(spark: SparkSession, items: Int): Int =
+    math.max(1, math.min(items, spark.sparkContext.defaultParallelism))
+
+  /** What a rewrite verb rewrites: the table's files once its row-level
+    * masks are folded (MOR deletion vectors, then a history table's
+    * equality masks — a raw re-read would resurrect masked rows), and on
+    * a history table the head they were read from, by ONE lookup: the
+    * rewrite's commit rebases over it ([[GraftTable.rebasing]]).
+    */
+  private final case class RewriteBase(head: Option[GraftTable.Snapshot],
+                                       files: Seq[String])
+
+  private def foldedBase(spark: SparkSession, fs: FileSystem, tableDir: String,
+                         props: Map[String, String]): RewriteBase = {
+    val dir = new Path(tableDir)
+    if (props.get(GraftTable.MorProp).contains("true"))
+      materializeDeletes(spark, tableDir)
+    if (!props.get(GraftTable.HistoryProp).contains("true"))
+      return RewriteBase(None, GraftTable.dataFiles(fs, dir))
+    val head0 = GraftTable.readHead(fs, dir, None)
+    val head =
+      if (!head0.entries.exists(_.eqs.nonEmpty)) head0
+      else {
+        GraftEqDelete.materializeEqDeletes(spark, tableDir)
+        GraftTable.readHead(fs, dir, None)
+      }
+    RewriteBase(Some(head), head.entries.map(_.file))
   }
+
+  /** Commit a history-table rewrite: ONE `compact` manifest swapping the
+    * head's `replaced` entries for `added`, rebased over any racing
+    * commit that left the replaced entries alone and refused otherwise;
+    * a refused commit deletes the added files it landed.
+    */
+  private[sources] def commitRewrite(fs: FileSystem, dir: Path,
+                                     replaced: Seq[GraftTable.GraftEntry],
+                                     added: Seq[GraftTable.GraftEntry]): Long =
+    try GraftTable.commitRetrying(fs, dir,
+        meta = GraftTable.kindMeta(GraftTable.KindCompact))(
+      GraftTable.rebasing(dir.toString, replaced, added))
+    catch {
+      case e: Throwable =>
+        added.foreach(a => fs.delete(new Path(a.file), false))
+        throw e
+    }
+
+  /** Land a rewrite verb's output: each staged file of `moves` is renamed
+    * to its table path, replacing the `replaced` files of `base`. A
+    * history table keeps the old files (past snapshots reference them)
+    * and commits through [[commitRewrite]]; an eager table deletes them
+    * first and drops their stats and bloom entries. Then the landed
+    * files' stats are lifted from their footers (`schema`), declared
+    * indexes rebuilt, and `staging` removed. Returns the landed paths.
+    */
+  private def landRewrite(spark: SparkSession, fs: FileSystem, dir: Path,
+                          base: RewriteBase, replaced: Set[String],
+                          moves: Seq[(Path, Path)], staging: Path)(
+      schema: => org.apache.spark.sql.types.StructType): Seq[String] =
+    try {
+      val landed = moves.map(_._2.toString)
+      base.head match {
+        case Some(head) =>
+          moves.foreach { case (src, tgt) => fs.rename(src, tgt) }
+          commitRewrite(fs, dir, head.entries.filter(e => replaced.contains(e.file)),
+            landed.map(GraftTable.GraftEntry(_)))
+        case None =>
+          replaced.foreach(f => fs.delete(new Path(f), false))
+          moves.foreach { case (src, tgt) => fs.rename(src, tgt) }
+          if (replaced.nonEmpty) {
+            val gone = replaced.map(f => new Path(f).getName)
+            GraftStats.retain(fs, dir, n => !gone.contains(n))
+            GraftBloom.retain(fs, dir, n => !gone.contains(n))
+          }
+      }
+      // rewrites go through Spark's parquet writer (no in-loop stats
+      // tracker) — lift the landed files' stats from the footers they
+      // just produced, ONE distributed job, so the new layout prunes from
+      // the metadata log on the very next scan
+      if (landed.nonEmpty) {
+        GraftStats.liftFromFooters(spark, dir, landed, schema)
+        reindexDeclared(spark, dir, landed)
+      }
+      landed
+    } finally fs.delete(staging, true)
 
   /** Rewrites land files under fresh names with NO index entries — for
     * tables with DECLARED index-on-write columns, rebuild those files'
@@ -114,8 +193,8 @@ object GraftMaintenance {
   /** In-place compaction of a graft-catalog table directory to
     * ~`targetBytes` files. Sizing reads only file metadata (one listing);
     * the rewrite is one shuffle to exactly the output count; the swap is
-    * the same delete-then-rename the row-level writes use (single-writer,
-    * like every commit on this catalog). Pass `sortCols` to leave the
+    * [[landRewrite]]'s (a history table's commit rebases over racing
+    * appends and refuses racing rewrites). Pass `sortCols` to leave the
     * rewritten files range-clustered (min/max-prunable) instead of
     * round-robin. Returns (files before, files after).
     */
@@ -131,7 +210,6 @@ object GraftMaintenance {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val props = GraftTable.readProps(fs, dir)
     enforceWriterFence(fs, dir, "compactTable")
-    val history = props.get(GraftTable.HistoryProp).contains("true")
     require(!props.contains(GraftTable.PartitionProp),
       "compactTable: partitioned tables need per-partition compaction " +
         "(a bulk rewrite would collapse the col=value directory layout); " +
@@ -144,18 +222,8 @@ object GraftMaintenance {
       "compactTable: days()-partitioned tables need per-day compaction (a " +
         "bulk rewrite would collapse the ts_day=N layout and silently kill " +
         "hidden-partition pruning); use compactDayTable")
-    // merge-on-read: fold outstanding deletion vectors in first, so the
-    // bulk rewrite below can read the files as plain parquet; likewise
-    // fold equality masks (a raw re-read would resurrect masked rows)
-    if (props.get(GraftTable.MorProp).contains("true"))
-      materializeDeletes(spark, tableDir)
-    if (history && GraftTable.manifestVersions(fs, dir).lastOption.exists(v =>
-        GraftTable.readFullEntries(fs, dir, v).exists(_.eqs.nonEmpty)))
-      GraftEqDelete.materializeEqDeletes(spark, tableDir)
-    val files =
-      if (!history) GraftTable.dataFiles(fs, dir)
-      else GraftTable.manifestVersions(fs, dir).lastOption
-        .map(GraftTable.readManifest(fs, dir, _)).getOrElse(Nil)
+    val base = foldedBase(spark, fs, tableDir, props)
+    val files = base.files
     if (files.isEmpty) return (0, 0)
     val totalBytes = files.map(f => fs.getFileStatus(new Path(f)).getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
@@ -187,34 +255,8 @@ object GraftMaintenance {
     val staged = fs.listStatus(staging).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(_.getPath)
-    val landed: Seq[String] =
-      if (history) {
-        // snapshot semantics: old files stay (past versions reference
-        // them); the rewrite is just the next manifest
-        val l = staged.map { p =>
-          val tgt = new Path(dir, p.getName); fs.rename(p, tgt); tgt.toString
-        }
-        val v = GraftTable.manifestVersions(fs, dir).last
-        GraftTable.commitWithKind(fs, dir, v + 1,
-          l.map(GraftTable.GraftEntry(_, None)), GraftTable.KindCompact)
-        l
-      } else {
-        val gone = files.map(f => new Path(f).getName).toSet
-        files.foreach(f => fs.delete(new Path(f), false))
-        val l = staged.map { p =>
-          val tgt = new Path(dir, p.getName); fs.rename(p, tgt); tgt.toString
-        }
-        GraftStats.retain(fs, dir, n => !gone.contains(n))
-      GraftBloom.retain(fs, dir, n => !gone.contains(n))
-        l
-      }
-    // compaction wrote through Spark's parquet writer (no in-loop stats
-    // tracker) — lift the rewritten files' stats from the footers they
-    // just produced, ONE distributed job, so the clustered layout prunes
-    // from the metadata log on the very next scan
-    GraftStats.liftFromFooters(spark, dir, landed, df.schema)
-    reindexDeclared(spark, dir, landed)
-    fs.delete(staging, true)
+    landRewrite(spark, fs, dir, base, files.toSet,
+      staged.map(p => p -> new Path(dir, p.getName)), staging)(df.schema)
     (files.size, staged.size)
   }
 
@@ -232,15 +274,8 @@ object GraftMaintenance {
     require(props.contains(GraftTable.BucketColProp),
       s"compactBucketedTable: $tableDir is not a bucketed table")
     enforceWriterFence(fs, dir, "compactBucketedTable")
-    // merge-on-read: fold deletion vectors first (keeps names / commits a
-    // compact-kind manifest), so the per-bucket rewrite reads plain files
-    if (props.get(GraftTable.MorProp).contains("true"))
-      materializeDeletes(spark, tableDir)
-    val history = props.get(GraftTable.HistoryProp).contains("true")
-    val files =
-      if (!history) GraftTable.dataFiles(fs, dir)
-      else GraftTable.manifestVersions(fs, dir).lastOption
-        .map(GraftTable.readManifest(fs, dir, _)).getOrElse(Nil)
+    val base = foldedBase(spark, fs, tableDir, props)
+    val files = base.files
     if (files.isEmpty) return (0, 0)
     val byBucket = files.groupBy { f =>
       val n = new Path(f).getName
@@ -257,7 +292,7 @@ object GraftMaintenance {
     val bucketCol = props(GraftTable.BucketColProp)
     val unitSort = bucketCol +:
       GraftSort.sortColsOf(props).filterNot(_ == bucketCol)
-    val landed = rewritten.map { case (b, fls) =>
+    val moves = rewritten.map { case (b, fls) =>
       val out = new Path(staging, s"b$b")
       withMicrosTimestamps(spark) {
         evoRead(spark, fs, dir, props, fls).coalesce(1)
@@ -273,33 +308,12 @@ object GraftMaintenance {
       }
       val tgt = new Path(dir, GraftBucket.fileName(b,
         s"part-compact-${UUID.randomUUID()}.parquet"))
-      b -> (part, tgt)
+      (part, tgt)
     }
     val replaced = rewritten.flatMap(_._2).toSet
-    if (history) {
-      landed.foreach { case (_, (src, tgt)) => fs.rename(src, tgt) }
-      val keep = files.filterNot(replaced.contains) ++
-        landed.map(_._2._2.toString)
-      val v = GraftTable.manifestVersions(fs, dir).last
-      GraftTable.commitWithKind(fs, dir, v + 1,
-        keep.map(GraftTable.GraftEntry(_, None)), GraftTable.KindCompact)
-    } else {
-      replaced.foreach(f => fs.delete(new Path(f), false))
-      landed.foreach { case (_, (src, tgt)) => fs.rename(src, tgt) }
-      if (replaced.nonEmpty) {
-        val gone = replaced.map(f => new Path(f).getName)
-        GraftStats.retain(fs, dir, n => !gone.contains(n))
-      GraftBloom.retain(fs, dir, n => !gone.contains(n))
-      }
-    }
-    if (landed.nonEmpty) {
-      val landedPaths = landed.map(_._2._2.toString)
-      GraftStats.liftFromFooters(spark, dir, landedPaths,
-        spark.read.parquet(landedPaths.head).schema)
-      reindexDeclared(spark, dir, landedPaths)
-    }
-    fs.delete(staging, true)
-    (files.size, files.size - replaced.size + landed.size)
+    landRewrite(spark, fs, dir, base, replaced, moves, staging)(
+      spark.read.parquet(moves.head._2.toString).schema)
+    (files.size, files.size - replaced.size + moves.size)
   }
 
   /** Day-preserving compaction for `days(col)`-partitioned tables: each
@@ -320,15 +334,8 @@ object GraftMaintenance {
     enforceWriterFence(fs, dir, "compactDayTable")
     val unitSeg = GraftDayPartition.Units(
       props.getOrElse(GraftTable.TimeUnitProp, "days"))
-    // merge-on-read: fold deletion vectors first, so the per-day rewrite
-    // reads plain files (and day subdirs survive the fold)
-    if (props.get(GraftTable.MorProp).contains("true"))
-      materializeDeletes(spark, tableDir)
-    val history = props.get(GraftTable.HistoryProp).contains("true")
-    val files =
-      if (!history) GraftTable.dataFiles(fs, dir)
-      else GraftTable.manifestVersions(fs, dir).lastOption
-        .map(GraftTable.readManifest(fs, dir, _)).getOrElse(Nil)
+    val base = foldedBase(spark, fs, tableDir, props)
+    val files = base.files
     if (files.isEmpty) return (0, 0)
     val byDay = files.groupBy(f => new Path(f).getParent.getName)
       .filter(_._1.startsWith(s"${dayCol}_$unitSeg=")) // pre-layout flat files stay
@@ -383,25 +390,8 @@ object GraftMaintenance {
         s"${landed.size} compacted days out — a row re-derived a unit " +
         "its directory didn't claim")
     val replaced = rewritten.flatMap(_._2).toSet
-    if (history) {
-      landed.foreach { case (src, tgt) => fs.rename(src, tgt) }
-      val keep = files.filterNot(replaced.contains) ++
-        landed.map(_._2.toString)
-      val v = GraftTable.manifestVersions(fs, dir).last
-      GraftTable.commitWithKind(fs, dir, v + 1,
-        keep.map(GraftTable.GraftEntry(_, None)), GraftTable.KindCompact)
-    } else {
-      replaced.foreach(f => fs.delete(new Path(f), false))
-      landed.foreach { case (src, tgt) => fs.rename(src, tgt) }
-      val gone = replaced.map(f => new Path(f).getName)
-      GraftStats.retain(fs, dir, n => !gone.contains(n))
-      GraftBloom.retain(fs, dir, n => !gone.contains(n))
-    }
-    val landedPaths = landed.map(_._2.toString)
-    GraftStats.liftFromFooters(spark, dir, landedPaths,
-      spark.read.parquet(landedPaths.head).schema)
-    reindexDeclared(spark, dir, landedPaths)
-    fs.delete(staging, true)
+    landRewrite(spark, fs, dir, base, replaced, landed, staging)(
+      spark.read.parquet(landed.head._2.toString).schema)
     (files.size, files.size - replaced.size + landed.size)
   }
 
@@ -443,16 +433,8 @@ object GraftMaintenance {
         "compactTable, days() layouts compactDayTable, bucketed tables " +
         "compactBucketedTable")
     enforceWriterFence(fs, dir, "graft_optimize")
-    val history = props.get(GraftTable.HistoryProp).contains("true")
-    if (props.get(GraftTable.MorProp).contains("true"))
-      materializeDeletes(spark, tableDir)
-    if (history && GraftTable.manifestVersions(fs, dir).lastOption.exists(v =>
-        GraftTable.readFullEntries(fs, dir, v).exists(_.eqs.nonEmpty)))
-      GraftEqDelete.materializeEqDeletes(spark, tableDir)
-    val files =
-      if (!history) GraftTable.dataFiles(fs, dir)
-      else GraftTable.manifestVersions(fs, dir).lastOption
-        .map(GraftTable.readManifest(fs, dir, _)).getOrElse(Nil)
+    val base = foldedBase(spark, fs, tableDir, props)
+    val files = base.files
     if (files.isEmpty) return Nil
     // a SHALLOW CLONE's entries are absolute paths into the SOURCE —
     // rewriting them here would land part-optimize files inside the
@@ -510,26 +492,8 @@ object GraftMaintenance {
     require(landed.size == selected.size,
       s"optimizeTable: ${selected.size} partitions in, ${landed.size} " +
         "out — a row routed to a partition its file didn't claim")
-    val replaced = selFiles.toSet
-    if (history) {
-      landed.foreach { case (src, tgt) => fs.rename(src, tgt) }
-      val keep = files.filterNot(replaced.contains) ++
-        landed.map(_._2.toString)
-      val v = GraftTable.manifestVersions(fs, dir).last
-      GraftTable.commitWithKind(fs, dir, v + 1,
-        keep.map(GraftTable.GraftEntry(_, None)), GraftTable.KindCompact)
-    } else {
-      replaced.foreach(f => fs.delete(new Path(f), false))
-      landed.foreach { case (src, tgt) => fs.rename(src, tgt) }
-      val gone = replaced.map(f => new Path(f).getName)
-      GraftStats.retain(fs, dir, n => !gone.contains(n))
-      GraftBloom.retain(fs, dir, n => !gone.contains(n))
-    }
-    val landedPaths = landed.map(_._2.toString)
-    GraftStats.liftFromFooters(spark, dir, landedPaths,
-      spark.read.parquet(landedPaths.head).schema)
-    reindexDeclared(spark, dir, landedPaths)
-    fs.delete(staging, true)
+    landRewrite(spark, fs, dir, base, selFiles.toSet, landed, staging)(
+      spark.read.parquet(landed.head._2.toString).schema)
     selected.toSeq.sortBy(_._1).map { case (p, fl) => (p, fl.size, 1) }
   }
 
@@ -617,13 +581,12 @@ object GraftMaintenance {
   private def materializeDeletesHistory(spark: SparkSession,
                                         fs: org.apache.hadoop.fs.FileSystem,
                                         dir: Path): Int = {
-    val v = GraftTable.manifestVersions(fs, dir).lastOption.getOrElse(
-      throw new IllegalStateException(s"$dir: history table has no manifest"))
-    val entries = GraftTable.readFullEntries(fs, dir, v)
-    val pairs: Seq[(Path, Path)] = entries.collect {
-      case GraftTable.GraftEntry(f, Some(d), _) => (new Path(f), new Path(d))
-    }
-    if (pairs.isEmpty) return 0
+    val head = GraftTable.readHead(fs, dir, None)
+    if (head.version == 0L)
+      throw new IllegalStateException(s"$dir: history table has no manifest")
+    val folded = head.entries.filter(_.dv.nonEmpty)
+    if (folded.isEmpty) return 0
+    val pairs = folded.map(e => (new Path(e.file), new Path(e.dv.get)))
     val staging = stageDvRewrites(spark, fs, dir, pairs)
     val rewrittenByName: Map[String, Seq[String]] = pairs.map { case (dataPath, _) =>
       val dataName = dataPath.getName
@@ -640,15 +603,11 @@ object GraftMaintenance {
       dataName -> landed
     }.toMap
     fs.delete(staging, true)
-    val updated = entries.flatMap { e =>
-      if (e.dv.isEmpty) Seq(e)
-      // the fold applied only the POSITIONAL mask — equality masks carry
-      // over to the rewritten pieces untouched
-      else rewrittenByName(new Path(e.file).getName)
-        .map(f => GraftTable.GraftEntry(f, None, e.eqs))
-    }
-    GraftTable.commitWithKind(fs, dir, v + 1, updated,
-      GraftTable.KindCompact)
+    // the fold applied only the POSITIONAL mask — equality masks carry
+    // over to the rewritten pieces untouched
+    commitRewrite(fs, dir, folded, folded.flatMap(e =>
+      rewrittenByName(new Path(e.file).getName)
+        .map(f => GraftTable.GraftEntry(f, None, e.eqs))))
     val allLanded = rewrittenByName.values.flatten.toSeq
     if (allLanded.nonEmpty) {
       GraftStats.liftFromFooters(spark, dir, allLanded,
@@ -768,12 +727,12 @@ object GraftMaintenance {
     require(versions.contains(version),
       s"restore: version $version not in ${versions.mkString("[", ",", "]")}" +
         " (vacuumed or never committed)")
-    val next = versions.last + 1
     // restore the ENTRIES (files + their deletion-vector state), so a
     // merge-on-read table rolls back its delete state too
-    GraftTable.commitWithKind(fs, dir, next,
-      GraftTable.readFullEntries(fs, dir, version), GraftTable.KindRestore)
-    next
+    GraftTable.commitRetrying(fs, dir,
+        meta = GraftTable.kindMeta(GraftTable.KindRestore))(
+      GraftTable.pinnedAt(tableDir, versions.last)(
+        GraftTable.readFullEntries(fs, dir, version)))
   }
 
   /** Expire old snapshots of a history table: keep the last `keepLast`
@@ -1186,14 +1145,6 @@ object GraftMaintenance {
     GraftTable.writeProps(fs, dir, newProps)
   }
 
-  /** Catch-up rewrite after [[setTimePartition]]: files NOT laid out
-    * under the CURRENT spec (pre-layout flat files and former-spec
-    * segments) are rewritten into the current layout — one distributed
-    * job, grouped by target segment, committed like a compaction
-    * (history: next manifest, kind=compact — streams skip it; plain:
-    * swap). After it, the whole table prunes under one spec. Returns
-    * (files migrated, files landed).
-    */
   /** TZ-independent unit-index SQL, matching GraftDayPartition.unitOf
     * (UTC): micros → epoch day/hour by floor division; months via the
     * calendar of that epoch DAY (dates are TZ-free), never the session
@@ -1222,6 +1173,14 @@ object GraftMaintenance {
       s"time-layout rewrite: unsupported $other")
   }
 
+  /** Catch-up rewrite after [[setTimePartition]]: files NOT laid out
+    * under the CURRENT spec (pre-layout flat files and former-spec
+    * segments) are rewritten into the current layout — one distributed
+    * job, grouped by target segment, committed like a compaction
+    * (history: next manifest, kind=compact — streams skip it; plain:
+    * swap). After it, the whole table prunes under one spec. Returns
+    * (files migrated, files landed).
+    */
   def migrateTimeLayout(spark: SparkSession, tableDir: String): (Int, Int) = {
     import org.apache.spark.sql.functions.{col, expr}
     val dir = new Path(tableDir)
@@ -1231,17 +1190,8 @@ object GraftMaintenance {
       throw new IllegalArgumentException(
         s"migrateTimeLayout: $tableDir has no current time partitioning"))
     val unit = props.getOrElse(GraftTable.TimeUnitProp, "days")
-    // fold row-level masks first so the rewrite reads plain parquet
-    if (props.get(GraftTable.MorProp).contains("true"))
-      materializeDeletes(spark, tableDir)
-    val history = props.get(GraftTable.HistoryProp).contains("true")
-    if (history && GraftTable.manifestVersions(fs, dir).lastOption.exists(v =>
-        GraftTable.readFullEntries(fs, dir, v).exists(_.eqs.nonEmpty)))
-      GraftEqDelete.materializeEqDeletes(spark, tableDir)
-    val files =
-      if (!history) GraftTable.dataFiles(fs, dir)
-      else GraftTable.manifestVersions(fs, dir).lastOption
-        .map(GraftTable.readManifest(fs, dir, _)).getOrElse(Nil)
+    val base = foldedBase(spark, fs, tableDir, props)
+    val files = base.files
     val stale = files.filter(f =>
       GraftDayPartition.unitOfFile(tableDir, f, dayCol, unit).isEmpty)
     if (stale.isEmpty) return (0, files.size)
@@ -1256,7 +1206,7 @@ object GraftMaintenance {
         .write.partitionBy("__graft_unit").mode("overwrite")
         .parquet(staging.toString)
     }
-    val landed = fs.listStatus(staging).toSeq
+    val moves = fs.listStatus(staging).toSeq
       .filter(_.isDirectory)
       .flatMap { seg =>
         val raw = seg.getPath.getName.stripPrefix("__graft_unit=")
@@ -1265,29 +1215,11 @@ object GraftMaintenance {
         fs.mkdirs(target)
         fs.listStatus(seg.getPath).toSeq
           .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map { p =>
-            val tgt = new Path(target,
-              s"part-migrate-${UUID.randomUUID().toString.take(12)}.parquet")
-            fs.rename(p.getPath, tgt)
-            tgt.toString
-          }
+          .map(p => p.getPath -> new Path(target,
+            s"part-migrate-${UUID.randomUUID().toString.take(12)}.parquet"))
       }
-    fs.delete(staging, true)
-    val staleSet = stale.toSet
-    if (history) {
-      val keep = files.filterNot(staleSet.contains) ++ landed
-      val v = GraftTable.manifestVersions(fs, dir).last
-      GraftTable.commitWithKind(fs, dir, v + 1,
-        keep.map(GraftTable.GraftEntry(_, None)), GraftTable.KindCompact)
-    } else {
-      stale.foreach(f => fs.delete(new Path(f), false))
-      val gone = stale.map(f => new Path(f).getName).toSet
-      GraftStats.retain(fs, dir, n => !gone.contains(n))
-      GraftBloom.retain(fs, dir, n => !gone.contains(n))
-    }
-    GraftStats.liftFromFooters(spark, dir, landed,
-      physicalSchemaOf(fs, dir, props))
-    reindexDeclared(spark, dir, landed)
+    val landed = landRewrite(spark, fs, dir, base, stale.toSet, moves,
+      staging)(physicalSchemaOf(fs, dir, props))
     (stale.size, landed.size)
   }
 

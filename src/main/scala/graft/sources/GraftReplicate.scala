@@ -54,7 +54,7 @@ import org.apache.spark.sql.SparkSession
   *
   * At 100 TB: phase 1 is the only data-weight op and it is one
   * distributed copy job over exactly the missing files (distcp-shaped,
-  * `spark.graft.maintenance.parallelism`-capped); every other phase is
+  * [[GraftMaintenance.parallelism]]-sized); every other phase is
   * O(commits) driver-side metadata of a few KB each.
   */
 object GraftReplicate {
@@ -242,10 +242,9 @@ object GraftReplicate {
     val copiedBytes =
       if (toCopy.isEmpty) 0L
       else {
-        val par = spark.conf.getOption("spark.graft.maintenance.parallelism")
-          .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
         spark.sparkContext
-          .parallelize(toCopy.map(_._1), math.max(1, math.min(toCopy.size, par)))
+          .parallelize(toCopy.map(_._1),
+            GraftMaintenance.parallelism(spark, toCopy.size))
           .map { rel =>
             val from = new Path(srcStr, rel)
             val to = new Path(dstStr, rel)

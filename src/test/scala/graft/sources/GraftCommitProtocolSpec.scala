@@ -114,8 +114,8 @@ class GraftCommitProtocolSpec extends SparkSpec {
         start.await(30, TimeUnit.SECONDS)
         outcomes.put(i,
           try {
-            GraftTable.writeFullEntries(fs, dir, 1L,
-              Seq(GraftTable.GraftEntry(s"$dir/f$i.parquet", None)))
+            GraftTable.commitRetrying(fs, dir)(GraftTable.pinnedAt("table", 0L)(
+              Seq(GraftTable.GraftEntry(s"$dir/f$i.parquet", None))))
             None
           } catch { case e: Throwable => Some(e) })
       })
@@ -125,10 +125,12 @@ class GraftCommitProtocolSpec extends SparkSpec {
     val losers = (0 to 1).map(outcomes.get).flatten
     assert(losers.size <= 1, s"at most one loser: $outcomes")
     // the losing side (when the race was tight enough to produce one)
-    // must see an IOException AND find the manifest present — exactly
-    // the two facts commitRetrying's conflict loop checks
+    // saw an IOException AND found the manifest present — exactly the two
+    // facts commitRetrying's conflict loop checks before it re-reads the
+    // head — and its commit, pinned to the empty log, refused that head
     losers.foreach { e =>
-      assert(e.isInstanceOf[java.io.IOException], e)
+      assert(e.isInstanceOf[IllegalStateException] &&
+        e.getMessage.contains("a racing commit took version 1"), e)
       assert(fs.exists(GraftTable.manifestPath(dir, 1L)))
     }
     // the committed snapshot is exactly ONE committer's, never a merge
@@ -229,14 +231,14 @@ class GraftCommitProtocolSpec extends SparkSpec {
     fs.initialize(URI.create("file:///"), new Configuration())
     val dir = new Path(s"$root/tsmeta")
     fs.mkdirs(dir)
-    GraftTable.writeFullEntries(fs, dir, 1,
+    GraftTable.commitRetrying(fs, dir)(_ =>
       Seq(GraftTable.GraftEntry(s"$root/tsmeta/a.parquet", None)))
     // force the same-millisecond condition deterministically: move v1's
     // stamp into the future, so v2's strictly-monotonic stamp lands
     // exactly one milli later regardless of wall clock
     val t1 = System.currentTimeMillis() + 600000L
     rewriteTs(fs, GraftTable.manifestPath(dir, 1), t1)
-    GraftTable.writeFullEntries(fs, dir, 2,
+    GraftTable.commitRetrying(fs, dir)(_ =>
       Seq(GraftTable.GraftEntry(s"$root/tsmeta/b.parquet", None)))
     assert(NoSetTimesFs.attempts.get() >= 0) // the stub is in play
     assert(GraftTable.commitTimeMillis(fs, dir, 2) == t1 + 1,

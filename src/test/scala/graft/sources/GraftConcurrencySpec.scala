@@ -44,8 +44,8 @@ class GraftConcurrencySpec extends SparkSpec {
     val committed = GraftTable.commitRetrying(f, dir) { head =>
       if (!raced) {
         raced = true
-        GraftTable.writeManifest(f, dir, v0 + 1, head.entries.map(_.file) ++
-          Seq(new Path(dir, "part-racer.parquet").toString))
+        GraftTable.commitRetrying(f, dir)(_.entries :+
+          GraftTable.GraftEntry(new Path(dir, "part-racer.parquet").toString))
       }
       head.entries :+
         GraftTable.GraftEntry(new Path(dir, "part-mine.parquet").toString)
@@ -70,8 +70,7 @@ class GraftConcurrencySpec extends SparkSpec {
         // a pathological racer that always wins: pre-create the version
         // we are about to target
         attempts += 1
-        GraftTable.writeManifest(f, dir, head.version + 1,
-          head.entries.map(_.file))
+        GraftTable.commitRetrying(f, dir)(_.entries)
         head.entries
       }
     }
@@ -118,17 +117,21 @@ class GraftConcurrencySpec extends SparkSpec {
   }
 
   test("replace (row-level) commits do not silently retry") {
-    // the low-level exclusive create stays loud on a version collision —
-    // the VALIDATED retry above it (write-serializable replace) is the
-    // only caller allowed to go around again, and only after proving the
-    // racing commit left its read set untouched
+    // a commit derived from one snapshot stays loud on a version
+    // collision — the VALIDATED rebase (write-serializable replace) is
+    // the only rewrite allowed to go around again, and only after proving
+    // the racing commit left its read set untouched
     val dir = new Path(s"$warehouse/db/h")
     val f = fs(dir)
     val v = GraftTable.manifestVersions(f, dir).last
-    GraftTable.writeManifest(f, dir, v + 1, Nil)
-    intercept[java.io.IOException] {
-      GraftTable.writeManifest(f, dir, v + 1, Nil)
+    intercept[IllegalStateException] {
+      GraftTable.commitRetrying(f, dir)(GraftTable.singleShot("h") { _ =>
+        GraftTable.commitRetrying(f, dir)(_ => Nil) // the racer takes v+1
+        Nil
+      })
     }
+    assert(GraftTable.manifestVersions(f, dir).last == v + 1,
+      "the refused commit must not land a version past the racer's")
   }
 
   test("write-serializable replace: rebases across a racing pure append") {
@@ -139,10 +142,11 @@ class GraftConcurrencySpec extends SparkSpec {
     // deterministic version of a streaming ingest racing a long rewrite.
     // The appended batch even matches the DELETE predicate: rows the
     // DELETE's snapshot never saw must SURVIVE (WriteSerializable)
-    GraftBatchWrite.replaceInterposer = Some(() =>
+    val dir = new Path(s"$warehouse/db/ws")
+    GraftTable.interposeOnce(dir)(
       sql("INSERT INTO graft_cc.db.ws SELECT id, 'raced' FROM range(1000, 1020)"))
     sql("DELETE FROM graft_cc.db.ws WHERE id % 10 = 3")
-    assert(GraftBatchWrite.replaceInterposer.isEmpty, "interposer must fire")
+    assert(!GraftTable.interposePending(dir), "interposer must fire")
     val got = sql("SELECT v, count(*) FROM graft_cc.db.ws GROUP BY v")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("base" -> 90L, "raced" -> 20L),
@@ -156,13 +160,11 @@ class GraftConcurrencySpec extends SparkSpec {
     sql("INSERT INTO graft_cc.db.ws2 SELECT id, 'base' FROM range(0, 100)")
     // the racing commit REWRITES rows in the same files the outer DELETE
     // read — committing the outer rewrite would resurrect them
-    GraftBatchWrite.replaceInterposer = Some(() =>
+    GraftTable.interposeOnce(new Path(s"$warehouse/db/ws2"))(
       sql("UPDATE graft_cc.db.ws2 SET v = 'won' WHERE id % 10 = 7"))
     val e = intercept[Exception] {
       sql("DELETE FROM graft_cc.db.ws2 WHERE id % 10 = 3")
     }
-    def chain(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
     assert(chain(e).exists(_.contains("concurrent update conflict")),
       s"expected a loud conflict, got: ${chain(e).mkString(" | ")}")
     // the racing UPDATE's effect is intact; the refused DELETE applied
@@ -183,23 +185,97 @@ class GraftConcurrencySpec extends SparkSpec {
     // the racing INSERT mints row ids inside the MERGE's scan→commit
     // window: it touches none of the files the MERGE read, but the ids
     // the MERGE's inserts minted were drawn against a stale watermark
-    GraftBatchWrite.replaceInterposer = Some(() =>
+    val dir = new Path(s"$warehouse/db/rid")
+    GraftTable.interposeOnce(dir)(
       sql("INSERT INTO graft_cc.db.rid SELECT id, 'raced' FROM range(1000, 1010)"))
     val e = intercept[Exception] {
       sql("""MERGE INTO graft_cc.db.rid t USING rid_src s ON t.id = s.id
             |WHEN MATCHED THEN UPDATE SET t.v = s.v
             |WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)""".stripMargin)
     }
-    assert(GraftBatchWrite.replaceInterposer.isEmpty, "interposer must fire")
-    def chain(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+    assert(!GraftTable.interposePending(dir), "interposer must fire")
     assert(chain(e).exists(m => m.contains("row-id allocation") && m.contains("raced")),
       s"expected the row-id allocation race, got: ${chain(e).mkString(" | ")}")
     val got = sql("SELECT v, count(*) FROM graft_cc.db.rid GROUP BY v")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("base" -> 100L, "raced" -> 10L),
       s"the refused MERGE must leave base plus the raced rows: $got")
-    assertNoDebris(new Path(s"$warehouse/db/rid"))
+    assertNoDebris(dir)
+  }
+
+  private def counts(t: String): Map[String, Long] =
+    sql(s"SELECT v, count(*) FROM graft_cc.db.$t GROUP BY v")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  private def chain(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+
+  test("compaction rebases over an append interposed in its commit") {
+    sql("""CREATE TABLE graft_cc.db.cf (id BIGINT, v STRING)
+          |TBLPROPERTIES ('history'='true')""".stripMargin)
+    sql("INSERT INTO graft_cc.db.cf SELECT id, 'base' FROM range(0, 50)")
+    sql("INSERT INTO graft_cc.db.cf SELECT id, 'base' FROM range(50, 100)")
+    val dir = new Path(s"$warehouse/db/cf")
+    GraftTable.interposeOnce(dir)(
+      sql("INSERT INTO graft_cc.db.cf SELECT id, 'raced' FROM range(1000, 1020)"))
+    GraftMaintenance.compactTable(spark, dir.toString)
+    assert(!GraftTable.interposePending(dir), "interposer must fire")
+    val f = fs(dir)
+    assert(GraftTable.commitKind(f, dir, GraftTable.readHead(f, dir, None).version)
+      .contains(GraftTable.KindCompact), "the compaction must commit last")
+    assert(counts("cf") == Map("base" -> 100L, "raced" -> 20L),
+      s"the raced append must survive the compaction: ${counts("cf")}")
+    assertNoDebris(dir)
+  }
+
+  test("day compaction rebases over an append interposed in its commit") {
+    sql("""CREATE TABLE graft_cc.db.cd (id BIGINT, ts TIMESTAMP, v STRING)
+          |PARTITIONED BY (days(ts)) TBLPROPERTIES ('history'='true')""".stripMargin)
+    def rows(from: Int, to: Int, v: String) =
+      sql(s"""INSERT INTO graft_cc.db.cd SELECT id, timestamp'2024-03-01 00:00:00'
+             | + make_interval(0, 0, 0, CAST(id % 2 AS INT), 0, 0, 0), '$v'
+             |FROM range($from, $to)""".stripMargin)
+    rows(0, 50, "base")
+    rows(50, 100, "base")
+    val dir = new Path(s"$warehouse/db/cd")
+    GraftTable.interposeOnce(dir)(rows(1000, 1020, "raced"))
+    assert(GraftMaintenance.compactDayTable(spark, dir.toString) == (4, 2))
+    assert(!GraftTable.interposePending(dir), "interposer must fire")
+    assert(counts("cd") == Map("base" -> 100L, "raced" -> 20L),
+      s"the raced append must survive the compaction: ${counts("cd")}")
+    assertNoDebris(dir)
+  }
+
+  test("compaction refuses when an interposed UPDATE rewrote a file it read") {
+    sql("""CREATE TABLE graft_cc.db.cu (id BIGINT, v STRING)
+          |TBLPROPERTIES ('history'='true')""".stripMargin)
+    sql("INSERT INTO graft_cc.db.cu SELECT id, 'base' FROM range(0, 50)")
+    sql("INSERT INTO graft_cc.db.cu SELECT id, 'base' FROM range(50, 100)")
+    val dir = new Path(s"$warehouse/db/cu")
+    GraftTable.interposeOnce(dir)(
+      sql("UPDATE graft_cc.db.cu SET v = 'won' WHERE id % 10 = 7"))
+    val e = intercept[Exception](GraftMaintenance.compactTable(spark, dir.toString))
+    assert(chain(e).exists(_.contains("concurrent update conflict")),
+      s"expected a loud conflict, got: ${chain(e).mkString(" | ")}")
+    assert(counts("cu") == Map("base" -> 90L, "won" -> 10L),
+      s"the racing UPDATE must survive the refused compaction: ${counts("cu")}")
+    assertNoDebris(dir)
+  }
+
+  test("merge-on-read DELETE refuses when an interposed compaction removed its files") {
+    sql("""CREATE TABLE graft_cc.db.md (id BIGINT, v STRING)
+          |TBLPROPERTIES ('history'='true', 'merge-on-read'='true')""".stripMargin)
+    sql("INSERT INTO graft_cc.db.md SELECT id, 'base' FROM range(0, 50)")
+    sql("INSERT INTO graft_cc.db.md SELECT id, 'base' FROM range(50, 100)")
+    val dir = new Path(s"$warehouse/db/md")
+    GraftTable.interposeOnce(dir)(GraftMaintenance.compactTable(spark, dir.toString))
+    val e = intercept[Exception](sql("DELETE FROM graft_cc.db.md WHERE id % 10 = 3"))
+    assert(!GraftTable.interposePending(dir), "interposer must fire")
+    assert(chain(e).exists(_.contains("concurrent update conflict")),
+      s"expected a loud conflict, got: ${chain(e).mkString(" | ")}")
+    assert(counts("md") == Map("base" -> 100L),
+      s"the refused DELETE must apply nothing: ${counts("md")}")
+    assertNoDebris(dir)
   }
 
   /** A refused commit leaves nothing behind: no data file outside every

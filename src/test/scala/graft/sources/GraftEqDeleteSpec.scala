@@ -479,26 +479,20 @@ class GraftEqDeleteSpec extends SparkSpec {
     // staging and the exclusive create) — the only deterministic
     // interleaving; it also mints row ids, so the retry must re-derive
     // the watermark or fresh keys would collide
-    var fired = false
-    GraftEqDelete.preCommitHook = () => {
-      if (!fired) {
-        fired = true
-        sql("INSERT INTO graft_eq.db.race SELECT id, concat('app', id) FROM range(100, 120)")
-      }
-    }
-    try {
-      val changes = spark.range(10, 20).toDF("k")
-        .union(spark.range(200, 205).toDF("k"))
-        .withColumn("v", concat(lit("new"), col("k")))
-      val committed = GraftEqDelete.upsert(spark, "graft_eq", "db.race",
-        changes, Seq("k"))
-      // the append took v0+1; the re-derived upsert landed at v0+2
-      assert(committed == v0 + 2, s"expected v0+2=${v0 + 2}, got $committed")
-      assert(GraftTable.commitKind(fs, dir, v0 + 1)
-        .contains(GraftTable.KindAppend))
-      assert(GraftTable.commitKind(fs, dir, v0 + 2)
-        .contains(GraftTable.KindEqDelta))
-    } finally GraftEqDelete.preCommitHook = () => ()
+    GraftTable.interposeOnce(dir)(
+      sql("INSERT INTO graft_eq.db.race SELECT id, concat('app', id) FROM range(100, 120)"))
+    val changes = spark.range(10, 20).toDF("k")
+      .union(spark.range(200, 205).toDF("k"))
+      .withColumn("v", concat(lit("new"), col("k")))
+    val committed = GraftEqDelete.upsert(spark, "graft_eq", "db.race",
+      changes, Seq("k"))
+    // the append took v0+1; the re-derived upsert landed at v0+2
+    assert(committed == v0 + 2, s"expected v0+2=${v0 + 2}, got $committed")
+    assert(GraftTable.commitKind(fs, dir, v0 + 1)
+      .contains(GraftTable.KindAppend))
+    assert(GraftTable.commitKind(fs, dir, v0 + 2)
+      .contains(GraftTable.KindEqDelta))
+    assert(!GraftTable.interposePending(dir), "the racing append must fire")
     val t = spark.table("graft_eq.db.race")
     // sequential replay: 50 base + 20 appended + 5 fresh inserts
     assert(t.count() == 75, s"got ${t.count()}")
@@ -526,23 +520,60 @@ class GraftEqDeleteSpec extends SparkSpec {
     assert(orphans.isEmpty,
       s"the lost attempt must retract its landed files, found $orphans")
     // a NON-additive winner (a racing upsert) keeps the loud refusal
-    var fired2 = false
-    GraftEqDelete.preCommitHook = () => {
-      if (!fired2) {
-        fired2 = true
-        GraftEqDelete.preCommitHook = () => () // the inner upsert runs clean
-        GraftEqDelete.upsert(spark, "graft_eq", "db.race",
-          Seq((300L, "x")).toDF("k", "v"), Seq("k"))
-      }
+    // (the hook is dropped before it runs: the inner upsert runs clean)
+    GraftTable.interposeOnce(dir)(
+      GraftEqDelete.upsert(spark, "graft_eq", "db.race",
+        Seq((300L, "x")).toDF("k", "v"), Seq("k")))
+    val e = intercept[IllegalStateException] {
+      GraftEqDelete.upsert(spark, "graft_eq", "db.race",
+        Seq((301L, "y")).toDF("k", "v"), Seq("k"))
     }
-    try {
-      val e = intercept[IllegalStateException] {
-        GraftEqDelete.upsert(spark, "graft_eq", "db.race",
-          Seq((301L, "y")).toDF("k", "v"), Seq("k"))
-      }
-      assert(e.getMessage.contains("non-additive"),
-        s"a racing eqdelta winner must refuse loudly: ${e.getMessage}")
-    } finally GraftEqDelete.preCommitHook = () => ()
+    assert(e.getMessage.contains("non-additive"),
+      s"a racing eqdelta winner must refuse loudly: ${e.getMessage}")
+  }
+
+  /** Upsert keys 10..19 and 50..59 of an 80-row table written in two
+    * inserts, run `compact` and assert it kept exactly the visible rows
+    * and left no mask reference behind.
+    */
+  private def assertCompactionKeepsUpserts(t: String, ts: Boolean)(
+      compact: String => Unit): Unit = {
+    val tsCol =
+      if (ts) ", timestamp'2024-03-01 00:00:00' + " +
+        "make_interval(0, 0, 0, CAST(id % 2 AS INT), 0, 0, 0) AS ts"
+      else ""
+    Seq((0, 40), (40, 80)).foreach { case (a, b) =>
+      sql(s"INSERT INTO graft_eq.db.$t SELECT id AS k$tsCol, " +
+        s"concat('old', id) AS v FROM range($a, $b)")
+    }
+    GraftEqDelete.upsert(spark, "graft_eq", s"db.$t",
+      sql(s"SELECT id AS k$tsCol, concat('new', id) AS v FROM range(10, 20) " +
+        s"UNION ALL SELECT id AS k$tsCol, concat('new', id) AS v FROM range(50, 60)"),
+      Seq("k"))
+    def visible = spark.table(s"graft_eq.db.$t").select("k", "v")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val before = visible
+    assert(before.size == 80 && before(15) == "new15" && before(55) == "new55")
+    compact(dirOf(t).toString)
+    val after = spark.table(s"graft_eq.db.$t").count()
+    assert(after == 80, s"compaction must not resurrect masked rows: $after rows")
+    assert(visible == before)
+    assert(entries(t).forall(_.eqs.isEmpty),
+      "the compaction folds every equality mask")
+  }
+
+  test("day compaction folds equality masks first: no masked row returns") {
+    sql("""CREATE TABLE graft_eq.db.eqday (k BIGINT, ts TIMESTAMP, v STRING)
+          |PARTITIONED BY (days(ts)) TBLPROPERTIES('history'='true')""".stripMargin)
+    assertCompactionKeepsUpserts("eqday", ts = true)(
+      GraftMaintenance.compactDayTable(spark, _))
+  }
+
+  test("bucketed compaction folds equality masks first: no masked row returns") {
+    sql("""CREATE TABLE graft_eq.db.eqbkt (k BIGINT, v STRING)
+          |PARTITIONED BY (bucket(4, k)) TBLPROPERTIES('history'='true')""".stripMargin)
+    assertCompactionKeepsUpserts("eqbkt", ts = false)(
+      GraftMaintenance.compactBucketedTable(spark, _))
   }
 
   test("upsert composes with RENAME/WIDEN history: upsert on the renamed " +

@@ -220,9 +220,8 @@ class GraftStreamingSinkSpec extends SparkSpec {
       // not in this driver's cache
       val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/zt")
       val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      val (v, entries) = GraftTable.headState(fs, dir, None)
-      GraftTable.commitWithKind(fs, dir, v + 1, entries,
-        GraftTable.KindAppend, Map(s"txn:${q.id}" -> "5"))
+      GraftTable.commitRetrying(fs, dir, meta = Map(s"txn:${q.id}" -> "5") ++
+        GraftTable.kindMeta(GraftTable.KindAppend))(_.entries)
       // this driver's epochs 1.. are all <= the raced marker: their
       // commits must drop (files unlanded), never double-apply
       in.addData(100L until 110L: _*)
