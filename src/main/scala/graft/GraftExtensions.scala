@@ -150,21 +150,8 @@ object GraftExtensions {
     }
   }
 
-  private def graftTableOf(cat: String, tbl: String): graft.sources.GraftTable = {
-    val s = SparkSession.active
-    val plugin = Bridge.catalogPlugin(s, cat) match {
-      case g: graft.sources.GraftCatalog => g
-      case other => throw new IllegalArgumentException(
-        s"catalog $cat is ${other.getClass.getName}, not a GraftCatalog")
-    }
-    val parts = tbl.split('.')
-    plugin.loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(
-      parts.init, parts.last)) match {
-      case t: graft.sources.GraftTable => t
-      case other => throw new IllegalArgumentException(
-        s"$cat.$tbl is ${other.getClass.getName}, not a graft table")
-    }
-  }
+  private def graftTableOf(cat: String, tbl: String): graft.sources.GraftTable =
+    graft.sources.GraftTable.load(SparkSession.active, cat, tbl)
 
   /** Head manifest version of an ANN corpus table, when it is a graft
     * HISTORY table (the shape whose `.changes` feed delete-aware ANN
@@ -502,10 +489,10 @@ object GraftExtensions {
           stringArg(args(1), "graft_compact: table"))
         val (mode, before, after) =
           if (t.bucketSpec.nonEmpty) {
-            val (b, a) = graft.sources.GraftMaintenance.compactBucketedTable(s, t.dir)
+            val (b, a) = graft.sources.GraftMaintenance.compactBucketedTable(s, t)
             ("bucketed", b, a)
           } else if (t.dayCol.nonEmpty) {
-            val (b, a) = graft.sources.GraftMaintenance.compactDayTable(s, t.dir)
+            val (b, a) = graft.sources.GraftMaintenance.compactDayTable(s, t)
             ("per-" + t.timeUnit.stripSuffix("s"), b, a)
           } else {
             val targetBytes =
@@ -513,7 +500,7 @@ object GraftExtensions {
                 intArg(args(2), "graft_compact: target_mb").toLong << 20
               else 128L << 20
             val (b, a) = graft.sources.GraftMaintenance.compactTable(
-              s, t.dir, targetBytes)
+              s, t, targetBytes)
             ("bulk", b, a)
           }
         import s.implicits._
@@ -539,9 +526,9 @@ object GraftExtensions {
               throw new IllegalArgumentException(
                 s"graft_vacuum: '$ts' is not a 'yyyy-mm-dd hh:mm:ss[.f]' " +
                   "timestamp"))
-            graft.sources.GraftMaintenance.vacuumOlderThan(s, t.dir, millis)
+            graft.sources.GraftMaintenance.vacuumOlderThan(s, t, millis)
           case other =>
-            graft.sources.GraftMaintenance.vacuum(s, t.dir,
+            graft.sources.GraftMaintenance.vacuum(s, t,
               intArg(other, "graft_vacuum: keep_last"))
         }
         import s.implicits._
@@ -561,12 +548,8 @@ object GraftExtensions {
         val t = graftTableOf(
           stringArg(args.head, "graft_apply_retention: catalog"),
           stringArg(args(1), "graft_apply_retention: table"))
-        val fs = new org.apache.hadoop.fs.Path(t.dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        val (kl, ma) = graft.sources.GraftRetention.of(
-          graft.sources.GraftTable.readProps(fs,
-            new org.apache.hadoop.fs.Path(t.dir)))
-        val (m, f) = graft.sources.GraftMaintenance.applyRetention(s, t.dir)
+        val (kl, ma) = graft.sources.GraftRetention.of(t.retention)
+        val (m, f) = graft.sources.GraftMaintenance.applyRetention(s, t)
         import s.implicits._
         Bridge.logicalPlan(Seq((kl.map(_.toLong).getOrElse(-1L),
             ma.getOrElse(-1L), m, f))
@@ -585,7 +568,7 @@ object GraftExtensions {
           stringArg(args(1), "graft_bloom_build: table"))
         val cols = stringArg(args(2), "graft_bloom_build: cols_csv")
           .split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-        val n = graft.sources.GraftBloom.buildIndex(s, t.dir, cols)
+        val n = graft.sources.GraftBloom.buildIndex(s, t, cols)
         import s.implicits._
         Bridge.logicalPlan(Seq((n, cols.mkString(",")))
           .toDF("files_indexed", "columns"))
@@ -603,7 +586,7 @@ object GraftExtensions {
           stringArg(args(1), "graft_trgm_build: table"))
         val cols = stringArg(args(2), "graft_trgm_build: cols_csv")
           .split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-        val n = graft.sources.GraftBloom.buildTrigramIndex(s, t.dir, cols)
+        val n = graft.sources.GraftBloom.buildTrigramIndex(s, t, cols)
         import s.implicits._
         Bridge.logicalPlan(Seq((n, cols.mkString(",")))
           .toDF("files_indexed", "columns"))
@@ -629,7 +612,7 @@ object GraftExtensions {
           m == "deep"
         }
         val findings = graft.sources.GraftMaintenance
-          .verifySnapshot(s, t.dir, deep)
+          .verifySnapshot(s, t, deep)
         import s.implicits._
         Bridge.logicalPlan(findings
           .toDF("file", "problem", "expected", "actual"))
@@ -644,8 +627,7 @@ object GraftExtensions {
         val s = SparkSession.active
         val t = graftTableOf(stringArg(args.head, "graft_analyze_ndv: catalog"),
           stringArg(args(1), "graft_analyze_ndv: table"))
-        val n = graft.sources.GraftStats.analyzeNdv(s,
-          new org.apache.hadoop.fs.Path(t.dir))
+        val n = graft.sources.GraftStats.analyzeNdv(s, t)
         import s.implicits._
         Bridge.logicalPlan(Seq(n).toDF("files_enriched"))
       }),
@@ -675,7 +657,7 @@ object GraftExtensions {
                   "unit(col) with unit in hours/days/months, or 'none'")
             }
           }
-        graft.sources.GraftMaintenance.setTimePartition(s, t.dir, spec)
+        graft.sources.GraftMaintenance.setTimePartition(s, t, spec)
         import s.implicits._
         Bridge.logicalPlan(Seq((specStr,
           spec.map(x => s"${x._2}(${x._1})").getOrElse("none")))
@@ -694,7 +676,7 @@ object GraftExtensions {
         val t = graftTableOf(
           stringArg(args.head, "graft_migrate_layout: catalog"),
           stringArg(args(1), "graft_migrate_layout: table"))
-        val (m, l) = graft.sources.GraftMaintenance.migrateTimeLayout(s, t.dir)
+        val (m, l) = graft.sources.GraftMaintenance.migrateTimeLayout(s, t)
         import s.implicits._
         Bridge.logicalPlan(Seq((m, l)).toDF("files_migrated", "files_landed"))
       }),
@@ -721,7 +703,7 @@ object GraftExtensions {
             }
           case e => intArg(e, "graft_restore: version").toLong
         }
-        val v = graft.sources.GraftMaintenance.restore(s, t.dir, target)
+        val v = graft.sources.GraftMaintenance.restore(s, t, target)
         import s.implicits._
         Bridge.logicalPlan(Seq((target, v)).toDF("restored_to", "new_version"))
       }),
@@ -734,10 +716,10 @@ object GraftExtensions {
         require(args.length == 3, "graft_purge(catalog, 'ns.t', condition)")
         val s = SparkSession.active
         val cat = stringArg(args.head, "graft_purge: catalog")
-        val tbl = stringArg(args(1), "graft_purge: table")
+        val t = graftTableOf(cat, stringArg(args(1), "graft_purge: table"))
         val cond = stringArg(args(2), "graft_purge: condition")
-        val n = graft.sources.GraftMaintenance.purge(s, cat, tbl, cond)
-        val clean = graft.sources.GraftMaintenance.purgedCompletely(s, cat, tbl, cond)
+        val n = graft.sources.GraftMaintenance.purge(s, cat, t, cond)
+        val clean = graft.sources.GraftMaintenance.purgedCompletely(s, t, cond)
         import s.implicits._
         Bridge.logicalPlan(Seq((n, clean)).toDF("rows_erased", "purged_completely"))
       }),
@@ -766,7 +748,7 @@ object GraftExtensions {
         val s = SparkSession.active
         val t = graftTableOf(stringArg(args.head, "graft_analyze: catalog"),
           stringArg(args(1), "graft_analyze: table"))
-        val n = graft.sources.GraftMaintenance.analyzeTable(s, t.dir)
+        val n = graft.sources.GraftMaintenance.analyzeTable(s, t)
         import s.implicits._
         Bridge.logicalPlan(Seq(n).toDF("files_analyzed"))
       }),
@@ -849,7 +831,7 @@ object GraftExtensions {
         val minFiles = args.drop(2).headOption
           .map(intArg(_, "graft_optimize: min_files")).getOrElse(2)
         val census = graft.sources.GraftMaintenance
-          .optimizeTable(s, t.dir, minFiles)
+          .optimizeTable(s, t, minFiles)
         s.catalog.clearCache()
         import s.implicits._
         Bridge.logicalPlan(census
@@ -1401,7 +1383,7 @@ object GraftExtensions {
           stringArg(args(1), "graft_layout_advice: table"))
         val p = new org.apache.hadoop.fs.Path(t.dir)
         val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-        val props = graft.sources.GraftTable.readProps(fs, p)
+        val props = t.props
         val (bloomCols, trgmCols) = (
           props.get(graft.sources.GraftBloom.BloomColsProp).toSeq
             .flatMap(_.split(",")).map(_.trim).toSet,
@@ -1562,7 +1544,7 @@ object GraftExtensions {
           if (args.length == 3)
             intArg(args(2), "graft_remove_orphans: grace_minutes").toLong * 60000L
           else 3L * 24 * 3600 * 1000
-        val n = graft.sources.GraftMaintenance.removeOrphans(s, t.dir, grace)
+        val n = graft.sources.GraftMaintenance.removeOrphans(s, t, grace)
         import s.implicits._
         Bridge.logicalPlan(Seq(n).toDF("files_removed"))
       }),
@@ -1678,10 +1660,7 @@ object GraftExtensions {
         val blockCol = stringArg(args(5), "graft_ann_optimize: block_col")
         val k = intArg(args(6), "graft_ann_optimize: k")
         val t = graftTableOf(cat, graphTbl)
-        val dir = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
-        val builtV = graft.sources.GraftTable.readProps(fs, dir)
-          .get(graft.operators.AnnIndex.BuiltVersionProp).map(_.toLong)
+        val builtV = t.props.get(graft.operators.AnnIndex.BuiltVersionProp).map(_.toLong)
           .getOrElse(throw new IllegalArgumentException(
             s"graft_ann_optimize: $cat.$graphTbl carries no " +
               s"'${graft.operators.AnnIndex.BuiltVersionProp}' baseline — " +
@@ -1702,8 +1681,7 @@ object GraftExtensions {
         // delete+insert in one commit and stays alive; a later re-insert
         // revives). Dead ids lose every edge row, both directions, and
         // their bereaved neighbors join the re-descent scope.
-        val corpusV0 = graft.sources.GraftTable.readProps(fs, dir)
-          .get(graft.operators.AnnIndex.CorpusVersionProp).map(_.toLong)
+        val corpusV0 = t.props.get(graft.operators.AnnIndex.CorpusVersionProp).map(_.toLong)
         val corpusHead = annCorpusHead(s, cat, corpusTbl)
         val corpusRetained: Seq[Long] = corpusHead.toSeq.flatMap { _ =>
           val ct = graftTableOf(cat, corpusTbl)

@@ -192,8 +192,7 @@ object MatView {
     */
   def register(spark: SparkSession, catalog: String, mvTable: String): MvMeta = {
     val mv = loadGraftTable(spark, catalog, mvTable)
-    val fs = hadoopFs(spark, mv.dir)
-    val props = GraftTable.readProps(fs, new Path(mv.dir))
+    val props = mv.props
     val meta = MvMeta(catalog, mvTable, mv.dir,
       props(BaseProp), props(BaseDirProp),
       props(GroupProp).split(',').toSeq,

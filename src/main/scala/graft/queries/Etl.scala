@@ -550,14 +550,13 @@ object Etl {
               |       CAST(FLOOR(o_totalprice * 100) AS BIGINT)
               |FROM graft_pg_orders WHERE o_orderkey % 2 = 1""".stripMargin)
       val cond = "id % 10 = 3"
-      require(!graft.sources.GraftMaintenance.purgedCompletely(
-        s, "graft_wh", "pg.orders", cond),
+      val orders = graft.sources.GraftTable.load(s, "graft_wh", "pg.orders")
+      require(!graft.sources.GraftMaintenance.purgedCompletely(s, orders, cond),
         "etl_purge: precondition — the keys must exist on disk first")
       val erased = graft.sources.GraftMaintenance.purge(
-        s, "graft_wh", "pg.orders", cond)
+        s, "graft_wh", orders, cond)
       require(erased > 0, "etl_purge: nothing was erased")
-      require(graft.sources.GraftMaintenance.purgedCompletely(
-        s, "graft_wh", "pg.orders", cond),
+      require(graft.sources.GraftMaintenance.purgedCompletely(s, orders, cond),
         "etl_purge: purged keys still present in raw parquet bytes")
       s.sql("SELECT id, status, cents FROM graft_wh.pg.orders ORDER BY id")
     },
@@ -694,7 +693,8 @@ object Etl {
       graft.sources.GraftWap.publish(s, "graft_wh", "wap.ev", token)
       // append + publish leave two files per day; the maintenance verb
       // folds each day back to one (a compact-kind commit streams skip)
-      graft.sources.GraftMaintenance.compactDayTable(s, tableDir)
+      graft.sources.GraftMaintenance.compactDayTable(s,
+        graft.sources.GraftTable.load(s, "graft_wh", "wap.ev"))
       val firstDay = Tables.events(s, dir)
         .agg(min(to_date(col("ts"))).as("d")).collect()(0).getDate(0)
       val week = s.table("graft_wh.wap.ev")
@@ -1093,7 +1093,8 @@ object Etl {
               |FROM graft_rst_orders WHERE o_orderkey % 4 = 1""".stripMargin)
       s.sql("""UPDATE graft_wh.mrg.rst
               |SET status = 'OOPS', cents = -1 WHERE id % 8 = 1""".stripMargin)
-      graft.sources.GraftMaintenance.restore(s, s"$wh/mrg/rst", 2L)
+      graft.sources.GraftMaintenance.restore(s,
+        graft.sources.GraftTable.load(s, "graft_wh", "mrg.rst"), 2L)
       s.sql("SELECT id, status, cents FROM graft_wh.mrg.rst ORDER BY id")
     },
 
@@ -1316,7 +1317,7 @@ object Etl {
       s.sql("""INSERT OVERWRITE graft_tg.db.tr
               |SELECT id, 'RESTATED', cents DIV 2 FROM graft_tg.db.tr""".stripMargin) // v4
       val (expired, _) = graft.sources.GraftMaintenance.vacuum(
-        s, s"$wh/db/tr", keepLast = 1)
+        s, graft.sources.GraftTable.load(s, "graft_tg", "db.tr"), keepLast = 1)
       require(expired >= 1, "etl_tag_read: vacuum must expire untagged snapshots")
       val fs = new org.apache.hadoop.fs.Path(s"$wh/db/tr")
         .getFileSystem(s.sessionState.newHadoopConf())
@@ -3759,7 +3760,7 @@ object Etl {
       events.where(col("event_id") % 2 === 1)
         .writeTo("graft_pe.db.pev").append()          // day-routed epoch
       val (migrated, _) = graft.sources.GraftMaintenance
-        .migrateTimeLayout(s, tdir.toString)
+        .migrateTimeLayout(s, graft.sources.GraftTable.load(s, "graft_pe", "db.pev"))
       require(migrated == before.size,
         s"etl_partition_evolution: expected ${before.size} flat files " +
           s"migrated, got $migrated")
@@ -3907,7 +3908,8 @@ object Etl {
               |SELECT o_orderkey, o_orderstatus,
               |       CAST(FLOOR(o_totalprice * 100) AS BIGINT)
               |FROM graft_cfd_orders WHERE o_orderkey % 4 = 1 AND o_orderkey < 8000""".stripMargin)
-      graft.sources.GraftMaintenance.compactTable(s, s"$wh/mrg/cfd")
+      graft.sources.GraftMaintenance.compactTable(s,
+        graft.sources.GraftTable.load(s, "graft_wh", "mrg.cfd"))
       val vCompact = graft.plans.MatView.currentVersion(s, s"$wh/mrg/cfd")
       val changes = s.table("graft_wh.mrg.cfd.changes")
       require(changes.where(col("_commit_version") === vCompact).count() == 0,

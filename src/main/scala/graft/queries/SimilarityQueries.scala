@@ -462,18 +462,13 @@ object SimilarityQueries {
       val r = s.sql("""SELECT * FROM graft_ann_optimize('graft_ao', 'db.emb',
               |'db.knn', 'vec_id', 'embedding', 'label', 3)""".stripMargin)
         .collect()(0)
-      // the corpus count and the rank-hygiene audit are independent
-      // actions (guide §2.6): overlap them from two driver threads
-      val nF = scala.concurrent.Future(s.table("graft_ao.db.emb").count())(
-        scala.concurrent.ExecutionContext.global)
+      val n = s.table("graft_ao.db.emb").count()
       val g = s.table("graft_ao.db.knn")
       val dirty = g.groupBy("a_id")
         .agg(count(lit(1)).as("deg"), countDistinct(col("rank")).as("ranks"),
           max(col("rank")).as("maxr"))
         .where(col("deg") > 3 || col("ranks") =!= col("deg") ||
           col("maxr") > col("deg")).count()
-      val n = scala.concurrent.Await.result(nF,
-        scala.concurrent.duration.Duration.Inf)
       require(r.getLong(0) > 0 && r.getLong(1) > 0 && r.getLong(1) < n,
         s"sim_ann_optimize: the touched region must be a non-empty strict " +
           s"subset of the $n-node corpus, got $r")
@@ -524,27 +519,21 @@ object SimilarityQueries {
       val r = s.sql("""SELECT * FROM graft_ann_optimize('graft_ad', 'db.emb',
               |'db.knn', 'vec_id', 'embedding', 'label', 3)""".stripMargin)
         .collect()(0)
-      // the survivor count, the dead-id sweep and the rank-hygiene audit
-      // are independent actions (guide §2.6): overlap them
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val nF = Future(s.table("graft_ad.db.emb").count())
+      val n = s.table("graft_ad.db.emb").count()
       val g = s.table("graft_ad.db.knn")
-      val deadEdgesF = Future(
-        g.where(col("a_id") % 10 === 7 || col("b_id") % 10 === 7).count())
+      val deadEdges =
+        g.where(col("a_id") % 10 === 7 || col("b_id") % 10 === 7).count()
       val dirty = g.groupBy("a_id")
         .agg(count(lit(1)).as("deg"), countDistinct(col("rank")).as("ranks"),
           max(col("rank")).as("maxr"))
         .where(col("deg") > 3 || col("ranks") =!= col("deg") ||
           col("maxr") > col("deg")).count()
-      val n = Await.result(nF, Duration.Inf)
       require(r.getLong(0) == 0 && r.getLong(3) > 0,
         s"sim_ann_delete: no appends, only deletes to heal, got $r")
       require(r.getLong(1) > 0 && r.getLong(1) < n,
         s"sim_ann_delete: the bereaved region must be a non-empty strict " +
           s"subset of the $n survivors, got $r")
-      require(Await.result(deadEdgesF, Duration.Inf) == 0,
+      require(deadEdges == 0,
         "sim_ann_delete: dead ids must vanish from both edge positions")
       require(dirty == 0,
         s"sim_ann_delete: $dirty healed nodes kept slot ranks / " +

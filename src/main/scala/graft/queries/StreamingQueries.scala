@@ -825,7 +825,8 @@ object StreamingQueries {
         foldBatches(in, feed.grouped(feed.length / 3 + 1).map(_.toSeq), q)
       }
       val (nBefore, nAfter) =
-        graft.sources.GraftMaintenance.compactDayTable(s, s"$wh/day/sev")
+        graft.sources.GraftMaintenance.compactDayTable(s,
+          graft.sources.GraftTable.load(s, "graft_wh", "day.sev"))
       require(nAfter < nBefore,
         s"stream_day_ingest: 3 batches must leave multi-file days to fold " +
           s"($nBefore -> $nAfter)")

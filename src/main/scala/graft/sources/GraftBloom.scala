@@ -197,7 +197,8 @@ object GraftBloom {
   /** All recorded filters keyed by (data file name, column). Raw bytes —
     * deserialize lazily per planning decision (cached per scan).
     */
-  def readAll(fs: FileSystem, dir: Path): Map[(String, String), Array[Byte]] = {
+  def readAll(fs: FileSystem, dir: Path,
+              live: String => Boolean = _ => true): Map[(String, String), Array[Byte]] = {
     val d = bloomDir(dir)
     if (!fs.exists(d)) return Map.empty
     fs.listStatus(d).toSeq
@@ -208,7 +209,12 @@ object GraftBloom {
         val lines =
           try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
           finally in.close()
-        lines.filter(_.nonEmpty).flatMap(decodeLine)
+        // the file name is the first field: entries of dead files are
+        // skipped undecoded
+        lines.filter { l =>
+          val tab = l.indexOf('\t')
+          tab >= 0 && live(dec(l.substring(0, tab)))
+        }.flatMap(decodeLine)
       }.toMap
   }
 
@@ -343,23 +349,13 @@ object GraftBloom {
     * snapshot's data files: one distributed job, one column-pruned
     * parquet read per file, executor-side. Returns files indexed.
     */
-  def buildIndex(spark: SparkSession, tableDir: String, cols: Seq[String],
+  def buildIndex(spark: SparkSession, table: GraftTable, cols: Seq[String],
                  fpp: Double = DefaultFpp,
                  onlyFiles: Option[Seq[String]] = None): Int = {
     require(cols.nonEmpty, "buildIndex: at least one column")
-    val dir = new Path(tableDir)
+    val dir = new Path(table.dir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    val metaPath = new Path(dir, GraftTable.MetaFile)
-    require(fs.exists(metaPath),
-      s"buildIndex: $tableDir is not a graft catalog table")
-    val schema = {
-      val in = fs.open(metaPath)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      DataType.fromJson(json).asInstanceOf[StructType]
-    }
-    val fields = cols.map(c => schema.fields.find(_.name == c).getOrElse(
+    val fields = cols.map(c => table.schema().fields.find(_.name == c).getOrElse(
       throw new IllegalArgumentException(
         s"buildIndex: column '$c' is not in the table schema")))
     val supported = Set[DataType](ByteType, ShortType, IntegerType, LongType,
@@ -374,12 +370,8 @@ object GraftBloom {
         s"'$TrgmSuffix' key suffix"))
     // pre-rename files are read through the same alias resolution as the
     // scan, so their bits land under the CURRENT column key
-    val aliases = GraftEvolution.aliasesOf(props)
-    val files = onlyFiles.getOrElse(
-      if (props.get(GraftTable.HistoryProp).contains("true"))
-        GraftTable.readFullEntries(fs, dir,
-          GraftTable.manifestVersions(fs, dir).last).map(_.file)
-      else GraftTable.dataFiles(fs, dir))
+    val aliases = table.aliases
+    val files = onlyFiles.getOrElse(table.currentDataFiles(fs))
     if (files.isEmpty) return 0
     // expected insertions from the stats log when recorded; a safe
     // default otherwise (fpp degrades gracefully if exceeded)
@@ -425,23 +417,13 @@ object GraftBloom {
     * count) and the bloom is sized to it, so filter bytes stay kilobytes
     * per file regardless of row count. Returns files indexed.
     */
-  def buildTrigramIndex(spark: SparkSession, tableDir: String,
+  def buildTrigramIndex(spark: SparkSession, table: GraftTable,
                         cols: Seq[String], fpp: Double = DefaultFpp,
                         onlyFiles: Option[Seq[String]] = None): Int = {
     require(cols.nonEmpty, "buildTrigramIndex: at least one column")
-    val dir = new Path(tableDir)
+    val dir = new Path(table.dir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    val metaPath = new Path(dir, GraftTable.MetaFile)
-    require(fs.exists(metaPath),
-      s"buildTrigramIndex: $tableDir is not a graft catalog table")
-    val schema = {
-      val in = fs.open(metaPath)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      DataType.fromJson(json).asInstanceOf[StructType]
-    }
-    val fields = cols.map(c => schema.fields.find(_.name == c).getOrElse(
+    val fields = cols.map(c => table.schema().fields.find(_.name == c).getOrElse(
       throw new IllegalArgumentException(
         s"buildTrigramIndex: column '$c' is not in the table schema")))
     fields.foreach(f => require(f.dataType == StringType,
@@ -450,12 +432,8 @@ object GraftBloom {
     fields.foreach(f => require(!f.name.contains(TrgmSuffix),
       s"buildTrigramIndex: column name '${f.name}' collides with the " +
         s"reserved '$TrgmSuffix' key suffix"))
-    val aliases = GraftEvolution.aliasesOf(props)
-    val files = onlyFiles.getOrElse(
-      if (props.get(GraftTable.HistoryProp).contains("true"))
-        GraftTable.readFullEntries(fs, dir,
-          GraftTable.manifestVersions(fs, dir).last).map(_.file)
-      else GraftTable.dataFiles(fs, dir))
+    val aliases = table.aliases
+    val files = onlyFiles.getOrElse(table.currentDataFiles(fs))
     if (files.isEmpty) return 0
     val readSchema = StructType(fields)
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())

@@ -347,7 +347,8 @@ object GraftBranch {
       val current = GraftTable.readFullEntries(fs, dir, head)
       if (head == v || current == GraftTable.readFullEntries(fs, dir, v))
         (ident, v, head)
-      else (ident, v, GraftMaintenance.restore(spark, dir.toString, v))
+      else (ident, v, GraftMaintenance.restore(spark,
+        GraftTable.open(fs, ident, dir), v))
     }
 
   /** CHERRY-PICK: publish a branch whose commits are ALL pure APPENDS

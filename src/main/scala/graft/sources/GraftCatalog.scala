@@ -233,25 +233,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       .toArray
   }
 
-  private def readSchema(dir: Path): StructType = {
-    val in = fs.open(metaFile(dir))
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    DataType.fromJson(json).asInstanceOf[StructType]
-  }
-
-  private def isHistory(dir: Path): Boolean =
-    GraftTable.readProps(fs, dir).get(GraftTable.HistoryProp).contains("true")
-  private def isMor(dir: Path): Boolean =
-    GraftTable.readProps(fs, dir).get(GraftTable.MorProp).contains("true")
-
-  private def partCols(dir: Path): Seq[String] =
-    GraftTable.readProps(fs, dir).get(GraftTable.PartitionProp)
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-
-  private def bucketSpec(dir: Path): Option[(String, Int)] = {
-    val props = GraftTable.readProps(fs, dir)
-    for (c <- props.get(GraftTable.BucketColProp);
-         n <- props.get(GraftTable.BucketCountProp)) yield (c, n.toInt)
+  /** The table at `ident`'s own directory (no metadata-table surface). */
+  private def loadGraft(ident: Identifier): GraftTable = {
+    val dir = tableDir(ident)
+    if (!isTableDir(dir)) throw new NoSuchTableException(ident)
+    GraftTable.open(fs, ident.toString, dir)
   }
 
   // --- FunctionCatalog: serves the `bucket` transform function, which is
@@ -274,103 +260,51 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     ident.name().equalsIgnoreCase(GraftBucket.FunctionName) ||
       GraftTimeUnitFunction.Names.exists(_.equalsIgnoreCase(ident.name()))
 
-  private def dayColOf(dir: Path): Option[String] =
-    GraftTable.readProps(fs, dir).get(GraftTable.DayColProp)
-
-  private def checksOf(dir: Path): Seq[(String, String)] =
-    checksFrom(GraftTable.readProps(fs, dir))
-
-  private def checksFrom(props: Map[String, String]): Seq[(String, String)] =
-    props.toSeq
-      .filter(_._1.startsWith(GraftConstraints.Prefix))
-      .map { case (k, v) => (k.stripPrefix(GraftConstraints.Prefix), v) }
-      .sortBy(_._1)
-
-  private def pastTimeSpecsOf(dir: Path): Seq[(String, String)] =
-    GraftTable.decodePastTimeSpecs(GraftTable.readProps(fs, dir))
-
   override def loadTable(ident: Identifier): Table = {
     val dir = tableDir(ident)
     if (!isTableDir(dir)) {
-      // Iceberg-style metadata table: `db.t.changes` is the CHANGELOG of
-      // history table `db.t` — row-level change images (insert/delete +
-      // commit version) derived from the manifest log, batch- and
-      // stream-readable. Resolved here so plain SQL reaches it:
-      //   SELECT * FROM graft.db.t.changes
-      //   spark.readStream.table("graft.db.t.changes")
-      if (ident.name() == GraftChanges.Suffix && ident.namespace().nonEmpty) {
+      if (ident.namespace().nonEmpty &&
+          (ident.name() == GraftChanges.Suffix ||
+            ident.name().startsWith(GraftBranch.IdentPrefix))) {
         val baseIdent = Identifier.of(
           ident.namespace().init, ident.namespace().last)
         val bdir = tableDir(baseIdent)
-        if (isTableDir(bdir) && isHistory(bdir))
-          return new GraftChangesTable(
-            loadTable(baseIdent).asInstanceOf[GraftTable])
-      }
-      // BRANCH surface: `db.t.branch_<name>` reads/writes the named
-      // branch of history table `db.t` — plain SQL reaches it:
-      //   SELECT * FROM graft.db.t.branch_audit
-      //   INSERT INTO graft.db.t.branch_audit ...
-      //   MERGE INTO graft.db.t.branch_audit ...
-      if (ident.name().startsWith(GraftBranch.IdentPrefix) &&
-          ident.namespace().nonEmpty) {
-        val b = ident.name().stripPrefix(GraftBranch.IdentPrefix)
-        val baseIdent = Identifier.of(
-          ident.namespace().init, ident.namespace().last)
-        val bdir = tableDir(baseIdent)
-        if (isTableDir(bdir) && isHistory(bdir) &&
-            GraftBranch.baseOf(fs, bdir, b).nonEmpty) {
-          val base = loadTable(baseIdent).asInstanceOf[GraftTable]
-          return new GraftTable(ident.toString, base.dir, base.schema(),
-            history = true, mor = base.mor,
-            partitionCols = base.partitionCols, bucketSpec = base.bucketSpec,
-            checks = base.checks, dayCol = base.dayCol,
-            timeUnit = base.timeUnit, aliases = base.aliases,
-            widened = base.widened, pastTimeSpecs = base.pastTimeSpecs,
-            branch = Some(b), identity = base.identity,
-            requiredWriter = base.requiredWriter,
-            generated = base.generated, sortCols = base.sortCols,
-            maskCols = base.maskCols, rowFilter = base.rowFilter,
-            rowLineage = base.rowLineage)
+        val base =
+          if (isTableDir(bdir)) Some(GraftTable.open(fs, baseIdent.toString, bdir))
+          else None
+        base.filter(_.history).foreach { base =>
+          // Iceberg-style metadata table: `db.t.changes` is the CHANGELOG
+          // of history table `db.t` — row-level change images
+          // (insert/delete + commit version) derived from the manifest
+          // log, batch- and stream-readable. Resolved here so plain SQL
+          // reaches it:
+          //   SELECT * FROM graft.db.t.changes
+          //   spark.readStream.table("graft.db.t.changes")
+          if (ident.name() == GraftChanges.Suffix)
+            return new GraftChangesTable(base)
+          // BRANCH surface: `db.t.branch_<name>` reads/writes the named
+          // branch of history table `db.t` — plain SQL reaches it:
+          //   SELECT * FROM graft.db.t.branch_audit
+          //   INSERT INTO graft.db.t.branch_audit ...
+          //   MERGE INTO graft.db.t.branch_audit ...
+          val b = ident.name().stripPrefix(GraftBranch.IdentPrefix)
+          if (GraftBranch.baseOf(fs, bdir, b).nonEmpty)
+            return GraftTable.fromProps(ident.toString, bdir,
+              base.schema(), base.props, branch = Some(b))
         }
       }
       throw new NoSuchTableException(ident)
     }
-    // ONE props read serves the whole load (each helper re-reading the
-    // file was ~15 metadata RPCs per load on an object store)
-    val props = GraftTable.readProps(fs, dir)
-    GraftTable.enforceRead(props, ident.toString)
-    new GraftTable(ident.toString, dir.toString, readSchema(dir),
-      history = props.get(GraftTable.HistoryProp).contains("true"),
-      requiredWriter = GraftTable.requiredFormat(props, ident.toString)._2,
-      mor = props.get(GraftTable.MorProp).contains("true"),
-      partitionCols = props.get(GraftTable.PartitionProp)
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil),
-      bucketSpec = for (c <- props.get(GraftTable.BucketColProp);
-                        n <- props.get(GraftTable.BucketCountProp))
-        yield (c, n.toInt),
-      checks = checksFrom(props),
-      dayCol = props.get(GraftTable.DayColProp),
-      timeUnit = props.getOrElse(GraftTable.TimeUnitProp, "days"),
-      aliases = GraftEvolution.aliasesOf(props),
-      widened = GraftEvolution.widenedOf(props),
-      pastTimeSpecs = GraftTable.decodePastTimeSpecs(props),
-      identity = GraftIdentity.specOf(props),
-      generated = GraftGenerated.specsOf(props),
-      sortCols = GraftSort.sortColsOf(props),
-      maskCols = GraftGovernance.masksOf(props),
-      rowFilter = GraftGovernance.rowFilterOf(props),
-      retention = props
-        .filter { case (k, _) => GraftRetention.isRetentionProp(k) },
-      rowLineage = GraftRowId.enabled(props))
+    GraftTable.open(fs, ident.toString, dir)
   }
 
   /** Time travel (`VERSION AS OF n`) on history tables: pins the read to
     * manifest `n`.
     */
   override def loadTable(ident: Identifier, version: String): Table = {
-    val dir = tableDir(ident)
-    if (!isTableDir(dir)) throw new NoSuchTableException(ident)
-    if (!isHistory(dir)) throw new UnsupportedOperationException(
+    val t = loadGraft(ident)
+    val dir = new Path(t.dir)
+    if (!t.history) throw new UnsupportedOperationException(
       s"$ident is not a history table — create it with TBLPROPERTIES " +
         s"('${GraftTable.HistoryProp}'='true') to enable VERSION AS OF")
     // numbers are manifest versions; anything else resolves through the
@@ -386,39 +320,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!fs.exists(GraftTable.manifestPath(dir, v)))
       throw new IllegalArgumentException(
         s"$ident has no version $v (have: ${GraftTable.manifestVersions(fs, dir).mkString(", ")})")
-    pinnedTable(ident, dir, v)
+    pinned(t, v)
   }
 
-  /** A pinned (time-travel) load carries the SAME layout spec as the
-    * unpinned one — dropping dayCol/timeUnit here would silently lose
-    * hidden-partition pruning on `VERSION AS OF` reads of a days() table
-    * (correct answers, full-scan plans), and dropping mor/checks would
-    * mis-read a merge-on-read history snapshot.
+  /** A pinned (time-travel) load carries the SAME props as the unpinned
+    * one it was resolved from — layout, masks, identity and retention
+    * alike: dropping dayCol/timeUnit would silently lose hidden-partition
+    * pruning on `VERSION AS OF` reads of a days() table, dropping
+    * mor/checks would mis-read a merge-on-read history snapshot, and
+    * dropping the masks would make time travel the governance bypass.
     */
-  private def pinnedTable(ident: Identifier, dir: Path, v: Long): GraftTable = {
-    val props = GraftTable.readProps(fs, dir) // one read, see loadTable
-    GraftTable.enforceRead(props, ident.toString)
-    new GraftTable(ident.toString, dir.toString, readSchema(dir),
-      history = true, pinnedVersion = Some(v),
-      mor = props.get(GraftTable.MorProp).contains("true"),
-      partitionCols = props.get(GraftTable.PartitionProp)
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil),
-      bucketSpec = for (c <- props.get(GraftTable.BucketColProp);
-                        n <- props.get(GraftTable.BucketCountProp))
-        yield (c, n.toInt),
-      checks = checksFrom(props),
-      dayCol = props.get(GraftTable.DayColProp),
-      timeUnit = props.getOrElse(GraftTable.TimeUnitProp, "days"),
-      aliases = GraftEvolution.aliasesOf(props),
-      widened = GraftEvolution.widenedOf(props),
-      pastTimeSpecs = GraftTable.decodePastTimeSpecs(props),
-      sortCols = GraftSort.sortColsOf(props),
-      // time travel must not be the mask bypass: pinned reads inherit
-      // the governance policies
-      maskCols = GraftGovernance.masksOf(props),
-      rowFilter = GraftGovernance.rowFilterOf(props),
-      rowLineage = GraftRowId.enabled(props))
-  }
+  private def pinned(t: GraftTable, v: Long): GraftTable =
+    GraftTable.fromProps(t.name(), new Path(t.dir), t.schema(), t.props,
+      pinnedVersion = Some(v))
 
   /** `TIMESTAMP AS OF t` (micros since epoch): resolves to the LATEST
     * manifest committed at-or-before t — commit wall-clock is
@@ -426,16 +340,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * engine's AsOfJoin, applied to the commit log).
     */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    val dir = tableDir(ident)
-    if (!isTableDir(dir)) throw new NoSuchTableException(ident)
-    if (!isHistory(dir)) throw new UnsupportedOperationException(
+    val t = loadGraft(ident)
+    if (!t.history) throw new UnsupportedOperationException(
       s"$ident is not a history table — create it with TBLPROPERTIES " +
         s"('${GraftTable.HistoryProp}'='true') to enable TIMESTAMP AS OF")
     val tsMillis = timestampMicros / 1000L
-    val v = GraftTable.versionAtOrBefore(fs, dir, tsMillis)
+    val v = GraftTable.versionAtOrBefore(fs, new Path(t.dir), tsMillis)
       .getOrElse(throw new IllegalArgumentException(
         s"$ident has no snapshot at or before timestamp $tsMillis ms"))
-    pinnedTable(ident, dir, v)
+    pinned(t, v)
   }
 
   /** Snapshot log of a history table: (version, commit millis, data-file
@@ -443,9 +356,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * exposed to SQL via the `graft_history` TVF.
     */
   def snapshots(ident: Identifier): Seq[(Long, Long, Long, Long)] = {
-    val dir = tableDir(ident)
-    if (!isTableDir(dir)) throw new NoSuchTableException(ident)
-    require(isHistory(dir), s"$ident is not a history table")
+    val t = loadGraft(ident)
+    require(t.history, s"$ident is not a history table")
+    val dir = new Path(t.dir)
     // manifest-lifted sizes when recorded — the per-version walk then
     // touches only the metadata log; getFileStatus covers stray files
     val stats = GraftStats.readAll(fs, dir)
@@ -468,14 +381,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * DV in. Exposed to SQL via the `graft_dv_stats` TVF.
     */
   def dvStats(ident: Identifier): Seq[(String, Long, Long, Long)] = {
-    val dir = tableDir(ident)
-    if (!isTableDir(dir)) throw new NoSuchTableException(ident)
-    require(isMor(dir), s"$ident is not a merge-on-read table")
+    val t = loadGraft(ident)
+    require(t.mor, s"$ident is not a merge-on-read table")
+    val dir = new Path(t.dir)
     val conf = SparkSession.active.sessionState.newHadoopConf()
     // history tables: the CURRENT snapshot's entries carry the DV mapping;
     // plain tables: directory listing + name-keyed sidecars
     val entries: Seq[(String, Option[String])] =
-      if (isHistory(dir))
+      if (t.history)
         GraftTable.readEntries(fs, dir,
           GraftTable.manifestVersions(fs, dir).last)
       else GraftTable.dataFiles(fs, dir).map { f =>
@@ -769,46 +682,37 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         "table (snapshots are what retention expires) — add " +
         "TBLPROPERTIES('history'='true')")
     }
-    if (history || mor || pcols.nonEmpty || bucket.nonEmpty || checks.nonEmpty ||
-        dayCol.nonEmpty || identity.nonEmpty || generated.nonEmpty ||
-        indexProps.nonEmpty || sortCols.nonEmpty || govProps.nonEmpty ||
-        retProps.nonEmpty || rowid) {
-      GraftTable.writeProps(fs, dir, GraftTable.stampFormat(indexProps ++ Map(
+    val props = GraftTable.stampFormat(indexProps ++ Map(
         GraftTable.HistoryProp -> history.toString,
         GraftTable.MorProp -> mor.toString,
         GraftRowId.Prop -> rowid.toString).filter(_._2 == "true")
-        ++ (if (pcols.nonEmpty) Map(GraftTable.PartitionProp -> pcols.mkString(","))
-            else Map.empty)
-        ++ bucket.map { case (c, n) => Map(
-             GraftTable.BucketColProp -> c,
-             GraftTable.BucketCountProp -> n.toString) }.getOrElse(Map.empty)
-        ++ checks.map { case (n, t) => s"${GraftConstraints.Prefix}$n" -> t }
-        ++ dayCol.map(GraftTable.DayColProp -> _)
-        ++ (if (dayCol.nonEmpty && timeUnit != "days")
-              Map(GraftTable.TimeUnitProp -> timeUnit) else Map.empty)
-        ++ identity.map(sp => Map(
-             GraftIdentity.ColProp -> sp.col,
-             GraftIdentity.StartProp -> sp.start.toString,
-             GraftIdentity.StepProp -> sp.step.toString,
-             GraftIdentity.ExplicitProp -> sp.allowExplicit.toString))
-           .getOrElse(Map.empty)
-        ++ generated.map { case (c, t) =>
-             s"${GraftGenerated.Prefix}$c" -> t }
-        ++ (if (sortCols.nonEmpty)
-              Map(GraftSort.SortColsProp -> sortCols.mkString(","))
-            else Map.empty)
-        ++ govProps ++ retProps))
-      if (history) // v1 = the empty table
-        GraftTable.commitRetrying(fs, dir)(
-          GraftTable.pinnedAt(ident.toString, 0L)(Nil))
-    }
-    new GraftTable(ident.toString, dir.toString, schema, history, mor = mor,
-      partitionCols = pcols, bucketSpec = bucket, checks = checks,
-      dayCol = dayCol, timeUnit = timeUnit, identity = identity,
-      generated = generated, sortCols = sortCols,
-      maskCols = GraftGovernance.masksOf(govProps),
-      rowFilter = GraftGovernance.rowFilterOf(govProps),
-      retention = retProps, rowLineage = rowid)
+      ++ (if (pcols.nonEmpty) Map(GraftTable.PartitionProp -> pcols.mkString(","))
+          else Map.empty)
+      ++ bucket.map { case (c, n) => Map(
+           GraftTable.BucketColProp -> c,
+           GraftTable.BucketCountProp -> n.toString) }.getOrElse(Map.empty)
+      ++ checks.map { case (n, t) => s"${GraftConstraints.Prefix}$n" -> t }
+      ++ dayCol.map(GraftTable.DayColProp -> _)
+      ++ (if (dayCol.nonEmpty && timeUnit != "days")
+            Map(GraftTable.TimeUnitProp -> timeUnit) else Map.empty)
+      ++ identity.map(sp => Map(
+           GraftIdentity.ColProp -> sp.col,
+           GraftIdentity.StartProp -> sp.start.toString,
+           GraftIdentity.StepProp -> sp.step.toString,
+           GraftIdentity.ExplicitProp -> sp.allowExplicit.toString))
+         .getOrElse(Map.empty)
+      ++ generated.map { case (c, t) =>
+           s"${GraftGenerated.Prefix}$c" -> t }
+      ++ (if (sortCols.nonEmpty)
+            Map(GraftSort.SortColsProp -> sortCols.mkString(","))
+          else Map.empty)
+      ++ govProps ++ retProps)
+    // no declared feature: a plain table, no props file
+    if (props.nonEmpty) GraftTable.writeProps(fs, dir, props)
+    if (history) // v1 = the empty table
+      GraftTable.commitRetrying(fs, dir)(
+        GraftTable.pinnedAt(ident.toString, 0L)(Nil))
+    GraftTable.fromProps(ident.toString, dir, schema, props)
   }
 
   /** Schema evolution, metadata-only (the footer-merge discipline of
@@ -829,20 +733,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * (byte→short→int→long, float→double); anything else is rejected.
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    val dir = tableDir(ident)
-    if (!isTableDir(dir)) throw new NoSuchTableException(ident)
-    val props0 = GraftTable.readProps(fs, dir)
+    val t0 = loadGraft(ident)
+    val dir = new Path(t0.dir)
+    val props0 = t0.props
     def layoutGuard(name: String, verb: String): Unit = {
-      require(!partCols(dir).contains(name),
+      require(!t0.partitionCols.contains(name),
         s"graft catalog: cannot $verb partition column $name " +
           "(the directory layout depends on it)")
       // engine-computed columns: the identity watermark key and the
       // generation-expression props embed column names
-      val props0 = GraftTable.readProps(fs, dir)
-      require(!GraftIdentity.specOf(props0).exists(_.col == name),
+      require(!t0.identity.exists(_.col == name),
         s"graft catalog: cannot $verb identity column $name " +
           "(the allocation watermark is keyed by its name)")
-      GraftGenerated.specsOf(props0).foreach { case (g, text) =>
+      t0.generated.foreach { case (g, text) =>
         require(g != name,
           s"graft catalog: cannot $verb generated column $name")
         require(!GraftGenerated.referencedCols(SparkSession.active, text)
@@ -850,13 +753,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           s"graft catalog: cannot $verb column $name — generated column " +
             s"$g is computed from it ($text)")
       }
-      require(!bucketSpec(dir).exists(_._1 == name),
+      require(!t0.bucketSpec.exists(_._1 == name),
         s"graft catalog: cannot $verb bucket column $name " +
           "(row placement depends on it)")
-      require(!dayColOf(dir).contains(name),
+      require(!t0.dayCol.contains(name),
         s"graft catalog: cannot $verb hidden-time column $name " +
           "(the day layout derives from it)")
-      require(!pastTimeSpecsOf(dir).exists(_._1 == name),
+      require(!t0.pastTimeSpecs.exists(_._1 == name),
         s"graft catalog: cannot $verb column $name — a PAST time-partition " +
           "spec wrote directory segments under it and pruning resolves " +
           "them by name")
@@ -869,8 +772,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // (GraftEqDelete.keySet)
     case class Evo(schema: StructType, aliases: Map[String, Seq[String]],
                    retired: Seq[String], widened: Set[String])
-    val evo0 = Evo(readSchema(dir), GraftEvolution.aliasesOf(props0),
-      GraftEvolution.retiredOf(props0), GraftEvolution.widenedOf(props0))
+    val evo0 = Evo(t0.schema(), t0.aliases,
+      GraftEvolution.retiredOf(props0), t0.widened)
     var indexPropChanges: Map[String, Option[String]] = Map.empty
     val evo = changes.foldLeft(evo0) { (st, ch) =>
       ch match {
@@ -999,7 +902,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // a schema change that breaks a CHECK constraint must fail the DDL,
     // not poison every future write with an unresolvable constraint —
     // this also catches renaming/dropping a column a CHECK references
-    val checks = checksOf(dir)
+    val checks = t0.checks
     if (checks.nonEmpty)
       try GraftConstraints.validate(SparkSession.active, updated, checks)
       catch {
@@ -1357,13 +1260,61 @@ object GraftTable {
   /** The table's declared schema from its meta file (None for plain
     * parquet directories that never were a catalog table).
     */
-  def readTableSchema(fs: FileSystem, dir: Path): Option[StructType] = {
-    val p = new Path(dir, MetaFile)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
+  def readTableSchema(fs: FileSystem, dir: Path): Option[StructType] =
+    if (!fs.exists(new Path(dir, MetaFile))) None
+    else Some(readSchemaFile(fs, dir))
+
+  private def readSchemaFile(fs: FileSystem, dir: Path): StructType = {
+    val in =
+      try fs.open(new Path(dir, MetaFile))
+      catch {
+        case _: java.io.FileNotFoundException => throw new IllegalArgumentException(
+          s"$dir is not a graft catalog table (no $MetaFile)")
+      }
     val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    Some(DataType.fromJson(json).asInstanceOf[StructType])
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
+
+  /** Load the table at `dir`: the one place a [[GraftTable]] is read from
+    * disk. The props file is read ONCE, here, and the table derives every
+    * layout field from that props map; the schema file is read at most
+    * once, on the table's first `schema()`.
+    */
+  def open(fs: FileSystem, ident: String, dir: Path,
+           pinnedVersion: Option[Long] = None,
+           branch: Option[String] = None): GraftTable =
+    fromProps(ident, dir, readSchemaFile(fs, dir), readProps(fs, dir),
+      pinnedVersion, branch)
+
+  /** The graft table `table` ('ns.t') of catalog `catalog`, loaded through
+    * the catalog (registered locations resolved, reader format enforced).
+    */
+  def load(spark: SparkSession, catalog: String, table: String): GraftTable = {
+    val parts = table.split('.')
+    org.apache.spark.sql.graftbridge.Bridge.catalogPlugin(spark, catalog) match {
+      case g: GraftCatalog => g.loadTable(Identifier.of(parts.init, parts.last)) match {
+        case t: GraftTable => t
+        case other => throw new IllegalArgumentException(
+          s"$catalog.$table is ${other.getClass.getName}, not a graft table")
+      }
+      case other => throw new IllegalArgumentException(
+        s"catalog $catalog is ${other.getClass.getName}, not a GraftCatalog")
+    }
+  }
+
+  /** The pure props → table step behind [[open]]: refuses a reader format
+    * this build predates, then builds the table. CREATE uses it with the
+    * props it just wrote, a time-travel load with the props its current
+    * load read.
+    */
+  def fromProps(ident: String, dir: Path, schema: => StructType,
+                props: Map[String, String],
+                pinnedVersion: Option[Long] = None,
+                branch: Option[String] = None): GraftTable = {
+    enforceRead(props, ident)
+    new GraftTable(ident, dir.toString, () => schema, props, pinnedVersion,
+      branch)
   }
 
   def decodePastTimeSpecs(props: Map[String, String]): Seq[(String, String)] =
@@ -1919,51 +1870,83 @@ object GraftTable {
     manifestMeta(fs, dir, v, branch).get(KindMetaKey)
 }
 
-/** @param history snapshot mode (opt-in via TBLPROPERTIES
-  *   ('history'='true')): commits never delete data files — each writes
-  *   the next manifest, whose exclusive create is the atomic commit
-  *   point — so `VERSION AS OF n` time travel works and concurrent
-  *   committers fail loudly instead of clobbering. Default tables keep
-  *   eager-delete commits and stay directly readable as a plain parquet
-  *   directory (the interop contract GraftCatalogSpec asserts); history
-  *   tables trade that for snapshots + `GraftMaintenance.vacuum`.
+/** A loaded graft table. [[GraftTable.open]] builds it: the props file
+  * is read ONCE per load and the schema file at most once, and every
+  * layout field derives from that one props map, so the current,
+  * time-travel, branch and changes loads of a table describe it
+  * identically. Maintenance verbs take the loaded table instead of
+  * re-reading either file.
+  *
+  * `history` is snapshot mode (opt-in via TBLPROPERTIES
+  * ('history'='true')): commits never delete data files — each writes the
+  * next manifest, whose exclusive create is the atomic commit point — so
+  * `VERSION AS OF n` time travel works and concurrent committers fail
+  * loudly instead of clobbering. Default tables keep eager-delete commits
+  * and stay directly readable as a plain parquet directory (the interop
+  * contract GraftCatalogSpec asserts); history tables trade that for
+  * snapshots + `GraftMaintenance.vacuum`.
+  *
+  * `mor` is merge-on-read (TBLPROPERTIES ('merge-on-read'='true')):
+  * row-level operations become DELTA-based ([[GraftDeltaOperation]],
+  * Spark's `SupportsDelta`) — DELETE/UPDATE/MERGE write positional
+  * deletion-vector sidecars (`_graft_dv_<file>.bin`, Roaring64) plus
+  * appended files instead of rewriting affected files. At 100 TB this is
+  * the difference between an 8 KB sidecar write and re-copying a 1 GB
+  * file to delete 100 rows; the read path pays one bitmap probe per row
+  * until `GraftMaintenance.materializeDeletes` folds the DVs in.
+  * Trade-off: the directory is no longer directly readable as plain
+  * parquet (deleted rows would resurface), and parquet record filters are
+  * disabled on the reader (row positions must count every physical row)
+  * — whole-file stats skipping still applies.
+  *
+  * @param props the table's properties as read at load
   * @param pinnedVersion a time-travel read pin; writes are rejected.
-  * @param mor merge-on-read (TBLPROPERTIES ('merge-on-read'='true')):
-  *   row-level operations become DELTA-based ([[GraftDeltaOperation]],
-  *   Spark's `SupportsDelta`) — DELETE/UPDATE/MERGE write positional
-  *   deletion-vector sidecars (`_graft_dv_<file>.bin`, Roaring64) plus
-  *   appended files instead of rewriting affected files. At 100 TB this
-  *   is the difference between an 8 KB sidecar write and re-copying a
-  *   1 GB file to delete 100 rows; the read path pays one bitmap probe
-  *   per row until `GraftMaintenance.materializeDeletes` folds the DVs
-  *   in. Trade-off: the directory is no longer directly readable as
-  *   plain parquet (deleted rows would resurface), and parquet record
-  *   filters are disabled on the reader (row positions must count every
-  *   physical row) — whole-file stats skipping still applies.
+  * @param branch the named branch this load reads and writes
   */
-class GraftTable(ident: String, val dir: String, tableSchema: StructType,
-                 val history: Boolean = false,
-                 val pinnedVersion: Option[Long] = None,
-                 val mor: Boolean = false,
-                 val partitionCols: Seq[String] = Nil,
-                 val bucketSpec: Option[(String, Int)] = None,
-                 val checks: Seq[(String, String)] = Nil,
-                 val dayCol: Option[String] = None,
-                 val timeUnit: String = "days",
-                 val aliases: Map[String, Seq[String]] = Map.empty,
-                 val widened: Set[String] = Set.empty,
-                 val pastTimeSpecs: Seq[(String, String)] = Nil,
-                 val branch: Option[String] = None,
-                 val identity: Option[GraftIdentity.Spec] = None,
-                 val generated: Seq[(String, String)] = Nil,
-                 val sortCols: Seq[String] = Nil,
-                 val maskCols: Map[String, String] = Map.empty,
-                 val rowFilter: Option[String] = None,
-                 val retention: Map[String, String] = Map.empty,
-                 val rowLineage: Boolean = false,
-                 val requiredWriter: Int = 1)
+class GraftTable private (ident: String, val dir: String,
+                          readSchema: () => StructType,
+                          val props: Map[String, String],
+                          val pinnedVersion: Option[Long],
+                          val branch: Option[String])
   extends Table with SupportsRead with SupportsWrite
     with SupportsRowLevelOperations with SupportsMetadataColumns {
+
+  // read on first use: a verb that needs only the props (the history log,
+  // a retention policy) never opens the schema file
+  private lazy val tableSchema: StructType = readSchema()
+
+  // the layout contract, each field derived from `props` on first use
+  lazy val history: Boolean = props.get(GraftTable.HistoryProp).contains("true")
+  lazy val mor: Boolean = props.get(GraftTable.MorProp).contains("true")
+  lazy val partitionCols: Seq[String] = props.get(GraftTable.PartitionProp)
+    .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+  lazy val bucketSpec: Option[(String, Int)] =
+    for (c <- props.get(GraftTable.BucketColProp);
+         n <- props.get(GraftTable.BucketCountProp)) yield (c, n.toInt)
+  lazy val checks: Seq[(String, String)] = props.toSeq
+    .filter(_._1.startsWith(GraftConstraints.Prefix))
+    .map { case (k, v) => (k.stripPrefix(GraftConstraints.Prefix), v) }
+    .sortBy(_._1)
+  lazy val dayCol: Option[String] = props.get(GraftTable.DayColProp)
+  lazy val timeUnit: String = props.getOrElse(GraftTable.TimeUnitProp, "days")
+  lazy val aliases: Map[String, Seq[String]] = GraftEvolution.aliasesOf(props)
+  lazy val widened: Set[String] = GraftEvolution.widenedOf(props)
+  lazy val pastTimeSpecs: Seq[(String, String)] =
+    GraftTable.decodePastTimeSpecs(props)
+  lazy val identity: Option[GraftIdentity.Spec] = GraftIdentity.specOf(props)
+  lazy val generated: Seq[(String, String)] = GraftGenerated.specsOf(props)
+  lazy val sortCols: Seq[String] = GraftSort.sortColsOf(props)
+  lazy val maskCols: Map[String, String] = GraftGovernance.masksOf(props)
+  lazy val rowFilter: Option[String] = GraftGovernance.rowFilterOf(props)
+  lazy val retention: Map[String, String] =
+    props.filter { case (k, _) => GraftRetention.isRetentionProp(k) }
+  lazy val rowLineage: Boolean = GraftRowId.enabled(props)
+  lazy val requiredWriter: Int = GraftTable.requiredFormat(props, ident)._2
+  /** Declared index-on-write columns (bloom, trigram), validated against
+    * the physical schema.
+    */
+  lazy val indexOnWriteCols: (Seq[String], Seq[String]) =
+    GraftBloom.indexOnWriteCols(props, physicalSchema)
 
   override def name(): String = ident
   override def schema(): StructType = tableSchema
@@ -2030,8 +2013,14 @@ class GraftTable(ident: String, val dir: String, tableSchema: StructType,
       })
 
   /** Columns physically stored in parquet = schema minus partition cols. */
-  def physicalSchema: StructType =
+  lazy val physicalSchema: StructType =
     StructType(tableSchema.fields.filterNot(f => partitionCols.contains(f.name)))
+
+  /** The shape every data file holds: the physical columns plus, on a
+    * row-lineage table, the hidden trailing `_row_id`.
+    */
+  def ioSchema: StructType =
+    if (rowLineage) GraftRowId.ioSchema(physicalSchema) else physicalSchema
 
   /** Existence-default catalyst values (ADD COLUMN ... DEFAULT): what
     * pre-add files serve instead of NULL. Resolved once per table load.
@@ -2590,11 +2579,14 @@ class GraftScan(table: GraftTable, required: StructType, rowLevel: Boolean,
       snapshotEntryByName.contains)
   }
 
-  /** Per-file bloom index (point-lookup pruning), read once per scan. */
+  /** Per-file bloom index (point-lookup pruning) of the snapshot's files,
+    * read once per scan; entries of other files are skipped undecoded.
+    */
   private lazy val bloomIndex: Map[(String, String), Array[Byte]] = {
     val p = new Path(table.dir)
     GraftBloom.readAll(
-      p.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), p)
+      p.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), p,
+      snapshotEntryByName.contains)
   }
 
   /** Surviving (affected) files after runtime group filtering. */

@@ -183,9 +183,7 @@ class GraftDeltaBatchWrite(table: GraftTable, rowSchema: StructType,
       info.numPartitions, ids = rowSchema.nonEmpty, rows = rowSchema.nonEmpty)
     alloc = Some(a)
     val ioSchema =
-      if (table.rowLineage && rowSchema.nonEmpty)
-        GraftRowId.ioSchema(table.physicalSchema)
-      else table.physicalSchema
+      if (rowSchema.nonEmpty) table.ioSchema else table.physicalSchema
     val metaRowIdIdx =
       if (table.rowLineage && metaSchema.fieldNames.contains(GraftRowId.Col))
         metaSchema.fieldIndex(GraftRowId.Col) else -1

@@ -188,7 +188,7 @@ object GraftEqDelete {
     */
   def upsert(spark: SparkSession, catalog: String, table: String,
              changes: DataFrame, keyCols: Seq[String]): Long = {
-    val t = tableOf(spark, catalog, table)
+    val t = GraftTable.load(spark, catalog, table)
     require(t.history,
       s"upsert: $catalog.$table is not a history table — equality deletes " +
         "are versioned in the manifest, which only history tables have")
@@ -410,9 +410,7 @@ object GraftEqDelete {
           if (nFresh == 0) Map.empty[String, String]
           else Map(GraftRowId.WmKey -> (wm0 + nFresh).toString))
       }
-    val ioSchema =
-      if (t.rowLineage) GraftRowId.ioSchema(t.physicalSchema)
-      else t.physicalSchema
+    val ioSchema = t.ioSchema
 
     val staging = new Path(dir, s".upsert-${UUID.randomUUID()}")
     val physCols = ioSchema.fieldNames.toSeq
@@ -593,7 +591,7 @@ object GraftEqDelete {
     }
     fs.delete(staging, true)
     GraftStats.liftFromFooters(spark, dir, landed, ioSchema)
-    GraftMaintenance.reindexDeclared(spark, dir, landed)
+    GraftMaintenance.reindexDeclared(spark, t, landed)
 
     // a file whose recorded range provably cannot hold any changed key
     // skips the eq reference entirely; on a bucket-keyed table, so does
@@ -671,7 +669,7 @@ object GraftEqDelete {
           // an append that merge-evolved the schema is NOT replayable:
           // the staged rows were cast to the pinned schema
           val schemaStable =
-            tableOf(spark, catalog, table).schema() == t.schema()
+            GraftTable.load(spark, catalog, table).schema() == t.schema()
           if (!allAppend || !schemaStable) throw new IllegalStateException(
             s"upsert: $catalog.$table commit race lost to a non-additive " +
               "winner (or the schema moved) — a snapshot-derived upsert " +
@@ -708,18 +706,17 @@ object GraftEqDelete {
     * (row-multiset neutral — streams skip it). Positional DVs are folded
     * FIRST so the rewrite reads plain files. Returns entries folded.
     */
-  def materializeEqDeletes(spark: SparkSession, tableDir: String): Int = {
-    val dir = new Path(tableDir)
+  def materializeEqDeletes(spark: SparkSession, table: GraftTable): Int = {
+    val dir = new Path(table.dir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    require(props.get(GraftTable.HistoryProp).contains("true"),
-      s"materializeEqDeletes: $tableDir is not a history table")
+    require(table.history,
+      s"materializeEqDeletes: ${table.dir} is not a history table")
     val head0 = GraftTable.readHead(fs, dir, None)
     if (head0.version == 0L) return 0
     val head =
       if (!head0.entries.exists(_.dv.nonEmpty)) head0
       else {
-        GraftMaintenance.materializeDeletes(spark, tableDir)
+        GraftMaintenance.materializeDeletes(spark, table)
         GraftTable.readHead(fs, dir, None)
       }
     val masked = head.entries.filter(_.eqs.nonEmpty)
@@ -732,12 +729,10 @@ object GraftEqDelete {
     // current schema — the fold doubles as the compact-to-current remedy.
     // Columns outside the current schema (dropped-column bytes) ride
     // along verbatim, exactly as the un-evolved fold kept them.
-    val aliases = GraftEvolution.aliasesOf(props)
-    val widened = GraftEvolution.widenedOf(props)
-    val evolved = aliases.nonEmpty || widened.nonEmpty
+    val aliases = table.aliases
+    val evolved = aliases.nonEmpty || table.widened.nonEmpty
     val curTypes: Map[String, DataType] =
-      GraftTable.readTableSchema(fs, dir).map(_.fields.toSeq).getOrElse(Nil)
-        .map(f => f.name -> f.dataType).toMap +
+      table.schema().fields.map(f => f.name -> f.dataType).toMap +
         (GraftRowId.Col -> org.apache.spark.sql.types.LongType)
     def forward(n: String): String =
       if (curTypes.contains(n)) n
@@ -808,7 +803,7 @@ object GraftEqDelete {
     if (allLanded.nonEmpty) {
       GraftStats.liftFromFooters(spark, dir, allLanded,
         spark.read.parquet(allLanded.head).schema)
-      GraftMaintenance.reindexDeclared(spark, dir, allLanded)
+      GraftMaintenance.reindexDeclared(spark, table, allLanded)
     }
     masked.size
   }
@@ -821,22 +816,6 @@ object GraftEqDelete {
     finally prev match {
       case Some(x) => spark.conf.set(key, x)
       case None => spark.conf.unset(key)
-    }
-  }
-
-  private def tableOf(spark: SparkSession, catalog: String,
-                      table: String): GraftTable = {
-    val parts = table.split('.')
-    val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
-      parts.init, parts.last)
-    org.apache.spark.sql.graftbridge.Bridge.catalogPlugin(spark, catalog) match {
-      case g: GraftCatalog => g.loadTable(ident) match {
-        case t: GraftTable => t
-        case other => throw new IllegalArgumentException(
-          s"upsert: $catalog.$table is ${other.getClass.getName}")
-      }
-      case other => throw new IllegalArgumentException(
-        s"upsert: catalog $catalog is ${other.getClass.getName}")
     }
   }
 }

@@ -19,12 +19,11 @@ object GraftMaintenance {
     * a raised `graft.format.writer` stamp would stop INSERTs while
     * optimize/restore/compact kept mutating the fenced table.
     */
-  private def enforceWriterFence(fs: org.apache.hadoop.fs.FileSystem,
-                                 dir: Path, what: String): Unit = {
-    val props = GraftTable.readProps(fs, dir)
-    GraftTable.enforceWrite(GraftTable.requiredFormat(props)._2,
-      s"$what on $dir")
-  }
+  private def fence(table: GraftTable, what: String): Unit =
+    GraftTable.enforceWrite(table.requiredWriter, s"$what on ${table.dir}")
+
+  private def fsOf(spark: SparkSession, table: GraftTable): FileSystem =
+    new Path(table.dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Partition count for distributed maintenance jobs (deep-clone and
     * replication copies, stats/NDV backfill, bloom build): one per item,
@@ -44,18 +43,17 @@ object GraftMaintenance {
   private final case class RewriteBase(head: Option[GraftTable.Snapshot],
                                        files: Seq[String])
 
-  private def foldedBase(spark: SparkSession, fs: FileSystem, tableDir: String,
-                         props: Map[String, String]): RewriteBase = {
-    val dir = new Path(tableDir)
-    if (props.get(GraftTable.MorProp).contains("true"))
-      materializeDeletes(spark, tableDir)
-    if (!props.get(GraftTable.HistoryProp).contains("true"))
+  private def foldedBase(spark: SparkSession, fs: FileSystem,
+                         table: GraftTable): RewriteBase = {
+    val dir = new Path(table.dir)
+    if (table.mor) materializeDeletes(spark, table)
+    if (!table.history)
       return RewriteBase(None, GraftTable.dataFiles(fs, dir))
     val head0 = GraftTable.readHead(fs, dir, None)
     val head =
       if (!head0.entries.exists(_.eqs.nonEmpty)) head0
       else {
-        GraftEqDelete.materializeEqDeletes(spark, tableDir)
+        GraftEqDelete.materializeEqDeletes(spark, table)
         GraftTable.readHead(fs, dir, None)
       }
     RewriteBase(Some(head), head.entries.map(_.file))
@@ -86,11 +84,13 @@ object GraftMaintenance {
     * files' stats are lifted from their footers (`schema`), declared
     * indexes rebuilt, and `staging` removed. Returns the landed paths.
     */
-  private def landRewrite(spark: SparkSession, fs: FileSystem, dir: Path,
-                          base: RewriteBase, replaced: Set[String],
-                          moves: Seq[(Path, Path)], staging: Path)(
+  private def landRewrite(spark: SparkSession, fs: FileSystem,
+                          table: GraftTable, base: RewriteBase,
+                          replaced: Set[String], moves: Seq[(Path, Path)],
+                          staging: Path)(
       schema: => org.apache.spark.sql.types.StructType): Seq[String] =
     try {
+      val dir = new Path(table.dir)
       val landed = moves.map(_._2.toString)
       base.head match {
         case Some(head) =>
@@ -112,7 +112,7 @@ object GraftMaintenance {
       // the metadata log on the very next scan
       if (landed.nonEmpty) {
         GraftStats.liftFromFooters(spark, dir, landed, schema)
-        reindexDeclared(spark, dir, landed)
+        reindexDeclared(spark, table, landed)
       }
       landed
     } finally fs.delete(staging, true)
@@ -125,20 +125,14 @@ object GraftMaintenance {
     * columns keep the documented backfill story; unindexed is always
     * sound — it just prunes nothing).
     */
-  private[sources] def reindexDeclared(spark: SparkSession, dir: Path,
+  private[sources] def reindexDeclared(spark: SparkSession, table: GraftTable,
                                        landed: Seq[String]): Unit = {
     if (landed.isEmpty) return
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    def cols(k: String): Seq[String] =
-      props.get(k).toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    val b = cols(GraftBloom.BloomColsProp)
-    val t = cols(GraftBloom.TrgmColsProp)
+    val (b, t) = table.indexOnWriteCols
     if (b.nonEmpty)
-      GraftBloom.buildIndex(spark, dir.toString, b, onlyFiles = Some(landed))
+      GraftBloom.buildIndex(spark, table, b, onlyFiles = Some(landed))
     if (t.nonEmpty)
-      GraftBloom.buildTrigramIndex(spark, dir.toString, t,
-        onlyFiles = Some(landed))
+      GraftBloom.buildTrigramIndex(spark, table, t, onlyFiles = Some(landed))
   }
 
   /** Rewrite-path file reader: on tables with rename/widen/add history the
@@ -148,29 +142,16 @@ object GraftMaintenance {
     * cast to current physical types) so rewrites land uniform
     * current-schema files. No-alias tables take the unchanged fast path.
     */
-  private def evoRead(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                      dir: Path, props: Map[String, String],
+  private def evoRead(spark: SparkSession, table: GraftTable,
                       files: Seq[String]): org.apache.spark.sql.DataFrame = {
-    val aliases = GraftEvolution.aliasesOf(props)
-    val phys = physicalSchemaOf(fs, dir, props)
-    if (aliases.isEmpty && !phys.fields.exists(GraftEvolution.hasExistenceDefault))
-      spark.read.parquet(files: _*)
-    else GraftEvolution.readFilesAs(spark, files, phys, aliases)
-  }
-
-  private def physicalSchemaOf(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
-                               props: Map[String, String])
-      : org.apache.spark.sql.types.StructType = {
-    val schema = GraftTable.readTableSchema(fs, dir).getOrElse(
-      throw new IllegalStateException(s"$dir is not a graft catalog table"))
-    val pcols = props.get(GraftTable.PartitionProp)
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    val declared = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(f => pcols.contains(f.name)))
     // row lineage: the hidden `_row_id` column is part of every data
-    // file's PHYSICAL shape — maintenance rewrites must read and carry it
-    // (projecting it away here would silently erase lineage on compaction)
-    if (GraftRowId.enabled(props)) GraftRowId.ioSchema(declared) else declared
+    // file's shape — rewrites read and carry it (projecting it away would
+    // silently erase lineage on compaction)
+    val phys = table.ioSchema
+    if (table.aliases.isEmpty &&
+        !phys.fields.exists(GraftEvolution.hasExistenceDefault))
+      spark.read.parquet(files: _*)
+    else GraftEvolution.readFilesAs(spark, files, phys, table.aliases)
   }
 
   /** Maintenance rewrites go through Spark's parquet writer, which still
@@ -198,7 +179,7 @@ object GraftMaintenance {
     * rewritten files range-clustered (min/max-prunable) instead of
     * round-robin. Returns (files before, files after).
     */
-  def compactTable(spark: SparkSession, tableDir: String,
+  def compactTable(spark: SparkSession, table: GraftTable,
                    targetBytes: Long = 128L << 20,
                    sortCols: Seq[String] = Nil,
                    zorderCols: Seq[String] = Nil): (Int, Int) = {
@@ -206,34 +187,33 @@ object GraftMaintenance {
     require(sortCols.isEmpty || zorderCols.isEmpty,
       "compactTable: pass sortCols (linear clustering) OR zorderCols " +
         "(multi-dim clustering), not both")
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    enforceWriterFence(fs, dir, "compactTable")
-    require(!props.contains(GraftTable.PartitionProp),
+    val dir = new Path(table.dir)
+    fence(table, "compactTable")
+    val fs = fsOf(spark, table)
+    require(table.partitionCols.isEmpty,
       "compactTable: partitioned tables need per-partition compaction " +
         "(a bulk rewrite would collapse the col=value directory layout); " +
         "compact one partition directory at a time")
-    require(!props.contains(GraftTable.BucketColProp),
+    require(table.bucketSpec.isEmpty,
       "compactTable: bucketed tables need per-bucket compaction (a bulk " +
         "rewrite would mix buckets and break the bNNNNN- placement " +
         "contract); use compactBucketedTable")
-    require(!props.contains(GraftTable.DayColProp),
+    require(table.dayCol.isEmpty,
       "compactTable: days()-partitioned tables need per-day compaction (a " +
         "bulk rewrite would collapse the ts_day=N layout and silently kill " +
         "hidden-partition pruning); use compactDayTable")
-    val base = foldedBase(spark, fs, tableDir, props)
+    val base = foldedBase(spark, fs, table)
     val files = base.files
     if (files.isEmpty) return (0, 0)
     val totalBytes = files.map(f => fs.getFileStatus(new Path(f)).getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = evoRead(spark, fs, dir, props, files)
+    val df = evoRead(spark, table, files)
     // declared sort-on-write (`write.sort.cols`) is the table's layout
     // contract — an unparameterized compaction honors it instead of
     // round-robining the declaration away (explicit sortCols/zorderCols
     // still win: the caller is re-clustering deliberately)
     val sortCols0 =
-      if (sortCols.isEmpty && zorderCols.isEmpty) GraftSort.sortColsOf(props)
+      if (sortCols.isEmpty && zorderCols.isEmpty) table.sortCols
       else sortCols
     val shaped =
       if (zorderCols.nonEmpty)
@@ -255,7 +235,7 @@ object GraftMaintenance {
     val staged = fs.listStatus(staging).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(_.getPath)
-    landRewrite(spark, fs, dir, base, files.toSet,
+    landRewrite(spark, fs, table, base, files.toSet,
       staged.map(p => p -> new Path(dir, p.getName)), staging)(df.schema)
     (files.size, staged.size)
   }
@@ -267,14 +247,14 @@ object GraftMaintenance {
     * merges a bucket with itself). Buckets already at one file are
     * untouched. Returns (files before, files after).
     */
-  def compactBucketedTable(spark: SparkSession, tableDir: String): (Int, Int) = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    require(props.contains(GraftTable.BucketColProp),
-      s"compactBucketedTable: $tableDir is not a bucketed table")
-    enforceWriterFence(fs, dir, "compactBucketedTable")
-    val base = foldedBase(spark, fs, tableDir, props)
+  def compactBucketedTable(spark: SparkSession, table: GraftTable): (Int, Int) = {
+    val dir = new Path(table.dir)
+    val bucketCol = table.bucketSpec.map(_._1).getOrElse(
+      throw new IllegalArgumentException(
+        s"compactBucketedTable: ${table.dir} is not a bucketed table"))
+    fence(table, "compactBucketedTable")
+    val fs = fsOf(spark, table)
+    val base = foldedBase(spark, fs, table)
     val files = base.files
     if (files.isEmpty) return (0, 0)
     val byBucket = files.groupBy { f =>
@@ -289,13 +269,11 @@ object GraftMaintenance {
     // compacted file would silently break merge joins. Declared
     // sort-on-write columns append after the bucket key, exactly like the
     // writer's required ordering (GraftSort)
-    val bucketCol = props(GraftTable.BucketColProp)
-    val unitSort = bucketCol +:
-      GraftSort.sortColsOf(props).filterNot(_ == bucketCol)
+    val unitSort = bucketCol +: table.sortCols.filterNot(_ == bucketCol)
     val moves = rewritten.map { case (b, fls) =>
       val out = new Path(staging, s"b$b")
       withMicrosTimestamps(spark) {
-        evoRead(spark, fs, dir, props, fls).coalesce(1)
+        evoRead(spark, table, fls).coalesce(1)
           .sortWithinPartitions(unitSort.map(org.apache.spark.sql.functions.col): _*)
           .write.mode("overwrite").parquet(out.toString)
       }
@@ -311,7 +289,7 @@ object GraftMaintenance {
       (part, tgt)
     }
     val replaced = rewritten.flatMap(_._2).toSet
-    landRewrite(spark, fs, dir, base, replaced, moves, staging)(
+    landRewrite(spark, fs, table, base, replaced, moves, staging)(
       spark.read.parquet(moves.head._2.toString).schema)
     (files.size, files.size - replaced.size + moves.size)
   }
@@ -324,17 +302,16 @@ object GraftMaintenance {
     * companion verb: micro-batches leave one small file per day per
     * batch; this folds each day back to one. Returns (before, after).
     */
-  def compactDayTable(spark: SparkSession, tableDir: String): (Int, Int) = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    val dayCol = props.getOrElse(GraftTable.DayColProp,
+  def compactDayTable(spark: SparkSession, table: GraftTable): (Int, Int) = {
+    val dir = new Path(table.dir)
+    val dayCol = table.dayCol.getOrElse(
       throw new IllegalArgumentException(
-        s"compactDayTable: $tableDir is not a time-partitioned table"))
-    enforceWriterFence(fs, dir, "compactDayTable")
-    val unitSeg = GraftDayPartition.Units(
-      props.getOrElse(GraftTable.TimeUnitProp, "days"))
-    val base = foldedBase(spark, fs, tableDir, props)
+        s"compactDayTable: ${table.dir} is not a time-partitioned table"))
+    fence(table, "compactDayTable")
+    val fs = fsOf(spark, table)
+    val unit = table.timeUnit
+    val unitSeg = GraftDayPartition.Units(unit)
+    val base = foldedBase(spark, fs, table)
     val files = base.files
     if (files.isEmpty) return (0, 0)
     val byDay = files.groupBy(f => new Path(f).getParent.getName)
@@ -352,18 +329,15 @@ object GraftMaintenance {
     // gives one task per day, sortWithinPartitions keeps the in-file
     // time order, partitionBy lands exactly one file per day dir.
     val landed: Seq[(Path, Path)] = {
-      val schema = GraftTable.readTableSchema(fs, dir).get
-      val dt = schema.fields.find(_.name == dayCol).get.dataType
-      val unit = props.getOrElse(GraftTable.TimeUnitProp, "days")
+      val dt = table.schema()(dayCol).dataType
       withMicrosTimestamps(spark) {
-        evoRead(spark, fs, dir, props, rewritten.flatMap(_._2))
+        evoRead(spark, table, rewritten.flatMap(_._2))
           .withColumn("__graft_unit",
             org.apache.spark.sql.functions.expr(unitIndexExpr(unit, dt, dayCol)))
           .repartition(org.apache.spark.sql.functions.col("__graft_unit"))
           // in-file time order first, declared sort-on-write columns after
           // (the writer's required ordering, preserved by maintenance)
-          .sortWithinPartitions((dayCol +:
-            GraftSort.sortColsOf(props).filterNot(_ == dayCol))
+          .sortWithinPartitions((dayCol +: table.sortCols.filterNot(_ == dayCol))
             .map(org.apache.spark.sql.functions.col): _*)
           .write.partitionBy("__graft_unit").mode("overwrite")
           .parquet(staging.toString)
@@ -390,7 +364,7 @@ object GraftMaintenance {
         s"${landed.size} compacted days out — a row re-derived a unit " +
         "its directory didn't claim")
     val replaced = rewritten.flatMap(_._2).toSet
-    landRewrite(spark, fs, dir, base, replaced, landed, staging)(
+    landRewrite(spark, fs, table, base, replaced, landed, staging)(
       spark.read.parquet(landed.head._2.toString).schema)
     (files.size, files.size - replaced.size + landed.size)
   }
@@ -420,20 +394,18 @@ object GraftMaintenance {
     * Returns the census of what was done: (partition, files_before,
     * files_after) per compacted partition — empty means nothing qualified.
     */
-  def optimizeTable(spark: SparkSession, tableDir: String,
+  def optimizeTable(spark: SparkSession, table: GraftTable,
                     minFiles: Int = 2): Seq[(String, Int, Int)] = {
     require(minFiles >= 2, s"optimizeTable: minFiles must be >= 2")
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    require(props.contains(GraftTable.PartitionProp) &&
-        !props.contains(GraftTable.DayColProp) &&
-        !props.contains(GraftTable.BucketColProp),
+    val dir = new Path(table.dir)
+    require(table.partitionCols.nonEmpty && table.dayCol.isEmpty &&
+        table.bucketSpec.isEmpty,
       "optimizeTable: identity-partitioned tables only — flat tables use " +
         "compactTable, days() layouts compactDayTable, bucketed tables " +
         "compactBucketedTable")
-    enforceWriterFence(fs, dir, "graft_optimize")
-    val base = foldedBase(spark, fs, tableDir, props)
+    fence(table, "graft_optimize")
+    val fs = fsOf(spark, table)
+    val base = foldedBase(spark, fs, table)
     val files = base.files
     if (files.isEmpty) return Nil
     // a SHALLOW CLONE's entries are absolute paths into the SOURCE —
@@ -442,7 +414,7 @@ object GraftMaintenance {
     // later deletes them (silent clone data loss); refuse loudly
     files.find(f => GraftTable.relativize(dir, new Path(f)).startsWith("/"))
       .foreach(f => throw new IllegalArgumentException(
-        s"optimizeTable: $tableDir references foreign files (e.g. $f) — " +
+        s"optimizeTable: ${table.dir} references foreign files (e.g. $f) — " +
           "a shallow clone cannot be compacted in place; " +
           "graft_clone(..., 'deep') first"))
     val byPart = files
@@ -458,13 +430,13 @@ object GraftMaintenance {
     val routed = {
       import spark.implicits._
       val lk = lookup.toDF("__fn", "__graft_part")
-      evoRead(spark, fs, dir, props, selFiles)
+      evoRead(spark, table, selFiles)
         .withColumn("__fn",
           org.apache.spark.sql.functions.col("_metadata.file_name"))
         .join(org.apache.spark.sql.functions.broadcast(lk), "__fn")
         .drop("__fn")
     }
-    val sortCols = GraftSort.sortColsOf(props)
+    val sortCols = table.sortCols
     withMicrosTimestamps(spark) {
       val shaped = routed.repartition(
         org.apache.spark.sql.functions.col("__graft_part"))
@@ -492,7 +464,7 @@ object GraftMaintenance {
     require(landed.size == selected.size,
       s"optimizeTable: ${selected.size} partitions in, ${landed.size} " +
         "out — a row routed to a partition its file didn't claim")
-    landRewrite(spark, fs, dir, base, selFiles.toSet, landed, staging)(
+    landRewrite(spark, fs, table, base, selFiles.toSet, landed, staging)(
       spark.read.parquet(landed.head._2.toString).schema)
     selected.toSeq.sortBy(_._1).map { case (p, fl) => (p, fl.size, 1) }
   }
@@ -514,13 +486,11 @@ object GraftMaintenance {
     * rewrite (Delta's OPTIMIZE / Iceberg's rewrite_position_deletes).
     * Returns the number of sidecars folded.
     */
-  def materializeDeletes(spark: SparkSession, tableDir: String): Int = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    enforceWriterFence(fs, dir, "materializeDeletes")
-    val props = GraftTable.readProps(fs, dir)
-    if (props.get(GraftTable.HistoryProp).contains("true"))
-      return materializeDeletesHistory(spark, fs, dir)
+  def materializeDeletes(spark: SparkSession, table: GraftTable): Int = {
+    val dir = new Path(table.dir)
+    fence(table, "materializeDeletes")
+    val fs = fsOf(spark, table)
+    if (table.history) return materializeDeletesHistory(spark, fs, table)
     val dvs = fs.listStatus(dir).toSeq
       .filter(st => st.isFile && GraftDv.isDv(st.getPath.getName))
     // data files may live in partition subdirs; sidecars sit at the root
@@ -532,7 +502,7 @@ object GraftMaintenance {
       byName.get(GraftDv.dataFileName(st.getPath.getName)).map(_ -> st.getPath)
     }
     if (pairs.nonEmpty) {
-      val staging = stageDvRewrites(spark, fs, dir, pairs)
+      val staging = stageDvRewrites(spark, fs, table, pairs)
       val landed = scala.collection.mutable.Buffer.empty[String]
       val vanished = scala.collection.mutable.Buffer.empty[String]
       pairs.foreach { case (dataPath, _) =>
@@ -564,7 +534,7 @@ object GraftMaintenance {
       if (landed.nonEmpty) {
         GraftStats.liftFromFooters(spark, dir, landed.toSeq,
           spark.read.parquet(landed.head).schema)
-        reindexDeclared(spark, dir, landed.toSeq)
+        reindexDeclared(spark, table, landed.toSeq)
       }
     }
     dvs.foreach(st => fs.delete(st.getPath, false))
@@ -578,16 +548,16 @@ object GraftMaintenance {
     * visible rows are identical before and after), so streams skip it.
     * Old files and superseded sidecars stay until vacuum expires them.
     */
-  private def materializeDeletesHistory(spark: SparkSession,
-                                        fs: org.apache.hadoop.fs.FileSystem,
-                                        dir: Path): Int = {
+  private def materializeDeletesHistory(spark: SparkSession, fs: FileSystem,
+                                        table: GraftTable): Int = {
+    val dir = new Path(table.dir)
     val head = GraftTable.readHead(fs, dir, None)
     if (head.version == 0L)
       throw new IllegalStateException(s"$dir: history table has no manifest")
     val folded = head.entries.filter(_.dv.nonEmpty)
     if (folded.isEmpty) return 0
     val pairs = folded.map(e => (new Path(e.file), new Path(e.dv.get)))
-    val staging = stageDvRewrites(spark, fs, dir, pairs)
+    val staging = stageDvRewrites(spark, fs, table, pairs)
     val rewrittenByName: Map[String, Seq[String]] = pairs.map { case (dataPath, _) =>
       val dataName = dataPath.getName
       val landed = stagedPartsFor(fs, staging, dataName).zipWithIndex.map {
@@ -612,7 +582,7 @@ object GraftMaintenance {
     if (allLanded.nonEmpty) {
       GraftStats.liftFromFooters(spark, dir, allLanded,
         spark.read.parquet(allLanded.head).schema)
-      reindexDeclared(spark, dir, allLanded)
+      reindexDeclared(spark, table, allLanded)
     }
     pairs.size
   }
@@ -623,9 +593,9 @@ object GraftMaintenance {
     * (never a driver-side position expansion), and stage the survivors
     * partitioned by source-file name so file boundaries survive.
     */
-  private def stageDvRewrites(spark: SparkSession,
-                              fs: org.apache.hadoop.fs.FileSystem,
-                              dir: Path, pairs: Seq[(Path, Path)]): Path = {
+  private def stageDvRewrites(spark: SparkSession, fs: FileSystem,
+                              table: GraftTable,
+                              pairs: Seq[(Path, Path)]): Path = {
     import org.apache.spark.sql.functions.{broadcast, col}
     import scala.jdk.CollectionConverters._
     val dvSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -653,15 +623,14 @@ object GraftMaintenance {
     // (alias → current name, cast to current types) so the fold reads
     // pre-rename files correctly — the metadata columns ride along inside
     // each group's projection, BEFORE the union erases them
-    val props = GraftTable.readProps(fs, dir)
-    val aliases = GraftEvolution.aliasesOf(props)
+    val aliases = table.aliases
     val dataPaths = pairs.map(_._1.toString)
     val grouped: Seq[org.apache.spark.sql.DataFrame] =
       if (aliases.isEmpty) Seq(spark.read.parquet(dataPaths: _*)
         .withColumn(DvNameCol, col("_metadata.file_name"))
         .withColumn("__graft_pos", col("_metadata.row_index")))
       else {
-        val phys = physicalSchemaOf(fs, dir, props)
+        val phys = table.ioSchema
         dataPaths.map(f => f -> spark.read.parquet(f).schema.fieldNames.toSet)
           .groupBy(_._2).values.map(_.map(_._1)).toSeq
           .map { group =>
@@ -684,7 +653,7 @@ object GraftMaintenance {
       .join(broadcast(dvDf), Seq(DvNameCol))
       .where(alive)
       .drop("__graft_dv", "__graft_pos")
-    val staging = new Path(dir, s".dv-materialize-${UUID.randomUUID()}")
+    val staging = new Path(table.dir, s".dv-materialize-${UUID.randomUUID()}")
     withMicrosTimestamps(spark) {
       kept.write.partitionBy(DvNameCol).mode("overwrite")
         .parquet(staging.toString)
@@ -717,12 +686,11 @@ object GraftMaintenance {
     * version. Fails loudly on non-history tables (nothing to restore from)
     * and unknown versions.
     */
-  def restore(spark: SparkSession, tableDir: String, version: Long): Long = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(new Path(dir, GraftTable.PropsFile)),
-      s"restore: $tableDir is not a history table")
-    enforceWriterFence(fs, dir, "restore")
+  def restore(spark: SparkSession, table: GraftTable, version: Long): Long = {
+    val dir = new Path(table.dir)
+    require(table.history, s"restore: ${table.dir} is not a history table")
+    fence(table, "restore")
+    val fs = fsOf(spark, table)
     val versions = GraftTable.manifestVersions(fs, dir)
     require(versions.contains(version),
       s"restore: version $version not in ${versions.mkString("[", ",", "]")}" +
@@ -731,7 +699,7 @@ object GraftMaintenance {
     // merge-on-read table rolls back its delete state too
     GraftTable.commitRetrying(fs, dir,
         meta = GraftTable.kindMeta(GraftTable.KindRestore))(
-      GraftTable.pinnedAt(tableDir, versions.last)(
+      GraftTable.pinnedAt(table.dir, versions.last)(
         GraftTable.readFullEntries(fs, dir, version)))
   }
 
@@ -741,9 +709,9 @@ object GraftMaintenance {
     * The retention/cost dial every snapshot table needs — without it,
     * copy-on-write history grows without bound.
     */
-  def vacuum(spark: SparkSession, tableDir: String, keepLast: Int = 1): (Int, Int) = {
+  def vacuum(spark: SparkSession, table: GraftTable, keepLast: Int = 1): (Int, Int) = {
     require(keepLast >= 1)
-    vacuumKeeping(spark, tableDir, _.takeRight(keepLast).toSet)
+    vacuumKeeping(spark, table, (_, _, versions) => versions.takeRight(keepLast).toSet)
   }
 
   /** Apply the table's DECLARED retention policy ([[GraftRetention]]):
@@ -755,27 +723,31 @@ object GraftMaintenance {
     * undeclared expiry should be an explicit `graft_vacuum`, not a
     * default silently eating history.
     */
-  def applyRetention(spark: SparkSession, tableDir: String): (Int, Int) = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    val (keepLast, maxAge) = GraftRetention.of(props)
+  def applyRetention(spark: SparkSession, table: GraftTable): (Int, Int) = {
+    val (keepLast, maxAge) = GraftRetention.of(table.retention)
     require(keepLast.nonEmpty || maxAge.nonEmpty,
-      s"applyRetention: $tableDir declares no retention policy — SET " +
+      s"applyRetention: ${table.dir} declares no retention policy — SET " +
         s"TBLPROPERTIES('${GraftRetention.KeepLastProp}'=N) and/or " +
         s"('${GraftRetention.MaxAgeProp}'=ms), or call graft_vacuum " +
         "explicitly")
     val cutoff = maxAge.map(System.currentTimeMillis() - _)
-    vacuumKeeping(spark, tableDir, versions => {
+    vacuumKeeping(spark, table, (fs, dir, versions) => {
       val byCount = keepLast.map(n => versions.takeRight(n).toSet)
         .getOrElse(Set.empty[Long])
-      val byAge = cutoff.map(c => versions.filter { v =>
-        fs.exists(GraftTable.manifestPath(dir, v)) &&
-          GraftTable.commitTimeMillis(fs, dir, v) >= c
-      }.toSet).getOrElse(Set.empty[Long])
-      byCount ++ byAge ++ versions.lastOption
+      byCount ++ cutoff.map(youngerThan(fs, dir, versions, _))
+        .getOrElse(versions.lastOption.toSet)
     })
   }
+
+  /** The versions committed at or after `cutoffMillis`, plus the current
+    * one whatever its age.
+    */
+  private def youngerThan(fs: FileSystem, dir: Path, versions: Seq[Long],
+                          cutoffMillis: Long): Set[Long] =
+    versions.filter { v =>
+      fs.exists(GraftTable.manifestPath(dir, v)) &&
+        GraftTable.commitTimeMillis(fs, dir, v) >= cutoffMillis
+    }.toSet ++ versions.lastOption
 
   /** Time-based retention (`expire_snapshots(older_than)` / `VACUUM ...
     * RETAIN n HOURS`): expire every snapshot whose commit time is before
@@ -784,27 +756,20 @@ object GraftMaintenance {
     * table. Tagged and branch-pinned snapshots are retention-proof, as
     * with count-based vacuum.
     */
-  def vacuumOlderThan(spark: SparkSession, tableDir: String,
-                      olderThanMillis: Long): (Int, Int) = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    vacuumKeeping(spark, tableDir, versions =>
-      versions.filter { v =>
-        fs.exists(GraftTable.manifestPath(dir, v)) &&
-          GraftTable.commitTimeMillis(fs, dir, v) >= olderThanMillis
-      }.toSet ++ versions.lastOption)
-  }
+  def vacuumOlderThan(spark: SparkSession, table: GraftTable,
+                      olderThanMillis: Long): (Int, Int) =
+    vacuumKeeping(spark, table, youngerThan(_, _, _, olderThanMillis))
 
-  private def vacuumKeeping(spark: SparkSession, tableDir: String,
-                            keepOf: Seq[Long] => Set[Long]): (Int, Int) = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(new Path(dir, GraftTable.PropsFile)),
-      s"vacuum: $tableDir is not a history table")
+  private def vacuumKeeping(spark: SparkSession, table: GraftTable,
+                            keepOf: (FileSystem, Path, Seq[Long]) => Set[Long])
+      : (Int, Int) = {
+    val dir = new Path(table.dir)
+    require(table.history, s"vacuum: ${table.dir} is not a history table")
     // deletion is the most dangerous verb to run against a format from
     // the future: files this build can't recognize as referenced (a new
     // sidecar kind) would be reaped as orphans
-    enforceWriterFence(fs, dir, "vacuum")
+    fence(table, "vacuum")
+    val fs = fsOf(spark, table)
     val versions = GraftTable.manifestVersions(fs, dir)
     // TAGGED snapshots are retention-proof: a named ref means "keep this
     // state addressable" — its manifest and files survive any keepLast
@@ -815,7 +780,7 @@ object GraftMaintenance {
     // either would tear the branch
     val branchBases = GraftBranch.readAll(fs, dir).values.toSet
     val (branchFiles, branchSegs) = GraftBranch.referencedByBranches(fs, dir)
-    val keep = keepOf(versions) ++ tagged ++ branchBases
+    val keep = keepOf(fs, dir, versions) ++ tagged ++ branchBases
     val expire = versions.filterNot(keep.contains)
     if (expire.isEmpty) return (0, 0)
     val keptEntries = versions.filter(keep.contains)
@@ -875,45 +840,35 @@ object GraftMaintenance {
     * [[purgedCompletely]] proves it by brute-force re-reading every
     * remaining byte, and the spec/oracle entries run that proof.
     */
-  def purge(spark: SparkSession, catalog: String, table: String,
+  def purge(spark: SparkSession, catalog: String, table: GraftTable,
             condition: String): Long = {
-    val t = spark.table(s"$catalog.$table")
+    val name = s"$catalog.${table.name()}"
+    val dir = new Path(table.dir)
+    val fs = fsOf(spark, table)
     // snapshot tags make snapshots vacuum-proof — a purge would silently
     // leave the matching rows reachable through them. Fail LOUDLY rather
     // than either breaking the erasure guarantee or dropping user tags.
-    locally {
-      val dir0 = new Path(tableDirOf(spark, catalog, table))
-      val fs0 = dir0.getFileSystem(spark.sessionState.newHadoopConf())
-      val refs = GraftRefs.readAll(fs0, dir0)
-      val names = refs.keys.toSeq.sorted.mkString(", ")
-      require(refs.isEmpty,
-        s"purge: $catalog.$table has snapshot tags ($names) that would " +
-          "keep pre-purge snapshots alive — drop them first " +
-          "(graft_drop_tag), then purge")
-      val branches = GraftBranch.readAll(fs0, dir0)
-      require(branches.isEmpty,
-        s"purge: $catalog.$table has live branches " +
-          s"(${branches.keys.toSeq.sorted.mkString(", ")}) whose snapshots " +
-          "would keep purged bytes reachable — fast-forward or drop them " +
-          "first (graft_drop_branch), then purge")
-    }
-    val n = t.where(condition).count()
-    spark.sql(s"DELETE FROM $catalog.$table WHERE $condition")
-    val dir = tableDirOf(spark, catalog, table)
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, new Path(dir))
-    if (props.get(GraftTable.MorProp).contains("true"))
-      materializeDeletes(spark, dir)
-    if (props.get(GraftTable.HistoryProp).contains("true")) {
+    val refs = GraftRefs.readAll(fs, dir)
+    require(refs.isEmpty,
+      s"purge: $name has snapshot tags (${refs.keys.toSeq.sorted.mkString(", ")}) " +
+        "that would keep pre-purge snapshots alive — drop them first " +
+        "(graft_drop_tag), then purge")
+    val branches = GraftBranch.readAll(fs, dir)
+    require(branches.isEmpty,
+      s"purge: $name has live branches " +
+        s"(${branches.keys.toSeq.sorted.mkString(", ")}) whose snapshots " +
+        "would keep purged bytes reachable — fast-forward or drop them " +
+        "first (graft_drop_branch), then purge")
+    val n = spark.table(name).where(condition).count()
+    spark.sql(s"DELETE FROM $name WHERE $condition")
+    if (table.mor) materializeDeletes(spark, table)
+    if (table.history) {
       // equality-delete sidecars hold raw KEY BYTES (possibly the very
       // values being purged): fold the masks so no live entry references
       // them, then vacuum destroys the sidecars with the old snapshots
-      val p = new Path(dir)
-      val fsp = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (GraftTable.manifestVersions(fsp, p).lastOption.exists(v =>
-          GraftTable.readFullEntries(fsp, p, v).exists(_.eqs.nonEmpty)))
-        GraftEqDelete.materializeEqDeletes(spark, dir)
-      vacuum(spark, dir, keepLast = 1)
+      if (GraftTable.readHead(fs, dir, None).entries.exists(_.eqs.nonEmpty))
+        GraftEqDelete.materializeEqDeletes(spark, table)
+      vacuum(spark, table, keepLast = 1)
     }
     n
   }
@@ -922,14 +877,10 @@ object GraftMaintenance {
     * `condition` — the externally-checkable erasure proof (reads raw
     * files, NOT the catalog, so deletion vectors can't mask anything).
     */
-  def purgedCompletely(spark: SparkSession, catalog: String, table: String,
+  def purgedCompletely(spark: SparkSession, table: GraftTable,
                        condition: String): Boolean = {
-    val dir = tableDirOf(spark, catalog, table)
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val files = GraftTable.dataFiles(fs, new Path(dir))
-    val props = GraftTable.readProps(fs, new Path(dir))
-    files.isEmpty ||
-      evoRead(spark, fs, new Path(dir), props, files).where(condition).isEmpty
+    val files = GraftTable.dataFiles(fsOf(spark, table), new Path(table.dir))
+    files.isEmpty || evoRead(spark, table, files).where(condition).isEmpty
   }
 
   /** Remove ORPHAN files from a history table directory: parquet files and
@@ -940,13 +891,12 @@ object GraftMaintenance {
     * Iceberg's remove_orphan_files ships the same dial, default 3 days).
     * Staging dot-dirs are never entered. Returns the number removed.
     */
-  def removeOrphans(spark: SparkSession, tableDir: String,
+  def removeOrphans(spark: SparkSession, table: GraftTable,
                     graceMillis: Long = 3L * 24 * 3600 * 1000): Int = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    require(props.get(GraftTable.HistoryProp).contains("true"),
-      s"removeOrphans: $tableDir is not a history table — a plain table " +
+    val dir = new Path(table.dir)
+    val fs = fsOf(spark, table)
+    require(table.history,
+      s"removeOrphans: ${table.dir} is not a history table — a plain table " +
         "IS its directory listing, every file on disk is referenced")
     val referenced: Set[String] = GraftTable.manifestVersions(fs, dir)
       .flatMap(GraftTable.readEntries(fs, dir, _))
@@ -992,17 +942,11 @@ object GraftMaintenance {
     * that own each artifact (restore/backfill/retain) — an audit that
     * mutates is one bug away from being the incident.
     */
-  def verifySnapshot(spark: SparkSession, tableDir: String,
+  def verifySnapshot(spark: SparkSession, table: GraftTable,
                      deep: Boolean = false): Seq[(String, String, Long, Long)] = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    val history = props.get(GraftTable.HistoryProp).contains("true")
-    val entries: Seq[GraftTable.GraftEntry] =
-      if (history)
-        GraftTable.manifestVersions(fs, dir).lastOption
-          .map(GraftTable.readFullEntries(fs, dir, _)).getOrElse(Nil)
-      else GraftTable.dataFiles(fs, dir).map(f => GraftTable.GraftEntry(f, None))
+    val dir = new Path(table.dir)
+    val fs = fsOf(spark, table)
+    val entries = table.currentFullEntries(fs)
     val stats = GraftStats.readAll(fs, dir)
     val findings = scala.collection.mutable.ArrayBuffer[(String, String, Long, Long)]()
     entries.foreach { e =>
@@ -1064,15 +1008,10 @@ object GraftMaintenance {
     * by foreign tools): ONE distributed footer-read job appends their
     * stats — the ANALYZE TABLE verb. Returns the number of files lifted.
     */
-  def analyzeTable(spark: SparkSession, tableDir: String): Int = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    val files =
-      if (props.get(GraftTable.HistoryProp).contains("true"))
-        GraftTable.manifestVersions(fs, dir).lastOption
-          .map(GraftTable.readManifest(fs, dir, _)).getOrElse(Nil)
-      else GraftTable.dataFiles(fs, dir)
+  def analyzeTable(spark: SparkSession, table: GraftTable): Int = {
+    val dir = new Path(table.dir)
+    val fs = fsOf(spark, table)
+    val files = table.currentDataFiles(fs)
     val have = GraftStats.readAll(fs, dir).keySet
     val missing = files.filterNot(f => have.contains(new Path(f).getName))
     if (missing.nonEmpty)
@@ -1099,26 +1038,19 @@ object GraftMaintenance {
     * file's spec ambiguous... and no real fact table time-partitions by
     * two different clocks).
     */
-  def setTimePartition(spark: SparkSession, tableDir: String,
+  def setTimePartition(spark: SparkSession, table: GraftTable,
                        spec: Option[(String, String)]): Unit = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    val schema = GraftTable.readTableSchema(fs, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"setTimePartition: $tableDir is not a graft catalog table"))
-    require(!props.contains(GraftTable.PartitionProp) &&
-        !props.contains(GraftTable.BucketColProp),
+    val props = table.props
+    require(table.partitionCols.isEmpty && table.bucketSpec.isEmpty,
       "setTimePartition: identity-partitioned and bucketed tables own " +
         "their directory/file-name layout — time partitioning does not " +
         "compose with them")
-    val current = props.get(GraftTable.DayColProp)
-      .map(_ -> props.getOrElse(GraftTable.TimeUnitProp, "days"))
-    val past = GraftTable.decodePastTimeSpecs(props)
+    val current = table.dayCol.map(_ -> table.timeUnit)
+    val past = table.pastTimeSpecs
     spec.foreach { case (col, unit) =>
       require(GraftDayPartition.Units.contains(unit),
         s"setTimePartition: unknown unit $unit (hours/days/months)")
-      val f = schema.fields.find(_.name == col).getOrElse(
+      val f = table.schema().fields.find(_.name == col).getOrElse(
         throw new IllegalArgumentException(
           s"setTimePartition: column $col is not in the table schema"))
       require(GraftDayPartition.supported(unit, f.dataType),
@@ -1142,7 +1074,7 @@ object GraftMaintenance {
          Map(GraftTable.PastTimeSpecsProp ->
            GraftTable.encodePastTimeSpecs(newPast))
        else Map.empty)
-    GraftTable.writeProps(fs, dir, newProps)
+    GraftTable.writeProps(fsOf(spark, table), new Path(table.dir), newProps)
   }
 
   /** TZ-independent unit-index SQL, matching GraftDayPartition.unitOf
@@ -1181,26 +1113,24 @@ object GraftMaintenance {
     * swap). After it, the whole table prunes under one spec. Returns
     * (files migrated, files landed).
     */
-  def migrateTimeLayout(spark: SparkSession, tableDir: String): (Int, Int) = {
+  def migrateTimeLayout(spark: SparkSession, table: GraftTable): (Int, Int) = {
     import org.apache.spark.sql.functions.{col, expr}
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    val dayCol = props.getOrElse(GraftTable.DayColProp,
+    val dir = new Path(table.dir)
+    val dayCol = table.dayCol.getOrElse(
       throw new IllegalArgumentException(
-        s"migrateTimeLayout: $tableDir has no current time partitioning"))
-    val unit = props.getOrElse(GraftTable.TimeUnitProp, "days")
-    val base = foldedBase(spark, fs, tableDir, props)
+        s"migrateTimeLayout: ${table.dir} has no current time partitioning"))
+    val unit = table.timeUnit
+    val fs = fsOf(spark, table)
+    val base = foldedBase(spark, fs, table)
     val files = base.files
     val stale = files.filter(f =>
-      GraftDayPartition.unitOfFile(tableDir, f, dayCol, unit).isEmpty)
+      GraftDayPartition.unitOfFile(table.dir, f, dayCol, unit).isEmpty)
     if (stale.isEmpty) return (0, files.size)
-    val schema = GraftTable.readTableSchema(fs, dir).get
-    val dt = schema.fields.find(_.name == dayCol).get.dataType
+    val dt = table.schema()(dayCol).dataType
     val unitExpr = unitIndexExpr(unit, dt, dayCol)
     val staging = new Path(dir, s".migrate-${UUID.randomUUID()}")
     withMicrosTimestamps(spark) {
-      evoRead(spark, fs, dir, props, stale)
+      evoRead(spark, table, stale)
         .withColumn("__graft_unit", expr(unitExpr))
         .repartition(col("__graft_unit"))
         .write.partitionBy("__graft_unit").mode("overwrite")
@@ -1218,25 +1148,9 @@ object GraftMaintenance {
           .map(p => p.getPath -> new Path(target,
             s"part-migrate-${UUID.randomUUID().toString.take(12)}.parquet"))
       }
-    val landed = landRewrite(spark, fs, dir, base, stale.toSet, moves,
-      staging)(physicalSchemaOf(fs, dir, props))
+    val landed = landRewrite(spark, fs, table, base, stale.toSet, moves,
+      staging)(table.ioSchema)
     (stale.size, landed.size)
-  }
-
-  private def tableDirOf(spark: SparkSession, catalog: String,
-                         table: String): String = {
-    val parts = table.split('.')
-    val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
-      parts.init, parts.last)
-    org.apache.spark.sql.graftbridge.Bridge.catalogPlugin(spark, catalog) match {
-      case g: GraftCatalog => g.loadTable(ident) match {
-        case t: GraftTable => t.dir
-        case other => throw new IllegalArgumentException(
-          s"purge: $catalog.$table is ${other.getClass.getName}")
-      }
-      case other => throw new IllegalArgumentException(
-        s"purge: catalog $catalog is ${other.getClass.getName}")
-    }
   }
 }
 

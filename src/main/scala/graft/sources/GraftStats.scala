@@ -685,26 +685,16 @@ object GraftStats {
     * preserved), and appends the enriched entries (the log's last-wins
     * order supersedes the sparse ones). Returns files enriched.
     */
-  def analyzeNdv(spark: SparkSession, dir: Path): Int = {
+  def analyzeNdv(spark: SparkSession, table: GraftTable): Int = {
+    val dir = new Path(table.dir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    val schema = GraftTable.readTableSchema(fs, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"analyzeNdv: $dir is not a graft catalog table"))
-    val pcols = props.get(GraftTable.PartitionProp)
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    val eligible = schema.fields.toSeq
-      .filterNot(f => pcols.contains(f.name))
+    val eligible = table.physicalSchema.fields.toSeq
       .filter(f => kindOf(f.dataType) match {
         case KindLong | KindDouble | KindString | KindDecimal => true
         case _ => false
       })
     if (eligible.isEmpty) return 0
-    val files =
-      if (props.get(GraftTable.HistoryProp).contains("true"))
-        GraftTable.manifestVersions(fs, dir).lastOption
-          .map(GraftTable.readManifest(fs, dir, _)).getOrElse(Nil)
-      else GraftTable.dataFiles(fs, dir)
+    val files = table.currentDataFiles(fs)
     val have = readAll(fs, dir)
     // a file needs the pass when any eligible column lacks EITHER sketch
     // kind it should carry — the NDV or (round 13) its quantile twin
@@ -721,7 +711,7 @@ object GraftStats {
     }
     if (missing.isEmpty) return 0
     val readSchema = StructType(eligible)
-    val aliases = GraftEvolution.aliasesOf(props)
+    val aliases = table.aliases
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     val names = eligible.map(_.name).toArray
     val dts = eligible.map(_.dataType).toArray

@@ -23,22 +23,6 @@ import org.apache.spark.sql.functions.{col, expr}
   */
 object GraftWap {
 
-  private def loadTable(spark: SparkSession, catalog: String,
-                        table: String): GraftTable = {
-    val parts = table.split('.')
-    val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
-      parts.init, parts.last)
-    org.apache.spark.sql.graftbridge.Bridge.catalogPlugin(spark, catalog) match {
-      case g: GraftCatalog => g.loadTable(ident) match {
-        case t: GraftTable => t
-        case other => throw new IllegalArgumentException(
-          s"WAP: $catalog.$table is ${other.getClass.getName}")
-      }
-      case other => throw new IllegalArgumentException(
-        s"WAP: catalog $catalog is ${other.getClass.getName}, not a GraftCatalog")
-    }
-  }
-
   private def wapDir(t: GraftTable, token: String) =
     new Path(t.dir, s".wap-$token")
 
@@ -53,7 +37,7 @@ object GraftWap {
     */
   def stage(spark: SparkSession, catalog: String, table: String,
             df: DataFrame): String = {
-    val t = loadTable(spark, catalog, table)
+    val t = GraftTable.load(spark, catalog, table)
     require(t.history,
       s"WAP on $catalog.$table needs a history table — the manifest log is " +
         "what makes staged files invisible (TBLPROPERTIES('history'='true'))")
@@ -77,7 +61,7 @@ object GraftWap {
     */
   def audit(spark: SparkSession, catalog: String, table: String,
             token: String): DataFrame = {
-    val t = loadTable(spark, catalog, table)
+    val t = GraftTable.load(spark, catalog, table)
     spark.table(s"$catalog.$table")
       .unionByName(staged(spark, t, token))
   }
@@ -85,7 +69,7 @@ object GraftWap {
   /** Just the staged rows (for audits scoped to the new batch). */
   def stagedBatch(spark: SparkSession, catalog: String, table: String,
                   token: String): DataFrame =
-    staged(spark, loadTable(spark, catalog, table), token)
+    staged(spark, GraftTable.load(spark, catalog, table), token)
 
   private def staged(spark: SparkSession, t: GraftTable,
                      token: String): DataFrame =
@@ -96,7 +80,7 @@ object GraftWap {
     */
   def checkViolations(spark: SparkSession, catalog: String, table: String,
                       token: String): DataFrame = {
-    val t = loadTable(spark, catalog, table)
+    val t = GraftTable.load(spark, catalog, table)
     val batch = staged(spark, t, token)
     val conds = t.checks.map { case (_, text) => expr(s"($text) <=> false") } ++
       t.schema().fields.filterNot(_.nullable).toSeq
@@ -121,7 +105,7 @@ object GraftWap {
     */
   def publish(spark: SparkSession, catalog: String, table: String,
               token: String): Long = {
-    val t = loadTable(spark, catalog, table)
+    val t = GraftTable.load(spark, catalog, table)
     val nBad = checkViolations(spark, catalog, table, token).count()
     require(nBad == 0,
       s"WAP publish refused: $nBad staged row(s) violate $catalog.$table's " +
@@ -169,7 +153,7 @@ object GraftWap {
   /** Discard the staged batch — no commit happened, nothing to undo. */
   def abort(spark: SparkSession, catalog: String, table: String,
             token: String): Unit = {
-    val t = loadTable(spark, catalog, table)
+    val t = GraftTable.load(spark, catalog, table)
     fsOf(spark, t).delete(wapDir(t, token), true)
   }
 }

@@ -104,16 +104,15 @@ private[sources] object GraftWriteJob {
     * columns are recomputed instead of enforced, and carried rows arrive
     * through the two-arg write with the metadata row shaped by
     * requiredMetadataAttributes — `[_file, _row_id]` on a lineage table,
-    * so the carried id sits at index 1.
+    * so the carried id sits at index 1. Layout, constraints and
+    * index-on-write columns are the loaded table's: a streaming sink
+    * writes every epoch with those it was started with.
     */
   def writerFactory(table: GraftTable, writeSchema: StructType,
                     stagingDir: Path, conf: Configuration,
                     alloc: Allocation, rewrite: Boolean): GraftWriterFactory = {
     val spark = SparkSession.active
-    val physical = table.physicalSchema
-    val ioSchema =
-      if (table.rowLineage) GraftRowId.ioSchema(physical) else physical
-    val proj = physical.fields.map(f =>
+    val proj = table.physicalSchema.fields.map(f =>
       if (table.identity.exists(_.col == f.name) &&
           !writeSchema.fieldNames.contains(f.name)) -1
       else writeSchema.fieldIndex(f.name)) ++
@@ -121,7 +120,7 @@ private[sources] object GraftWriteJob {
         Array(writeSchema.fieldNames.indexOf(GraftRowId.Col))
       else Array.empty[Int])
     val (bucket, day) = layout(table, writeSchema)
-    new GraftWriterFactory(stagingDir.toString, ioSchema, writeSchema, proj,
+    new GraftWriterFactory(stagingDir.toString, table.ioSchema, writeSchema, proj,
       table.partitionFields,
       table.partitionFields.map(f => writeSchema.fieldIndex(f.name)).toArray,
       new SerializableHadoopConf(conf), bucket,
@@ -129,9 +128,7 @@ private[sources] object GraftWriteJob {
       day, alloc.idGen,
       GraftGenerated.boundGenerators(spark, table, writeSchema),
       genStrict = !rewrite,
-      indexCols = GraftBloom.indexOnWriteCols(
-        GraftTable.readProps(stagingDir.getFileSystem(conf), new Path(table.dir)),
-        physical),
+      indexCols = table.indexOnWriteCols,
       rowGen = alloc.rowGen,
       metaRowIdIdx = if (table.rowLineage && rewrite) 1 else -1)
   }

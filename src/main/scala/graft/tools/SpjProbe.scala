@@ -91,8 +91,9 @@ object SpjProbe {
     spark.read.parquet(s"$wh/plain_dim").createOrReplaceTempView("pd")
     time("shuffled", spark.sql(q.format("pf", "pd")))
     time("spj", spark.sql(q.format("graft_spj.db.fact", "graft_spj.db.dim")))
-    graft.sources.GraftMaintenance.compactBucketedTable(spark, s"$wh/db/fact")
-    graft.sources.GraftMaintenance.compactBucketedTable(spark, s"$wh/db/dim")
+    for (t <- Seq("db.fact", "db.dim"))
+      graft.sources.GraftMaintenance.compactBucketedTable(spark,
+        graft.sources.GraftTable.load(spark, "graft_spj", t))
     time("spj-sorted", spark.sql(q.format("graft_spj.db.fact", "graft_spj.db.dim")))
 
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(wh))

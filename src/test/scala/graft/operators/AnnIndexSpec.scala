@@ -289,11 +289,12 @@ class AnnIndexSpec extends SparkSpec {
     // Art. 17 erasure of subject ids 60..79 — purge vacuums to the head
     // snapshot, so the changes window is GONE and maintenance must fall
     // back to the id sweep
+    val emb5 = graft.sources.GraftTable.load(spark, "graft_ann", "db.emb5")
     val purged = graft.sources.GraftMaintenance.purge(spark, "graft_ann",
-      "db.emb5", "vec_id >= 60 AND vec_id < 80")
+      emb5, "vec_id >= 60 AND vec_id < 80")
     assert(purged == 20)
     assert(graft.sources.GraftMaintenance.purgedCompletely(spark,
-      "graft_ann", "db.emb5", "vec_id >= 60 AND vec_id < 80"))
+      emb5, "vec_id >= 60 AND vec_id < 80"))
     val opt = sql("""SELECT * FROM graft_ann_optimize('graft_ann', 'db.emb5',
         |'db.knn5', 'vec_id', 'embedding', 'label', 3)""".stripMargin).collect()(0)
     assert(opt.getLong(3) == 20, s"the sweep must find the purged ids: $opt")

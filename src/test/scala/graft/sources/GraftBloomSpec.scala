@@ -45,7 +45,8 @@ class GraftBloomSpec extends SparkSpec {
     assert(planned(probe) == total,
       s"pre-index, the id ranges overlap every file — all $total planned")
 
-    val indexed = GraftBloom.buildIndex(spark, s"$warehouse/db/t", Seq("id"))
+    val indexed = GraftBloom.buildIndex(spark,
+      TestTables.at(s"$warehouse/db/t"), Seq("id"))
     assert(indexed == total)
     val probe2 = spark.table("graft_bl.db.t").where(col("id") === 4321)
     assert(planned(probe2) < total,
@@ -84,7 +85,7 @@ class GraftBloomSpec extends SparkSpec {
   test("new writes after the build are never pruned (no index entry)") {
     sql("CREATE TABLE graft_bl.db.n (id BIGINT)")
     spark.range(0, 100).toDF("id").writeTo("graft_bl.db.n").append()
-    GraftBloom.buildIndex(spark, s"$warehouse/db/n", Seq("id"))
+    GraftBloom.buildIndex(spark, TestTables.at(s"$warehouse/db/n"), Seq("id"))
     spark.range(100000, 100100).toDF("id").writeTo("graft_bl.db.n").append()
     // the new file has no bloom entry: a lookup landing in it must succeed
     assert(spark.table("graft_bl.db.n").where(col("id") === 100042L)
@@ -96,12 +97,12 @@ class GraftBloomSpec extends SparkSpec {
     spark.range(0, 500).toDF("id")
       .withColumn("v", concat(lit("x"), col("id")))
       .writeTo("graft_bl.db.rw").append()
-    GraftBloom.buildIndex(spark, s"$warehouse/db/rw", Seq("id"))
+    GraftBloom.buildIndex(spark, TestTables.at(s"$warehouse/db/rw"), Seq("id"))
     val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/rw")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     assert(GraftBloom.readAll(fs, dir).nonEmpty)
     // compaction rewrites under fresh names → old entries retire
-    GraftMaintenance.compactTable(spark, s"$warehouse/db/rw")
+    GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/rw"))
     val after = GraftBloom.readAll(fs, dir)
     val live = GraftTable.dataFiles(fs, dir)
       .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
@@ -110,7 +111,7 @@ class GraftBloomSpec extends SparkSpec {
     assert(spark.table("graft_bl.db.rw").count() == 500)
 
     intercept[IllegalArgumentException](
-      GraftBloom.buildIndex(spark, s"$warehouse/db/rw", Seq("nope")))
+      GraftBloom.buildIndex(spark, TestTables.at(s"$warehouse/db/rw"), Seq("nope")))
   }
 
   test("existence-default columns never bloom-prune (pre-add files serve the default)") {
@@ -122,7 +123,7 @@ class GraftBloomSpec extends SparkSpec {
     // the index build reads raw file bytes — pre-add files have no w, so
     // their bloom for w is EMPTY even though the scan serves w=5 for
     // every row; an unsound pruner would 'prove' absence and drop them
-    GraftBloom.buildIndex(spark, s"$warehouse/db/ed", Seq("w", "id"))
+    GraftBloom.buildIndex(spark, TestTables.at(s"$warehouse/db/ed"), Seq("w", "id"))
     // precondition making this a real regression test: the index DOES
     // carry (file, w) entries for the pre-add files — the hazard exists
     val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/ed")
@@ -221,7 +222,7 @@ class GraftBloomSpec extends SparkSpec {
 
     // non-string columns refuse loudly
     intercept[IllegalArgumentException](
-      GraftBloom.buildTrigramIndex(spark, s"$warehouse/db/tr", Seq("id")))
+      GraftBloom.buildTrigramIndex(spark, TestTables.at(s"$warehouse/db/tr"), Seq("id")))
   }
 
   test("index-on-write: declared columns prune from the first commit") {
@@ -292,7 +293,7 @@ class GraftBloomSpec extends SparkSpec {
     val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/cr")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     // compact to ONE clustered file set under fresh names
-    GraftMaintenance.compactTable(spark, s"$warehouse/db/cr",
+    GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/cr"),
       sortCols = Seq("grp"))
     val live = GraftTable.dataFiles(fs, dir)
       .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
@@ -316,7 +317,7 @@ class GraftBloomSpec extends SparkSpec {
           |TBLPROPERTIES('history'='true')""".stripMargin)
     spark.range(0, 2000).toDF("id").withColumn("grp", col("id") % 32)
       .repartition(4, col("grp")).writeTo("graft_bl.db.h").append()
-    val n = GraftBloom.buildIndex(spark, s"$warehouse/db/h", Seq("id"))
+    val n = GraftBloom.buildIndex(spark, TestTables.at(s"$warehouse/db/h"), Seq("id"))
     assert(n >= 2)
     val q = spark.table("graft_bl.db.h").where(col("id") === 777)
     assert(planned(q) < n && q.count() == 1)

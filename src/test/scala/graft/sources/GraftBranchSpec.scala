@@ -125,15 +125,16 @@ class GraftBranchSpec extends SparkSpec {
     val before = GraftTable.dataFiles(fs, dir).size
     // purge refuses while the branch lives
     val pe = intercept[Exception](
-      GraftMaintenance.purge(spark, "graft_br", "db.r", "id < 5"))
+      GraftMaintenance.purge(spark, "graft_br",
+        GraftTable.load(spark, "graft_br", "db.r"), "id < 5"))
     assert(pe.getMessage.contains("branch"))
     // vacuum keepLast=1 may expire main v1 but must keep the branch base
     // (v2) and every branch-referenced file
-    GraftMaintenance.vacuum(spark, dir.toString, keepLast = 1)
+    GraftMaintenance.vacuum(spark, TestTables.at(dir), keepLast = 1)
     assert(spark.table("graft_br.db.r.branch_tmp").count() == 90,
       "vacuum tore the branch")
     // orphan cleanup (grace 0) must not take branch files either
-    GraftMaintenance.removeOrphans(spark, dir.toString, graceMillis = 0L)
+    GraftMaintenance.removeOrphans(spark, TestTables.at(dir), graceMillis = 0L)
     assert(spark.table("graft_br.db.r.branch_tmp").count() == 90)
     val r = sql(
       "SELECT * FROM graft_drop_branch('graft_br', 'db.r', 'tmp')")

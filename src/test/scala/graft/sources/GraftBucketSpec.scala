@@ -167,7 +167,7 @@ class GraftBucketSpec extends SparkSpec {
     val before = listFiles("fact")
     assert(before.size > 4, s"need multiple files per bucket, got $before")
     val (nBefore, nAfter) =
-      GraftMaintenance.compactBucketedTable(spark, s"$warehouse/db/fact")
+      GraftMaintenance.compactBucketedTable(spark, TestTables.at(s"$warehouse/db/fact"))
     assert(nBefore == before.size && nAfter == 4,
       s"compaction should leave one file per bucket: $nBefore -> $nAfter")
     val files = listFiles("fact")
@@ -218,7 +218,7 @@ class GraftBucketSpec extends SparkSpec {
       assert(j2.count() == 4400)
     }
     // per-bucket compaction restores the single sorted file and the claim
-    GraftMaintenance.compactBucketedTable(spark, s"$warehouse/db/sf")
+    GraftMaintenance.compactBucketedTable(spark, TestTables.at(s"$warehouse/db/sf"))
     noBroadcast {
       val j3 = sql("""SELECT f.k, f.amt, d.tag FROM graft_bk.db.sf f
                      |JOIN graft_bk.db.sd d ON f.k = d.k""".stripMargin)

@@ -126,7 +126,7 @@ class GraftCatalogSpec extends SparkSpec {
     }
     assert(listFiles("t5").size == 5)
     val (before, after) = GraftMaintenance.compactTable(
-      spark, s"$warehouse/db/t5", targetBytes = 1L << 30)
+      spark, TestTables.at(s"$warehouse/db/t5"), targetBytes = 1L << 30)
     assert(before == 5 && after == 1, s"$before -> $after")
     assert(listFiles("t5").size == 1)
     assert(sql("SELECT count(*), sum(id) FROM graft_test.db.t5").head().toSeq
@@ -159,7 +159,8 @@ class GraftCatalogSpec extends SparkSpec {
     val dirF = new java.io.File(s"$warehouse/db/h")
     def manifests() = dirF.listFiles().count(_.getName.startsWith("_graft_manifest_"))
     assert(manifests() == 4)
-    val (mGone, fGone) = GraftMaintenance.vacuum(spark, s"$warehouse/db/h", keepLast = 1)
+    val (mGone, fGone) = GraftMaintenance.vacuum(spark,
+      TestTables.at(s"$warehouse/db/h"), keepLast = 1)
     assert(mGone == 3 && fGone >= 1, s"$mGone manifests, $fGone files")
     assert(manifests() == 1)
     // current snapshot unaffected; expired version now errors
@@ -196,7 +197,7 @@ class GraftCatalogSpec extends SparkSpec {
     val total = new java.io.File(dir).listFiles()
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
       .map(_.length()).sum
-    val (_, nAfter) = GraftMaintenance.compactTable(spark, dir,
+    val (_, nAfter) = GraftMaintenance.compactTable(spark, TestTables.at(dir),
       targetBytes = math.max(1L, total / 16), zorderCols = Seq("a", "b"))
     assert(nAfter >= 8, s"expected a multi-file z-layout, got $nAfter files")
     def planned(pred: String): Int =
@@ -284,7 +285,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(sql("SELECT count(*) FROM graft_test.db.rb WHERE v = 'BAD'")
       .head().getLong(0) == 7)
     // roll back to the pre-update snapshot (v1 create, v2 insert, v3 bad)
-    val newV = GraftMaintenance.restore(spark, s"$warehouse/db/rb", 2L)
+    val newV = GraftMaintenance.restore(spark, TestTables.at(s"$warehouse/db/rb"), 2L)
     assert(newV == 4L)
     // live table is the restored state...
     assert(sql("SELECT count(*) FROM graft_test.db.rb WHERE v = 'BAD'")
@@ -304,7 +305,7 @@ class GraftCatalogSpec extends SparkSpec {
       .head().getLong(0) == 7)
     // unknown version / non-history table fail loudly
     intercept[IllegalArgumentException] {
-      GraftMaintenance.restore(spark, s"$warehouse/db/rb", 99L)
+      GraftMaintenance.restore(spark, TestTables.at(s"$warehouse/db/rb"), 99L)
     }
   }
 
@@ -425,7 +426,8 @@ class GraftCatalogSpec extends SparkSpec {
     val total = listFiles("cc").map(n =>
       new java.io.File(s"$warehouse/db/cc/$n").length).sum
     val (before, after) = GraftMaintenance.compactTable(
-      spark, s"$warehouse/db/cc", targetBytes = total / 3 + 1, sortCols = Seq("id"))
+      spark, TestTables.at(s"$warehouse/db/cc"),
+      targetBytes = total / 3 + 1, sortCols = Seq("id"))
     assert(before == 4 && after >= 2, s"$before -> $after")
     // per-file id ranges are pairwise disjoint after the range-clustered
     // rewrite — exactly what lets min/max stats skip whole files

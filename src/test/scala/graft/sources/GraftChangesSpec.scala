@@ -119,7 +119,7 @@ class GraftChangesSpec extends SparkSpec {
     sql("INSERT INTO graft_cdf.db.c SELECT id, id FROM range(0, 50)")
     sql("INSERT INTO graft_cdf.db.c SELECT id, id FROM range(50, 100)")
     val dir = s"$warehouse/db/c"
-    val (before, after) = GraftMaintenance.compactTable(spark, dir)
+    val (before, after) = GraftMaintenance.compactTable(spark, TestTables.at(dir))
     assert(before > after, s"compaction should fold files ($before -> $after)")
     val vCompact = graft.plans.MatView.currentVersion(spark, dir)
     val changes = spark.table("graft_cdf.db.c.changes")
@@ -154,7 +154,7 @@ class GraftChangesSpec extends SparkSpec {
     sql("INSERT INTO graft_cdf.db.kc SELECT id, id FROM range(50, 100)")
     val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/kc")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    GraftMaintenance.compactTable(spark, dir.toString)
+    GraftMaintenance.compactTable(spark, TestTables.at(dir))
     val vCompact = GraftTable.manifestVersions(fs, dir).last
     // the kind rides the manifest itself: no crash can land the rewrite
     // without it and replay the ENTIRE table as spurious change images
@@ -208,14 +208,14 @@ class GraftChangesSpec extends SparkSpec {
           |TBLPROPERTIES('history'='true')""".stripMargin)
     sql("INSERT INTO graft_cdf.db.r SELECT id, id FROM range(0, 30)") // v2
     sql("UPDATE graft_cdf.db.r SET v = -1 WHERE id < 10") // v3 (the mistake)
-    GraftMaintenance.restore(spark, s"$warehouse/db/r", 2L) // v4
+    GraftMaintenance.restore(spark, TestTables.at(s"$warehouse/db/r"), 2L) // v4
     val changes = spark.table("graft_cdf.db.r.changes")
     val folded = foldTo(changes, spark.table("graft_cdf.db.r").limit(0))
     assert(sameRows(folded, spark.table("graft_cdf.db.r")),
       "a restore commit's images must restate the rollback")
     assert(sameRows(folded, spark.range(0, 30).selectExpr("id", "id AS v")))
 
-    GraftMaintenance.vacuum(spark, s"$warehouse/db/r", keepLast = 1)
+    GraftMaintenance.vacuum(spark, TestTables.at(s"$warehouse/db/r"), keepLast = 1)
     // earliest retained snapshot becomes the baseline: no images remain
     assert(spark.table("graft_cdf.db.r.changes").count() == 0)
     // and the table itself still reads
@@ -229,7 +229,8 @@ class GraftChangesSpec extends SparkSpec {
     sql("INSERT INTO graft_cdf.db.ru SELECT id, concat('v1-', id) FROM range(0, 20)") // v2
     GraftEqDelete.upsert(spark, "graft_cdf", "db.ru",
       Seq((3L, "v2-3"), (100L, "v2-100")).toDF("k", "v"), Seq("k")) // v3 eqdelta
-    GraftMaintenance.restore(spark, s"$warehouse/db/ru", 2L) // v4 shrinks eq set
+    GraftMaintenance.restore(spark,
+      TestTables.at(s"$warehouse/db/ru"), 2L) // v4 shrinks eq set
     val changes = spark.table("graft_cdf.db.ru.changes")
     // the unmasking must emit an INSERT image for the resurrected row —
     // without it the fold contract silently breaks after the restore
@@ -352,7 +353,7 @@ class GraftChangesSpec extends SparkSpec {
       sql(s"INSERT INTO graft_cdf.db.pw SELECT id, id FROM range(${i * 25}, ${i * 25 + 25})")
     val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/pw")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    GraftMaintenance.compactTable(spark, dir.toString)
+    GraftMaintenance.compactTable(spark, TestTables.at(dir))
     val vc = GraftTable.manifestVersions(fs, dir).last
     assert(vc == 6L && GraftTable.commitKind(fs, dir, vc).contains(GraftTable.KindCompact))
 
@@ -385,7 +386,7 @@ class GraftChangesSpec extends SparkSpec {
 
     // after a vacuum a window starting before the earliest retained
     // version is clamped to it; the baseline still contributes nothing
-    GraftMaintenance.vacuum(spark, dir.toString, keepLast = 3)
+    GraftMaintenance.vacuum(spark, TestTables.at(dir), keepLast = 3)
     val kept = GraftTable.manifestVersions(fs, dir)
     assert(kept.head > 2L, kept)
     for (lo <- Seq(0L, 1L, kept.head - 1, kept.head)) {

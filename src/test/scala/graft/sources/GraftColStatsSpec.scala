@@ -103,7 +103,7 @@ class GraftColStatsSpec extends SparkSpec {
     sql("CREATE TABLE graft_cs.db.cp (id BIGINT)")
     spark.range(0, 2000).toDF("id").writeTo("graft_cs.db.cp").append()
     assert(distinctOf(scanStats("graft_cs.db.cp"), "id").nonEmpty)
-    GraftMaintenance.compactTable(spark, s"$warehouse/db/cp")
+    GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/cp"))
     // footer-lifted entries carry no NDV: refuse rather than under-estimate
     assert(distinctOf(scanStats("graft_cs.db.cp"), "id").isEmpty,
       "post-compaction files have no sketches — no estimate beats a wrong one")
@@ -307,7 +307,7 @@ class GraftColStatsSpec extends SparkSpec {
     // compaction loses ALL sketches conservatively; one analyze pass now
     // rebuilds the quantile twins (string items + decimal doubles)
     // alongside the NDVs
-    GraftMaintenance.compactTable(spark, s"$warehouse/db/rng2")
+    GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/rng2"))
     assert(GraftStats.headRangeEstimateStr(fs, dir, "s",
       Some(("2", true)), Some(("5", true))).isEmpty,
       "post-compaction files carry no sketches — refuse, don't guess")

@@ -298,7 +298,7 @@ class GraftCommitProtocolSpec extends SparkSpec {
       sql("INSERT INTO graft_kinds.db.t SELECT id, id FROM range(0, 50)"))
     sql("INSERT INTO graft_kinds.db.t SELECT id, id FROM range(50, 100)")
     verb("compactTable", "t")(
-      GraftMaintenance.compactTable(spark, s"$wh/db/t"))
+      GraftMaintenance.compactTable(spark, TestTables.at(s"$wh/db/t")))
     verb("COW UPDATE", "t")(
       sql("UPDATE graft_kinds.db.t SET v = v + 1 WHERE id < 10"))
     verb("COW MERGE", "t")(sql(
@@ -311,7 +311,7 @@ class GraftCommitProtocolSpec extends SparkSpec {
     verb("eq-upsert", "t")(GraftEqDelete.upsert(spark, "graft_kinds", "db.t",
       spark.range(70, 90).selectExpr("id", "id * 3 AS v"), Seq("id")))
     verb("restore", "t")(
-      GraftMaintenance.restore(spark, s"$wh/db/t", vInsert))
+      GraftMaintenance.restore(spark, TestTables.at(s"$wh/db/t"), vInsert))
     verb("clone", "tc")(
       GraftClone.clone(spark, s"$wh/db/t", s"$wh/db/tc", shallow = false))
     verb("WAP publish", "t") {

@@ -130,12 +130,13 @@ class GraftComplexTypesSpec extends SparkSpec {
       s"stats must cover scalars only, got ${st.values.headOption.map(_.cols.keys)}")
     // bloom build on a non-scalar column refuses loudly
     val e = intercept[Exception](
-      GraftBloom.buildIndex(spark, s"$warehouse/db/guard", Seq("embedding")))
+      GraftBloom.buildIndex(spark,
+        TestTables.at(s"$warehouse/db/guard"), Seq("embedding")))
     assert(e.getMessage != null)
     // NDV/stats backfills skip non-scalars without failing the table
-    GraftMaintenance.analyzeTable(spark, s"$warehouse/db/guard")
+    GraftMaintenance.analyzeTable(spark, TestTables.at(s"$warehouse/db/guard"))
     GraftStats.analyzeNdv(spark,
-      new org.apache.hadoop.fs.Path(s"$warehouse/db/guard"))
+      TestTables.at(new org.apache.hadoop.fs.Path(s"$warehouse/db/guard")))
     // scans still read correctly after the maintenance passes
     assert(spark.table("graft_cx.db.guard").count() == 30)
   }

@@ -218,7 +218,7 @@ class GraftConcurrencySpec extends SparkSpec {
     val dir = new Path(s"$warehouse/db/cf")
     GraftTable.interposeOnce(dir)(
       sql("INSERT INTO graft_cc.db.cf SELECT id, 'raced' FROM range(1000, 1020)"))
-    GraftMaintenance.compactTable(spark, dir.toString)
+    GraftMaintenance.compactTable(spark, TestTables.at(dir))
     assert(!GraftTable.interposePending(dir), "interposer must fire")
     val f = fs(dir)
     assert(GraftTable.commitKind(f, dir, GraftTable.readHead(f, dir, None).version)
@@ -239,7 +239,7 @@ class GraftConcurrencySpec extends SparkSpec {
     rows(50, 100, "base")
     val dir = new Path(s"$warehouse/db/cd")
     GraftTable.interposeOnce(dir)(rows(1000, 1020, "raced"))
-    assert(GraftMaintenance.compactDayTable(spark, dir.toString) == (4, 2))
+    assert(GraftMaintenance.compactDayTable(spark, TestTables.at(dir)) == (4, 2))
     assert(!GraftTable.interposePending(dir), "interposer must fire")
     assert(counts("cd") == Map("base" -> 100L, "raced" -> 20L),
       s"the raced append must survive the compaction: ${counts("cd")}")
@@ -254,7 +254,7 @@ class GraftConcurrencySpec extends SparkSpec {
     val dir = new Path(s"$warehouse/db/cu")
     GraftTable.interposeOnce(dir)(
       sql("UPDATE graft_cc.db.cu SET v = 'won' WHERE id % 10 = 7"))
-    val e = intercept[Exception](GraftMaintenance.compactTable(spark, dir.toString))
+    val e = intercept[Exception](GraftMaintenance.compactTable(spark, TestTables.at(dir)))
     assert(chain(e).exists(_.contains("concurrent update conflict")),
       s"expected a loud conflict, got: ${chain(e).mkString(" | ")}")
     assert(counts("cu") == Map("base" -> 90L, "won" -> 10L),
@@ -268,7 +268,7 @@ class GraftConcurrencySpec extends SparkSpec {
     sql("INSERT INTO graft_cc.db.md SELECT id, 'base' FROM range(0, 50)")
     sql("INSERT INTO graft_cc.db.md SELECT id, 'base' FROM range(50, 100)")
     val dir = new Path(s"$warehouse/db/md")
-    GraftTable.interposeOnce(dir)(GraftMaintenance.compactTable(spark, dir.toString))
+    GraftTable.interposeOnce(dir)(GraftMaintenance.compactTable(spark, TestTables.at(dir)))
     val e = intercept[Exception](sql("DELETE FROM graft_cc.db.md WHERE id % 10 = 3"))
     assert(!GraftTable.interposePending(dir), "interposer must fire")
     assert(chain(e).exists(_.contains("concurrent update conflict")),

@@ -137,9 +137,9 @@ class GraftDayPartitionSpec extends SparkSpec {
     val tdir = s"$warehouse/db/cmp"
     // bulk compaction must refuse (it would flatten the layout)
     val e = intercept[IllegalArgumentException](
-      GraftMaintenance.compactTable(spark, tdir))
+      GraftMaintenance.compactTable(spark, TestTables.at(tdir)))
     assert(e.getMessage.contains("compactDayTable"))
-    val (before, after) = GraftMaintenance.compactDayTable(spark, tdir)
+    val (before, after) = GraftMaintenance.compactDayTable(spark, TestTables.at(tdir))
     assert(before == 4 && after == 2, s"got ($before, $after)")
     val day1 = spark.table("graft_day.db.cmp")
       .where(col("ts") < lit("2026-08-02 00:00:00").cast("timestamp"))
@@ -192,7 +192,8 @@ class GraftDayPartitionSpec extends SparkSpec {
     // compaction is unit-aware: the clustered write left ONE file per
     // month per insert (3 + 1), and the second Feb file folds away
     sql("INSERT INTO graft_day.db.mo VALUES (5, TIMESTAMP '2028-02-15 12:00:00')")
-    val (b, a) = GraftMaintenance.compactDayTable(spark, s"$warehouse/db/mo")
+    val (b, a) = GraftMaintenance.compactDayTable(spark,
+      TestTables.at(s"$warehouse/db/mo"))
     assert(b == 4 && a == 3, s"got ($b, $a)")
     assert(planned(spark.table("graft_day.db.mo")
       .where(col("ts") >= lit("2028-02-01 00:00:00").cast("timestamp") &&

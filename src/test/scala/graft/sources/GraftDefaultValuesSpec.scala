@@ -80,7 +80,7 @@ class GraftDefaultValuesSpec extends SparkSpec {
     assert(t.where(col("score") === 0).count() == 5)
     assert(t.where(col("score") === 5).count() == 495)
     // compaction lands files that PHYSICALLY carry the value
-    GraftMaintenance.compactTable(spark, s"$warehouse/db/c")
+    GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/c"))
     val (fs, dir) = {
       val p = new org.apache.hadoop.fs.Path(s"$warehouse/db/c")
       (p.getFileSystem(spark.sessionState.newHadoopConf()), p)

@@ -131,22 +131,24 @@ class GraftEqDeleteSpec extends SparkSpec {
       Seq((7L, "zzsecret@erase.example")).toDF("k", "email"), Seq("k"))
     assert(entries("t4").exists(_.eqs.nonEmpty))
     // fold: masks disappear, state identical, commit kind = compact
-    val folded = GraftEqDelete.materializeEqDeletes(spark, s"$warehouse/db/t4")
+    val folded = GraftEqDelete.materializeEqDeletes(spark,
+      TestTables.at(s"$warehouse/db/t4"))
     assert(folded >= 1)
     assert(entries("t4").forall(_.eqs.isEmpty))
     assert(spark.table("graft_eq.db.t4").count() == 50)
     assert(spark.table("graft_eq.db.t4").where(col("k") === 7)
       .collect().head.getString(1) == "zzsecret@erase.example")
     // vacuum destroys the now-unreferenced eq sidecar
-    GraftMaintenance.vacuum(spark, s"$warehouse/db/t4", keepLast = 1)
+    GraftMaintenance.vacuum(spark, TestTables.at(s"$warehouse/db/t4"), keepLast = 1)
     assert(eqFilesOnDisk("t4").isEmpty,
       "vacuum must expire unreferenced equality sidecars")
     // purge the secret: raw-byte erasure must extend to KEY bytes
     GraftEqDelete.upsert(spark, "graft_eq", "db.t4",
       Seq((7L, "zzsecret@erase.example")).toDF("k", "email"), Seq("k"))
-    GraftMaintenance.purge(spark, "graft_eq", "db.t4",
+    val t4 = GraftTable.load(spark, "graft_eq", "db.t4")
+    GraftMaintenance.purge(spark, "graft_eq", t4,
       "email = 'zzsecret@erase.example'")
-    assert(GraftMaintenance.purgedCompletely(spark, "graft_eq", "db.t4",
+    assert(GraftMaintenance.purgedCompletely(spark, t4,
       "email = 'zzsecret@erase.example'"))
     assert(eqFilesOnDisk("t4").isEmpty,
       "purge must destroy equality sidecars (they hold raw key bytes)")
@@ -217,7 +219,7 @@ class GraftEqDeleteSpec extends SparkSpec {
     assert(e.getMessage.contains("PARTITION"), e.getMessage)
     // the fold rewrites masked files IN their partitions and drops masks
     val before = t.orderBy("k").collect().toSeq
-    GraftEqDelete.materializeEqDeletes(spark, dir.toString)
+    GraftEqDelete.materializeEqDeletes(spark, TestTables.at(dir))
     val after = spark.table("graft_eq.db.pt")
     assert(after.orderBy("k").collect().toSeq == before)
     assert(headFiles.forall(_.contains("seg=")), headFiles.mkString("\n"))
@@ -282,7 +284,7 @@ class GraftEqDeleteSpec extends SparkSpec {
       .collect().head.getString(2) == "c2")
     // the fold rewrites masked files IN their day dirs and drops masks
     val before = spark.table("graft_eq.db.dt").orderBy("k").collect().toSeq
-    GraftEqDelete.materializeEqDeletes(spark, dir.toString)
+    GraftEqDelete.materializeEqDeletes(spark, TestTables.at(dir))
     assert(spark.table("graft_eq.db.dt").orderBy("k").collect().toSeq == before)
     assert(headFiles.forall(_.contains("ts_day=")), headFiles.mkString("\n"))
     assert(GraftTable.readFullEntries(fs, dir,
@@ -336,7 +338,7 @@ class GraftEqDeleteSpec extends SparkSpec {
     // the fold keeps bucket-claimed names (rewrites prepend the source
     // name) and drops masks
     val before = t.orderBy("k").collect().toSeq
-    GraftEqDelete.materializeEqDeletes(spark, dir.toString)
+    GraftEqDelete.materializeEqDeletes(spark, TestTables.at(dir))
     assert(spark.table("graft_eq.db.bk").orderBy("k").collect().toSeq
       == before)
     GraftTable.readFullEntries(fs, dir,
@@ -537,7 +539,7 @@ class GraftEqDeleteSpec extends SparkSpec {
     * and left no mask reference behind.
     */
   private def assertCompactionKeepsUpserts(t: String, ts: Boolean)(
-      compact: String => Unit): Unit = {
+      compact: GraftTable => Unit): Unit = {
     val tsCol =
       if (ts) ", timestamp'2024-03-01 00:00:00' + " +
         "make_interval(0, 0, 0, CAST(id % 2 AS INT), 0, 0, 0) AS ts"
@@ -554,7 +556,7 @@ class GraftEqDeleteSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val before = visible
     assert(before.size == 80 && before(15) == "new15" && before(55) == "new55")
-    compact(dirOf(t).toString)
+    compact(TestTables.at(dirOf(t)))
     val after = spark.table(s"graft_eq.db.$t").count()
     assert(after == 80, s"compaction must not resurrect masked rows: $after rows")
     assert(visible == before)
@@ -644,7 +646,7 @@ class GraftEqDeleteSpec extends SparkSpec {
       s"delete images must be the masked keys under the current name, got $dels")
     // fold on the evolved table: anti-join compares like-for-like and
     // lands CURRENT-schema files (name 'id', INT64)
-    assert(GraftEqDelete.materializeEqDeletes(spark, dir.toString) > 0)
+    assert(GraftEqDelete.materializeEqDeletes(spark, TestTables.at(dir)) > 0)
     val head = entries("evo2")
     assert(head.forall(_.eqs.isEmpty), "fold must clear every mask reference")
     // REWRITTEN files land at the current schema (name 'id', INT64);

@@ -148,7 +148,7 @@ class GraftEqUpsertFuzzSpec extends SparkSpec {
           case r if r < 7 => // APPEND of fresh keys between upserts
             appendSlice()
           case 7 | 8 => // FOLD: materialize the masks; state unchanged
-            GraftEqDelete.materializeEqDeletes(spark, dir.toString)
+            GraftEqDelete.materializeEqDeletes(spark, TestTables.at(dir))
             record()
           case _ => // EVOLVE (flat/rowid only): rename the value column;
             // other layouts skip (their partition derivation would need

@@ -216,6 +216,32 @@ class GraftFixedCostSpec extends SparkSpec {
     assert(again.estimateStatistics().sizeInBytes() == est.sizeInBytes())
   }
 
+  test("a scan decodes only its snapshot's bloom entries") {
+    sql("CREATE TABLE graft_fc.db.blm (id BIGINT, v BIGINT) " +
+      "TBLPROPERTIES('history'='true', 'index.bloom.cols'='v')")
+    for (k <- 0 until 3)
+      sql(s"INSERT INTO graft_fc.db.blm SELECT id, id FROM range(${k * 100}, ${k * 100 + 100}, 1, 1)")
+    // copy-on-write rewrites: the replaced files keep their bloom entries
+    // for time travel
+    for (n <- 1 to 2)
+      sql(s"UPDATE graft_fc.db.blm SET v = v + $n WHERE id = ${n * 100 + 7}")
+    val dir = tableDir("blm")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val q = "SELECT id FROM graft_fc.db.blm WHERE v = 150"
+    val live = scanOf(q).snapshotEntryByName.keySet
+    val dead = GraftBloom.readAll(fs, dir).keySet.map(_._1) -- live
+    assert(live.size == 3 && dead.size == 2, s"live $live, dead $dead")
+
+    // an entry of a replaced file that cannot be decoded: reading the
+    // whole index fails on it, a scan never decodes it
+    val bad = fs.create(new Path(dir,
+      s"${GraftBloom.BloomDirName}/bloom-9999999999999-zzzzzzzz.txt"), false)
+    try bad.write(s"${dead.head}\tv\t!not-base64!".getBytes(UTF_8))
+    finally bad.close()
+    intercept[IllegalArgumentException](GraftBloom.readAll(fs, dir))
+    assert(sql(q).collect().map(_.getLong(0)).toSeq == Seq(150L))
+  }
+
   // ---- no-op day compaction ---------------------------------------------
 
   test("compacting an already compact days() history table adds no version") {
@@ -233,11 +259,11 @@ class GraftFixedCostSpec extends SparkSpec {
       while (it.hasNext) b += it.next().getPath.toString
       b.result()
     }
-    assert(GraftMaintenance.compactDayTable(spark, dir.toString) == ((4, 2)))
+    assert(GraftMaintenance.compactDayTable(spark, TestTables.at(dir)) == ((4, 2)))
     val versions = GraftTable.manifestVersions(fs, dir)
     val before = listing
 
-    assert(GraftMaintenance.compactDayTable(spark, dir.toString) == ((2, 2)))
+    assert(GraftMaintenance.compactDayTable(spark, TestTables.at(dir)) == ((2, 2)))
     assert(GraftTable.manifestVersions(fs, dir) == versions)
     assert(listing == before, s"files appeared: ${listing -- before}")
     assert(sql("SELECT sum(id) FROM graft_fc.db.days").head().getLong(0) == 1 + 2 + 11 + 12)

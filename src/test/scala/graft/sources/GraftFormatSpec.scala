@@ -98,11 +98,11 @@ class GraftFormatSpec extends SparkSpec {
     raise("m9", GraftTable.FormatWriterProp -> "99")
     spark.catalog.clearCache()
     val dir = s"$warehouse/db/m9"
-    val e1 = intercept[Exception](GraftMaintenance.restore(spark, dir, 2L))
+    val e1 = intercept[Exception](GraftMaintenance.restore(spark, TestTables.at(dir), 2L))
     assert(e1.getMessage.contains("format writer version 99"), e1.getMessage)
-    val e2 = intercept[Exception](GraftMaintenance.vacuum(spark, dir))
+    val e2 = intercept[Exception](GraftMaintenance.vacuum(spark, TestTables.at(dir)))
     assert(e2.getMessage.contains("format writer version 99"), e2.getMessage)
-    val e3 = intercept[Exception](GraftMaintenance.compactTable(spark, dir))
+    val e3 = intercept[Exception](GraftMaintenance.compactTable(spark, TestTables.at(dir)))
     assert(e3.getMessage.contains("format writer version 99"), e3.getMessage)
     assert(spark.table("graft_fv.db.m9").count() == 12,
       "the fenced table must stay readable and untouched")

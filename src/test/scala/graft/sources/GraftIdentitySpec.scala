@@ -98,7 +98,7 @@ class GraftIdentitySpec extends SparkSpec {
     assert(after.keySet == before.keySet, "rewrite must preserve ids")
     assert(after.count { case (_, v) => v >= 1000 } == 50)
     // vacuum away old snapshots; the carried watermark still advances
-    GraftMaintenance.vacuum(spark, s"$warehouse/db/rw", keepLast = 1)
+    GraftMaintenance.vacuum(spark, TestTables.at(s"$warehouse/db/rw"), keepLast = 1)
     sql("INSERT INTO graft_id.db.rw (v) VALUES (7777)")
     val t = spark.table("graft_id.db.rw")
     assert(t.select("id").distinct().count() == t.count(),

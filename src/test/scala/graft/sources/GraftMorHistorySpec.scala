@@ -124,7 +124,7 @@ class GraftMorHistorySpec extends SparkSpec {
     sql("DELETE FROM graft_mh.db.f WHERE id >= 40") // v3
     val dvd = entriesOf("f", latest("f")).count(_._2.isDefined)
     assert(dvd >= 1)
-    val n = GraftMaintenance.materializeDeletes(spark, dir("f").toString)
+    val n = GraftMaintenance.materializeDeletes(spark, TestTables.at(dir("f").toString))
     assert(n == dvd, s"must fold exactly the $dvd DV'd entries, folded $n")
     val v = latest("f")
     assert(GraftTable.commitKind(fs, dir("f"), v)
@@ -138,7 +138,8 @@ class GraftMorHistorySpec extends SparkSpec {
     assert(sql("SELECT count(*) FROM graft_mh.db.f VERSION AS OF 3")
       .collect().head.getLong(0) == 40)
 
-    val (manifests, files) = GraftMaintenance.vacuum(spark, dir("f").toString)
+    val (manifests, files) = GraftMaintenance.vacuum(spark,
+      TestTables.at(dir("f").toString))
     assert(manifests == 3 && files > 0)
     // superseded sidecars are gone with the old snapshots
     assert(!fs.listStatus(dir("f")).exists(st => GraftDv.isDv(st.getPath.getName)))
@@ -150,16 +151,15 @@ class GraftMorHistorySpec extends SparkSpec {
           |TBLPROPERTIES ('merge-on-read'='true', 'history'='true')""".stripMargin)
     sql("INSERT INTO graft_mh.db.p SELECT id, id FROM range(0, 40)") // v2
     sql("DELETE FROM graft_mh.db.p WHERE id < 10") // v3 (the mistake)
-    GraftMaintenance.restore(spark, dir("p").toString, 2L) // v4
+    GraftMaintenance.restore(spark, TestTables.at(dir("p").toString), 2L) // v4
     assert(spark.table("graft_mh.db.p").count() == 40,
       "restore must roll back the deletion-vector state too")
 
-    require(!GraftMaintenance.purgedCompletely(
-      spark, "graft_mh", "db.p", "id % 8 = 2"))
-    val erased = GraftMaintenance.purge(spark, "graft_mh", "db.p", "id % 8 = 2")
+    val p = GraftTable.load(spark, "graft_mh", "db.p")
+    require(!GraftMaintenance.purgedCompletely(spark, p, "id % 8 = 2"))
+    val erased = GraftMaintenance.purge(spark, "graft_mh", p, "id % 8 = 2")
     assert(erased == 5)
-    assert(GraftMaintenance.purgedCompletely(
-      spark, "graft_mh", "db.p", "id % 8 = 2"),
+    assert(GraftMaintenance.purgedCompletely(spark, p, "id % 8 = 2"),
       "purged keys must not survive in any parquet byte")
     assert(spark.table("graft_mh.db.p").count() == 35)
   }

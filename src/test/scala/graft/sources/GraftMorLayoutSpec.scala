@@ -71,7 +71,7 @@ class GraftMorLayoutSpec extends SparkSpec {
       Seq((3L, 99L)),
       "the updated row version must live in (and prune to) its day dir")
 
-    GraftMaintenance.materializeDeletes(spark, root.getPath)
+    GraftMaintenance.materializeDeletes(spark, TestTables.at(root.getPath))
     assert(!root.listFiles().exists(f => GraftDv.isDv(f.getName)))
     assert(dayDirs.length == 3, "the fold must not flatten day dirs")
     val day1After = spark.table("graft_ml.db.ev")
@@ -79,7 +79,7 @@ class GraftMorLayoutSpec extends SparkSpec {
     assert(planned(day1After) == 1 &&
       day1After.collect().map(_.getLong(0)).toSeq == Seq(1L))
     // per-day compaction folds the update's extra file back to one
-    val (b, a) = GraftMaintenance.compactDayTable(spark, root.getPath)
+    val (b, a) = GraftMaintenance.compactDayTable(spark, TestTables.at(root.getPath))
     assert(a <= b)
     assert(spark.table("graft_ml.db.ev").count() == 3)
   }
@@ -106,12 +106,12 @@ class GraftMorLayoutSpec extends SparkSpec {
       .collect().head.getLong(1) == 300)
 
     sql("DELETE FROM graft_ml.db.bk WHERE k % 3 = 0")
-    GraftMaintenance.materializeDeletes(spark, dir.toString)
+    GraftMaintenance.materializeDeletes(spark, TestTables.at(dir))
     assert(names.forall(GraftBucket.fileBucketId(_).isDefined),
       "the DV fold must keep bucket naming")
     assert(spark.table("graft_ml.db.bk").count() == 40)
     // per-bucket compaction still routes (and the scan still groups)
-    val (b, a) = GraftMaintenance.compactBucketedTable(spark, dir.toString)
+    val (b, a) = GraftMaintenance.compactBucketedTable(spark, TestTables.at(dir))
     assert(a <= b)
     assert(spark.table("graft_ml.db.bk").count() == 40)
   }
@@ -134,7 +134,7 @@ class GraftMorLayoutSpec extends SparkSpec {
       .where(col("ts") >= lit("2026-08-02 00:00:00").cast("timestamp") &&
         col("ts") < lit("2026-08-03 00:00:00").cast("timestamp"))
     assert(planned(pinnedDay) == 1 && pinnedDay.count() == 1)
-    GraftMaintenance.vacuum(spark, s"$warehouse/db/evh", keepLast = 1)
+    GraftMaintenance.vacuum(spark, TestTables.at(s"$warehouse/db/evh"), keepLast = 1)
     assert(spark.table("graft_ml.db.evh").count() == 2)
   }
 }

@@ -133,7 +133,8 @@ class GraftMorSpec extends SparkSpec {
     val expect = sql("SELECT id, grp, v FROM graft_mor.db.z1 ORDER BY id").collect().toSeq
     assert(dvFiles("z1").nonEmpty)
 
-    val n = GraftMaintenance.materializeDeletes(spark, dir("z1").getAbsolutePath)
+    val n = GraftMaintenance.materializeDeletes(spark,
+      TestTables.at(dir("z1").getAbsolutePath))
     assert(n >= 1)
     assert(dvFiles("z1").isEmpty)
     val got = sql("SELECT id, grp, v FROM graft_mor.db.z1 ORDER BY id").collect().toSeq
@@ -149,7 +150,7 @@ class GraftMorSpec extends SparkSpec {
     sql("INSERT INTO graft_mor.db.c1 VALUES (5,'c',50),(6,'c',60)")
     sql("DELETE FROM graft_mor.db.c1 WHERE id % 3 = 0")
     val (nBefore, nAfter) =
-      GraftMaintenance.compactTable(spark, dir("c1").getAbsolutePath)
+      GraftMaintenance.compactTable(spark, TestTables.at(dir("c1").getAbsolutePath))
     assert(nBefore >= 2 && nAfter >= 1)
     assert(dvFiles("c1").isEmpty)
     val got = sql("SELECT id FROM graft_mor.db.c1 ORDER BY id").collect().map(_.getLong(0))
@@ -197,7 +198,8 @@ class GraftMorSpec extends SparkSpec {
     sql("DELETE FROM graft_mor.db.dense WHERE id < 200000 AND id % 2 = 0")
     assert(dvFiles("dense").size == 1)
     val before = dataFiles("dense")
-    val folded = GraftMaintenance.materializeDeletes(spark, dir("dense").getPath)
+    val folded = GraftMaintenance.materializeDeletes(spark,
+      TestTables.at(dir("dense").getPath))
     assert(folded == 1 && dvFiles("dense").isEmpty)
     // the rewritten file keeps its original name; the untouched file its bytes
     val after = dataFiles("dense")
@@ -215,7 +217,7 @@ class GraftMorSpec extends SparkSpec {
     val before = dataFiles("wipe")
     assert(before.size >= 2)
     sql("DELETE FROM graft_mor.db.wipe WHERE grp = 'a'") // kills file 1 outright
-    GraftMaintenance.materializeDeletes(spark, dir("wipe").getPath)
+    GraftMaintenance.materializeDeletes(spark, TestTables.at(dir("wipe").getPath))
     assert(dvFiles("wipe").isEmpty)
     assert(dataFiles("wipe").size < before.size,
       "a file whose every row is deleted must disappear, not land empty")

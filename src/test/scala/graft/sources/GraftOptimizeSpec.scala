@@ -42,13 +42,14 @@ class GraftOptimizeSpec extends SparkSpec {
           |PARTITIONED BY (seg) TBLPROPERTIES('history'='true')"""
       .stripMargin)
     frag("h", 1)
-    assert(GraftMaintenance.optimizeTable(spark, s"$warehouse/db/h").isEmpty,
+    assert(GraftMaintenance.optimizeTable(spark,
+      TestTables.at(s"$warehouse/db/h")).isEmpty,
       "single-file partitions must not rewrite")
     frag("h", 3) // now 4 files per seg
     val pre = spark.table("graft_op2.db.h").groupBy("seg")
       .agg(sum("v").as("s"), count(lit(1)).as("n")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val census = GraftMaintenance.optimizeTable(spark, s"$warehouse/db/h")
+    val census = GraftMaintenance.optimizeTable(spark, TestTables.at(s"$warehouse/db/h"))
     assert(census.size == 3 && census.forall(c => c._2 == 4 && c._3 == 1),
       census.toString)
     val post = spark.table("graft_op2.db.h").groupBy("seg")
@@ -65,7 +66,7 @@ class GraftOptimizeSpec extends SparkSpec {
     frag("m", 2)
     sql("DELETE FROM graft_op2.db.m WHERE id % 5 = 0")
     val expect = spark.table("graft_op2.db.m").count()
-    val census = GraftMaintenance.optimizeTable(spark, s"$warehouse/db/m")
+    val census = GraftMaintenance.optimizeTable(spark, TestTables.at(s"$warehouse/db/m"))
     assert(census.nonEmpty)
     assert(spark.table("graft_op2.db.m").count() == expect,
       "folded masks must not resurrect deleted rows")
@@ -81,7 +82,7 @@ class GraftOptimizeSpec extends SparkSpec {
     val dir = new Path(s"$warehouse/db/p")
     val preFiles = GraftTable.dataFiles(fs, dir).size
     val pre = spark.table("graft_op2.db.p").agg(sum("v")).collect()(0).getLong(0)
-    val census = GraftMaintenance.optimizeTable(spark, s"$warehouse/db/p")
+    val census = GraftMaintenance.optimizeTable(spark, TestTables.at(s"$warehouse/db/p"))
     assert(census.size == 3)
     assert(GraftTable.dataFiles(fs, dir).size == 3 && preFiles == 9)
     assert(spark.table("graft_op2.db.p").agg(sum("v"))
@@ -96,7 +97,7 @@ class GraftOptimizeSpec extends SparkSpec {
     GraftClone.clone(spark, s"$warehouse/db/h2", s"$warehouse/db/h2s",
       shallow = true)
     val e = intercept[IllegalArgumentException] {
-      GraftMaintenance.optimizeTable(spark, s"$warehouse/db/h2s")
+      GraftMaintenance.optimizeTable(spark, TestTables.at(s"$warehouse/db/h2s"))
     }
     assert(e.getMessage.contains("foreign"), e.getMessage)
     // and the source's partition dirs hold no part-optimize debris
@@ -110,7 +111,7 @@ class GraftOptimizeSpec extends SparkSpec {
     sql("CREATE TABLE graft_op2.db.flat (id BIGINT)")
     spark.range(0, 5).toDF("id").writeTo("graft_op2.db.flat").append()
     val e = intercept[IllegalArgumentException] {
-      GraftMaintenance.optimizeTable(spark, s"$warehouse/db/flat")
+      GraftMaintenance.optimizeTable(spark, TestTables.at(s"$warehouse/db/flat"))
     }
     assert(e.getMessage.contains("compactTable"), e.getMessage)
   }

@@ -44,7 +44,7 @@ class GraftOrphansSpec extends SparkSpec {
     // the manifest is the table: the ghost row never appears
     assert(spark.table("graft_or.db.t1").count() == 1)
     // inside the grace window nothing is removed
-    assert(GraftMaintenance.removeOrphans(spark, root.getPath) == 0)
+    assert(GraftMaintenance.removeOrphans(spark, TestTables.at(root.getPath)) == 0)
     assert(orphan.exists)
     // past the grace window the orphan goes, the referenced file stays
     val n = sql("SELECT * FROM graft_remove_orphans('graft_or', 'db.t1', 0)")
@@ -54,7 +54,7 @@ class GraftOrphansSpec extends SparkSpec {
     // plain tables refuse: their directory listing IS the table
     sql("CREATE TABLE graft_or.db.plain (k BIGINT)")
     intercept[Exception](
-      GraftMaintenance.removeOrphans(spark, s"$warehouse/db/plain"))
+      GraftMaintenance.removeOrphans(spark, TestTables.at(s"$warehouse/db/plain")))
   }
 
   test("graft_files serves sizes and row counts from the stats log") {

@@ -75,7 +75,7 @@ class GraftPartitionEvolutionSpec extends SparkSpec {
 
     // catch-up rewrite: everything lands under the current spec
     val (migrated, landed) =
-      GraftMaintenance.migrateTimeLayout(spark, s"$warehouse/db/ev")
+      GraftMaintenance.migrateTimeLayout(spark, TestTables.at(s"$warehouse/db/ev"))
     assert(migrated == flatFiles.size && landed >= 1)
     assert(GraftTable.dataFiles(fs, dir).forall(f =>
       GraftDayPartition.unitOfFile(s"$warehouse/db/ev", f, "ts", "days").nonEmpty))
@@ -137,7 +137,8 @@ class GraftPartitionEvolutionSpec extends SparkSpec {
     sql("SELECT * FROM graft_set_time_partition('graft_pevo', 'db.h', 'days(ts)')")
       .collect()
     events(800, 1200).writeTo("graft_pevo.db.h").append()  // v3, day-laid
-    GraftMaintenance.migrateTimeLayout(spark, s"$warehouse/db/h") // v4 compact
+    GraftMaintenance.migrateTimeLayout(spark,
+      TestTables.at(s"$warehouse/db/h")) // v4 compact
     val (fs, dir) = fsOf("db/h")
     val vLast = GraftTable.manifestVersions(fs, dir).last
     assert(GraftTable.commitKind(fs, dir, vLast)

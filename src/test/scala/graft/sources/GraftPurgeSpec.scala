@@ -29,12 +29,12 @@ class GraftPurgeSpec extends SparkSpec {
     sql("INSERT INTO graft_pg.db.h VALUES (1,'keep'), (2,'erase'), (3,'keep')")
     sql("INSERT INTO graft_pg.db.h VALUES (4,'erase'), (5,'keep')")
     // a DELETE alone leaves the bytes reachable via time travel
-    assert(!GraftMaintenance.purgedCompletely(spark, "graft_pg", "db.h",
-      "who = 'erase'"))
+    val h = GraftTable.load(spark, "graft_pg", "db.h")
+    assert(!GraftMaintenance.purgedCompletely(spark, h, "who = 'erase'"))
 
-    val n = GraftMaintenance.purge(spark, "graft_pg", "db.h", "who = 'erase'")
+    val n = GraftMaintenance.purge(spark, "graft_pg", h, "who = 'erase'")
     assert(n == 2)
-    assert(GraftMaintenance.purgedCompletely(spark, "graft_pg", "db.h",
+    assert(GraftMaintenance.purgedCompletely(spark, h,
       "who = 'erase'"), "purged keys must be gone from every remaining byte")
     assert(sql("SELECT id FROM graft_pg.db.h ORDER BY id").collect()
       .map(_.getLong(0)).toSeq == Seq(1L, 3L, 5L))
@@ -49,13 +49,13 @@ class GraftPurgeSpec extends SparkSpec {
     sql("INSERT INTO graft_pg.db.m VALUES (1,'keep'), (2,'erase'), (3,'keep')")
     // MOR DELETE alone leaves the bytes in place behind a DV mask
     sql("DELETE FROM graft_pg.db.m WHERE who = 'erase'")
-    assert(!GraftMaintenance.purgedCompletely(spark, "graft_pg", "db.m",
+    val m = GraftTable.load(spark, "graft_pg", "db.m")
+    assert(!GraftMaintenance.purgedCompletely(spark, m,
       "who = 'erase'"), "a DV-masked row is hidden, not erased")
 
-    val n = GraftMaintenance.purge(spark, "graft_pg", "db.m", "who = 'erase'")
+    val n = GraftMaintenance.purge(spark, "graft_pg", m, "who = 'erase'")
     assert(n == 0) // already hidden; purge destroys the bytes
-    assert(GraftMaintenance.purgedCompletely(spark, "graft_pg", "db.m",
-      "who = 'erase'"))
+    assert(GraftMaintenance.purgedCompletely(spark, m, "who = 'erase'"))
     assert(sql("SELECT count(*) FROM graft_pg.db.m").collect().head.getLong(0) == 2L)
   }
 }

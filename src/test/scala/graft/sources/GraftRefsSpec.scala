@@ -55,7 +55,7 @@ class GraftRefsSpec extends SparkSpec {
     sql("SELECT * FROM graft_tag('graft_rf', 'db.t2', 'golden', 2)").collect()
     sql("INSERT OVERWRITE graft_rf.db.t2 VALUES (9, 'now')")    // v3
     val (expired, removed) =
-      GraftMaintenance.vacuum(spark, tdir("t2"), keepLast = 1)
+      GraftMaintenance.vacuum(spark, TestTables.at(tdir("t2")), keepLast = 1)
     // v1 (empty) expires; v2 is TAGGED and survives with its file
     assert(expired == 1 && removed == 0,
       s"tagged v2 must survive vacuum (expired $expired, removed $removed)")
@@ -64,7 +64,7 @@ class GraftRefsSpec extends SparkSpec {
     // dropping the tag releases it: the next vacuum expires v2 + its file
     sql("SELECT * FROM graft_drop_tag('graft_rf', 'db.t2', 'golden')").collect()
     val (expired2, removed2) =
-      GraftMaintenance.vacuum(spark, tdir("t2"), keepLast = 1)
+      GraftMaintenance.vacuum(spark, TestTables.at(tdir("t2")), keepLast = 1)
     assert(expired2 == 1 && removed2 == 1)
     intercept[Exception] {
       sql("SELECT * FROM graft_rf.db.t2 VERSION AS OF 'golden'").collect()
@@ -83,13 +83,14 @@ class GraftRefsSpec extends SparkSpec {
     assert(sql("SELECT v FROM graft_rf.db.t3").collect()
       .map(_.getString(0)).toSeq == Seq("original"))
     // purge must refuse: the tag would keep purged bytes reachable
+    val t3 = GraftTable.load(spark, "graft_rf", "db.t3")
     val e = intercept[Exception] {
-      GraftMaintenance.purge(spark, "graft_rf", "db.t3", "k = 1")
+      GraftMaintenance.purge(spark, "graft_rf", t3, "k = 1")
     }
     assert(e.getMessage.contains("pre_restate"))
     sql("SELECT * FROM graft_drop_tag('graft_rf', 'db.t3', 'pre_restate')").collect()
-    GraftMaintenance.purge(spark, "graft_rf", "db.t3", "k = 1")
-    assert(GraftMaintenance.purgedCompletely(spark, "graft_rf", "db.t3", "k = 1"))
+    GraftMaintenance.purge(spark, "graft_rf", t3, "k = 1")
+    assert(GraftMaintenance.purgedCompletely(spark, t3, "k = 1"))
   }
 
   test("time-based retention: expire-by-age spares tags, branches, and the head") {

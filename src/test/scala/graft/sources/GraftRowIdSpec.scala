@@ -119,10 +119,10 @@ class GraftRowIdSpec extends SparkSpec {
     sql("DELETE FROM graft_rid.db.cmp WHERE k % 7 = 0")
     val before = ids("graft_rid.db.cmp")
     val dir = s"$warehouse/db/cmp"
-    GraftMaintenance.materializeDeletes(spark, dir)
+    GraftMaintenance.materializeDeletes(spark, TestTables.at(dir))
     assert(ids("graft_rid.db.cmp") == before,
       "DV materialization rewrote files — ids must ride the rewrite")
-    val (nBefore, nAfter) = GraftMaintenance.compactTable(spark, dir)
+    val (nBefore, nAfter) = GraftMaintenance.compactTable(spark, TestTables.at(dir))
     assert(nBefore > nAfter, s"compaction must shrink files ($nBefore -> $nAfter)")
     assert(ids("graft_rid.db.cmp") == before,
       "compaction rewrote files — ids must ride the rewrite")
@@ -253,7 +253,7 @@ class GraftRowIdSpec extends SparkSpec {
     assert(d.where(col("_change_type") === "delete")
       .select("k").collect().map(_.getLong(0)).sorted.toSeq == (0L until 5L))
     // compaction between two versions is change-free by construction
-    GraftMaintenance.compactTable(spark, s"$warehouse/db/dif")
+    GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/dif"))
     val v3 = headV
     assert(spark.sql(
       s"SELECT * FROM graft_row_diff('graft_rid', 'db.dif', $v2, $v3)")
@@ -453,7 +453,7 @@ class GraftRowIdSpec extends SparkSpec {
     val after2 = ids("graft_rid.db.equ")
     assert(after2 == after, "a pure-update upsert must not move any id")
     // folding the eq masks into rewritten files carries ids verbatim
-    GraftEqDelete.materializeEqDeletes(spark, s"$warehouse/db/equ")
+    GraftEqDelete.materializeEqDeletes(spark, TestTables.at(s"$warehouse/db/equ"))
     assert(ids("graft_rid.db.equ") == after2,
       "materializeEqDeletes must preserve the hidden id column")
   }

@@ -86,7 +86,7 @@ class GraftSchemaEvolutionSpec extends SparkSpec {
       .repartition(6, col("grp")).writeTo("graft_evo.db.bl").append()
     val (fs, dir) = fsOf("db/bl")
     val total = GraftTable.dataFiles(fs, dir).size
-    GraftBloom.buildIndex(spark, s"$warehouse/db/bl", Seq("id"))
+    GraftBloom.buildIndex(spark, TestTables.at(s"$warehouse/db/bl"), Seq("id"))
     sql("ALTER TABLE graft_evo.db.bl RENAME COLUMN id TO doc_id")
     val q = spark.table("graft_evo.db.bl").where(col("doc_id") === 1234L)
     assert(planned(q) < total,
@@ -106,7 +106,7 @@ class GraftSchemaEvolutionSpec extends SparkSpec {
     sql("ALTER TABLE graft_evo.db.cp RENAME COLUMN v TO val")
     spark.range(500, 1000).toDF("id").withColumn("val", col("id") + 1)
       .writeTo("graft_evo.db.cp").append()
-    GraftMaintenance.compactTable(spark, s"$warehouse/db/cp")
+    GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/cp"))
     val (fs, dir) = fsOf("db/cp")
     // every post-compaction file physically carries the CURRENT name
     GraftTable.dataFiles(fs, dir).foreach { f =>

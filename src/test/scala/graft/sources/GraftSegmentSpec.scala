@@ -96,7 +96,7 @@ class GraftSegmentSpec extends SparkSpec {
     sql("DELETE FROM graft_seg.db.vx WHERE id < 10") // rewrites the segment
     sql("INSERT INTO graft_seg.db.vx SELECT id FROM range(100, 150)")
     assert(segsOnDisk("vx").size >= 3)
-    GraftMaintenance.vacuum(spark, s"$warehouse/db/vx", keepLast = 1)
+    GraftMaintenance.vacuum(spark, TestTables.at(s"$warehouse/db/vx"), keepLast = 1)
     val live = refs("vx", latest("vx")).toSet
     assert(segsOnDisk("vx") == live,
       s"vacuum must leave exactly the referenced segments " +

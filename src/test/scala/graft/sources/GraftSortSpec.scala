@@ -129,7 +129,7 @@ class GraftSortSpec extends SparkSpec {
     sql(s"ALTER TABLE graft_so.db.s4 SET TBLPROPERTIES('${GraftSort.SortColsProp}'='k')")
     // compaction with NO clustering args picks up the declaration
     multiFile {
-      GraftMaintenance.compactTable(spark, s"$warehouse/db/s4",
+      GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/s4"),
         targetBytes = 16L << 10)
     }
     val total = dataFiles("s4").size
@@ -199,7 +199,7 @@ class GraftSortSpec extends SparkSpec {
     // declared + clustered: the advice says the contract holds
     sql(s"ALTER TABLE graft_so.db.adv SET TBLPROPERTIES('${GraftSort.SortColsProp}'='k')")
     multiFile {
-      GraftMaintenance.compactTable(spark, s"$warehouse/db/adv",
+      GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/adv"),
         targetBytes = 16L << 10)
     }
     val after = sql("SELECT * FROM graft_layout_advice('graft_so', 'db.adv')")

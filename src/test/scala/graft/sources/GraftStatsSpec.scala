@@ -115,13 +115,13 @@ class GraftStatsSpec extends SparkSpec {
     assert(n1 == 1 && footer1 >= total.toLong,
       s"without stats every file is footer-probed (probed $footer1 of " +
         s"$total), pruning still exact via row-group stats")
-    val lifted = GraftMaintenance.analyzeTable(spark, s"$warehouse/db/t3")
+    val lifted = GraftMaintenance.analyzeTable(spark, TestTables.at(s"$warehouse/db/t3"))
     assert(lifted == total)
     val (n2, footer2) = probes {
       planned(spark.table("graft_st.db.t3").where(col("k") === 5L))
     }
     assert(n2 == 1 && footer2 == 0L, "backfilled stats plan from metadata")
-    assert(GraftMaintenance.analyzeTable(spark, s"$warehouse/db/t3") == 0)
+    assert(GraftMaintenance.analyzeTable(spark, TestTables.at(s"$warehouse/db/t3")) == 0)
   }
 
   test("COW replace and compaction keep the stats log consistent") {
@@ -141,7 +141,7 @@ class GraftStatsSpec extends SparkSpec {
     }
     assert(n == 1 && footer == 0L, "rewritten files carry fresh stats")
     // compaction goes through Spark's writer -> stats lifted from footers
-    GraftMaintenance.compactTable(spark, s"$warehouse/db/t4",
+    GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/t4"),
       targetBytes = 1L << 20, sortCols = Seq("k"))
     val after = GraftStats.readAll(fs, dir).keySet
     val liveAfter = GraftTable.dataFiles(fs, dir)
@@ -162,7 +162,7 @@ class GraftStatsSpec extends SparkSpec {
     }
     assert(rows == 10L && footer == 0L)
     // fold re-lifts: min now 10, a k<5 scan plans zero files
-    GraftMaintenance.materializeDeletes(spark, s"$warehouse/db/t5")
+    GraftMaintenance.materializeDeletes(spark, TestTables.at(s"$warehouse/db/t5"))
     val (n, footer2) = probes {
       planned(spark.table("graft_st.db.t5").where(col("k") < 5))
     }
@@ -209,9 +209,10 @@ class GraftStatsSpec extends SparkSpec {
         .mkString("\n")
     }
     assert(statsBytes.contains("zzsecret"))
-    GraftMaintenance.purge(spark, "graft_st", "db.t7",
+    val t7 = GraftTable.load(spark, "graft_st", "db.t7")
+    GraftMaintenance.purge(spark, "graft_st", t7,
       "email = 'zzsecret@erase.example'")
-    assert(GraftMaintenance.purgedCompletely(spark, "graft_st", "db.t7",
+    assert(GraftMaintenance.purgedCompletely(spark, t7,
       "email = 'zzsecret@erase.example'"))
     assert(!statsBytes.contains("zzsecret"),
       "purge must erase statistics holding the purged value")
@@ -230,7 +231,7 @@ class GraftStatsSpec extends SparkSpec {
     assert(n == 1 && footer == 0L, "pinned reads prune from stats too")
     // truncate-by-overwrite then vacuum: expired files lose their stats
     sql("INSERT OVERWRITE graft_st.db.t8 SELECT id, id FROM range(5, 6)")
-    GraftMaintenance.vacuum(spark, s"$warehouse/db/t8", keepLast = 1)
+    GraftMaintenance.vacuum(spark, TestTables.at(s"$warehouse/db/t8"), keepLast = 1)
     val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/t8")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val live = GraftTable.dataFiles(fs, dir)
@@ -306,7 +307,7 @@ class GraftStatsSpec extends SparkSpec {
       s"full-domain ranges must report ~1 overlap, got ${rep("scat")._2}")
     // the advisory is actionable: re-clustering by the scattered column
     // collapses its overlap
-    GraftMaintenance.compactTable(spark, s"$warehouse/db/skiprep",
+    GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/skiprep"),
       targetBytes = 4096, sortCols = Seq("scat"))
     val rep2 = sql("SELECT * FROM graft_skip_stats('graft_st', 'db.skiprep')")
       .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
