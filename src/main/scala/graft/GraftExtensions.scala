@@ -1,6 +1,8 @@
 package graft
 
 import graft.expressions.{DotProduct, LshBuckets}
+import graft.sources.{GraftCatalog, GraftTable}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -73,11 +75,7 @@ object GraftExtensions {
   private def resolveGroup(s: SparkSession, cat: String,
                            idArg: Option[Expression], what: String)
       : (Long, String, Seq[(String, Long)]) = {
-    val g = Bridge.catalogPlugin(s, cat) match {
-      case g: graft.sources.GraftCatalog => g
-      case other => throw new IllegalArgumentException(
-        s"$what: $cat is ${other.getClass.getName}, not a GraftCatalog")
-    }
+    val g = GraftCatalog.named(s, cat)
     val fsx = g.warehouseDir.getFileSystem(s.sessionState.newHadoopConf())
     val groups = graft.sources.GraftBranch.readGroups(fsx, g.warehouseDir)
     require(groups.nonEmpty,
@@ -93,20 +91,34 @@ object GraftExtensions {
     }
   }
 
-  /** Resolve `catalog`.`ns.table` to its GraftTable (shared by the
-    * maintenance TVFs).
+  /** The graft table a TVF names: the catalog is its first argument and
+    * the table (`'ns.t'`) its second; loaded once through the catalog.
     */
-  /** A commit BOUND for the diff/changes verbs: an integer version, a
-    * TAG name (the named-ref resolution VERSION AS OF uses), or a
-    * TIMESTAMP (literal, or a 'yyyy-mm-dd hh:mm:ss[.f]' string tried
-    * after tags — parsed in the SESSION time zone, exactly like a
-    * TIMESTAMP literal resolves, so the two spellings can never name
-    * different versions when spark.sql.session.timeZone differs from
-    * the JVM default) resolved through
-    * [[graft.sources.GraftTable.versionAtOrBefore]] — the SAME
-    * at-or-before rule as TIMESTAMP AS OF, one code path for every
-    * timestamp-bounded surface.
+  private def tableArg(args: Seq[Expression], fname: String,
+                       what: String = "table"): GraftTable =
+    GraftTable.load(SparkSession.active,
+      stringArg(args.head, s"$fname: catalog"), stringArg(args(1), s"$fname: $what"))
+
+  /** The graft catalog a TVF's first argument names. */
+  private def catalogArg(args: Seq[Expression], fname: String): GraftCatalog =
+    GraftCatalog.named(SparkSession.active, stringArg(args.head, s"$fname: catalog"))
+
+  /** A loaded table's filesystem and directory. */
+  private def fsDir(t: GraftTable): (FileSystem, Path) = {
+    val p = new Path(t.dir)
+    (p.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), p)
+  }
+
+  /** A version-or-tag argument: an integer literal, or a string parsed by
+    * [[graft.sources.GraftRefs.versionOf]] against `t`'s tags.
     */
+  private def versionOrTagArg(e: Expression, t: GraftTable, fname: String): Long =
+    if (e.dataType == org.apache.spark.sql.types.StringType) {
+      val (fs, p) = fsDir(t)
+      graft.sources.GraftRefs.versionOf(fs, p,
+        stringArg(e, s"$fname: version_or_tag"), fname)
+    } else intArg(e, s"$fname: version").toLong
+
   /** Timestamp-string → epoch millis under the SESSION time zone (the
     * rule TIMESTAMP literals resolve by — Spark's own parser, so the
     * string and literal spellings of one instant always agree); None on
@@ -119,13 +131,22 @@ object GraftExtensions {
         SparkSession.active.sessionState.conf.sessionLocalTimeZone))
       .map(_ / 1000L)
 
-  private def resolveVersionBound(t: graft.sources.GraftTable,
-                                  fs: org.apache.hadoop.fs.FileSystem,
-                                  dir: org.apache.hadoop.fs.Path,
-                                  e: Expression, which: String,
+  /** A commit BOUND for the diff/changes verbs: an integer version, a
+    * TAG name (the named-ref resolution VERSION AS OF uses), or a
+    * TIMESTAMP (literal, or a 'yyyy-mm-dd hh:mm:ss[.f]' string tried
+    * after tags — parsed in the SESSION time zone, exactly like a
+    * TIMESTAMP literal resolves, so the two spellings can never name
+    * different versions when spark.sql.session.timeZone differs from
+    * the JVM default) resolved through
+    * [[GraftTable.versionAtOrBefore]] — the SAME
+    * at-or-before rule as TIMESTAMP AS OF, one code path for every
+    * timestamp-bounded surface.
+    */
+  private def resolveVersionBound(t: GraftTable, e: Expression, which: String,
                                   fname: String): Long = {
+    val (fs, dir) = fsDir(t)
     def atOrBefore(millis: Long, shown: Any): Long =
-      graft.sources.GraftTable.versionAtOrBefore(fs, dir, millis)
+      GraftTable.versionAtOrBefore(fs, dir, millis)
         .getOrElse(throw new IllegalArgumentException(
           s"$fname: ${t.name()} has no snapshot at or before " +
             s"$which '$shown'"))
@@ -150,22 +171,34 @@ object GraftExtensions {
     }
   }
 
-  private def graftTableOf(cat: String, tbl: String): graft.sources.GraftTable =
-    graft.sources.GraftTable.load(SparkSession.active, cat, tbl)
-
-  /** Head manifest version of an ANN corpus table, when it is a graft
-    * HISTORY table (the shape whose `.changes` feed delete-aware ANN
-    * maintenance reads) — None for anything else.
+  /** Retained manifest versions of an ANN corpus table, when it is a
+    * graft HISTORY table (the shape whose `.changes` feed delete-aware ANN
+    * maintenance reads) — empty for anything else.
     */
-  private def annCorpusHead(s: SparkSession, cat: String,
-                            corpusTbl: String): Option[Long] =
-    scala.util.Try(graftTableOf(cat, corpusTbl)).toOption
-      .filter(_.history)
+  private def annCorpusVersions(s: SparkSession, cat: String,
+                                corpusTbl: String): Seq[Long] =
+    scala.util.Try(GraftTable.load(s, cat, corpusTbl)).toOption
+      .filter(_.history).toSeq
       .flatMap { ct =>
-        val cdir = new org.apache.hadoop.fs.Path(ct.dir)
-        val cfs = cdir.getFileSystem(s.sessionState.newHadoopConf())
-        graft.sources.GraftTable.manifestVersions(cfs, cdir).lastOption
+        val (cfs, cdir) = fsDir(ct)
+        GraftTable.manifestVersions(cfs, cdir)
       }
+
+  /** Per-column skip overlap of `t`'s current files, from the stats log
+    * (graft_skip_stats, graft_layout_advice).
+    */
+  private def skipOverlap(t: GraftTable): Seq[(String, Int, Double)] = {
+    val (fs, p) = fsDir(t)
+    val liveNames: Set[String] =
+      (if (t.history) {
+        val v = GraftTable.manifestVersions(fs, p).last
+        GraftTable.readManifest(fs, p, v)
+      } else GraftTable.dataFiles(fs, p))
+        .map(f => new Path(f).getName).toSet
+    val stats = graft.sources.GraftStats.readAll(fs, p)
+      .filter { case (n, _) => liveNames.contains(n) }.values.toSeq
+    graft.sources.GraftStats.skipEffectiveness(t.physicalSchema, stats)
+  }
 
   val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("vec_dot",
@@ -178,9 +211,6 @@ object GraftExtensions {
       info("vec_cosine", "vec_cosine(a, b) - cosine similarity of two array<double> columns"),
       (args: Seq[Expression]) =>
         Divide(DotProduct(args.head, args(1)), Multiply(norm(args.head), norm(args(1))))),
-    // lsh_buckets(v, nTables, nPlanes, dim, seed) - per-table random-
-    // hyperplane bucket ids; the trailing args must be integer literals
-    // (the plane matrix is generated at plan time from the seed)
     ("top_k_agg",
       info("top_k_agg", "top_k_agg(v, k) - aggregate: k largest bigint values, desc-sorted"),
       (args: Seq[Expression]) =>
@@ -228,6 +258,9 @@ object GraftExtensions {
       info("theta_count", "theta_count(sk) - distinct-count estimate of a theta sketch"),
       (args: Seq[Expression]) =>
         graft.expressions.ThetaCount(args.head)),
+    // lsh_buckets(v, nTables, nPlanes, dim, seed) - per-table random-
+    // hyperplane bucket ids; the trailing args must be integer literals
+    // (the plane matrix is generated at plan time from the seed)
     ("lsh_buckets",
       info("lsh_buckets",
         "lsh_buckets(v, nTables, nPlanes, dim, seed) - array<long> of LSH bucket ids"),
@@ -401,19 +434,9 @@ object GraftExtensions {
           "table: (file, file_rows, deleted_rows, live_rows)"),
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_dv_stats(catalog_name, 'namespace.table')")
-        val cat = stringArg(args.head, "graft_dv_stats: catalog")
-        val tbl = stringArg(args(1), "graft_dv_stats: table")
         val s = SparkSession.active
-        val plugin = Bridge.catalogPlugin(s, cat) match {
-          case g: graft.sources.GraftCatalog => g
-          case other => throw new IllegalArgumentException(
-            s"graft_dv_stats: catalog $cat is ${other.getClass.getName}, not a GraftCatalog")
-        }
-        val parts = tbl.split('.')
-        val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
-          parts.init, parts.last)
         import s.implicits._
-        Bridge.logicalPlan(plugin.dvStats(ident)
+        Bridge.logicalPlan(GraftTable.dvStats(tableArg(args, "graft_dv_stats"))
           .toDF("file", "file_rows", "deleted_rows", "live_rows"))
       }),
     // DESCRIBE DETAIL for graft-catalog tables: the layout contract as
@@ -425,24 +448,9 @@ object GraftExtensions {
         "graft_detail(catalog, table) - table layout detail as (key, value) rows"),
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_detail(catalog_name, 'namespace.table')")
-        val cat = stringArg(args.head, "graft_detail: catalog")
-        val tbl = stringArg(args(1), "graft_detail: table")
         val s = SparkSession.active
-        val plugin = Bridge.catalogPlugin(s, cat) match {
-          case g: graft.sources.GraftCatalog => g
-          case other => throw new IllegalArgumentException(
-            s"graft_detail: catalog $cat is ${other.getClass.getName}, not a GraftCatalog")
-        }
-        val parts = tbl.split('.')
-        val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
-          parts.init, parts.last)
-        val t = plugin.loadTable(ident) match {
-          case g: graft.sources.GraftTable => g
-          case other => throw new IllegalArgumentException(
-            s"graft_detail: $tbl is ${other.getClass.getName}")
-        }
-        val fs = new org.apache.hadoop.fs.Path(t.dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
+        val t = tableArg(args, "graft_detail")
+        val (fs, p) = fsDir(t)
         val rows: Seq[(String, String)] = Seq(
           "format" -> "graft/parquet",
           "history" -> t.history.toString,
@@ -452,16 +460,15 @@ object GraftExtensions {
           "time_partition" -> t.dayCol.map(c => s"${t.timeUnit}($c)").getOrElse(""),
           "checks" -> t.checks.map { case (n, x) => s"$n: $x" }.mkString("; "),
           "n_columns" -> t.schema().length.toString) ++ {
-          val p = new org.apache.hadoop.fs.Path(t.dir)
           if (t.history) {
             // live files = the CURRENT snapshot's manifest (past-version
             // files still on disk are not part of the table)
-            val v = graft.sources.GraftTable.manifestVersions(fs, p).last
+            val v = GraftTable.manifestVersions(fs, p).last
             Seq("n_data_files" ->
-              graft.sources.GraftTable.readManifest(fs, p, v).size.toString,
+              GraftTable.readManifest(fs, p, v).size.toString,
               "current_version" -> v.toString)
           } else Seq("n_data_files" ->
-            graft.sources.GraftTable.dataFiles(fs, p).size.toString)
+            GraftTable.dataFiles(fs, p).size.toString)
         }
         import s.implicits._
         Bridge.logicalPlan(rows.toDF("key", "value"))
@@ -485,8 +492,7 @@ object GraftExtensions {
         require(args.length == 2 || args.length == 3,
           "graft_compact(catalog, 'ns.t'[, target_mb])")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_compact: catalog"),
-          stringArg(args(1), "graft_compact: table"))
+        val t = tableArg(args, "graft_compact")
         val (mode, before, after) =
           if (t.bucketSpec.nonEmpty) {
             val (b, a) = graft.sources.GraftMaintenance.compactBucketedTable(s, t)
@@ -518,8 +524,7 @@ object GraftExtensions {
         require(args.length == 3,
           "graft_vacuum(catalog, 'ns.t', keep_last | 'older-than timestamp')")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_vacuum: catalog"),
-          stringArg(args(1), "graft_vacuum: table"))
+        val t = tableArg(args, "graft_vacuum")
         val (m, f) = args(2) match {
           case Literal(ts, org.apache.spark.sql.types.StringType) if ts != null =>
             val millis = sessionTsMillis(ts.toString).getOrElse(
@@ -545,9 +550,7 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_apply_retention(catalog, 'ns.t')")
         val s = SparkSession.active
-        val t = graftTableOf(
-          stringArg(args.head, "graft_apply_retention: catalog"),
-          stringArg(args(1), "graft_apply_retention: table"))
+        val t = tableArg(args, "graft_apply_retention")
         val (kl, ma) = graft.sources.GraftRetention.of(t.retention)
         val (m, f) = graft.sources.GraftMaintenance.applyRetention(s, t)
         import s.implicits._
@@ -564,8 +567,7 @@ object GraftExtensions {
         require(args.length == 3,
           "graft_bloom_build(catalog, 'ns.t', 'col1,col2')")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_bloom_build: catalog"),
-          stringArg(args(1), "graft_bloom_build: table"))
+        val t = tableArg(args, "graft_bloom_build")
         val cols = stringArg(args(2), "graft_bloom_build: cols_csv")
           .split(",").toSeq.map(_.trim).filter(_.nonEmpty)
         val n = graft.sources.GraftBloom.buildIndex(s, t, cols)
@@ -582,8 +584,7 @@ object GraftExtensions {
         require(args.length == 3,
           "graft_trgm_build(catalog, 'ns.t', 'col1,col2')")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_trgm_build: catalog"),
-          stringArg(args(1), "graft_trgm_build: table"))
+        val t = tableArg(args, "graft_trgm_build")
         val cols = stringArg(args(2), "graft_trgm_build: cols_csv")
           .split(",").toSeq.map(_.trim).filter(_.nonEmpty)
         val n = graft.sources.GraftBloom.buildTrigramIndex(s, t, cols)
@@ -602,9 +603,7 @@ object GraftExtensions {
         require(args.length == 2 || args.length == 3,
           "graft_verify_snapshot(catalog, 'ns.t'[, 'deep'])")
         val s = SparkSession.active
-        val t = graftTableOf(
-          stringArg(args.head, "graft_verify_snapshot: catalog"),
-          stringArg(args(1), "graft_verify_snapshot: table"))
+        val t = tableArg(args, "graft_verify_snapshot")
         val deep = args.length == 3 && {
           val m = stringArg(args(2), "graft_verify_snapshot: mode")
           require(m == "deep" || m == "meta",
@@ -625,8 +624,7 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_analyze_ndv(catalog, 'ns.t')")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_analyze_ndv: catalog"),
-          stringArg(args(1), "graft_analyze_ndv: table"))
+        val t = tableArg(args, "graft_analyze_ndv")
         val n = graft.sources.GraftStats.analyzeNdv(s, t)
         import s.implicits._
         Bridge.logicalPlan(Seq(n).toDF("files_enriched"))
@@ -642,9 +640,7 @@ object GraftExtensions {
         require(args.length == 3,
           "graft_set_time_partition(catalog, 'ns.t', 'days(col)'|'none')")
         val s = SparkSession.active
-        val t = graftTableOf(
-          stringArg(args.head, "graft_set_time_partition: catalog"),
-          stringArg(args(1), "graft_set_time_partition: table"))
+        val t = tableArg(args, "graft_set_time_partition")
         val specStr = stringArg(args(2), "graft_set_time_partition: spec").trim
         val spec =
           if (specStr.equalsIgnoreCase("none")) None
@@ -673,9 +669,7 @@ object GraftExtensions {
         require(args.length == 2,
           "graft_migrate_layout(catalog, 'ns.t')")
         val s = SparkSession.active
-        val t = graftTableOf(
-          stringArg(args.head, "graft_migrate_layout: catalog"),
-          stringArg(args(1), "graft_migrate_layout: table"))
+        val t = tableArg(args, "graft_migrate_layout")
         val (m, l) = graft.sources.GraftMaintenance.migrateTimeLayout(s, t)
         import s.implicits._
         Bridge.logicalPlan(Seq((m, l)).toDF("files_migrated", "files_landed"))
@@ -688,21 +682,8 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 3, "graft_restore(catalog, 'ns.t', version)")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_restore: catalog"),
-          stringArg(args(1), "graft_restore: table"))
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-        val target = args(2) match {
-          case e if e.dataType == org.apache.spark.sql.types.StringType =>
-            val name = stringArg(e, "graft_restore: version_or_tag")
-            try name.toLong catch {
-              case _: NumberFormatException =>
-                graft.sources.GraftRefs.resolve(fs, p, name).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"graft_restore: '$name' is neither a version nor a tag"))
-            }
-          case e => intArg(e, "graft_restore: version").toLong
-        }
+        val t = tableArg(args, "graft_restore")
+        val target = versionOrTagArg(args(2), t, "graft_restore")
         val v = graft.sources.GraftMaintenance.restore(s, t, target)
         import s.implicits._
         Bridge.logicalPlan(Seq((target, v)).toDF("restored_to", "new_version"))
@@ -716,7 +697,7 @@ object GraftExtensions {
         require(args.length == 3, "graft_purge(catalog, 'ns.t', condition)")
         val s = SparkSession.active
         val cat = stringArg(args.head, "graft_purge: catalog")
-        val t = graftTableOf(cat, stringArg(args(1), "graft_purge: table"))
+        val t = tableArg(args, "graft_purge")
         val cond = stringArg(args(2), "graft_purge: condition")
         val n = graft.sources.GraftMaintenance.purge(s, cat, t, cond)
         val clean = graft.sources.GraftMaintenance.purgedCompletely(s, t, cond)
@@ -746,8 +727,7 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_analyze(catalog, 'ns.t')")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_analyze: catalog"),
-          stringArg(args(1), "graft_analyze: table"))
+        val t = tableArg(args, "graft_analyze")
         val n = graft.sources.GraftMaintenance.analyzeTable(s, t)
         import s.implicits._
         Bridge.logicalPlan(Seq(n).toDF("files_analyzed"))
@@ -763,24 +743,21 @@ object GraftExtensions {
         require(args.length == 3 || args.length == 4,
           "graft_clone(catalog, 'ns.src', 'ns.dst'[, mode])")
         val s = SparkSession.active
-        val cat = stringArg(args.head, "graft_clone: catalog")
-        val src = graftTableOf(cat, stringArg(args(1), "graft_clone: source"))
-        val dstName = stringArg(args(2), "graft_clone: dest")
+        val src = tableArg(args, "graft_clone", what = "source")
+        val dst = GraftCatalog.ident(stringArg(args(2), "graft_clone: dest"))
         val mode =
           if (args.length == 4) stringArg(args(3), "graft_clone: mode")
           else "shallow"
         require(mode == "shallow" || mode == "deep",
           s"graft_clone: mode must be 'shallow' or 'deep', got $mode")
-        // destination dir derives from the source's warehouse layout
-        val srcParts = stringArg(args(1), "graft_clone: source").split("\\.")
-        val dstParts = dstName.split("\\.")
-        require(dstParts.length >= 2,
+        require(dst.namespace().nonEmpty,
           "graft_clone: dest must be namespace-qualified ('ns.t')")
-        val srcDir = new org.apache.hadoop.fs.Path(src.dir)
-        val wh = srcParts.init.foldRight(srcDir.getParent)((_, p) => p.getParent)
-        val dstDir = dstParts.foldLeft(wh)(new org.apache.hadoop.fs.Path(_, _))
+        // the destination lands in the catalog's warehouse, as CREATE's
+        // does — never beside a source registered at an external location
+        val dstDir = (dst.namespace() :+ dst.name())
+          .foldLeft(catalogArg(args, "graft_clone").warehouseDir)(new Path(_, _))
         val (n, b) = graft.sources.GraftClone.clone(
-          s, src.dir, dstDir.toString, mode == "shallow")
+          s, src, dstDir.toString, mode == "shallow")
         import s.implicits._
         Bridge.logicalPlan(Seq((n, b)).toDF("files", "bytes_copied"))
       }),
@@ -796,20 +773,12 @@ object GraftExtensions {
         require(args.length == 3,
           "graft_register(catalog, 'ns.t', location)")
         val s = SparkSession.active
-        val cat = stringArg(args.head, "graft_register: catalog")
         val tname = stringArg(args(1), "graft_register: table")
         val loc = stringArg(args(2), "graft_register: location")
-        val plugin = Bridge.catalogPlugin(s, cat) match {
-          case g: graft.sources.GraftCatalog => g
-          case other => throw new IllegalArgumentException(
-            s"graft_register: $cat is not a graft catalog ($other)")
-        }
-        val parts = tname.split("\\.")
-        require(parts.length >= 2,
+        val ident = GraftCatalog.ident(tname)
+        require(ident.namespace().nonEmpty,
           "graft_register: table must be namespace-qualified ('ns.t')")
-        plugin.registerTable(
-          org.apache.spark.sql.connector.catalog.Identifier.of(
-            parts.init, parts.last), loc)
+        catalogArg(args, "graft_register").registerTable(ident, loc)
         import s.implicits._
         Bridge.logicalPlan(Seq((tname, loc)).toDF("table", "location"))
       }),
@@ -826,8 +795,7 @@ object GraftExtensions {
         require(args.length == 2 || args.length == 3,
           "graft_optimize(catalog, 'ns.t'[, min_files])")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_optimize: catalog"),
-          stringArg(args(1), "graft_optimize: table"))
+        val t = tableArg(args, "graft_optimize")
         val minFiles = args.drop(2).headOption
           .map(intArg(_, "graft_optimize: min_files")).getOrElse(2)
         val census = graft.sources.GraftMaintenance
@@ -851,25 +819,11 @@ object GraftExtensions {
         require(args.length == 3 || args.length == 4,
           "graft_export(catalog, 'ns.t', dest[, version_or_tag])")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_export: catalog"),
-          stringArg(args(1), "graft_export: table"))
+        val t = tableArg(args, "graft_export")
         val dest = stringArg(args(2), "graft_export: dest")
-        val fsx = new org.apache.hadoop.fs.Path(t.dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        val ver: Option[Long] = args.drop(3).headOption.map {
-          case e if e.dataType == org.apache.spark.sql.types.StringType =>
-            val name = stringArg(e, "graft_export: version_or_tag")
-            try name.toLong catch {
-              case _: NumberFormatException =>
-                graft.sources.GraftRefs.resolve(fsx,
-                  new org.apache.hadoop.fs.Path(t.dir), name).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"graft_export: '$name' is neither a version nor a tag"))
-            }
-          case e => intArg(e, "graft_export: version").toLong
-        }
+        val ver = args.drop(3).headOption.map(versionOrTagArg(_, t, "graft_export"))
         val (files, parts, v) =
-          graft.sources.GraftExport.exportSnapshot(s, t.dir, dest, ver)
+          graft.sources.GraftExport.exportSnapshot(s, t, dest, ver)
         import s.implicits._
         Bridge.logicalPlan(Seq((files, parts, v))
           .toDF("files", "partition_dirs", "version"))
@@ -884,9 +838,8 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_fsck(catalog, 'ns.t')")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_fsck: catalog"),
-          stringArg(args(1), "graft_fsck: table"))
-        val rows = graft.sources.GraftFsck.audit(s, t.dir)
+        val t = tableArg(args, "graft_fsck")
+        val rows = graft.sources.GraftFsck.audit(s, t)
           .map(f => (f.check, f.status, f.n))
         import s.implicits._
         Bridge.logicalPlan(rows.toDF("check", "status", "n"))
@@ -905,11 +858,9 @@ object GraftExtensions {
         require(args.length == 3,
           "graft_replicate(catalog, 'ns.t', dest_location)")
         val s = SparkSession.active
-        val t = graftTableOf(
-          stringArg(args.head, "graft_replicate: catalog"),
-          stringArg(args(1), "graft_replicate: table"))
+        val t = tableArg(args, "graft_replicate")
         val dest = stringArg(args(2), "graft_replicate: dest_location")
-        val r = graft.sources.GraftReplicate.replicate(s, t.dir, dest)
+        val r = graft.sources.GraftReplicate.replicate(s, t, dest)
         import s.implicits._
         Bridge.logicalPlan(Seq(
           (r.versionsSynced, r.filesCopied, r.bytesCopied, r.headVersion))
@@ -935,7 +886,7 @@ object GraftExtensions {
         val chosen = resolveGroup(s, cat, args.drop(2).headOption,
           "graft_replicate_group")
         val tables = chosen._3.map { case (t, v) =>
-          (t, graftTableOf(cat, t).dir, v)
+          (t, GraftTable.load(s, cat, t), v)
         }
         val reports = graft.sources.GraftReplicate.replicateGroup(
           s, dest, chosen._1, chosen._2, tables)
@@ -961,7 +912,7 @@ object GraftExtensions {
         val chosen = resolveGroup(s, cat, args.drop(2).headOption,
           "graft_export_group")
         val tables = chosen._3.map { case (t, v) =>
-          (t, graftTableOf(cat, t).dir, v)
+          (t, GraftTable.load(s, cat, t), v)
         }
         val reports = graft.sources.GraftExport.exportGroup(
           s, dest, chosen._1, chosen._2, tables)
@@ -986,7 +937,7 @@ object GraftExtensions {
         val chosen = resolveGroup(s, cat, args.drop(1).headOption,
           "graft_rollback_group")
         val tables = chosen._3.map { case (t, v) =>
-          (t, new org.apache.hadoop.fs.Path(graftTableOf(cat, t).dir), v)
+          (t, GraftTable.load(s, cat, t), v)
         }
         val done = graft.sources.GraftBranch.rollbackGroup(s, tables)
         s.catalog.clearCache()
@@ -1002,10 +953,8 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_sync_identity(catalog, 'ns.t')")
         val s = SparkSession.active
-        val t = graftTableOf(
-          stringArg(args.head, "graft_sync_identity: catalog"),
-          stringArg(args(1), "graft_sync_identity: table"))
-        val (o, n) = graft.sources.GraftIdentity.sync(s, t.dir)
+        val t = tableArg(args, "graft_sync_identity")
+        val (o, n) = graft.sources.GraftIdentity.sync(s, t)
         import s.implicits._
         Bridge.logicalPlan(Seq((o, n)).toDF("old_watermark", "new_watermark"))
       }),
@@ -1023,27 +972,21 @@ object GraftExtensions {
         require(args.length == 3, "graft_create_view(catalog, 'ns.v', sql)")
         val s = SparkSession.active
         val cat = stringArg(args.head, "graft_create_view: catalog")
+        val plugin = GraftCatalog.named(s, cat)
         val vname = stringArg(args(1), "graft_create_view: view")
         val body = stringArg(args(2), "graft_create_view: sql")
-        val plugin = Bridge.catalogPlugin(s, cat) match {
-          case g: graft.sources.GraftCatalog => g
-          case other => throw new IllegalArgumentException(
-            s"graft_create_view: $cat is not a graft catalog ($other)")
-        }
-        val parts = vname.split("\\.")
-        require(parts.length >= 2,
+        val ident = GraftCatalog.ident(vname)
+        require(ident.namespace().nonEmpty,
           "graft_create_view: view must be namespace-qualified ('db.v')")
-        val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
-          parts.init, parts.last)
         // resolving the body NOW validates it and pins the schema users
         // will see in graft_views; resolution runs in the view's OWN
         // catalog.namespace — the exact context every read will pin —
         // so an unqualified `FROM t` means the same t at create and read
         val resolved = Bridge.ofRows(s,
           org.apache.spark.sql.graftbridge.GraftViewResolution
-            .analyzeInContext(s, cat, parts.init, body))
+            .analyzeInContext(s, cat, ident.namespace(), body))
         plugin.createView(new org.apache.spark.sql.connector.catalog.ViewInfo(
-          ident, body, cat, parts.init, resolved.schema,
+          ident, body, cat, ident.namespace(), resolved.schema,
           resolved.schema.fieldNames, Array.empty[String],
           Array.empty[String], new java.util.HashMap[String, String]()))
         import s.implicits._
@@ -1058,17 +1001,8 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_view(catalog, 'ns.v')")
         val s = SparkSession.active
-        val cat = stringArg(args.head, "graft_view: catalog")
-        val vname = stringArg(args(1), "graft_view: view")
-        val plugin = Bridge.catalogPlugin(s, cat) match {
-          case g: graft.sources.GraftCatalog => g
-          case other => throw new IllegalArgumentException(
-            s"graft_view: $cat is not a graft catalog ($other)")
-        }
-        val parts = vname.split("\\.")
-        val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
-          parts.init, parts.last)
-        val v = plugin.loadView(ident)
+        val v = catalogArg(args, "graft_view").loadView(
+          GraftCatalog.ident(stringArg(args(1), "graft_view: view")))
         // resolve against the view's RECORDED catalog/namespace, not this
         // session's current context — same path as the native read
         org.apache.spark.sql.graftbridge.GraftViewResolution
@@ -1081,13 +1015,8 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_views(catalog, namespace)")
         val s = SparkSession.active
-        val cat = stringArg(args.head, "graft_views: catalog")
+        val plugin = catalogArg(args, "graft_views")
         val ns = stringArg(args(1), "graft_views: namespace")
-        val plugin = Bridge.catalogPlugin(s, cat) match {
-          case g: graft.sources.GraftCatalog => g
-          case other => throw new IllegalArgumentException(
-            s"graft_views: $cat is not a graft catalog ($other)")
-        }
         val rows = plugin.listViews(ns.split("\\."): _*).toSeq.map { id =>
           val v = plugin.loadView(id)
           (id.name(), v.schema().fieldNames.mkString(","), v.query())
@@ -1102,17 +1031,8 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_drop_view(catalog, 'ns.v')")
         val s = SparkSession.active
-        val cat = stringArg(args.head, "graft_drop_view: catalog")
-        val vname = stringArg(args(1), "graft_drop_view: view")
-        val plugin = Bridge.catalogPlugin(s, cat) match {
-          case g: graft.sources.GraftCatalog => g
-          case other => throw new IllegalArgumentException(
-            s"graft_drop_view: $cat is not a graft catalog ($other)")
-        }
-        val parts = vname.split("\\.")
-        val dropped = plugin.dropView(
-          org.apache.spark.sql.connector.catalog.Identifier.of(
-            parts.init, parts.last))
+        val dropped = catalogArg(args, "graft_drop_view").dropView(
+          GraftCatalog.ident(stringArg(args(1), "graft_drop_view: view")))
         import s.implicits._
         Bridge.logicalPlan(Seq(dropped).toDF("dropped"))
       }),
@@ -1128,11 +1048,9 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 3, "graft_branch(catalog, 'ns.t', name)")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_branch: catalog"),
-          stringArg(args(1), "graft_branch: table"))
+        val t = tableArg(args, "graft_branch")
         val name = stringArg(args(2), "graft_branch: name")
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val (fs, p) = fsDir(t)
         require(t.history, s"graft_branch: ${t.name()} is not a history " +
           "table — branches need the commit log")
         val base = graft.sources.GraftBranch.create(fs, p, name)
@@ -1146,10 +1064,8 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_branches(catalog, 'ns.t')")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_branches: catalog"),
-          stringArg(args(1), "graft_branches: table"))
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val t = tableArg(args, "graft_branches")
+        val (fs, p) = fsDir(t)
         val rows = graft.sources.GraftBranch.readAll(fs, p).toSeq.sorted
           .map { case (n, base) =>
             val (head, _) = graft.sources.GraftBranch.head(fs, p, n)
@@ -1167,11 +1083,9 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 3, "graft_fastforward(catalog, 'ns.t', name)")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_fastforward: catalog"),
-          stringArg(args(1), "graft_fastforward: table"))
+        val t = tableArg(args, "graft_fastforward")
         val name = stringArg(args(2), "graft_fastforward: name")
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val (fs, p) = fsDir(t)
         val (from, to) = graft.sources.GraftBranch.fastForward(fs, p, name)
         s.catalog.clearCache()
         import s.implicits._
@@ -1193,27 +1107,21 @@ object GraftExtensions {
           "graft_publish_together(catalog, 'ns.t1,ns.t2,...', name)")
         val s = SparkSession.active
         val cat = stringArg(args.head, "graft_publish_together: catalog")
+        val g = GraftCatalog.named(s, cat)
         val tbls = stringArg(args(1), "graft_publish_together: tables")
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq
         val name = stringArg(args(2), "graft_publish_together: name")
         require(tbls.nonEmpty, "graft_publish_together: empty table list")
-        val dirs = tbls.map(t => t ->
-          new org.apache.hadoop.fs.Path(graftTableOf(cat, t).dir))
-        val fs = dirs.head._2.getFileSystem(s.sessionState.newHadoopConf())
-        val done = graft.sources.GraftBranch.publishTogether(fs, dirs, name)
+        val done = graft.sources.GraftBranch.publishTogether(s,
+          tbls.map(t => t -> GraftTable.load(s, cat, t)), name)
         // record the consistent coordinates this publish produced (see
         // GraftBranch.recordGroup — written after the last fast-forward,
-        // so a crash loses only the record, never the publish)
-        Bridge.catalogPlugin(s, cat) match {
-          case g: graft.sources.GraftCatalog =>
-            // the warehouse may live on a different filesystem than the
-            // first (possibly registered-external) table
-            val whFs = g.warehouseDir
-              .getFileSystem(s.sessionState.newHadoopConf())
-            graft.sources.GraftBranch.recordGroup(whFs, g.warehouseDir, name,
-              done.map { case (t, _, to) => (t, to) })
-          case _ => ()
-        }
+        // so a crash loses only the record, never the publish); the
+        // warehouse may live on a different filesystem than the first
+        // (possibly registered-external) table
+        val whFs = g.warehouseDir.getFileSystem(s.sessionState.newHadoopConf())
+        graft.sources.GraftBranch.recordGroup(whFs, g.warehouseDir, name,
+          done.map { case (t, _, to) => (t, to) })
         s.catalog.clearCache()
         import s.implicits._
         Bridge.logicalPlan(done.toDF("table", "from_version", "to_version"))
@@ -1247,11 +1155,9 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 3, "graft_cherrypick(catalog, 'ns.t', name)")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_cherrypick: catalog"),
-          stringArg(args(1), "graft_cherrypick: table"))
+        val t = tableArg(args, "graft_cherrypick")
         val name = stringArg(args(2), "graft_cherrypick: name")
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val (fs, p) = fsDir(t)
         val (n, v) = graft.sources.GraftBranch.cherryPick(fs, p, name)
         import s.implicits._
         Bridge.logicalPlan(Seq((n, v)).toDF("files_published", "version"))
@@ -1264,11 +1170,9 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 3, "graft_drop_branch(catalog, 'ns.t', name)")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_drop_branch: catalog"),
-          stringArg(args(1), "graft_drop_branch: table"))
+        val t = tableArg(args, "graft_drop_branch")
         val name = stringArg(args(2), "graft_drop_branch: name")
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val (fs, p) = fsDir(t)
         val (m, f) = graft.sources.GraftBranch.drop(fs, p, name)
         import s.implicits._
         Bridge.logicalPlan(
@@ -1286,14 +1190,12 @@ object GraftExtensions {
         require(args.length == 3 || args.length == 4,
           "graft_tag(catalog, 'ns.t', name[, version])")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_tag: catalog"),
-          stringArg(args(1), "graft_tag: table"))
+        val t = tableArg(args, "graft_tag")
         val name = stringArg(args(2), "graft_tag: name")
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val (fs, p) = fsDir(t)
         val v =
           if (args.length == 4) intArg(args(3), "graft_tag: version").toLong
-          else graft.sources.GraftTable.manifestVersions(fs, p).lastOption
+          else GraftTable.manifestVersions(fs, p).lastOption
             .getOrElse(throw new IllegalArgumentException(
               s"graft_tag: ${t.name()} has no snapshots"))
         graft.sources.GraftRefs.set(fs, p, name, v)
@@ -1307,11 +1209,9 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 3, "graft_drop_tag(catalog, 'ns.t', name)")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_drop_tag: catalog"),
-          stringArg(args(1), "graft_drop_tag: table"))
+        val t = tableArg(args, "graft_drop_tag")
         val name = stringArg(args(2), "graft_drop_tag: name")
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val (fs, p) = fsDir(t)
         val existed = graft.sources.GraftRefs.drop(fs, p, name)
         import s.implicits._
         Bridge.logicalPlan(Seq((name, existed)).toDF("name", "existed"))
@@ -1323,18 +1223,12 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_refs(catalog, 'ns.t')")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_refs: catalog"),
-          stringArg(args(1), "graft_refs: table"))
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val t = tableArg(args, "graft_refs")
+        val (fs, p) = fsDir(t)
         val rows = graft.sources.GraftRefs.readAll(fs, p).toSeq.sorted
         import s.implicits._
         Bridge.logicalPlan(rows.toDF("name", "version"))
       }),
-    // --- `.files` metadata surface: the current snapshot's data files
-    // with their manifest-lifted statistics — size and row counts come
-    // from the stats log, NOT from per-file IO, so this is the
-    // prove-the-metadata query (Iceberg's `db.t.files`).
     ("graft_skip_stats",
       info("graft_skip_stats",
         "graft_skip_stats(catalog, table) - file-skipping effectiveness " +
@@ -1346,22 +1240,8 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_skip_stats(catalog, 'ns.t')")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_skip_stats: catalog"),
-          stringArg(args(1), "graft_skip_stats: table"))
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-        val liveNames: Set[String] =
-          (if (t.history) {
-            val v = graft.sources.GraftTable.manifestVersions(fs, p).last
-            graft.sources.GraftTable.readManifest(fs, p, v)
-          } else graft.sources.GraftTable.dataFiles(fs, p))
-            .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-        val stats = graft.sources.GraftStats.readAll(fs, p)
-          .filter { case (n, _) => liveNames.contains(n) }.values.toSeq
-        val rows = graft.sources.GraftStats
-          .skipEffectiveness(t.physicalSchema, stats)
         import s.implicits._
-        Bridge.logicalPlan(rows
+        Bridge.logicalPlan(skipOverlap(tableArg(args, "graft_skip_stats"))
           .toDF("column", "files_with_bounds", "overlap_fraction"))
       }),
     // measure-don't-guess, closed into a RECOMMENDATION: the skip-overlap
@@ -1379,27 +1259,14 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_layout_advice(catalog, 'ns.t')")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_layout_advice: catalog"),
-          stringArg(args(1), "graft_layout_advice: table"))
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val t = tableArg(args, "graft_layout_advice")
         val props = t.props
         val (bloomCols, trgmCols) = (
           props.get(graft.sources.GraftBloom.BloomColsProp).toSeq
             .flatMap(_.split(",")).map(_.trim).toSet,
           props.get(graft.sources.GraftBloom.TrgmColsProp).toSeq
             .flatMap(_.split(",")).map(_.trim).toSet)
-        val liveNames: Set[String] =
-          (if (t.history) {
-            val v = graft.sources.GraftTable.manifestVersions(fs, p).last
-            graft.sources.GraftTable.readManifest(fs, p, v)
-          } else graft.sources.GraftTable.dataFiles(fs, p))
-            .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-        val stats = graft.sources.GraftStats.readAll(fs, p)
-          .filter { case (n, _) => liveNames.contains(n) }.values.toSeq
-        val overlap = graft.sources.GraftStats
-          .skipEffectiveness(t.physicalSchema, stats)
-          .map { case (c, n, f) => c -> (n, f) }.toMap
+        val overlap = skipOverlap(t).map { case (c, n, f) => c -> (n, f) }.toMap
         val layoutOf: String => Option[String] = c =>
           if (t.partitionCols.contains(c)) Some("partition")
           else if (t.bucketSpec.exists(_._1 == c)) Some("bucket")
@@ -1443,6 +1310,10 @@ object GraftExtensions {
         Bridge.logicalPlan(rows.toDF(
           "column", "files_with_bounds", "overlap_fraction", "declared", "advice"))
       }),
+    // --- `.files` metadata surface: the current snapshot's data files
+    // with their manifest-lifted statistics — size and row counts come
+    // from the stats log, NOT from per-file IO, so this is the
+    // prove-the-metadata query (Iceberg's `db.t.files`).
     ("graft_files",
       info("graft_files",
         "graft_files(catalog, table) - the current snapshot's data files: " +
@@ -1451,29 +1322,27 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_files(catalog, 'ns.t')")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_files: catalog"),
-          stringArg(args(1), "graft_files: table"))
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val t = tableArg(args, "graft_files")
+        val (fs, p) = fsDir(t)
         val entries: Seq[(String, Option[String])] =
           if (t.history) {
-            val v = graft.sources.GraftTable.manifestVersions(fs, p).last
-            graft.sources.GraftTable.readEntries(fs, p, v)
-          } else graft.sources.GraftTable.dataFiles(fs, p).map { f =>
-            val dvPath = new org.apache.hadoop.fs.Path(p,
-              graft.sources.GraftDv.dvName(new org.apache.hadoop.fs.Path(f).getName))
+            val v = GraftTable.manifestVersions(fs, p).last
+            GraftTable.readEntries(fs, p, v)
+          } else GraftTable.dataFiles(fs, p).map { f =>
+            val dvPath = new Path(p,
+              graft.sources.GraftDv.dvName(new Path(f).getName))
             f -> (if (fs.exists(dvPath)) Some(dvPath.toString) else None)
           }
         val stats = graft.sources.GraftStats.readAll(fs, p)
         val rows: Seq[(String, Long, Option[Long], Option[String])] =
           entries.map { case (f, dv) =>
-            val name = new org.apache.hadoop.fs.Path(f).getName
+            val name = new Path(f).getName
             val st = stats.get(name)
             (name,
               st.map(_.size).getOrElse(fs.getFileStatus(
-                new org.apache.hadoop.fs.Path(f)).getLen),
+                new Path(f)).getLen),
               st.map(_.rows),
-              dv.map(d => new org.apache.hadoop.fs.Path(d).getName))
+              dv.map(d => new Path(d).getName))
           }
         import s.implicits._
         Bridge.logicalPlan(rows.toDF("file", "size_bytes", "row_count", "dv"))
@@ -1489,26 +1358,24 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_partitions(catalog, 'ns.t')")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_partitions: catalog"),
-          stringArg(args(1), "graft_partitions: table"))
-        val p = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val t = tableArg(args, "graft_partitions")
+        val (fs, p) = fsDir(t)
         val entries = t.history match {
           case true =>
-            val v = graft.sources.GraftTable.manifestVersions(fs, p).last
-            graft.sources.GraftTable.readFullEntries(fs, p, v)
-          case false => graft.sources.GraftTable.dataFiles(fs, p)
-            .map(graft.sources.GraftTable.GraftEntry(_, None))
+            val v = GraftTable.manifestVersions(fs, p).last
+            GraftTable.readFullEntries(fs, p, v)
+          case false => GraftTable.dataFiles(fs, p)
+            .map(GraftTable.GraftEntry(_, None))
         }
         val stats = graft.sources.GraftStats.readAll(fs, p)
         def partOf(f: String): String = {
-          val rel = graft.sources.GraftTable.relativize(
-            p, new org.apache.hadoop.fs.Path(f))
+          val rel = GraftTable.relativize(
+            p, new Path(f))
           val dirs = rel.split("/").init.mkString("/")
           if (dirs.nonEmpty) dirs
           else if (t.bucketSpec.nonEmpty)
             graft.sources.GraftBucket.fileBucketId(
-              new org.apache.hadoop.fs.Path(f).getName)
+              new Path(f).getName)
               .map(b => s"bucket=$b").getOrElse("")
           else ""
         }
@@ -1516,10 +1383,10 @@ object GraftExtensions {
           case (part, es) =>
             val masked = es.flatMap(_.dv).map { d =>
               graft.sources.GraftDv.read(fs,
-                new org.apache.hadoop.fs.Path(d)).getLongCardinality
+                new Path(d)).getLongCardinality
             }.sum
             val sts = es.flatMap(e => stats.get(
-              new org.apache.hadoop.fs.Path(e.file).getName))
+              new Path(e.file).getName))
             val raw: Option[Long] =
               if (sts.size == es.size) Some(sts.map(_.rows).sum) else None
             (part, es.size.toLong, raw.map(_ - masked),
@@ -1538,8 +1405,7 @@ object GraftExtensions {
         require(args.length == 2 || args.length == 3,
           "graft_remove_orphans(catalog, 'ns.t'[, grace_minutes])")
         val s = SparkSession.active
-        val t = graftTableOf(stringArg(args.head, "graft_remove_orphans: catalog"),
-          stringArg(args(1), "graft_remove_orphans: table"))
+        val t = tableArg(args, "graft_remove_orphans")
         val grace =
           if (args.length == 3)
             intArg(args(2), "graft_remove_orphans: grace_minutes").toLong * 60000L
@@ -1548,8 +1414,6 @@ object GraftExtensions {
         import s.implicits._
         Bridge.logicalPlan(Seq(n).toDF("files_removed"))
       }),
-    // DESCRIBE HISTORY for graft-catalog snapshot tables:
-    //   SELECT * FROM graft_history('graft_wh', 'db.t')
     ("graft_ann_build",
       info("graft_ann_build",
         "graft_ann_build(catalog, corpus_table, graph_table, id_col, " +
@@ -1582,14 +1446,12 @@ object GraftExtensions {
           .writeTo(s"$cat.$graphTbl").append()
         // stamp the full-build baseline: graft_ann_optimize's bounded
         // re-descent reads only edges committed AFTER this version
-        val builtV = graft.sources.GraftTable.manifestVersions(
-          new org.apache.hadoop.fs.Path(graftTableOf(cat, graphTbl).dir)
-            .getFileSystem(s.sessionState.newHadoopConf()),
-          new org.apache.hadoop.fs.Path(graftTableOf(cat, graphTbl).dir)).last
+        val (gfs, gdir) = fsDir(GraftTable.load(s, cat, graphTbl))
+        val builtV = GraftTable.manifestVersions(gfs, gdir).last
         // also stamp the CORPUS version this graph reflects (when the
         // corpus is a history catalog table): optimize reads the corpus
         // changes feed after it to find DELETED vectors — O(changed)
-        val corpusStamp = annCorpusHead(s, cat, corpusTbl).map(v =>
+        val corpusStamp = annCorpusVersions(s, cat, corpusTbl).lastOption.map(v =>
           s", '${graft.operators.AnnIndex.CorpusVersionProp}'='$v'")
           .getOrElse("")
         s.sql(s"ALTER TABLE $cat.$graphTbl SET TBLPROPERTIES(" +
@@ -1659,7 +1521,7 @@ object GraftExtensions {
         val vecCol = stringArg(args(4), "graft_ann_optimize: vec_col")
         val blockCol = stringArg(args(5), "graft_ann_optimize: block_col")
         val k = intArg(args(6), "graft_ann_optimize: k")
-        val t = graftTableOf(cat, graphTbl)
+        val t = GraftTable.load(s, cat, graphTbl)
         val builtV = t.props.get(graft.operators.AnnIndex.BuiltVersionProp).map(_.toLong)
           .getOrElse(throw new IllegalArgumentException(
             s"graft_ann_optimize: $cat.$graphTbl carries no " +
@@ -1682,13 +1544,8 @@ object GraftExtensions {
         // revives). Dead ids lose every edge row, both directions, and
         // their bereaved neighbors join the re-descent scope.
         val corpusV0 = t.props.get(graft.operators.AnnIndex.CorpusVersionProp).map(_.toLong)
-        val corpusHead = annCorpusHead(s, cat, corpusTbl)
-        val corpusRetained: Seq[Long] = corpusHead.toSeq.flatMap { _ =>
-          val ct = graftTableOf(cat, corpusTbl)
-          val cdir = new org.apache.hadoop.fs.Path(ct.dir)
-          graft.sources.GraftTable.manifestVersions(
-            cdir.getFileSystem(s.sessionState.newHadoopConf()), cdir)
-        }
+        val corpusRetained = annCorpusVersions(s, cat, corpusTbl)
+        val corpusHead = corpusRetained.lastOption
         def nonEmptyOpt(d: org.apache.spark.sql.DataFrame) =
           if (d.isEmpty) None else Some(d)
         val dead: Option[org.apache.spark.sql.DataFrame] =
@@ -1787,13 +1644,9 @@ object GraftExtensions {
         require(args.length == 4,
           "graft_row_diff(catalog, 'ns.t', v_from, v_to) — bounds are " +
             "integer versions, tag names, or timestamps")
-        val t = graftTableOf(stringArg(args.head, "graft_row_diff: catalog"),
-          stringArg(args(1), "graft_row_diff: table"))
-        val dir = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = dir.getFileSystem(
-          SparkSession.active.sessionState.newHadoopConf())
+        val t = tableArg(args, "graft_row_diff")
         def versionArg(e: Expression, which: String): Long =
-          resolveVersionBound(t, fs, dir, e, which, "graft_row_diff")
+          resolveVersionBound(t, e, which, "graft_row_diff")
         Bridge.logicalPlan(graft.sources.GraftRowDiff.diff(
           SparkSession.active, t,
           versionArg(args(2), "v_from"), versionArg(args(3), "v_to")))
@@ -1812,14 +1665,9 @@ object GraftExtensions {
             "integer versions, tag names, or timestamps")
         val cat = stringArg(args.head, "graft_changes: catalog")
         val tbl = stringArg(args(1), "graft_changes: table")
-        val t = graftTableOf(cat, tbl)
-        val dir = new org.apache.hadoop.fs.Path(t.dir)
-        val fs = dir.getFileSystem(
-          SparkSession.active.sessionState.newHadoopConf())
-        val vFrom = resolveVersionBound(t, fs, dir, args(2), "from",
-          "graft_changes")
-        val vTo = resolveVersionBound(t, fs, dir, args(3), "to",
-          "graft_changes")
+        val t = tableArg(args, "graft_changes")
+        val vFrom = resolveVersionBound(t, args(2), "from", "graft_changes")
+        val vTo = resolveVersionBound(t, args(3), "to", "graft_changes")
         require(vFrom <= vTo,
           s"graft_changes: from-bound $vFrom must not exceed to-bound $vTo")
         val s = SparkSession.active
@@ -1829,25 +1677,17 @@ object GraftExtensions {
             org.apache.spark.sql.functions
               .col(graft.sources.GraftChanges.VersionCol) <= vTo))
       }),
+    // DESCRIBE HISTORY for graft-catalog snapshot tables:
+    //   SELECT * FROM graft_history('graft_wh', 'db.t')
     ("graft_history",
       info("graft_history",
         "graft_history(catalog, table) - snapshot log of a history table: " +
           "(version, committed_at millis, n_files, bytes)"),
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_history(catalog_name, 'namespace.table')")
-        val cat = stringArg(args.head, "graft_history: catalog")
-        val tbl = stringArg(args(1), "graft_history: table")
         val s = SparkSession.active
-        val plugin = Bridge.catalogPlugin(s, cat) match {
-          case g: graft.sources.GraftCatalog => g
-          case other => throw new IllegalArgumentException(
-            s"graft_history: catalog $cat is ${other.getClass.getName}, not a GraftCatalog")
-        }
-        val parts = tbl.split('.')
-        val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
-          parts.init, parts.last)
         import s.implicits._
-        Bridge.logicalPlan(plugin.snapshots(ident)
+        Bridge.logicalPlan(GraftTable.snapshots(tableArg(args, "graft_history"))
           .toDF("version", "committed_at", "n_files", "bytes"))
       }))
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.DataType
 
-import graft.sources.{GraftCatalog, GraftScan, GraftTable}
+import graft.sources.{GraftScan, GraftTable}
 
 /** Materialized views with TRANSPARENT query rewrite — the rollup a
   * 100 TB warehouse actually serves dashboards from. A registered MV is a
@@ -89,26 +89,6 @@ object MatView {
   /** Test hook: forget every registration (tables stay on disk). */
   def clearRegistry(): Unit = registry.clear()
 
-  private def catalogOf(spark: SparkSession, name: String): GraftCatalog =
-    Bridge.catalogPlugin(spark, name) match {
-      case g: GraftCatalog => g
-      case other => throw new IllegalArgumentException(
-        s"MatView: catalog $name is ${other.getClass.getName}, not a GraftCatalog")
-    }
-
-  private def identOf(table: String) = {
-    val parts = table.split('.')
-    org.apache.spark.sql.connector.catalog.Identifier.of(parts.init, parts.last)
-  }
-
-  private def loadGraftTable(spark: SparkSession, catalog: String,
-                             table: String): GraftTable =
-    catalogOf(spark, catalog).loadTable(identOf(table)) match {
-      case t: GraftTable => t
-      case other => throw new IllegalArgumentException(
-        s"MatView: $catalog.$table is ${other.getClass.getName}")
-    }
-
   private def hadoopFs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -157,7 +137,7 @@ object MatView {
     require(baseTable != mvTable, "MatView: MV cannot be its own base")
     require(group.nonEmpty && measures.nonEmpty,
       "MatView: need at least one group column and one measure")
-    val base = loadGraftTable(spark, catalog, baseTable)
+    val base = GraftTable.load(spark, catalog, baseTable)
     require(base.history,
       s"MatView: base $catalog.$baseTable must be a history table " +
         s"(TBLPROPERTIES('history'='true')) — staleness is version-stamped")
@@ -174,7 +154,7 @@ object MatView {
     spark.sql(s"DROP TABLE IF EXISTS $catalog.$mvTable")
     spark.sql(s"CREATE TABLE $catalog.$mvTable (${df.schema.toDDL})")
     df.writeTo(s"$catalog.$mvTable").append()
-    val mv = loadGraftTable(spark, catalog, mvTable)
+    val mv = GraftTable.load(spark, catalog, mvTable)
     val fs = hadoopFs(spark, mv.dir)
     GraftTable.writeProps(fs, new Path(mv.dir), Map(
       BaseProp -> baseTable, BaseDirProp -> base.dir,
@@ -190,8 +170,10 @@ object MatView {
   /** Re-register an MV from its persisted table properties (a new session
     * finding MVs built by an earlier one).
     */
-  def register(spark: SparkSession, catalog: String, mvTable: String): MvMeta = {
-    val mv = loadGraftTable(spark, catalog, mvTable)
+  def register(spark: SparkSession, catalog: String, mvTable: String): MvMeta =
+    register(catalog, mvTable, GraftTable.load(spark, catalog, mvTable))
+
+  private def register(catalog: String, mvTable: String, mv: GraftTable): MvMeta = {
     val props = mv.props
     val meta = MvMeta(catalog, mvTable, mv.dir,
       props(BaseProp), props(BaseDirProp),
@@ -209,8 +191,9 @@ object MatView {
     * deletes happened → rebuild).
     */
   def refresh(spark: SparkSession, catalog: String, mvTable: String): String = {
-    val meta = register(spark, catalog, mvTable) // re-read persisted state
-    val base = loadGraftTable(spark, catalog, meta.baseTable)
+    val mv = GraftTable.load(spark, catalog, mvTable)
+    val meta = register(catalog, mvTable, mv) // re-read persisted state
+    val base = GraftTable.load(spark, catalog, meta.baseTable)
     val fs = hadoopFs(spark, base.dir)
     val cur = currentVersion(spark, base.dir)
     if (cur == meta.baseVersion) return "noop"
@@ -255,10 +238,8 @@ object MatView {
       "full"
     }
     if (mode == "incremental") {
-      val mvFs = hadoopFs(spark, meta.mvDir)
-      val props = GraftTable.readProps(mvFs, new Path(meta.mvDir))
-      GraftTable.writeProps(mvFs, new Path(meta.mvDir),
-        props + (VersionProp -> cur.toString))
+      GraftTable.writeProps(hadoopFs(spark, meta.mvDir), new Path(meta.mvDir),
+        mv.props + (VersionProp -> cur.toString))
       registry.updateWith(meta.baseDir)(prev => Some(
         meta.copy(baseVersion = cur) ::
           prev.getOrElse(Nil).filterNot(_.mvTable == mvTable)))

@@ -2745,7 +2745,9 @@ object Etl {
       s.sql("INSERT INTO graft_rg.db.src SELECT * FROM graft_rg_src")
       val n0 = s.table("graft_rg.db.src").count()
       // the to-be-adopted table: self-contained bytes OUTSIDE the warehouse
-      graft.sources.GraftClone.clone(s, s"$wh/db/src", ext, shallow = false)
+      graft.sources.GraftClone.clone(s,
+        graft.sources.GraftTable.load(s, "graft_rg", "db.src"), ext,
+        shallow = false)
       val reg = s.sql(
         s"SELECT * FROM graft_register('graft_rg', 'db.ext', '$ext')")
         .collect().head
@@ -3369,7 +3371,8 @@ object Etl {
       val out = fs.create(junk, true)
       out.write(Array[Byte](80, 65, 82, 49)); out.close()
       def audit(): Map[String, (String, Long)] =
-        graft.sources.GraftFsck.audit(s, tdir.toString)
+        graft.sources.GraftFsck.audit(s,
+          graft.sources.GraftTable.load(s, "graft_fk", "db.ord"))
           .map(f => f.check -> (f.status, f.n)).toMap
       val healthy = audit()
       require(healthy("missing_files") == ("ok", 0L) &&

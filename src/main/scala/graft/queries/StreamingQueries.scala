@@ -581,8 +581,8 @@ object StreamingQueries {
           feed.grouped(feed.length / 3 + 1).foreach { chunk =>
             in.addData(chunk.toSeq); q.processAllAvailable()
             epoch += 1
-            val r = graft.sources.GraftReplicate
-              .replicate(s, s"$wh/db/ord", mirror)
+            val r = graft.sources.GraftReplicate.replicate(s,
+              graft.sources.GraftTable.load(s, "graft_sr", "db.ord"), mirror)
             if (epoch == 1L)
               s.sql("SELECT * FROM graft_register(" +
                 s"'graft_sr', 'db.mirror', '$mirror')").collect()
@@ -598,7 +598,8 @@ object StreamingQueries {
       val mir = s.table("graft_sr.db.mirror")
       require(src.exceptAll(mir).isEmpty && mir.exceptAll(src).isEmpty,
         "stream_replicate: the mirror must equal the source row-for-row")
-      val r4 = graft.sources.GraftReplicate.replicate(s, s"$wh/db/ord", mirror)
+      val r4 = graft.sources.GraftReplicate.replicate(s,
+        graft.sources.GraftTable.load(s, "graft_sr", "db.ord"), mirror)
       require(r4.filesCopied == 0 && r4.bytesCopied == 0,
         s"stream_replicate: following a quiet stream must be free ($r4)")
       ledger.toSeq.toDF("epoch", "versions_synced", "rows_mirrored")

@@ -157,10 +157,12 @@ object GraftBranch {
     * prefix — a valid pipeline state — and the unpublished suffix to
     * re-stage and retry.
     */
-  def publishTogether(fs: FileSystem,
-                      tables: Seq[(String, Path)],
+  def publishTogether(spark: org.apache.spark.sql.SparkSession,
+                      loaded: Seq[(String, GraftTable)],
                       name: String): Seq[(String, Long, Long)] = {
-    require(tables.nonEmpty, "publishTogether: no tables")
+    require(loaded.nonEmpty, "publishTogether: no tables")
+    val tables = loaded.map { case (ident, t) => (ident, new Path(t.dir)) }
+    val fs = tables.head._2.getFileSystem(spark.sessionState.newHadoopConf())
     // phase 1: every table must be cleanly fast-forwardable BEFORE any
     // rename — one diverged table vetoes the whole publish
     tables.foreach { case (ident, dir) =>
@@ -335,8 +337,9 @@ object GraftBranch {
     * unchanged head for skipped tables.
     */
   def rollbackGroup(spark: org.apache.spark.sql.SparkSession,
-                    tables: Seq[(String, Path, Long)]): Seq[(String, Long, Long)] =
-    tables.reverse.map { case (ident, dir, v) =>
+                    tables: Seq[(String, GraftTable, Long)]): Seq[(String, Long, Long)] =
+    tables.reverse.map { case (ident, t, v) =>
+      val dir = new Path(t.dir)
       // per-table FS: a group may span registered external tables on
       // other filesystems
       val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
@@ -347,8 +350,7 @@ object GraftBranch {
       val current = GraftTable.readFullEntries(fs, dir, head)
       if (head == v || current == GraftTable.readFullEntries(fs, dir, v))
         (ident, v, head)
-      else (ident, v, GraftMaintenance.restore(spark,
-        GraftTable.open(fs, ident, dir), v))
+      else (ident, v, GraftMaintenance.restore(spark, t, v))
     }
 
   /** CHERRY-PICK: publish a branch whose commits are ALL pure APPENDS

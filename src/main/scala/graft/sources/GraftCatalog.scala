@@ -110,7 +110,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * and data all live at the registered location. Non-stub dirs resolve
     * to themselves, so every existing table is unaffected. One extra
     * `exists` per metadata resolution — driver-side, against the catalog
-    * FS, the same cost class as the readProps calls that follow it (a
+    * FS, the same cost class as the props read that follows it (a
     * production deployment would hold the pointer in its metastore row).
     */
   private def resolveDir(stub: Path): Path = {
@@ -309,14 +309,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         s"('${GraftTable.HistoryProp}'='true') to enable VERSION AS OF")
     // numbers are manifest versions; anything else resolves through the
     // named-snapshot refs (tags) — `VERSION AS OF 'pre_restatement'`
-    val v = try version.toLong catch {
-      case _: NumberFormatException =>
-        GraftRefs.resolve(fs, dir, version).getOrElse(
-          throw new IllegalArgumentException(
-            s"VERSION AS OF on $ident: '$version' is neither a manifest " +
-              s"number nor a tag (tags: " +
-              s"${GraftRefs.readAll(fs, dir).keys.toSeq.sorted.mkString(", ")})"))
-    }
+    val v = GraftRefs.versionOf(fs, dir, version, s"VERSION AS OF on $ident")
     if (!fs.exists(GraftTable.manifestPath(dir, v)))
       throw new IllegalArgumentException(
         s"$ident has no version $v (have: ${GraftTable.manifestVersions(fs, dir).mkString(", ")})")
@@ -349,63 +342,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       .getOrElse(throw new IllegalArgumentException(
         s"$ident has no snapshot at or before timestamp $tsMillis ms"))
     pinned(t, v)
-  }
-
-  /** Snapshot log of a history table: (version, commit millis, data-file
-    * count, total bytes) per manifest — the DESCRIBE HISTORY surface,
-    * exposed to SQL via the `graft_history` TVF.
-    */
-  def snapshots(ident: Identifier): Seq[(Long, Long, Long, Long)] = {
-    val t = loadGraft(ident)
-    require(t.history, s"$ident is not a history table")
-    val dir = new Path(t.dir)
-    // manifest-lifted sizes when recorded — the per-version walk then
-    // touches only the metadata log; getFileStatus covers stray files
-    val stats = GraftStats.readAll(fs, dir)
-    GraftTable.manifestVersions(fs, dir).map { v =>
-      val snap = GraftTable.snapshotAt(fs, dir, v)
-      val bytes = snap.entries.map { e =>
-        stats.get(new Path(e.file).getName).map(_.size)
-          .getOrElse(fs.getFileStatus(new Path(e.file)).getLen)
-      }.sum
-      (v, snap.commitMillis, snap.entries.size.toLong, bytes)
-    }
-  }
-
-  /** Deletion-vector density report for a merge-on-read table: per data
-    * file (name, physical rows, deleted rows, live rows). Physical row
-    * counts come from parquet footers (driver-side O(files) metadata, like
-    * `snapshots`); deleted counts are bitmap cardinalities. This is the
-    * operational dial for `GraftMaintenance.materializeDeletes` — when
-    * deleted/physical crosses the read-amplification threshold, fold the
-    * DV in. Exposed to SQL via the `graft_dv_stats` TVF.
-    */
-  def dvStats(ident: Identifier): Seq[(String, Long, Long, Long)] = {
-    val t = loadGraft(ident)
-    require(t.mor, s"$ident is not a merge-on-read table")
-    val dir = new Path(t.dir)
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    // history tables: the CURRENT snapshot's entries carry the DV mapping;
-    // plain tables: directory listing + name-keyed sidecars
-    val entries: Seq[(String, Option[String])] =
-      if (t.history)
-        GraftTable.readEntries(fs, dir,
-          GraftTable.manifestVersions(fs, dir).last)
-      else GraftTable.dataFiles(fs, dir).map { f =>
-        val dvPath = new Path(dir, GraftDv.dvName(new Path(f).getName))
-        f -> (if (fs.exists(dvPath)) Some(dvPath.toString) else None)
-      }
-    entries.map { case (f, dv) =>
-      val p = new Path(f)
-      val rows = {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try r.getRecordCount finally r.close()
-      }
-      val deleted =
-        dv.map(d => GraftDv.read(fs, new Path(d)).getLongCardinality).getOrElse(0L)
-      (p.getName, rows, deleted, rows - deleted)
-    }
   }
 
   /** Column[]-based create: the ONLY carrier of identity specs (Spark's
@@ -1085,6 +1021,26 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 }
 
+object GraftCatalog {
+  /** The graft catalog registered as `name` in this session: the one place
+    * a catalog name resolves.
+    */
+  def named(spark: SparkSession, name: String): GraftCatalog =
+    org.apache.spark.sql.graftbridge.Bridge.catalogPlugin(spark, name) match {
+      case g: GraftCatalog => g
+      case other => throw new IllegalArgumentException(
+        s"catalog $name is ${other.getClass.getName}, not a GraftCatalog")
+    }
+
+  /** A dotted table name ('ns.t'): the last part names the table, the
+    * rest its namespace.
+    */
+  def ident(table: String): Identifier = {
+    val parts = table.split('.')
+    Identifier.of(parts.init, parts.last)
+  }
+}
+
 object GraftTable {
   val MetaFile = "_graft_table.json"
   /** One-line pointer stub for REGISTERED external tables: the warehouse
@@ -1242,7 +1198,7 @@ object GraftTable {
   /** Table properties: newline-separated key=value lines in PropsFile
     * (absent file = no properties, i.e. a plain eager-commit COW table).
     */
-  def readProps(fs: FileSystem, dir: Path): Map[String, String] = {
+  private def readProps(fs: FileSystem, dir: Path): Map[String, String] = {
     val p = new Path(dir, PropsFile)
     if (!fs.exists(p)) return Map.empty
     val in = fs.open(p)
@@ -1257,13 +1213,6 @@ object GraftTable {
     }.toMap
   }
 
-  /** The table's declared schema from its meta file (None for plain
-    * parquet directories that never were a catalog table).
-    */
-  def readTableSchema(fs: FileSystem, dir: Path): Option[StructType] =
-    if (!fs.exists(new Path(dir, MetaFile))) None
-    else Some(readSchemaFile(fs, dir))
-
   private def readSchemaFile(fs: FileSystem, dir: Path): StructType = {
     val in =
       try fs.open(new Path(dir, MetaFile))
@@ -1274,6 +1223,63 @@ object GraftTable {
     val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     DataType.fromJson(json).asInstanceOf[StructType]
+  }
+
+  /** Snapshot log of a history table: (version, commit millis, data-file
+    * count, total bytes) per manifest — the DESCRIBE HISTORY surface,
+    * exposed to SQL via the `graft_history` TVF.
+    */
+  def snapshots(t: GraftTable): Seq[(Long, Long, Long, Long)] = {
+    require(t.history, s"${t.name()} is not a history table")
+    val dir = new Path(t.dir)
+    val fs = dir.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
+    // manifest-lifted sizes when recorded — the per-version walk then
+    // touches only the metadata log; getFileStatus covers stray files
+    val stats = GraftStats.readAll(fs, dir)
+    GraftTable.manifestVersions(fs, dir).map { v =>
+      val snap = GraftTable.snapshotAt(fs, dir, v)
+      val bytes = snap.entries.map { e =>
+        stats.get(new Path(e.file).getName).map(_.size)
+          .getOrElse(fs.getFileStatus(new Path(e.file)).getLen)
+      }.sum
+      (v, snap.commitMillis, snap.entries.size.toLong, bytes)
+    }
+  }
+
+  /** Deletion-vector density report for a merge-on-read table: per data
+    * file (name, physical rows, deleted rows, live rows). Physical row
+    * counts come from parquet footers (driver-side O(files) metadata, like
+    * `snapshots`); deleted counts are bitmap cardinalities. This is the
+    * operational dial for `GraftMaintenance.materializeDeletes` — when
+    * deleted/physical crosses the read-amplification threshold, fold the
+    * DV in. Exposed to SQL via the `graft_dv_stats` TVF.
+    */
+  def dvStats(t: GraftTable): Seq[(String, Long, Long, Long)] = {
+    require(t.mor, s"${t.name()} is not a merge-on-read table")
+    val dir = new Path(t.dir)
+    val conf = SparkSession.active.sessionState.newHadoopConf()
+    val fs = dir.getFileSystem(conf)
+    // history tables: the CURRENT snapshot's entries carry the DV mapping;
+    // plain tables: directory listing + name-keyed sidecars
+    val entries: Seq[(String, Option[String])] =
+      if (t.history)
+        GraftTable.readEntries(fs, dir,
+          GraftTable.manifestVersions(fs, dir).last)
+      else GraftTable.dataFiles(fs, dir).map { f =>
+        val dvPath = new Path(dir, GraftDv.dvName(new Path(f).getName))
+        f -> (if (fs.exists(dvPath)) Some(dvPath.toString) else None)
+      }
+    entries.map { case (f, dv) =>
+      val p = new Path(f)
+      val rows = {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+        try r.getRecordCount finally r.close()
+      }
+      val deleted =
+        dv.map(d => GraftDv.read(fs, new Path(d)).getLongCardinality).getOrElse(0L)
+      (p.getName, rows, deleted, rows - deleted)
+    }
   }
 
   /** Load the table at `dir`: the one place a [[GraftTable]] is read from
@@ -1290,18 +1296,12 @@ object GraftTable {
   /** The graft table `table` ('ns.t') of catalog `catalog`, loaded through
     * the catalog (registered locations resolved, reader format enforced).
     */
-  def load(spark: SparkSession, catalog: String, table: String): GraftTable = {
-    val parts = table.split('.')
-    org.apache.spark.sql.graftbridge.Bridge.catalogPlugin(spark, catalog) match {
-      case g: GraftCatalog => g.loadTable(Identifier.of(parts.init, parts.last)) match {
-        case t: GraftTable => t
-        case other => throw new IllegalArgumentException(
-          s"$catalog.$table is ${other.getClass.getName}, not a graft table")
-      }
+  def load(spark: SparkSession, catalog: String, table: String): GraftTable =
+    GraftCatalog.named(spark, catalog).loadTable(GraftCatalog.ident(table)) match {
+      case t: GraftTable => t
       case other => throw new IllegalArgumentException(
-        s"catalog $catalog is ${other.getClass.getName}, not a GraftCatalog")
+        s"$catalog.$table is ${other.getClass.getName}, not a graft table")
     }
-  }
 
   /** The pure props → table step behind [[open]]: refuses a reader format
     * this build predates, then builds the table. CREATE uses it with the

@@ -32,26 +32,26 @@ import org.apache.spark.sql.SparkSession
 object GraftClone {
 
   /** Returns (files referenced/copied, bytes copied — 0 for shallow). */
-  def clone(spark: SparkSession, srcDir: String, dstDir: String,
+  def clone(spark: SparkSession, t: GraftTable, dstDir: String,
             shallow: Boolean): (Int, Long) = {
-    val src = new Path(srcDir)
+    val src = new Path(t.dir)
     val dst = new Path(dstDir)
-    val fs = src.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, src)
-    require(props.get(GraftTable.HistoryProp).contains("true"),
-      s"graft_clone: $srcDir is not a history table — a clone pins a " +
+    // a registered source may live on another filesystem than the clone
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = src.getFileSystem(conf)
+    val dstFs = dst.getFileSystem(conf)
+    require(t.history,
+      s"graft_clone: ${t.dir} is not a history table — a clone pins a " +
         "SNAPSHOT, which plain directory-listing tables don't have")
-    require(!fs.exists(new Path(dst, GraftTable.MetaFile)),
+    require(!dstFs.exists(new Path(dst, GraftTable.MetaFile)),
       s"graft_clone: $dstDir already is a table")
-    val schema = GraftTable.readTableSchema(fs, src).getOrElse(
-      throw new IllegalArgumentException(s"graft_clone: $srcDir has no schema"))
     val head = GraftTable.readHead(fs, src, None)
     val (v, entries) = (head.version, head.entries)
-    require(v > 0, s"graft_clone: $srcDir has no snapshot")
-    fs.mkdirs(dst)
-    val out = fs.create(new Path(dst, GraftTable.MetaFile), true)
-    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-    GraftTable.writeProps(fs, dst, props)
+    require(v > 0, s"graft_clone: ${t.dir} has no snapshot")
+    dstFs.mkdirs(dst)
+    val out = dstFs.create(new Path(dst, GraftTable.MetaFile), true)
+    try out.write(t.schema().json.getBytes("UTF-8")) finally out.close()
+    GraftTable.writeProps(dstFs, dst, t.props)
     // Destination subpath of a source file. Partitioned layouts live in
     // the PATH (col=value/, ts_day=N/ segments — parsePartValues reads
     // them back), so a deep copy must preserve the source-relative
@@ -75,15 +75,13 @@ object GraftClone {
           (e.file +: (e.dv.toSeq ++ e.eqs)).map { f =>
             (f, new Path(dst, subpath(f)).toString)
           })
-        val conf = new SerializableHadoopConf(
-          spark.sessionState.newHadoopConf())
+        val sconf = new SerializableHadoopConf(conf)
         spark.sparkContext
           .parallelize(pairs, GraftMaintenance.parallelism(spark, pairs.size))
           .foreach { case (from, to) =>
-            val p = new Path(from)
-            val fsx = p.getFileSystem(conf.value)
-            org.apache.hadoop.fs.FileUtil.copy(
-              fsx, p, fsx, new Path(to), false, conf.value)
+            val (p, q) = (new Path(from), new Path(to))
+            org.apache.hadoop.fs.FileUtil.copy(p.getFileSystem(sconf.value), p,
+              q.getFileSystem(sconf.value), q, false, sconf.value)
           }
         entries.map { e =>
           def local(f: String) = new Path(dst, subpath(f)).toString
@@ -94,19 +92,19 @@ object GraftClone {
     // identity watermark + any txn markers ride into the clone's first
     // manifest, so generated keys continue past the source's
     val carried = head.meta.filter(kv => kv._1.startsWith("idwm:"))
-    GraftTable.commitRetrying(fs, dst,
+    GraftTable.commitRetrying(dstFs, dst,
         meta = carried ++ GraftTable.kindMeta(GraftTable.KindAppend))(
       GraftTable.pinnedAt(dstDir, 0L)(cloned))
     // lift the source's stats for the referenced files (names are
     // uuid-unique — keys stay valid whether referenced or copied)
     val srcStats = GraftStats.readAll(fs, src)
     val names = entries.map(e => new Path(e.file).getName)
-    GraftStats.writeCommitStats(fs, dst,
+    GraftStats.writeCommitStats(dstFs, dst,
       names.flatMap(n => srcStats.get(n).map(n -> _)))
     val bytes =
       if (shallow) 0L
       else entries.map(e =>
-        fs.getFileStatus(new Path(dst, subpath(e.file))).getLen).sum
+        dstFs.getFileStatus(new Path(dst, subpath(e.file))).getLen).sum
     (entries.size, bytes)
   }
 }

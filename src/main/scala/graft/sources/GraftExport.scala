@@ -43,8 +43,9 @@ object GraftExport {
     * racing commit can never make the caller record a pin the export
     * does not actually contain.
     */
-  def exportSnapshot(spark: SparkSession, srcDir: String, destDir: String,
+  def exportSnapshot(spark: SparkSession, t: GraftTable, destDir: String,
                      version: Option[Long] = None): (Int, Int, Long) = {
+    val srcDir = t.dir
     val src = new Path(srcDir)
     val dest = new Path(destDir)
     // the export's headline use case is INTEROP — table on one store, the
@@ -54,8 +55,7 @@ object GraftExport {
     val conf = spark.sessionState.newHadoopConf()
     val fs = src.getFileSystem(conf)
     val dstFs = dest.getFileSystem(conf)
-    val props = GraftTable.readProps(fs, src)
-    require(props.get(GraftTable.HistoryProp).contains("true"),
+    require(t.history,
       s"graft_export: $srcDir is not a history table — an export pins a " +
         "SNAPSHOT, which plain directory-listing tables don't have")
     val v = version.getOrElse(
@@ -68,8 +68,7 @@ object GraftExport {
         "file(s) (DV / equality deletes) — a raw parquet reader would " +
         "RESURRECT deleted rows; run graft_compact to fold the masks, " +
         "then export")
-    val schema = GraftTable.readTableSchema(fs, src).getOrElse(
-      throw new IllegalArgumentException(s"graft_export: $srcDir has no schema"))
+    val schema = t.schema()
     // existence-default hazard: files written before a defaulted column
     // existed read as NULL outside graft, not as the declared default
     val defaulted = schema.fields.filter(f =>
@@ -138,13 +137,13 @@ object GraftExport {
     */
   def exportGroup(spark: SparkSession, destRoot: String, groupId: Long,
                   branch: String,
-                  tables: Seq[(String, String, Long)]): Seq[(String, Int, Int)] = {
+                  tables: Seq[(String, GraftTable, Long)]): Seq[(String, Int, Int)] = {
     val dest = new Path(destRoot)
     val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
-    val reports = tables.map { case (ident, srcDir, v) =>
+    val reports = tables.map { case (ident, t, v) =>
       val sub = ident.split('.').foldLeft(dest)(new Path(_, _))
       val (files, parts, _) =
-        try exportSnapshot(spark, srcDir, sub.toString, Some(v))
+        try exportSnapshot(spark, t, sub.toString, Some(v))
         catch {
           case e: Exception => throw new IllegalStateException(
             s"graft_export_group: export of $ident failed — no group " +

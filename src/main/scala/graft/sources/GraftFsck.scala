@@ -33,14 +33,9 @@ object GraftFsck {
 
   case class Finding(check: String, status: String, n: Long)
 
-  def audit(spark: SparkSession, dirStr: String): Seq[Finding] = {
-    val dir = new Path(dirStr)
+  def audit(spark: SparkSession, t: GraftTable): Seq[Finding] = {
+    val dir = new Path(t.dir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(new Path(dir, GraftTable.MetaFile)),
-      s"graft_fsck: $dirStr is not a graft table")
-    val history =
-      GraftTable.readProps(fs, dir).get(GraftTable.HistoryProp)
-        .contains("true")
 
     // one listing = the existence oracle (committed state only)
     def walk(d: Path): Seq[Path] =
@@ -52,7 +47,7 @@ object GraftFsck {
       }
     val onDisk = walk(dir).map(p => GraftTable.relativize(dir, p)).toSet
 
-    if (!history) {
+    if (!t.history) {
       // a plain table IS its directory listing — the only possible finding
       // is a stats entry for a file that no longer exists (harmless; the
       // reader keys stats by live file name)

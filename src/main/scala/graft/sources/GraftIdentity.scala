@@ -96,12 +96,11 @@ object GraftIdentity {
     * it; the meta rides the same atomic create as every commit).
     * Returns (old, new).
     */
-  def sync(spark: org.apache.spark.sql.SparkSession, tableDir: String): (Long, Long) = {
-    val dir = new Path(tableDir)
+  def sync(spark: org.apache.spark.sql.SparkSession, t: GraftTable): (Long, Long) = {
+    val dir = new Path(t.dir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = GraftTable.readProps(fs, dir)
-    val spec = specOf(props).getOrElse(throw new IllegalArgumentException(
-      s"graft_sync_identity: $tableDir has no identity column"))
+    val spec = t.identity.getOrElse(throw new IllegalArgumentException(
+      s"graft_sync_identity: ${t.dir} has no identity column"))
     val head = GraftTable.readHead(fs, dir, None)
     val (v, entries) = (head.version, head.entries)
     val wm0 = watermark(head.meta, spec)
@@ -128,7 +127,7 @@ object GraftIdentity {
     if (wm1 == wm0) return (wm0, wm0)
     GraftTable.commitRetrying(fs, dir, meta = GraftTable.kindMeta(
         GraftTable.KindCompact) + (wmKey(spec.col) -> wm1.toString))(
-      GraftTable.pinnedAt(tableDir, v)(entries))
+      GraftTable.pinnedAt(t.dir, v)(entries))
     (wm0, wm1)
   }
 }

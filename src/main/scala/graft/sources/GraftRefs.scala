@@ -55,6 +55,19 @@ object GraftRefs {
   def resolve(fs: FileSystem, dir: Path, name: String): Option[Long] =
     readAll(fs, dir).get(name)
 
+  /** `s` as a manifest version number, else as a tag of the table at
+    * `dir` (the one parse behind VERSION AS OF, restore and export);
+    * refuses with `what` and the table's tags.
+    */
+  def versionOf(fs: FileSystem, dir: Path, s: String, what: String): Long =
+    try s.toLong catch {
+      case _: NumberFormatException =>
+        val refs = readAll(fs, dir)
+        refs.getOrElse(s, throw new IllegalArgumentException(
+          s"$what: '$s' is neither a version nor a tag (tags: " +
+            s"${refs.keys.toSeq.sorted.mkString(", ")})"))
+    }
+
   /** Create or retarget a ref. The target manifest must exist. */
   def set(fs: FileSystem, dir: Path, name: String, version: Long): Unit = {
     validate(name)

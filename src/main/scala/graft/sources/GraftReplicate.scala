@@ -151,10 +151,11 @@ object GraftReplicate {
         java.util.Arrays.equals(readAll(srcFs, src), readAll(dstFs, dst))) 0L
     else atomicCopy(srcFs, src, dstFs, dst)
 
-  /** Sync `dstDir` to mirror the table at `srcDir`. Idempotent; returns
+  /** Sync `dstDir` to mirror the loaded table `t`. Idempotent; returns
     * what this call actually moved.
     */
-  def replicate(spark: SparkSession, srcDir: String, dstDir: String): Report = {
+  def replicate(spark: SparkSession, t: GraftTable, dstDir: String): Report = {
+    val srcDir = t.dir
     val src = new Path(srcDir)
     val dst = new Path(dstDir)
     // the whole point is CROSS-warehouse: source and destination may live
@@ -163,10 +164,7 @@ object GraftReplicate {
     val conf0 = spark.sessionState.newHadoopConf()
     val srcFs = src.getFileSystem(conf0)
     val dstFs = dst.getFileSystem(conf0)
-    require(srcFs.exists(new Path(src, GraftTable.MetaFile)),
-      s"graft_replicate: $srcDir is not a graft table")
-    val props = GraftTable.readProps(srcFs, src)
-    require(props.get(GraftTable.HistoryProp).contains("true"),
+    require(t.history,
       s"graft_replicate: $srcDir is not a history table — a mirror " +
         "follows COMMITS, which plain directory-listing tables don't have")
     require(src.toUri != dst.toUri ||
@@ -334,18 +332,18 @@ object GraftReplicate {
     * advertises a group before every table of it is readable. Re-runs
     * are the per-table O(delta) sync; a quiet group costs zero bytes.
     *
-    * @param tables the group's (ident, resolved source dir) in recorded
-    *               order — the caller resolves idents (registered
-    *               external tables follow their pointers here)
+    * @param tables the group's (ident, loaded table, group version) in
+    *               recorded order — the caller loads each ident
+    *               (registered external tables follow their pointers)
     */
   def replicateGroup(spark: SparkSession, destRoot: String,
                      groupId: Long, branch: String,
-                     tables: Seq[(String, String, Long)]): Seq[(String, Report)] = {
+                     tables: Seq[(String, GraftTable, Long)]): Seq[(String, Report)] = {
     val dest = new Path(destRoot)
     val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
-    val reports = tables.map { case (ident, srcDir, _) =>
+    val reports = tables.map { case (ident, t, _) =>
       val sub = ident.split('.').foldLeft(dest)(new Path(_, _))
-      ident -> replicate(spark, srcDir, sub.toString)
+      ident -> replicate(spark, t, sub.toString)
     }
     // every table of the group is readable at the mirror — NOW advertise
     GraftBranch.installGroupFile(fs, dest, groupId, branch,

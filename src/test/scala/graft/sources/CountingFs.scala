@@ -4,7 +4,7 @@ import java.net.URI
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.connector.catalog.{Identifier, Table}
 
 /** The local disk under a third scheme (`countfs://`) that counts every
@@ -20,6 +20,12 @@ class CountingFs extends RawLocalFileSystem {
       .incrementAndGet()
     super.open(f, bufferSize)
   }
+
+  // plain statuses: the local file system loads permissions through a
+  // `file:` URI, which a countfs path is not (`listFiles` asks for them)
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(st => new FileStatus(st.getLen, st.isDirectory,
+      st.getReplication, st.getBlockSize, st.getModificationTime, st.getPath))
 }
 
 object CountingFs {

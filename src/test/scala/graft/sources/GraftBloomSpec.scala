@@ -267,8 +267,9 @@ class GraftBloomSpec extends SparkSpec {
       s"unexpected refusal: ${e.getMessage.take(200)}")
     // UNSET stops indexing future writes; existing entries keep pruning
     sql("ALTER TABLE graft_bl.db.iw UNSET TBLPROPERTIES('index.trgm.cols')")
-    assert(!GraftTable.readProps(fs, dir).contains(GraftBloom.TrgmColsProp),
-      s"UNSET must remove the key; props=${GraftTable.readProps(fs, dir)}")
+    val props = TestTables.at(dir).props
+    assert(!props.contains(GraftBloom.TrgmColsProp),
+      s"UNSET must remove the key; props=$props")
     val beforeKeys = GraftBloom.readAll(fs, dir).keySet
     spark.range(9000, 9002).toDF("id").withColumn("grp", lit(3L))
       .withColumn("body", lit("post-unset rows"))

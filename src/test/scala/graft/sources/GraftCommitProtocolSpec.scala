@@ -313,7 +313,8 @@ class GraftCommitProtocolSpec extends SparkSpec {
     verb("restore", "t")(
       GraftMaintenance.restore(spark, TestTables.at(s"$wh/db/t"), vInsert))
     verb("clone", "tc")(
-      GraftClone.clone(spark, s"$wh/db/t", s"$wh/db/tc", shallow = false))
+      GraftClone.clone(spark, TestTables.at(s"$wh/db/t"), s"$wh/db/tc",
+        shallow = false))
     verb("WAP publish", "t") {
       val token = GraftWap.stage(spark, "graft_kinds", "db.t",
         spark.range(200, 210).selectExpr("id", "id AS v"))

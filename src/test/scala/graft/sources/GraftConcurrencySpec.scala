@@ -284,7 +284,7 @@ class GraftConcurrencySpec extends SparkSpec {
     */
   private def assertNoDebris(dir: Path): Unit = {
     val f = fs(dir)
-    val orphans = GraftFsck.audit(spark, dir.toString)
+    val orphans = GraftFsck.audit(spark, TestTables.at(dir))
       .find(_.check == "orphan_files").get.n
     assert(orphans == 0L, s"a refused commit must unland its files: $orphans orphans")
     val referenced = GraftTable.manifestVersions(f, dir)

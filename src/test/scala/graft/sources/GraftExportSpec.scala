@@ -58,13 +58,14 @@ class GraftExportSpec extends SparkSpec {
       .coalesce(1).writeTo("graft_ex2.db.t2").append()
     sql("ALTER TABLE graft_ex2.db.t2 ADD COLUMN tier STRING DEFAULT 'std'")
     val e = intercept[IllegalArgumentException] {
-      GraftExport.exportSnapshot(spark, s"$warehouse/db/t2", s"$outside/t2")
+      GraftExport.exportSnapshot(spark, TestTables.at(s"$warehouse/db/t2"),
+        s"$outside/t2")
     }
     assert(e.getMessage.contains("existence default"), e.getMessage)
     // a COW rewrite materializes the default physically
     sql("UPDATE graft_ex2.db.t2 SET v = 'y' WHERE id >= 0")
     val (files, _, _) = GraftExport.exportSnapshot(
-      spark, s"$warehouse/db/t2", s"$outside/t2")
+      spark, TestTables.at(s"$warehouse/db/t2"), s"$outside/t2")
     assert(files > 0)
     val got = spark.read.parquet(
       GraftExport.manifestPaths(fs, new Path(s"$outside/t2")): _*)
@@ -82,7 +83,7 @@ class GraftExportSpec extends SparkSpec {
       .coalesce(1).writeTo("graft_ex2.db.t5").append()
     val dest = s"graftfs://$outside/t5x" // same disk, DIFFERENT scheme
     val (files, _, v) = GraftExport.exportSnapshot(
-      spark, s"$warehouse/db/t5", dest)
+      spark, TestTables.at(s"$warehouse/db/t5"), dest)
     assert(files > 0 && v == 2L)
     // the tree landed (visible through the plain local fs) and its
     // manifest paths are qualified against the SOURCE scheme, so an
@@ -98,10 +99,11 @@ class GraftExportSpec extends SparkSpec {
           |TBLPROPERTIES('history'='true')""".stripMargin)
     spark.range(0, 10).toDF("id").coalesce(1)
       .writeTo("graft_ex2.db.t3").append()
-    GraftClone.clone(spark, s"$warehouse/db/t3", s"$warehouse/db/t3s",
+    GraftClone.clone(spark, TestTables.at(s"$warehouse/db/t3"), s"$warehouse/db/t3s",
       shallow = true)
     val e = intercept[IllegalArgumentException] {
-      GraftExport.exportSnapshot(spark, s"$warehouse/db/t3s", s"$outside/t3s")
+      GraftExport.exportSnapshot(spark, TestTables.at(s"$warehouse/db/t3s"),
+        s"$outside/t3s")
     }
     assert(e.getMessage.contains("foreign"), e.getMessage)
   }

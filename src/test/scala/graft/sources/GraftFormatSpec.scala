@@ -29,7 +29,7 @@ class GraftFormatSpec extends SparkSpec {
   }
 
   private def props(t: String): Map[String, String] =
-    GraftTable.readProps(fs, new Path(s"$warehouse/db/$t"))
+    TestTables.at(s"$warehouse/db/$t").props
 
   private def raise(t: String, kv: (String, String)): Unit =
     GraftTable.writeProps(fs, new Path(s"$warehouse/db/$t"), props(t) + kv)

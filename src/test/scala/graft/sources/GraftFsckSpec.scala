@@ -28,7 +28,8 @@ class GraftFsckSpec extends SparkSpec {
   }
 
   private def audit(dir: String): Map[String, (String, Long)] =
-    GraftFsck.audit(spark, dir).map(f => f.check -> (f.status, f.n)).toMap
+    GraftFsck.audit(spark, TestTables.at(dir))
+      .map(f => f.check -> (f.status, f.n)).toMap
 
   test("healthy history table: all ok; SQL surface serves the rows") {
     sql("""CREATE TABLE graft_fk2.db.ok (id BIGINT, v STRING)

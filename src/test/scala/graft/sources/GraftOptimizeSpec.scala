@@ -94,7 +94,7 @@ class GraftOptimizeSpec extends SparkSpec {
           |PARTITIONED BY (seg) TBLPROPERTIES('history'='true')"""
       .stripMargin)
     frag("h2", 2)
-    GraftClone.clone(spark, s"$warehouse/db/h2", s"$warehouse/db/h2s",
+    GraftClone.clone(spark, TestTables.at(s"$warehouse/db/h2"), s"$warehouse/db/h2s",
       shallow = true)
     val e = intercept[IllegalArgumentException] {
       GraftMaintenance.optimizeTable(spark, TestTables.at(s"$warehouse/db/h2s"))

@@ -37,7 +37,8 @@ class GraftRegisterSpec extends SparkSpec {
     spark.range(0, n).toDF("id").withColumn("v", concat(lit("r"), col("id")))
       .writeTo(s"graft_rg2.db.$name").append()
     val ext = s"$outside/$name"
-    GraftClone.clone(spark, s"$warehouse/db/$name", ext, shallow = false)
+    GraftClone.clone(spark, TestTables.at(s"$warehouse/db/$name"), ext,
+      shallow = false)
     sql(s"DROP TABLE graft_rg2.db.$name")
     ext
   }
@@ -88,6 +89,19 @@ class GraftRegisterSpec extends SparkSpec {
       .map(_.getPath.getName).toSet == Set(GraftTable.LocationFile))
   }
 
+  test("graft_clone of a registered table lands in the catalog's warehouse") {
+    val ext = makeExternal("t5", 20)
+    sql(s"SELECT * FROM graft_register('graft_rg2', 'db.reg5', '$ext')")
+    val r = sql("SELECT * FROM graft_clone('graft_rg2', 'db.reg5', " +
+      "'db.reg5c', 'shallow')").collect().head
+    assert(r.getInt(0) > 0 && r.getLong(1) == 0L, r.toString)
+    assert(fs.exists(new Path(s"$warehouse/db/reg5c", GraftTable.MetaFile)),
+      "the clone must be a table of the warehouse")
+    assert(spark.table("graft_rg2.db.reg5c").count() == 20)
+    assert(spark.table("graft_rg2.db.reg5c").exceptAll(
+      spark.table("graft_rg2.db.reg5")).isEmpty)
+  }
+
   test("refusals: non-table location, occupied name, view name") {
     val e1 = intercept[Exception] {
       sql(s"SELECT * FROM graft_register('graft_rg2', 'db.bad', '$outside/nope')")
@@ -126,8 +140,7 @@ class GraftRegisterSpec extends SparkSpec {
     // wins and the stub holds exactly the winner's location
     val extA = makeExternal("regrace_a", 5)
     val extB = makeExternal("regrace_b", 7)
-    val cat = org.apache.spark.sql.graftbridge.Bridge
-      .catalogPlugin(spark, "graft_rg2").asInstanceOf[GraftCatalog]
+    val cat = GraftCatalog.named(spark, "graft_rg2")
     val ident = org.apache.spark.sql.connector.catalog.Identifier
       .of(Array("db"), "regrace")
     val start = new java.util.concurrent.CyclicBarrier(2)

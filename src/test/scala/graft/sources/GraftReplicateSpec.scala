@@ -45,7 +45,7 @@ class GraftReplicateSpec extends SparkSpec {
     sql("UPDATE graft_rp2.db.h1 SET v = 'X' WHERE id % 10 = 3") // v3
     val mir = s"$outside/h1"
 
-    val r1 = GraftReplicate.replicate(spark, src, mir)
+    val r1 = GraftReplicate.replicate(spark, TestTables.at(src), mir)
     assert(r1.versionsSynced == 3 && r1.bytesCopied > 0 &&
       r1.headVersion == 3, s"full first sync: $r1")
     // byte-faithful manifest log
@@ -61,12 +61,12 @@ class GraftReplicateSpec extends SparkSpec {
 
     // source moves on one commit; the re-sync ships exactly it
     sql("DELETE FROM graft_rp2.db.h1 WHERE id >= 150") // v4
-    val r2 = GraftReplicate.replicate(spark, src, mir)
+    val r2 = GraftReplicate.replicate(spark, TestTables.at(src), mir)
     assert(r2.versionsSynced == 1 && r2.headVersion == 4, s"delta sync: $r2")
     assert(spark.table("graft_rp2.db.m1").count() == 150)
 
     // idempotence: nothing new -> zero files, zero bytes
-    val r3 = GraftReplicate.replicate(spark, src, mir)
+    val r3 = GraftReplicate.replicate(spark, TestTables.at(src), mir)
     assert(r3.versionsSynced == 0 && r3.filesCopied == 0 &&
       r3.bytesCopied == 0, s"no-change sync must be free: $r3")
   }
@@ -75,7 +75,7 @@ class GraftReplicateSpec extends SparkSpec {
     val src = makeTable("h2", 120)
     sql("UPDATE graft_rp2.db.h2 SET v = 'Y' WHERE id < 10") // v3
     val mir = s"$outside/h2"
-    GraftReplicate.replicate(spark, src, mir)
+    GraftReplicate.replicate(spark, TestTables.at(src), mir)
     val mp = new Path(mir)
     // simulate dying between phase-4 copies: the newest manifest never
     // arrived (phase order guarantees everything it references DID)
@@ -83,7 +83,7 @@ class GraftReplicateSpec extends SparkSpec {
     val (v, entries) = GraftTable.headState(fs, mp, None)
     assert(v == 2L && entries.nonEmpty,
       "the truncated mirror must read as the previous version")
-    val healed = GraftReplicate.replicate(spark, src, mir)
+    val healed = GraftReplicate.replicate(spark, TestTables.at(src), mir)
     assert(healed.versionsSynced == 1 && healed.headVersion == 3L)
     assert(GraftTable.headState(fs, mp, None)._1 == 3L)
   }
@@ -92,15 +92,17 @@ class GraftReplicateSpec extends SparkSpec {
     val a = makeTable("h3", 50)
     val b = makeTable("h4", 50)
     val mir = s"$outside/h3"
-    GraftReplicate.replicate(spark, a, mir)
+    GraftReplicate.replicate(spark, TestTables.at(a), mir)
     val e = intercept[IllegalArgumentException] {
-      GraftReplicate.replicate(spark, b, mir)
+      GraftReplicate.replicate(spark, TestTables.at(b), mir)
     }
     assert(e.getMessage.contains("diverges"), e.getMessage)
 
-    GraftClone.clone(spark, a, s"$warehouse/db/h3s", shallow = true)
+    GraftClone.clone(spark, TestTables.at(a), s"$warehouse/db/h3s",
+      shallow = true)
     val e2 = intercept[IllegalArgumentException] {
-      GraftReplicate.replicate(spark, s"$warehouse/db/h3s", s"$outside/h3s")
+      GraftReplicate.replicate(spark, TestTables.at(s"$warehouse/db/h3s"),
+        s"$outside/h3s")
     }
     assert(e2.getMessage.contains("foreign"), e2.getMessage)
   }
@@ -112,7 +114,7 @@ class GraftReplicateSpec extends SparkSpec {
     val sp = new Path(src)
     GraftBranch.create(fs, sp, "dev") // record: dev -> 2
     val mir = s"$outside/h6"
-    GraftReplicate.replicate(spark, src, mir)
+    GraftReplicate.replicate(spark, TestTables.at(src), mir)
     assert(GraftBranch.readAll(fs, new Path(mir)) == Map("dev" -> 2L))
 
     // drop + advance one commit + re-fork: the record becomes 'dev\t3' —
@@ -121,14 +123,14 @@ class GraftReplicateSpec extends SparkSpec {
     GraftBranch.drop(fs, sp, "dev")
     sql("UPDATE graft_rp2.db.h6 SET v = 'Z' WHERE id = 1") // v3
     GraftBranch.create(fs, sp, "dev") // record: dev -> 3
-    GraftReplicate.replicate(spark, src, mir)
+    GraftReplicate.replicate(spark, TestTables.at(src), mir)
     assert(GraftBranch.readAll(fs, new Path(mir)) == Map("dev" -> 3L),
       "the re-forked base must reach the mirror despite identical length")
 
     // head-state retirement: the source dropping its last branch must not
     // leave the mirror advertising a phantom one
     GraftBranch.drop(fs, sp, "dev")
-    GraftReplicate.replicate(spark, src, mir)
+    GraftReplicate.replicate(spark, TestTables.at(src), mir)
     assert(GraftBranch.readAll(fs, new Path(mir)).isEmpty,
       "mirror must retire the branches record the source deleted")
   }
@@ -138,9 +140,9 @@ class GraftReplicateSpec extends SparkSpec {
     val src = makeTable("h8", 60)
     sql("UPDATE graft_rp2.db.h8 SET v = 'W' WHERE id % 7 = 0") // v3: more files
     val mir = s"$outside/h8"
-    GraftReplicate.replicate(spark, src, mir)
+    GraftReplicate.replicate(spark, TestTables.at(src), mir)
     val before = GraftReplicate.listingCalls.get()
-    GraftReplicate.replicate(spark, src, mir)
+    GraftReplicate.replicate(spark, TestTables.at(src), mir)
     assert(GraftReplicate.listingCalls.get() - before == 2,
       "one listFiles(recursive) per side — a regression to tree-walking " +
         "would be O(directories) serial RPCs at a real mirror")
@@ -155,13 +157,13 @@ class GraftReplicateSpec extends SparkSpec {
       .withColumn("v", concat(lit("b"), col("id")))
       .writeTo("graft_rp2.db.h9.branch_dev").append() // branch commit v3
     val mir = s"$outside/h9"
-    GraftReplicate.replicate(spark, src, mir)
+    GraftReplicate.replicate(spark, TestTables.at(src), mir)
     val bm = GraftTable.manifestVersions(fs, new Path(mir), Some("dev")).last
     val p = GraftTable.manifestPath(new Path(mir), bm, Some("dev"))
     val out = fs.create(p, true)
     out.write("@_graft_segment_tampered.txt".getBytes("UTF-8")); out.close()
     val e = intercept[IllegalArgumentException] {
-      GraftReplicate.replicate(spark, src, mir)
+      GraftReplicate.replicate(spark, TestTables.at(src), mir)
     }
     assert(e.getMessage.contains("branch 'dev'"), e.getMessage)
   }
@@ -169,13 +171,13 @@ class GraftReplicateSpec extends SparkSpec {
   test("stale derivable metadata on the mirror is dropped, not shadowed") {
     val src = makeTable("h5", 80)
     val mir = s"$outside/h5"
-    GraftReplicate.replicate(spark, src, mir)
+    GraftReplicate.replicate(spark, TestTables.at(src), mir)
     // a stats twin the source no longer has (consolidation / re-key on
     // the source between syncs leaves exactly this shape on the mirror)
     val stale = new Path(mir, s"${GraftStats.StatsDirName}/stats-zzz-stale.txt")
     val out = fs.create(stale, true)
     out.write("bogus\n".getBytes("UTF-8")); out.close()
-    GraftReplicate.replicate(spark, src, mir)
+    GraftReplicate.replicate(spark, TestTables.at(src), mir)
     assert(!fs.exists(stale),
       "re-sync must drop metadata-dir files the source does not have")
   }

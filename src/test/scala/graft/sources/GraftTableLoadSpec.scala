@@ -76,11 +76,17 @@ class GraftTableLoadSpec extends SparkSpec {
       CountingFs.opened(GraftTable.MetaFile))
   }
 
-  private def assertOneReadPerLoad(what: String)(body: => Any): Unit = {
-    val (loads, props, schema) = reads(body)
+  /** `copies`: opens of each metadata file a verb makes to copy its bytes
+    * elsewhere (a mirror ships them verbatim) rather than to read them.
+    */
+  private def assertOneReadPerLoad[T](what: String, copies: Int = 0)
+                                     (body: => T): T = {
+    var result: Option[T] = None
+    val (loads, props, schema) = reads { result = Some(body) }
     assert(loads > 0, s"$what: no table load counted")
-    assert(props <= loads && schema <= loads,
+    assert(props <= loads + copies && schema <= loads + copies,
       s"$what: $loads loads, $props props reads, $schema schema reads")
+    result.get
   }
 
   test("INSERT and graft_compact read the metadata files once per table load") {
@@ -104,6 +110,33 @@ class GraftTableLoadSpec extends SparkSpec {
     assert(sql("SELECT count(*) FROM graft_cnt.db.flat").head().getLong(0) == 20)
     assert(sql("SELECT sum(id) FROM graft_cnt.db.daily").head().getLong(0) ==
       1 + 2 + 11 + 12)
+  }
+
+  test("graft_fsck, graft_sync_identity, graft_clone, graft_export and " +
+    "graft_replicate read the metadata files once per table load") {
+    sql("""CREATE TABLE graft_cnt.db.vb
+          |(id BIGINT GENERATED BY DEFAULT AS IDENTITY, v STRING)
+          |TBLPROPERTIES('history'='true')""".stripMargin)
+    sql("INSERT INTO graft_cnt.db.vb VALUES (500, 'explicit')")
+    val out = Files.createTempDirectory("graft_load_out").toFile.getAbsolutePath
+    def run(q: String) = sql(q).collect().head
+    assertOneReadPerLoad("graft_fsck")(
+      run("SELECT * FROM graft_fsck('graft_cnt', 'db.vb')"))
+    val sync = assertOneReadPerLoad("graft_sync_identity")(
+      run("SELECT * FROM graft_sync_identity('graft_cnt', 'db.vb')"))
+    assert(sync.getLong(1) == 500L, sync.toString)
+    val clone = assertOneReadPerLoad("graft_clone")(
+      run("SELECT * FROM graft_clone('graft_cnt', 'db.vb', 'db.vb_c')"))
+    assert(clone.getInt(0) == 1, clone.toString)
+    val exp = assertOneReadPerLoad("graft_export")(
+      run(s"SELECT * FROM graft_export('graft_cnt', 'db.vb', '$out/exp')"))
+    assert(exp.getLong(2) == 3L, exp.toString)
+    // a fresh mirror receives one byte copy of the props and schema files
+    val mirror = assertOneReadPerLoad("graft_replicate", copies = 1)(
+      run(s"SELECT * FROM graft_replicate('graft_cnt', 'db.vb', '$out/mir')"))
+    assert(mirror.getLong(3) == 3L, mirror.toString)
+    assert(sql("SELECT v FROM graft_cnt.db.vb_c").collect().map(_.getString(0))
+      .toSeq == Seq("explicit"))
   }
 
   test("ALTER TABLE reads the props file once before its write") {

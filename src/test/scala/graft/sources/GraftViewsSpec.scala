@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** Catalog views: stored SQL definitions (DSv2 ViewCatalog storage),
   * created/listed/dropped through the graft_*view TVFs, and read BOTH
@@ -153,8 +152,7 @@ class GraftViewsSpec extends SparkSpec {
     sql("ALTER VIEW graft_vw.db.prop_v SET TBLPROPERTIES ('team'='ml', 'tier'='gold')")
     def props(): Map[String, String] = {
       import scala.jdk.CollectionConverters._
-      Bridge.catalogPlugin(spark, "graft_vw")
-        .asInstanceOf[GraftCatalog]
+      GraftCatalog.named(spark, "graft_vw")
         .loadView(org.apache.spark.sql.connector.catalog.Identifier.of(
           Array("db"), "prop_v"))
         .properties().asScala.toMap
