@@ -195,7 +195,7 @@ object GraftExtensions {
         GraftTable.readManifest(fs, p, v)
       } else GraftTable.dataFiles(fs, p))
         .map(f => new Path(f).getName).toSet
-    val stats = graft.sources.GraftStats.readAll(fs, p)
+    val stats = graft.sources.GraftFileLog.stats(fs, p)
       .filter { case (n, _) => liveNames.contains(n) }.values.toSeq
     graft.sources.GraftStats.skipEffectiveness(t.physicalSchema, stats)
   }
@@ -1333,7 +1333,7 @@ object GraftExtensions {
               graft.sources.GraftDv.dvName(new Path(f).getName))
             f -> (if (fs.exists(dvPath)) Some(dvPath.toString) else None)
           }
-        val stats = graft.sources.GraftStats.readAll(fs, p)
+        val stats = graft.sources.GraftFileLog.stats(fs, p)
         val rows: Seq[(String, Long, Option[Long], Option[String])] =
           entries.map { case (f, dv) =>
             val name = new Path(f).getName
@@ -1367,7 +1367,7 @@ object GraftExtensions {
           case false => GraftTable.dataFiles(fs, p)
             .map(GraftTable.GraftEntry(_, None))
         }
-        val stats = graft.sources.GraftStats.readAll(fs, p)
+        val stats = graft.sources.GraftFileLog.stats(fs, p)
         def partOf(f: String): String = {
           val rel = GraftTable.relativize(
             p, new Path(f))

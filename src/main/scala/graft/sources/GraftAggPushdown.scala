@@ -60,7 +60,7 @@ object GraftAggPushdown {
     if (entries.exists(e => e.dv.nonEmpty || e.eqs.nonEmpty)) return None
     if (table.mor && fs.listStatus(dir).exists(st =>
         st.isFile && GraftDv.isDv(st.getPath.getName))) return None
-    val stats = GraftStats.readAll(fs, dir)
+    val stats = GraftFileLog.stats(fs, dir)
     val perFile: Seq[GraftStats.FileStats] = entries.map { e =>
       stats.getOrElse(new Path(e.file).getName, return None)
     }

@@ -1,9 +1,9 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.{Base64, UUID}
+import java.util.Base64
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.sources.{EqualTo, Filter, In, StringContains, StringEndsWith, StringStartsWith}
@@ -37,19 +37,18 @@ import org.apache.spark.util.sketch.BloomFilter
   *    sound over-approximation under merge-on-read deletes.
   *
   * Lifecycle: [[buildIndex]] is ONE distributed job (a column-pruned read
-  * per file, executor-side); entries are keyed by data-file NAME
-  * (uuid-unique), appended like the stats log; [[retain]] drops entries
-  * whose files were destroyed (vacuum/purge — dead filters also stop a
-  * membership probe against erased values' old files).
+  * per file, executor-side); entries are keyed by (data-file NAME,
+  * column) in the bloom log that [[GraftFileLog]] stores, which also
+  * drops the entries of destroyed files (vacuum/purge — dead filters also
+  * stop a membership probe against erased values' old files).
   */
 object GraftBloom {
 
-  val BloomDirName = "_graft_bloom"
-  val DefaultFpp = 0.01
+  private val Fpp = 0.01
 
   /** Key-space marker for per-file TRIGRAM blooms (substring pruning):
     * entries live under (file, column + TrgmSuffix), sharing the value
-    * blooms' storage, retention and rename machinery. '#' cannot appear
+    * blooms' log. '#' cannot appear
     * in a parsed column name, so the two key spaces never collide.
     */
   val TrgmSuffix = "#trgm"
@@ -64,6 +63,11 @@ object GraftBloom {
   val BloomColsProp = "index.bloom.cols"
   val TrgmColsProp = "index.trgm.cols"
 
+  /** Value-bloom column types (plus decimals): those with a canonical string. */
+  private val Supported = Set[DataType](ByteType, ShortType, IntegerType,
+    LongType, DateType, TimestampType, TimestampNTZType, FloatType, DoubleType,
+    StringType, BooleanType)
+
   /** Parse + validate the index-on-write column declarations against the
     * physical schema — LOUD at write-builder construction (driver side),
     * not task time. Returns (bloomCols, trgmCols).
@@ -72,16 +76,13 @@ object GraftBloom {
                        physicalSchema: StructType): (Seq[String], Seq[String]) = {
     def parse(k: String): Seq[String] =
       props.get(k).toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    val supported = Set[DataType](ByteType, ShortType, IntegerType, LongType,
-      DateType, TimestampType, TimestampNTZType, FloatType, DoubleType,
-      StringType, BooleanType)
     val b = parse(BloomColsProp)
     b.foreach { c =>
       val f = physicalSchema.fields.find(_.name == c).getOrElse(
         throw new IllegalArgumentException(
           s"$BloomColsProp: column '$c' is not a physical column " +
             "(partition columns prune by path already)"))
-      require(supported.contains(f.dataType) ||
+      require(Supported.contains(f.dataType) ||
           f.dataType.isInstanceOf[DecimalType],
         s"$BloomColsProp: column '$c' has unsupported type " +
           s"${f.dataType.simpleString}")
@@ -104,21 +105,6 @@ object GraftBloom {
     bos.toByteArray
   }
 
-  /** Append pre-serialized entries (index-on-write commit path). */
-  def writeRawEntries(fs: FileSystem, dir: Path,
-                      entries: Seq[(String, String, Array[Byte])]): Unit = {
-    if (entries.isEmpty) return
-    val d = bloomDir(dir)
-    fs.mkdirs(d)
-    val out = fs.create(
-      new Path(d, f"bloom-${System.currentTimeMillis()}%013d-" +
-        s"${UUID.randomUUID().toString.take(8)}.txt"), false)
-    try out.write(entries.map { case (f, c, bytes) =>
-      s"${enc(f)}\t${enc(c)}\t" + Base64.getEncoder.encodeToString(bytes)
-    }.mkString("\n").getBytes(UTF_8))
-    finally out.close()
-  }
-
   /** Hot-loop index tracker for index-on-write: one per open data file,
     * updated next to the stats Tracker. Value blooms insert canonical
     * strings as they stream; trigram columns accumulate the distinct gram
@@ -127,11 +113,10 @@ object GraftBloom {
     */
   final class WriteTracker(schema: StructType, bloomCols: Seq[String],
                            trgmCols: Seq[String],
-                           expectedRows: Long = 1000000L,
-                           fpp: Double = DefaultFpp) {
+                           expectedRows: Long = 1000000L) {
     private val bIs = bloomCols.map(schema.fieldIndex).toArray
     private val bDts = bIs.map(i => schema.fields(i).dataType)
-    private val blooms = bIs.map(_ => BloomFilter.create(expectedRows, fpp))
+    private val blooms = bIs.map(_ => BloomFilter.create(expectedRows, Fpp))
     private val tIs = trgmCols.map(schema.fieldIndex).toArray
     private val gramSets =
       tIs.map(_ => new scala.collection.mutable.HashSet[String])
@@ -156,7 +141,7 @@ object GraftBloom {
     def result(): Seq[(String, Array[Byte])] =
       bloomCols.zip(blooms).map { case (c, bf) => c -> bloomBytes(bf) } ++
         trgmCols.zip(gramSets).map { case (c, set) =>
-          val bf = BloomFilter.create(math.max(1000L, set.size.toLong), fpp)
+          val bf = BloomFilter.create(math.max(1000L, set.size.toLong), Fpp)
           set.foreach(g => bf.putBinary(g.getBytes(UTF_8)))
           (c + TrgmSuffix) -> bloomBytes(bf)
         }
@@ -171,114 +156,23 @@ object GraftBloom {
   def grams(s: String): Seq[String] =
     if (s == null || s.length < 3) Nil else s.sliding(3).distinct.toSeq
 
-  private def bloomDir(dir: Path) = new Path(dir, BloomDirName)
-
-  // ---- storage (stats-log shape: append-only, name-ordered, last wins) --
+  // ---- line codec (stored by GraftFileLog) ------------------------------
 
   private def enc(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String): String =
     java.net.URLDecoder.decode(s, "UTF-8")
 
-  private def encodeLine(file: String, col: String, bf: BloomFilter): String = {
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    s"${enc(file)}\t${enc(col)}\t" +
-      Base64.getEncoder.encodeToString(bos.toByteArray)
-  }
+  private[sources] def encodeLine(file: String, col: String,
+                                  bytes: Array[Byte]): String =
+    s"${enc(file)}\t${enc(col)}\t" + Base64.getEncoder.encodeToString(bytes)
 
-  private def decodeLine(l: String): Option[((String, String), Array[Byte])] =
+  private[sources] def decodeLine(l: String): Option[((String, String), Array[Byte])] =
     l.split("\t", -1) match {
       case Array(f, c, b64) =>
         Some((dec(f), dec(c)) -> Base64.getDecoder.decode(b64))
       case _ => None
     }
-
-  /** All recorded filters keyed by (data file name, column). Raw bytes —
-    * deserialize lazily per planning decision (cached per scan).
-    */
-  def readAll(fs: FileSystem, dir: Path,
-              live: String => Boolean = _ => true): Map[(String, String), Array[Byte]] = {
-    val d = bloomDir(dir)
-    if (!fs.exists(d)) return Map.empty
-    fs.listStatus(d).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".txt"))
-      .map(_.getPath).sortBy(_.getName)
-      .flatMap { p =>
-        val in = fs.open(p)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        // the file name is the first field: entries of dead files are
-        // skipped undecoded
-        lines.filter { l =>
-          val tab = l.indexOf('\t')
-          tab >= 0 && live(dec(l.substring(0, tab)))
-        }.flatMap(decodeLine)
-      }.toMap
-  }
-
-  private def writeEntries(fs: FileSystem, dir: Path,
-                           entries: Seq[(String, String, BloomFilter)]): Unit = {
-    if (entries.isEmpty) return
-    val d = bloomDir(dir)
-    fs.mkdirs(d)
-    val out = fs.create(
-      new Path(d, f"bloom-${System.currentTimeMillis()}%013d-" +
-        s"${UUID.randomUUID().toString.take(8)}.txt"), false)
-    try out.write(entries.map { case (f, c, bf) => encodeLine(f, c, bf) }
-      .mkString("\n").getBytes(UTF_8))
-    finally out.close()
-  }
-
-  /** Drop entries for dead files (vacuum / purge), consolidating. */
-  def retain(fs: FileSystem, dir: Path, live: String => Boolean): Unit = {
-    val d = bloomDir(dir)
-    if (!fs.exists(d)) return
-    val all = readAll(fs, dir)
-    val kept = all.toSeq.filter { case ((f, _), _) => live(f) }
-    val old = fs.listStatus(d).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".txt"))
-      .map(_.getPath)
-    if (kept.nonEmpty) {
-      val out = fs.create(
-        new Path(d, f"bloom-${System.currentTimeMillis()}%013d-" +
-          s"${UUID.randomUUID().toString.take(8)}.txt"), false)
-      try out.write(kept.sortBy(_._1).map { case ((f, c), bytes) =>
-        s"${enc(f)}\t${enc(c)}\t" + Base64.getEncoder.encodeToString(bytes)
-      }.mkString("\n").getBytes(UTF_8))
-      finally out.close()
-    }
-    old.foreach(fs.delete(_, false))
-    if (kept.isEmpty) fs.delete(d, true)
-  }
-
-  /** Re-key one column's filters (RENAME COLUMN): bloom bits hash the
-    * stats log's canonical strings, which are name-independent — a pure
-    * metadata re-label, membership stays bit-for-bit valid.
-    */
-  def renameColumn(fs: FileSystem, dir: Path, from: String, to: String): Unit = {
-    val d = bloomDir(dir)
-    if (!fs.exists(d)) return
-    val all = readAll(fs, dir)
-    val renamed = all.toSeq.sortBy(_._1).map {
-      case ((f, c), bytes) if c == from => ((f, to), bytes)
-      case ((f, c), bytes) if c == from + TrgmSuffix =>
-        ((f, to + TrgmSuffix), bytes)
-      case other => other
-    }
-    val old = fs.listStatus(d).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".txt"))
-      .map(_.getPath)
-    val out = fs.create(
-      new Path(d, f"bloom-${System.currentTimeMillis()}%013d-" +
-        s"${UUID.randomUUID().toString.take(8)}.txt"), false)
-    try out.write(renamed.map { case ((f, c), bytes) =>
-      s"${enc(f)}\t${enc(c)}\t" + Base64.getEncoder.encodeToString(bytes)
-    }.mkString("\n").getBytes(UTF_8))
-    finally out.close()
-    old.foreach(fs.delete(_, false))
-  }
 
   // ---- canonical hashing (shared with the stats comparator) -------------
 
@@ -347,66 +241,22 @@ object GraftBloom {
 
   /** Build (or refresh) the per-file index for `cols` over the CURRENT
     * snapshot's data files: one distributed job, one column-pruned
-    * parquet read per file, executor-side. Returns files indexed.
+    * parquet read per file, executor-side ([[GraftFileLog.describe]]).
+    * Returns files indexed.
     */
-  def buildIndex(spark: SparkSession, table: GraftTable, cols: Seq[String],
-                 fpp: Double = DefaultFpp,
-                 onlyFiles: Option[Seq[String]] = None): Int = {
+  def buildIndex(spark: SparkSession, table: GraftTable, cols: Seq[String]): Int = {
     require(cols.nonEmpty, "buildIndex: at least one column")
-    val dir = new Path(table.dir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val fields = cols.map(c => table.schema().fields.find(_.name == c).getOrElse(
       throw new IllegalArgumentException(
         s"buildIndex: column '$c' is not in the table schema")))
-    val supported = Set[DataType](ByteType, ShortType, IntegerType, LongType,
-      DateType, TimestampType, TimestampNTZType, FloatType, DoubleType,
-      StringType, BooleanType)
     fields.foreach(f => require(
-      supported.contains(f.dataType) || f.dataType.isInstanceOf[DecimalType],
+      Supported.contains(f.dataType) || f.dataType.isInstanceOf[DecimalType],
       s"buildIndex: column '${f.name}' has unsupported type " +
         s"${f.dataType.simpleString}"))
     fields.foreach(f => require(!f.name.contains(TrgmSuffix),
       s"buildIndex: column name '${f.name}' collides with the reserved " +
         s"'$TrgmSuffix' key suffix"))
-    // pre-rename files are read through the same alias resolution as the
-    // scan, so their bits land under the CURRENT column key
-    val aliases = table.aliases
-    val files = onlyFiles.getOrElse(table.currentDataFiles(fs))
-    if (files.isEmpty) return 0
-    // expected insertions from the stats log when recorded; a safe
-    // default otherwise (fpp degrades gracefully if exceeded)
-    val rowsByName: Map[String, Long] =
-      GraftStats.readAll(fs, dir).map { case (n, st) => n -> st.rows }
-    val readSchema = StructType(fields)
-    val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val colNames = cols.toArray
-    val dts = fields.map(_.dataType).toArray
-    val built = spark.sparkContext
-      .parallelize(files, GraftMaintenance.parallelism(spark, files.size))
-      .flatMap { f =>
-        val p = new Path(f)
-        val expected = math.max(1000L, rowsByName.getOrElse(p.getName, 1000000L))
-        val blooms = dts.map(_ => BloomFilter.create(expected, fpp))
-        val reader = ParquetRowIO.reader(p, conf.readConf(readSchema), None, aliases)
-        try {
-          var r = reader.read()
-          while (r != null) {
-            var i = 0
-            while (i < dts.length) {
-              if (!r.isNullAt(i)) {
-                val c = canonInternal(dts(i), r.get(i, dts(i)))
-                c.foreach(s => blooms(i).putBinary(s.getBytes(UTF_8)))
-              }
-              i += 1
-            }
-            r = reader.read()
-          }
-        } finally reader.close()
-        colNames.indices.map(i => (p.getName, colNames(i), blooms(i)))
-      }
-      .collect().toSeq
-    writeEntries(fs, dir, built)
-    files.size
+    build(spark, table, cols, Nil)
   }
 
   /** Build (or refresh) the per-file TRIGRAM index for string `cols` over
@@ -418,11 +268,8 @@ object GraftBloom {
     * per file regardless of row count. Returns files indexed.
     */
   def buildTrigramIndex(spark: SparkSession, table: GraftTable,
-                        cols: Seq[String], fpp: Double = DefaultFpp,
-                        onlyFiles: Option[Seq[String]] = None): Int = {
+                        cols: Seq[String]): Int = {
     require(cols.nonEmpty, "buildTrigramIndex: at least one column")
-    val dir = new Path(table.dir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val fields = cols.map(c => table.schema().fields.find(_.name == c).getOrElse(
       throw new IllegalArgumentException(
         s"buildTrigramIndex: column '$c' is not in the table schema")))
@@ -432,38 +279,17 @@ object GraftBloom {
     fields.foreach(f => require(!f.name.contains(TrgmSuffix),
       s"buildTrigramIndex: column name '${f.name}' collides with the " +
         s"reserved '$TrgmSuffix' key suffix"))
-    val aliases = table.aliases
-    val files = onlyFiles.getOrElse(table.currentDataFiles(fs))
-    if (files.isEmpty) return 0
-    val readSchema = StructType(fields)
-    val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val colNames = cols.toArray
-    val built = spark.sparkContext
-      .parallelize(files, GraftMaintenance.parallelism(spark, files.size))
-      .flatMap { f =>
-        val p = new Path(f)
-        val sets = colNames.map(_ => new scala.collection.mutable.HashSet[String])
-        val reader = ParquetRowIO.reader(p, conf.readConf(readSchema), None, aliases)
-        try {
-          var r = reader.read()
-          while (r != null) {
-            var i = 0
-            while (i < colNames.length) {
-              if (!r.isNullAt(i))
-                sets(i) ++= grams(r.getUTF8String(i).toString)
-              i += 1
-            }
-            r = reader.read()
-          }
-        } finally reader.close()
-        colNames.indices.map { i =>
-          val bf = BloomFilter.create(math.max(1000L, sets(i).size.toLong), fpp)
-          sets(i).foreach(g => bf.putBinary(g.getBytes(UTF_8)))
-          (p.getName, colNames(i) + TrgmSuffix, bf)
-        }
-      }
-      .collect().toSeq
-    writeEntries(fs, dir, built)
+    build(spark, table, Nil, cols)
+  }
+
+  private def build(spark: SparkSession, table: GraftTable,
+                    bloomCols: Seq[String], trgmCols: Seq[String]): Int = {
+    val dir = new Path(table.dir)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = table.currentDataFiles(fs)
+    val (_, entries) =
+      GraftFileLog.describe(spark, table, files, None, bloomCols, trgmCols)
+    GraftFileLog.publish(fs, dir, Nil, entries)
     files.size
   }
 

@@ -55,20 +55,8 @@ object GraftBranch {
         "the manifest file namespace)")
   }
 
-  def readAll(fs: FileSystem, dir: Path): Map[String, Long] = {
-    val p = new Path(dir, BranchesFile)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    lines.filter(_.nonEmpty).flatMap { l =>
-      l.split("\t", 2) match {
-        case Array(n, v) => Some(n -> v.toLong)
-        case _ => None
-      }
-    }.toMap
-  }
+  def readAll(fs: FileSystem, dir: Path): Map[String, Long] =
+    GraftRefs.readMap(fs, new Path(dir, BranchesFile))
 
   /** Main version the branch forked at; None = no such branch. */
   def baseOf(fs: FileSystem, dir: Path, name: String): Option[Long] =
@@ -435,8 +423,7 @@ object GraftBranch {
           fs.delete(st.getPath, false)
       }
       sweep(dir)
-      GraftStats.retain(fs, dir, n => !reclaim.contains(n))
-      GraftBloom.retain(fs, dir, n => !reclaim.contains(n))
+      GraftFileLog.retain(fs, dir, n => !reclaim.contains(n))
     }
     own.foreach(v =>
       fs.delete(GraftTable.manifestPath(dir, v, Some(name)), false))
@@ -468,17 +455,6 @@ object GraftBranch {
     (files.toSet, segs.toSet)
   }
 
-  private def write(fs: FileSystem, dir: Path, branches: Map[String, Long]): Unit = {
-    val target = new Path(dir, BranchesFile)
-    if (branches.isEmpty) { fs.delete(target, false); return }
-    val bytes = branches.toSeq.sorted.map { case (n, v) => s"$n\t$v" }
-      .mkString("\n").getBytes(UTF_8)
-    val tmp = new Path(dir, s".tmp-branches-${UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    if (!fs.rename(tmp, target)) {
-      fs.delete(target, false)
-      require(fs.rename(tmp, target), s"could not install $target")
-    }
-  }
+  private def write(fs: FileSystem, dir: Path, branches: Map[String, Long]): Unit =
+    GraftRefs.writeMap(fs, new Path(dir, BranchesFile), branches)
 }

@@ -854,8 +854,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       if (!evo0.aliases.contains(cur) || evo0.aliases(cur) != olds)
         olds.lastOption.filterNot(o => evo0.aliases.get(cur).exists(_.contains(o)))
           .foreach { renamedFrom =>
-            GraftStats.renameColumn(fs, dir, renamedFrom, cur)
-            GraftBloom.renameColumn(fs, dir, renamedFrom, cur)
+            GraftFileLog.renameColumn(fs, dir, renamedFrom, cur)
             renames += renamedFrom -> cur
           }
     }
@@ -1235,7 +1234,7 @@ object GraftTable {
     val fs = dir.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
     // manifest-lifted sizes when recorded — the per-version walk then
     // touches only the metadata log; getFileStatus covers stray files
-    val stats = GraftStats.readAll(fs, dir)
+    val stats = GraftFileLog.stats(fs, dir)
     GraftTable.manifestVersions(fs, dir).map { v =>
       val snap = GraftTable.snapshotAt(fs, dir, v)
       val bytes = snap.entries.map { e =>
@@ -2574,7 +2573,7 @@ class GraftScan(table: GraftTable, required: StructType, rowLevel: Boolean,
     */
   private[sources] lazy val statsByName: Map[String, GraftStats.FileStats] = {
     val p = new Path(table.dir)
-    GraftStats.readAll(
+    GraftFileLog.stats(
       p.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), p,
       snapshotEntryByName.contains)
   }
@@ -2584,7 +2583,7 @@ class GraftScan(table: GraftTable, required: StructType, rowLevel: Boolean,
     */
   private lazy val bloomIndex: Map[(String, String), Array[Byte]] = {
     val p = new Path(table.dir)
-    GraftBloom.readAll(
+    GraftFileLog.blooms(
       p.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), p,
       snapshotEntryByName.contains)
   }
@@ -2897,7 +2896,7 @@ class GraftScan(table: GraftTable, required: StructType, rowLevel: Boolean,
         val bloomSafeFilters = (pushedFilters ++ substrFilters).toSeq.filter(
           _.references.forall(r => !table.existenceDefaultCols.contains(r)))
         val bloomKept =
-          if (bloomIndex.isEmpty || bloomSafeFilters.isEmpty) statsKept
+          if (bloomSafeFilters.isEmpty || bloomIndex.isEmpty) statsKept
           else {
             val cache = scala.collection.mutable.Map
               .empty[(String, String), org.apache.spark.util.sketch.BloomFilter]
@@ -3618,11 +3617,9 @@ class GraftBatchWrite(table: GraftTable, writeSchema: StructType,
       // real data values — a purge/overwrite must not leave them behind)
       if (truncateAll) {
         val live = landing.landed.map(f => new Path(f).getName).toSet
-        GraftStats.retain(fs, dir, live.contains)
-        GraftBloom.retain(fs, dir, live.contains)
+        GraftFileLog.retain(fs, dir, live.contains)
       } else replaced.filter(_.nonEmpty).foreach { gone =>
-        GraftStats.retain(fs, dir, n => !gone.contains(n))
-        GraftBloom.retain(fs, dir, n => !gone.contains(n))
+        GraftFileLog.retain(fs, dir, n => !gone.contains(n))
       }
     }
     fs.delete(stagingDir, true)

@@ -97,10 +97,10 @@ object GraftClone {
       GraftTable.pinnedAt(dstDir, 0L)(cloned))
     // lift the source's stats for the referenced files (names are
     // uuid-unique — keys stay valid whether referenced or copied)
-    val srcStats = GraftStats.readAll(fs, src)
+    val srcStats = GraftFileLog.stats(fs, src)
     val names = entries.map(e => new Path(e.file).getName)
-    GraftStats.writeCommitStats(dstFs, dst,
-      names.flatMap(n => srcStats.get(n).map(n -> _)))
+    GraftFileLog.publish(dstFs, dst,
+      names.flatMap(n => srcStats.get(n).map(n -> _)), Nil)
     val bytes =
       if (shallow) 0L
       else entries.map(e =>

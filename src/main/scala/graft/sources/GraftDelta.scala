@@ -119,18 +119,17 @@ class GraftDeltaWriteBuilder(table: GraftTable, info: LogicalWriteInfo)
   }
 }
 
-/** Per-task delta results: appended data files plus per-data-file
-  * serialized deletion bitmaps. Bitmaps ride the commit message (positions
-  * per task are bounded by the task's matched rows); at 100 TB scale the
-  * same protocol holds — a task's delete set is proportional to its slice
-  * of the change set, not to table size — though a format would stage DV
-  * files and commit references instead of bytes-in-message.
+/** Per-task delta results: the insert writer's [[GraftCommit]] (staged
+  * files with their stats and index entries, and the identity/row-id
+  * allocation) plus per-data-file serialized deletion bitmaps. Bitmaps
+  * ride the commit message (positions per task are bounded by the task's
+  * matched rows); at 100 TB scale the same protocol holds — a task's
+  * delete set is proportional to its slice of the change set, not to
+  * table size — though a format would stage DV files and commit
+  * references instead of bytes-in-message.
   */
-case class GraftDeltaCommit(inserted: Seq[String],
-                            deletes: Map[String, Array[Byte]],
-                            stats: Map[String, GraftStats.FileStats] = Map.empty,
-                            idLast: Option[Long] = None,
-                            rowLast: Option[Long] = None)
+case class GraftDeltaCommit(inserted: GraftCommit,
+                            deletes: Map[String, Array[Byte]])
   extends WriterCommitMessage
 
 class GraftDeltaBatchWrite(table: GraftTable, rowSchema: StructType,
@@ -148,52 +147,33 @@ class GraftDeltaBatchWrite(table: GraftTable, rowSchema: StructType,
   @volatile private var alloc: Option[GraftWriteJob.Allocation] = None
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val fs = stagingDir.getFileSystem(hadoopConf)
+    val conf = hadoopConf
+    val fs = stagingDir.getFileSystem(conf)
     fs.mkdirs(stagingDir)
-    // a pure DELETE plans no data columns (empty row schema) — the insert
-    // projection is never consulted then
-    val proj =
-      if (rowSchema.isEmpty) Array.empty[Int]
-      else table.physicalSchema.fields.map(f => rowSchema.fieldIndex(f.name))
-    val partIdx =
-      if (rowSchema.isEmpty) Array.empty[Int]
-      else table.partitionFields.map(f => rowSchema.fieldIndex(f.name)).toArray
-    // CHECK / NOT NULL constraints apply to delta INSERTS too (a MOR
-    // MERGE/UPDATE writing a violating value must fail like the COW path);
-    // a pure DELETE plans no data columns, so nothing to check
-    val violations =
-      if (rowSchema.isEmpty) Nil
-      else GraftConstraints.violationPredicates(SparkSession.active, table, rowSchema)
-    // delta INSERTS route through the table's layout exactly like the
-    // batch writer: bucket prefix in the file name, days() subdirs —
-    // a MOR MERGE's appended rows must not break pruning or SPJ placement
-    val (bucket, day) =
-      if (rowSchema.isEmpty) (None, None)
-      else GraftWriteJob.layout(table, rowSchema)
-    val genProjs =
-      if (rowSchema.isEmpty) Nil
-      else GraftGenerated.boundGenerators(SparkSession.active, table, rowSchema)
-    // identity and row lineage on the DELTA path: genuine inserts (MERGE
-    // ... INSERT) allocate against the head watermark exactly like a batch
+    // a pure DELETE plans no data columns (empty row schema): it writes no
+    // files, allocates nothing and builds no insert writer. Inserts take
+    // the batch writer's factory whole — layout, CHECK / NOT NULL
+    // constraints, generated columns, index-on-write columns, and the
+    // identity and row-lineage allocation: genuine inserts (MERGE ...
+    // INSERT) allocate against the head watermark exactly like a batch
     // append (the DATA row never carries `_row_id`); update-REINSERTED
     // rows carry their existing key and id (idCarry / the rowCarry
-    // side-channel from the METADATA row). A pure DELETE plans no data
-    // columns, writes no files and allocates nothing.
-    val a = new GraftWriteJob.Allocation(table, fs, rowSchema,
-      info.numPartitions, ids = rowSchema.nonEmpty, rows = rowSchema.nonEmpty)
-    alloc = Some(a)
-    val ioSchema =
-      if (rowSchema.nonEmpty) table.ioSchema else table.physicalSchema
+    // side-channel from the METADATA row)
+    val inserts =
+      if (rowSchema.isEmpty) None
+      else {
+        val a = new GraftWriteJob.Allocation(table, fs, rowSchema,
+          info.numPartitions, ids = true, rows = true)
+        alloc = Some(a)
+        Some(GraftWriteJob.writerFactory(table, rowSchema, stagingDir, conf, a,
+          rewrite = false))
+      }
     val metaRowIdIdx =
       if (table.rowLineage && metaSchema.fieldNames.contains(GraftRowId.Col))
         metaSchema.fieldIndex(GraftRowId.Col) else -1
-    new GraftDeltaWriterFactory(stagingDir.toString, ioSchema,
-      rowSchema, if (a.rowGen.isEmpty) proj else proj ++ Array(-1),
-      if (rowSchema.isEmpty) Nil else table.partitionFields, partIdx,
+    new GraftDeltaWriterFactory(inserts,
       rowIdSchema.fieldIndex(GraftTable.FileCol),
-      rowIdSchema.fieldIndex(GraftTable.PosCol),
-      new SerializableHadoopConf(hadoopConf), violations, bucket, day, genProjs,
-      a.idGen, a.rowGen, metaRowIdIdx)
+      rowIdSchema.fieldIndex(GraftTable.PosCol), metaRowIdIdx)
   }
 
   /** Commit: OR each file's new delete positions into its existing
@@ -209,17 +189,11 @@ class GraftDeltaBatchWrite(table: GraftTable, rowSchema: StructType,
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = stagingDir.getFileSystem(hadoopConf)
     val dir = new Path(table.dir)
+    val deltas = messages.toSeq.collect { case d: GraftDeltaCommit => d }
+    val inserted = deltas.map(_.inserted)
     val merged = mutable.Map.empty[String, Roaring64Bitmap]
-    val staged = mutable.Buffer.empty[String]
-    val stagedStats = mutable.Map.empty[String, GraftStats.FileStats]
-    val idLasts = mutable.Buffer.empty[Long]
-    val rowLasts = mutable.Buffer.empty[Long]
-    messages.foreach { case GraftDeltaCommit(ins, dels, sts, idl, rl) =>
-      staged ++= ins
-      stagedStats ++= sts
-      idLasts ++= idl
-      rowLasts ++= rl
-      dels.foreach { case (file, bytes) =>
+    deltas.foreach { d =>
+      d.deletes.foreach { case (file, bytes) =>
         val bm = GraftDv.fromBytes(bytes)
         merged.get(file) match {
           case Some(acc) => acc.or(bm)
@@ -227,8 +201,7 @@ class GraftDeltaBatchWrite(table: GraftTable, rowSchema: StructType,
         }
       }
     }
-    def land() = new GraftWriteJob.Landing(fs, dir, stagingDir, staged.toSeq,
-      stagedStats.toMap)
+    def land() = GraftWriteJob.landing(fs, dir, stagingDir, inserted)
     if (table.history) {
       val landing = land()
       // branch deltas read the branch head and commit into the branch
@@ -236,7 +209,7 @@ class GraftDeltaBatchWrite(table: GraftTable, rowSchema: StructType,
       // sidecars exactly like main, invisible to main until fast-forward.
       // The identity/row-id watermarks ride the SAME manifest
       val published = alloc.fold(Map.empty[String, String])(
-        _.published(idLasts.toSeq, rowLasts.toSeq))
+        _.published(inserted.flatMap(_.idLast), inserted.flatMap(_.rowLast)))
       landing.commit(table.branch,
           published ++ GraftTable.kindMeta(GraftTable.KindDelta))(
           GraftTable.singleShot(table.name()) { head =>
@@ -284,61 +257,37 @@ class GraftDeltaBatchWrite(table: GraftTable, rowSchema: StructType,
   }
 }
 
-class GraftDeltaWriterFactory(stagingDir: String, physicalSchema: StructType,
-                              rowSchema: StructType, proj: Array[Int],
-                              partFields: Seq[org.apache.spark.sql.types.StructField],
-                              partIdx: Array[Int],
-                              fileIdx: Int, posIdx: Int,
-                              conf: SerializableHadoopConf,
-                              violations: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
-                              bucket: Option[(Int, org.apache.spark.sql.types.DataType, Int)] = None,
-                              day: Option[(Int, org.apache.spark.sql.types.DataType, String, String)] = None,
-                              genProjs: Seq[(String, Int, org.apache.spark.sql.catalyst.expressions.Expression, org.apache.spark.sql.types.DataType)] = Nil,
-                              idGen: Option[GraftIdentity.WriteGen] = None,
-                              rowGen: Option[GraftIdentity.WriteGen] = None,
-                              metaRowIdIdx: Int = -1)
+/** Delta writers over the batch write's insert factory (None for a pure
+  * DELETE).
+  */
+class GraftDeltaWriterFactory(inserts: Option[GraftWriterFactory],
+                              fileIdx: Int, posIdx: Int, metaRowIdIdx: Int)
   extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new GraftDeltaWriter(stagingDir, physicalSchema, rowSchema, proj,
-      partFields, partIdx, fileIdx, posIdx, partitionId, taskId, conf,
-      violations, bucket, day, genProjs,
-      idGen.map(GraftIdentity.taskGen(_, partitionId)),
-      rowGen.map(GraftIdentity.taskGen(_, partitionId)), metaRowIdIdx)
+    new GraftDeltaWriter(
+      inserts.map(_.createWriter(partitionId, taskId).asInstanceOf[GraftDataWriter]),
+      fileIdx, posIdx, metaRowIdIdx)
 }
 
 /** Accumulates delete positions per data file in Roaring bitmaps and
-  * appends inserted rows through the same parquet writer the batch path
-  * uses. `update` is never called (updates are represented as
-  * delete+insert) — it throws rather than silently half-applying.
+  * appends inserted rows through the batch path's [[GraftDataWriter]].
+  * `update` is never called (updates are represented as delete+insert) —
+  * it throws rather than silently half-applying.
   */
-class GraftDeltaWriter(stagingDir: String, physicalSchema: StructType,
-                       rowSchema: StructType, proj: Array[Int],
-                       partFields: Seq[org.apache.spark.sql.types.StructField],
-                       partIdx: Array[Int],
-                       fileIdx: Int, posIdx: Int,
-                       partitionId: Int, taskId: Long,
-                       conf: SerializableHadoopConf,
-                       violations: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
-                       bucket: Option[(Int, org.apache.spark.sql.types.DataType, Int)] = None,
-                       day: Option[(Int, org.apache.spark.sql.types.DataType, String, String)] = None,
-                       genProjs: Seq[(String, Int, org.apache.spark.sql.catalyst.expressions.Expression, org.apache.spark.sql.types.DataType)] = Nil,
-                       idGen: Option[GraftIdentity.TaskGen] = None,
-                       rowGen: Option[GraftIdentity.TaskGen] = None,
-                       metaRowIdIdx: Int = -1)
+class GraftDeltaWriter(inserts: Option[GraftDataWriter], fileIdx: Int,
+                       posIdx: Int, metaRowIdIdx: Int)
   extends DeltaWriter[InternalRow] {
 
   private val deletes = mutable.Map.empty[String, Roaring64Bitmap]
-  private val inserts = new GraftDataWriter(stagingDir, physicalSchema,
-    rowSchema, proj, partFields, partIdx, partitionId, taskId, conf,
-    bucket, violations, day, idGen = idGen, genProjs = genProjs,
-    rowGen = rowGen)
+  private def writer: GraftDataWriter = inserts.getOrElse(
+    throw new IllegalStateException("delta insert without data columns"))
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
     val file = id.getUTF8String(fileIdx).toString
     deletes.getOrElseUpdate(file, new Roaring64Bitmap).addLong(id.getLong(posIdx))
   }
 
-  override def insert(row: InternalRow): Unit = inserts.write(row)
+  override def insert(row: InternalRow): Unit = writer.write(row)
 
   /** Update-reinserted rows carry the pre-update GENERATED values — the
     * writer recomputes them instead of enforcing explicit equality — and
@@ -347,8 +296,9 @@ class GraftDeltaWriter(stagingDir: String, physicalSchema: StructType,
     * ALWAYS explicit-value refusal for exactly this carrier path).
     */
   override def reinsert(meta: InternalRow, row: InternalRow): Unit = {
-    inserts.genCheck = false
-    inserts.idCarry = true
+    val w = writer
+    w.genCheck = false
+    w.idCarry = true
     // row lineage: the original row's id rides the METADATA row — pin it
     // for this one write so the reinsert keeps its identity instead of
     // minting (a NULL there would be a lineage bug, so fail loudly)
@@ -356,11 +306,11 @@ class GraftDeltaWriter(stagingDir: String, physicalSchema: StructType,
       require(!meta.isNullAt(metaRowIdIdx),
         "row-lineage reinsert without a carried _row_id — the rewrite " +
           "plan lost the metadata column")
-      inserts.rowCarry = Some(meta.getLong(metaRowIdIdx))
+      w.rowCarry = Some(meta.getLong(metaRowIdIdx))
     }
-    try inserts.write(row) finally {
-      inserts.genCheck = true; inserts.idCarry = false
-      inserts.rowCarry = None
+    try w.write(row) finally {
+      w.genCheck = true; w.idCarry = false
+      w.rowCarry = None
     }
   }
 
@@ -368,14 +318,11 @@ class GraftDeltaWriter(stagingDir: String, physicalSchema: StructType,
     throw new UnsupportedOperationException(
       "graft delta writer represents updates as delete+insert")
 
-  override def commit(): WriterCommitMessage = {
-    val (ins, insStats, idl, rl) = inserts.commit() match {
-      case GraftCommit(files, st, l, _, r) => (files, st, l, r)
-    }
-    GraftDeltaCommit(ins, deletes.view.mapValues(GraftDv.toBytes).toMap,
-      insStats, idl, rl)
-  }
+  override def commit(): WriterCommitMessage =
+    GraftDeltaCommit(
+      inserts.fold(GraftCommit(Nil))(_.commit().asInstanceOf[GraftCommit]),
+      deletes.view.mapValues(GraftDv.toBytes).toMap)
 
-  override def abort(): Unit = inserts.abort()
-  override def close(): Unit = inserts.close()
+  override def abort(): Unit = inserts.foreach(_.abort())
+  override def close(): Unit = inserts.foreach(_.close())
 }

@@ -531,7 +531,7 @@ object GraftEqDelete {
           case None => base
         }
     }
-    withMicros(spark) {
+    GraftMaintenance.withMicrosTimestamps(spark) {
       // partitionBy routes each change row into its col=value/ directory
       // with Spark's own Hive path escaping — byte-identical layout to
       // the table writer's, so partition pruning and parsePartValues see
@@ -590,14 +590,13 @@ object GraftEqDelete {
         s"upsert: key sidecar staged ${many.size} parts")
     }
     fs.delete(staging, true)
-    GraftStats.liftFromFooters(spark, dir, landed, ioSchema)
-    GraftMaintenance.reindexDeclared(spark, t, landed)
+    GraftFileLog.liftLanded(spark, t, landed, ioSchema)
 
     // a file whose recorded range provably cannot hold any changed key
     // skips the eq reference entirely; on a bucket-keyed table, so does
     // any file whose NAME claims a bucket no change key hashes to (pure
     // metadata, composes with the stats box)
-    val stats = GraftStats.readAll(fs, dir)
+    val stats = GraftFileLog.stats(fs, dir)
     val updated = base.entries.map { e =>
       val name = new Path(e.file).getName
       val statsSkip = bounds.nonEmpty &&
@@ -641,8 +640,7 @@ object GraftEqDelete {
         }
         val goneNames = gone.map(new Path(_).getName).toSet
         try {
-          GraftStats.retain(fs, dir, n => !goneNames.contains(n))
-          GraftBloom.retain(fs, dir, n => !goneNames.contains(n))
+          GraftFileLog.retain(fs, dir, n => !goneNames.contains(n))
         } catch { case _: java.io.IOException => }
         throw r
     }
@@ -770,7 +768,7 @@ object GraftEqDelete {
         df = df.join(broadcast(keys), keys.columns.toSeq, "left_anti")
       }
       val out = new Path(staging, UUID.randomUUID().toString.take(8))
-      withMicros(spark) {
+      GraftMaintenance.withMicrosTimestamps(spark) {
         df.write.partitionBy("__graft_src").mode("overwrite")
           .parquet(out.toString)
       }
@@ -800,22 +798,8 @@ object GraftEqDelete {
     GraftMaintenance.commitRewrite(fs, dir, masked, masked.flatMap(e =>
       rewrittenByName(new Path(e.file).getName).map(GraftTable.GraftEntry(_))))
     val allLanded = rewrittenByName.values.flatten.toSeq
-    if (allLanded.nonEmpty) {
-      GraftStats.liftFromFooters(spark, dir, allLanded,
-        spark.read.parquet(allLanded.head).schema)
-      GraftMaintenance.reindexDeclared(spark, table, allLanded)
-    }
+    GraftFileLog.liftLanded(spark, table, allLanded,
+      spark.read.parquet(allLanded.head).schema)
     masked.size
-  }
-
-  private def withMicros[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try body
-    finally prev match {
-      case Some(x) => spark.conf.set(key, x)
-      case None => spark.conf.unset(key)
-    }
   }
 }

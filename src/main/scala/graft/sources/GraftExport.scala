@@ -80,7 +80,7 @@ object GraftExport {
       // manifest-lifted stats log records per-file columns, so absence of
       // ANY stats row for a defaulted column in ANY file is the
       // conservative refusal signal
-      val stats = GraftStats.readAll(fs, src)
+      val stats = GraftFileLog.stats(fs, src)
       val stale = entries.exists { e =>
         stats.get(new Path(e.file).getName) match {
           case Some(st) => !names.subsetOf(st.cols.keySet)

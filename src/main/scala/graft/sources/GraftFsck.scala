@@ -93,7 +93,7 @@ object GraftFsck {
         rel.endsWith(".parquet") && !referenced.contains(rel)
     }.toLong
 
-    val stats = GraftStats.readAll(fs, dir)
+    val stats = GraftFileLog.stats(fs, dir)
     val (_, head) = GraftTable.headState(fs, dir, None)
     val statsMissing = head.count(e =>
       !stats.contains(new Path(e.file).getName)).toLong

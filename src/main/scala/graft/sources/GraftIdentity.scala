@@ -105,7 +105,7 @@ object GraftIdentity {
     val (v, entries) = (head.version, head.entries)
     val wm0 = watermark(head.meta, spec)
     if (entries.isEmpty) return (wm0, wm0)
-    val stats = GraftStats.readAll(fs, dir)
+    val stats = GraftFileLog.stats(fs, dir)
     val perFile = entries.map(e =>
       stats.get(new Path(e.file).getName).flatMap(_.cols.get(spec.col))
         .flatMap(cs => if (spec.step > 0) cs.max else cs.min).map(_.toLong))

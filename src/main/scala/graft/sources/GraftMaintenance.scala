@@ -81,8 +81,9 @@ object GraftMaintenance {
     * history table keeps the old files (past snapshots reference them)
     * and commits through [[commitRewrite]]; an eager table deletes them
     * first and drops their stats and bloom entries. Then the landed
-    * files' stats are lifted from their footers (`schema`), declared
-    * indexes rebuilt, and `staging` removed. Returns the landed paths.
+    * files' stats and declared indexes are published
+    * ([[GraftFileLog.liftLanded]] with the footer `schema`), and `staging`
+    * removed. Returns the landed paths.
     */
   private def landRewrite(spark: SparkSession, fs: FileSystem,
                           table: GraftTable, base: RewriteBase,
@@ -102,38 +103,12 @@ object GraftMaintenance {
           moves.foreach { case (src, tgt) => fs.rename(src, tgt) }
           if (replaced.nonEmpty) {
             val gone = replaced.map(f => new Path(f).getName)
-            GraftStats.retain(fs, dir, n => !gone.contains(n))
-            GraftBloom.retain(fs, dir, n => !gone.contains(n))
+            GraftFileLog.retain(fs, dir, n => !gone.contains(n))
           }
       }
-      // rewrites go through Spark's parquet writer (no in-loop stats
-      // tracker) — lift the landed files' stats from the footers they
-      // just produced, ONE distributed job, so the new layout prunes from
-      // the metadata log on the very next scan
-      if (landed.nonEmpty) {
-        GraftStats.liftFromFooters(spark, dir, landed, schema)
-        reindexDeclared(spark, table, landed)
-      }
+      GraftFileLog.liftLanded(spark, table, landed, schema)
       landed
     } finally fs.delete(staging, true)
-
-  /** Rewrites land files under fresh names with NO index entries — for
-    * tables with DECLARED index-on-write columns, rebuild those files'
-    * entries in one distributed job right after the stats lift, so
-    * "compaction outputs are unindexed until a manual backfill" stops
-    * being true for declared columns (TVF-built indexes on undeclared
-    * columns keep the documented backfill story; unindexed is always
-    * sound — it just prunes nothing).
-    */
-  private[sources] def reindexDeclared(spark: SparkSession, table: GraftTable,
-                                       landed: Seq[String]): Unit = {
-    if (landed.isEmpty) return
-    val (b, t) = table.indexOnWriteCols
-    if (b.nonEmpty)
-      GraftBloom.buildIndex(spark, table, b, onlyFiles = Some(landed))
-    if (t.nonEmpty)
-      GraftBloom.buildTrigramIndex(spark, table, t, onlyFiles = Some(landed))
-  }
 
   /** Rewrite-path file reader: on tables with rename/widen/add history the
     * plain multi-file parquet read matches by NAME against one sampled
@@ -160,7 +135,7 @@ object GraftMaintenance {
     * Pin micros for the duration of a rewrite so compacted files keep the
     * same physical types the scan's row-group/whole-file pruning expects.
     */
-  private def withMicrosTimestamps[T](spark: SparkSession)(body: => T): T = {
+  private[sources] def withMicrosTimestamps[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.parquet.outputTimestampType"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "TIMESTAMP_MICROS")
@@ -528,14 +503,10 @@ object GraftMaintenance {
       // fully-deleted files take their stats with them
       if (vanished.nonEmpty) {
         val gone = vanished.toSet
-        GraftStats.retain(fs, dir, n => !gone.contains(n))
-      GraftBloom.retain(fs, dir, n => !gone.contains(n))
+        GraftFileLog.retain(fs, dir, n => !gone.contains(n))
       }
-      if (landed.nonEmpty) {
-        GraftStats.liftFromFooters(spark, dir, landed.toSeq,
-          spark.read.parquet(landed.head).schema)
-        reindexDeclared(spark, table, landed.toSeq)
-      }
+      GraftFileLog.liftLanded(spark, table, landed.toSeq,
+        spark.read.parquet(landed.head).schema)
     }
     dvs.foreach(st => fs.delete(st.getPath, false))
     dvs.size
@@ -579,11 +550,8 @@ object GraftMaintenance {
       rewrittenByName(new Path(e.file).getName)
         .map(f => GraftTable.GraftEntry(f, None, e.eqs))))
     val allLanded = rewrittenByName.values.flatten.toSeq
-    if (allLanded.nonEmpty) {
-      GraftStats.liftFromFooters(spark, dir, allLanded,
-        spark.read.parquet(allLanded.head).schema)
-      reindexDeclared(spark, table, allLanded)
-    }
+    GraftFileLog.liftLanded(spark, table, allLanded,
+      spark.read.parquet(allLanded.head).schema)
     pairs.size
   }
 
@@ -820,8 +788,7 @@ object GraftMaintenance {
     // data values — PURGE's erasure guarantee extends to the stats log)
     if (orphans.nonEmpty) {
       val gone = orphans.map(f => new Path(f).getName).toSet
-      GraftStats.retain(fs, dir, n => !gone.contains(n))
-      GraftBloom.retain(fs, dir, n => !gone.contains(n))
+      GraftFileLog.retain(fs, dir, n => !gone.contains(n))
     }
     (expire.size, orphans.size + dvOrphans.size)
   }
@@ -919,8 +886,7 @@ object GraftMaintenance {
     orphans.foreach(st => fs.delete(st.getPath, false))
     if (orphans.nonEmpty) {
       val gone = orphans.map(_.getPath.getName).toSet
-      GraftStats.retain(fs, dir, n => !gone.contains(n))
-      GraftBloom.retain(fs, dir, n => !gone.contains(n))
+      GraftFileLog.retain(fs, dir, n => !gone.contains(n))
     }
     orphans.size
   }
@@ -947,7 +913,7 @@ object GraftMaintenance {
     val dir = new Path(table.dir)
     val fs = fsOf(spark, table)
     val entries = table.currentFullEntries(fs)
-    val stats = GraftStats.readAll(fs, dir)
+    val stats = GraftFileLog.stats(fs, dir)
     val findings = scala.collection.mutable.ArrayBuffer[(String, String, Long, Long)]()
     entries.foreach { e =>
       val p = new Path(e.file)
@@ -1012,11 +978,13 @@ object GraftMaintenance {
     val dir = new Path(table.dir)
     val fs = fsOf(spark, table)
     val files = table.currentDataFiles(fs)
-    val have = GraftStats.readAll(fs, dir).keySet
+    val have = GraftFileLog.stats(fs, dir).keySet
     val missing = files.filterNot(f => have.contains(new Path(f).getName))
-    if (missing.nonEmpty)
-      GraftStats.liftFromFooters(spark, dir, missing,
-        spark.read.parquet(missing.head).schema)
+    if (missing.nonEmpty) {
+      val (stats, _) = GraftFileLog.describe(spark, table, missing,
+        Some(spark.read.parquet(missing.head).schema), Nil, Nil)
+      GraftFileLog.publish(fs, dir, stats, Nil)
+    }
     missing.size
   }
 

@@ -37,20 +37,8 @@ object GraftRefs {
       s"ref name must not contain tab/newline characters")
   }
 
-  def readAll(fs: FileSystem, dir: Path): Map[String, Long] = {
-    val p = new Path(dir, RefsFile)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    lines.filter(_.nonEmpty).flatMap { l =>
-      l.split("\t", 2) match {
-        case Array(n, v) => Some(n -> v.toLong)
-        case _ => None
-      }
-    }.toMap
-  }
+  def readAll(fs: FileSystem, dir: Path): Map[String, Long] =
+    readMap(fs, new Path(dir, RefsFile))
 
   def resolve(fs: FileSystem, dir: Path, name: String): Option[Long] =
     readAll(fs, dir).get(name)
@@ -74,23 +62,43 @@ object GraftRefs {
     require(fs.exists(GraftTable.manifestPath(dir, version)),
       s"cannot tag version $version: no such snapshot (have " +
         s"${GraftTable.manifestVersions(fs, dir).mkString(", ")})")
-    write(fs, dir, readAll(fs, dir) + (name -> version))
+    writeMap(fs, new Path(dir, RefsFile), readAll(fs, dir) + (name -> version))
   }
 
   /** Drop a ref; true iff it existed. */
   def drop(fs: FileSystem, dir: Path, name: String): Boolean = {
     val all = readAll(fs, dir)
     if (!all.contains(name)) return false
-    write(fs, dir, all - name)
+    writeMap(fs, new Path(dir, RefsFile), all - name)
     true
   }
 
-  private def write(fs: FileSystem, dir: Path, refs: Map[String, Long]): Unit = {
-    val target = new Path(dir, RefsFile)
-    if (refs.isEmpty) { fs.delete(target, false); return }
-    val bytes = refs.toSeq.sorted.map { case (n, v) => s"$n\t$v" }
+  /** A `name\tversion` map file (the refs and the branch records): an
+    * absent file is the empty map.
+    */
+  private[sources] def readMap(fs: FileSystem, file: Path): Map[String, Long] = {
+    if (!fs.exists(file)) return Map.empty
+    val in = fs.open(file)
+    val lines =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    lines.filter(_.nonEmpty).flatMap { l =>
+      l.split("\t", 2) match {
+        case Array(n, v) => Some(n -> v.toLong)
+        case _ => None
+      }
+    }.toMap
+  }
+
+  /** Install `m` as the map file `target` (name-sorted lines) through a
+    * temp file and rename; an empty map deletes the file.
+    */
+  private[sources] def writeMap(fs: FileSystem, target: Path,
+                                m: Map[String, Long]): Unit = {
+    if (m.isEmpty) { fs.delete(target, false); return }
+    val bytes = m.toSeq.sorted.map { case (n, v) => s"$n\t$v" }
       .mkString("\n").getBytes(UTF_8)
-    val tmp = new Path(dir, s".tmp-refs-${UUID.randomUUID()}")
+    val tmp = new Path(target.getParent, s".tmp-map-${UUID.randomUUID()}")
     val out = fs.create(tmp, true)
     try out.write(bytes) finally out.close()
     if (!fs.rename(tmp, target)) {

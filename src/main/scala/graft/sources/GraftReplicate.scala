@@ -28,10 +28,10 @@ import org.apache.spark.sql.SparkSession
   * state a valid PREFIX of the source's history —
   *   1. bulk immutables first (data files in their partition layout, DV +
   *      equality sidecars, manifest segments), one distributed job;
-  *   2. metadata dirs (`_graft_filestats`, bloom/text indexes) mirrored
-  *      EXACTLY — add missing, drop extra — because consolidation and
-  *      RENAME-COLUMN re-key them in place and a stale twin must not
-  *      shadow the rewrite;
+  *   2. the per-file metadata logs ([[GraftFileLog]]: `_graft_filestats/`
+  *      and `_graft_bloom/`) mirrored EXACTLY — add missing, drop extra —
+  *      because consolidation, retention and RENAME-COLUMN rewrite them in
+  *      place and a stale twin must not shadow the rewrite;
   *   3. schema + props + branch records, content-compared (so evolved
   *      columns resolve before any manifest that references them arrives,
   *      and a re-forked branch base — a same-length in-place rewrite the
@@ -263,8 +263,9 @@ object GraftReplicate {
           }.sum().toLong
       }
 
-    // --- phase 2: exact-mirror the derivable metadata dirs (consolidation
-    // / re-key safety: a dst-only stale twin must not shadow the rewrite)
+    // --- phase 2: exact-mirror the per-file metadata logs, `_graft_filestats/`
+    // and `_graft_bloom/` (consolidation / retention / re-key safety: a
+    // dst-only stale twin must not shadow the rewrite)
     val srcMeta = bulk.collect { case (rel, _) if rel.contains("/") &&
       rel.startsWith("_") => rel }.toSet
     dstFiles.keys.filter(rel => rel.contains("/") && rel.startsWith("_"))

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
@@ -14,12 +13,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Manifest-lifted per-file column statistics — the metadata a real table
   * format (Iceberg's manifest min/max, Delta's file stats) carries so scan
-  * planning never opens data files. Each commit writes one append-only
-  * stats file under `_graft_filestats/` holding, per landed data file:
-  * size, row count, and per-column (nullCount, min, max). The write path
-  * tracks them in the writer's hot loop (zero extra IO); maintenance
-  * rewrites lift them from the footers they just wrote; `analyzeTable`
-  * backfills old tables. Scan planning evaluates pushed filters against
+  * planning never opens data files. Per landed data file: size, row
+  * count, and per-column (nullCount, min, max, sketches), one line each in
+  * the stats log that [[GraftFileLog]] stores. The write path tracks them
+  * in the writer's hot loop (zero extra IO); maintenance rewrites lift
+  * them from the footers they just wrote ([[GraftFileLog.liftLanded]]);
+  * `analyzeTable` backfills old tables. Scan planning evaluates pushed filters against
   * the recorded ranges with a sound canDrop/allMatch pair and only falls
   * back to a footer probe for files without stats — at 100 TB the
   * difference between O(files) driver footer reads and a handful of
@@ -40,8 +39,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object GraftStats {
 
-  val StatsDirName = "_graft_filestats"
-
   /** nulls = -1 means unknown (footer without null counts). min/max are
     * canonical strings; None = no bound recorded (all-null column, NaN
     * poisoning, or unsupported type). `ndv` is a serialized HLL sketch of
@@ -56,7 +53,7 @@ object GraftStats {
                       kllStr: Option[Array[Byte]] = None)
   case class FileStats(size: Long, rows: Long, cols: Map[String, ColStats])
 
-  // ---- storage -----------------------------------------------------------
+  // ---- line codec (stored by GraftFileLog) -------------------------------
 
   private def enc(s: String): String = URLEncoder.encode(s, "UTF-8")
   private def dec(s: String): String = URLDecoder.decode(s, "UTF-8")
@@ -115,133 +112,6 @@ object GraftStats {
         }
       }.toMap
     Some(dec(parts(0)) -> FileStats(parts(1).toLong, parts(2).toLong, cols))
-  }
-
-  private def statsDir(dir: Path) = new Path(dir, StatsDirName)
-
-  /** Consolidation threshold: same amortized policy as the manifest's
-    * segment compaction (MaxSegments) — a year of streaming ingest is
-    * 10⁴-10⁵ commits, and scan PLANNING reads this log, so it must stay
-    * O(segments), not O(commits).
-    */
-  private[sources] val MaxStatsFiles = 32
-
-  private def listStatsFiles(fs: FileSystem, d: Path): Seq[Path] =
-    fs.listStatus(d).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".txt"))
-      .map(_.getPath).sortBy(_.getName)
-
-  /** Raw single-file append — no consolidation. Name ordering IS apply
-    * ordering: the zero-padded millis prefix makes a re-lift of an
-    * in-place rewrite (same data-file name) win over the stale entry.
-    */
-  private def appendStatsFile(fs: FileSystem, d: Path,
-                              entries: Seq[(String, FileStats)],
-                              name: String = f"stats-${System.currentTimeMillis()}%013d-" +
-                                s"${UUID.randomUUID().toString.take(8)}.txt"): Unit = {
-    val out = fs.create(new Path(d, name), false)
-    try out.write(entries.map { case (n, st) => encodeLine(n, st) }
-      .mkString("\n").getBytes(UTF_8))
-    finally out.close()
-  }
-
-  /** Append one commit's stats (no-op on empty). Append-only, uuid-named,
-    * so concurrent committers can't lose each other's entries. When the
-    * log reaches [[MaxStatsFiles]] files, the write first folds them into
-    * ONE consolidated file — amortized O(live entries), the manifest
-    * segment-compaction cadence — keeping every later scan's planning at
-    * a bounded number of metadata reads. The consolidated file takes the
-    * newest consumed file's name plus a suffix that sorts directly after
-    * it, so entries landed concurrently (strictly newer names) still win.
-    */
-  def writeCommitStats(fs: FileSystem, dir: Path,
-                       entries: Seq[(String, FileStats)]): Unit = {
-    if (entries.isEmpty) return
-    val d = statsDir(dir)
-    fs.mkdirs(d)
-    val existing = listStatsFiles(fs, d)
-    if (existing.size >= MaxStatsFiles) {
-      val merged = existing.flatMap { p =>
-        val in = fs.open(p)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        lines.filter(_.nonEmpty).flatMap(decodeLine)
-      }.toMap
-      // 'c' > '.' byte-wise: sorts after the newest consumed file, before
-      // any strictly-newer timestamped append
-      appendStatsFile(fs, d, merged.toSeq.sortBy(_._1),
-        existing.last.getName.stripSuffix(".txt") + "c.txt")
-      existing.foreach(fs.delete(_, false))
-    }
-    appendStatsFile(fs, d, entries)
-  }
-
-  /** All recorded stats, keyed by data-file NAME (names are uuid-unique
-    * for the file's lifetime). Reading is O(segments) tiny sequential
-    * metadata reads — writeCommitStats' amortized consolidation bounds
-    * the file count at [[MaxStatsFiles]] regardless of commit count.
-    * Only entries whose name passes `live` are decoded: a history table's
-    * log keeps the entries of every file it ever had, and decoding their
-    * sketches would make a scan's planning grow with the history.
-    */
-  def readAll(fs: FileSystem, dir: Path,
-              live: String => Boolean = _ => true): Map[String, FileStats] = {
-    val d = statsDir(dir)
-    if (!fs.exists(d)) return Map.empty
-    val files = fs.listStatus(d).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".txt"))
-      .map(_.getPath).sortBy(_.getName)
-    files.flatMap { p =>
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.filter { l =>
-        val tab = l.indexOf('\t')
-        tab >= 0 && live(dec(l.substring(0, tab)))
-      }.flatMap(decodeLine)
-    }.toMap
-  }
-
-  /** Drop entries whose file name fails `live`, consolidating the log to
-    * one file. Called where data files are DESTROYED (COW replace,
-    * truncate, vacuum, purge): stats hold real data values (min/max), so
-    * a purge that erases the bytes must erase their statistics too — and
-    * the consolidation keeps the stats log O(live files), not O(history).
-    */
-  def retain(fs: FileSystem, dir: Path, live: String => Boolean): Unit = {
-    val d = statsDir(dir)
-    if (!fs.exists(d)) return
-    val all = readAll(fs, dir)
-    val kept = all.toSeq.filter { case (n, _) => live(n) }.sortBy(_._1)
-    val old = listStatsFiles(fs, d)
-    // raw append, NOT writeCommitStats: this rewrite is already the
-    // consolidation, and the consolidating path would fold the pre-purge
-    // entries into a file the delete below doesn't cover
-    if (kept.nonEmpty) appendStatsFile(fs, d, kept)
-    old.foreach(fs.delete(_, false))
-    if (kept.isEmpty) fs.delete(d, true)
-  }
-
-  /** Re-key one column's stats across the whole log (RENAME COLUMN): the
-    * canonical VALUES are name-independent, so the rewrite is a pure
-    * metadata re-label — recorded bounds stay bit-for-bit valid. One
-    * consolidated log file, like [[retain]].
-    */
-  def renameColumn(fs: FileSystem, dir: Path, from: String, to: String): Unit = {
-    val d = statsDir(dir)
-    if (!fs.exists(d)) return
-    val all = readAll(fs, dir)
-    val renamed = all.toSeq.sortBy(_._1).map { case (n, st) =>
-      n -> st.copy(cols = st.cols.map {
-        case (c, cs) if c == from => to -> cs
-        case other => other
-      })
-    }
-    val old = listStatsFiles(fs, d)
-    if (renamed.nonEmpty) appendStatsFile(fs, d, renamed)
-    old.foreach(fs.delete(_, false))
   }
 
   // ---- write-path tracker ------------------------------------------------
@@ -479,7 +349,7 @@ object GraftStats {
         GraftTable.readFullEntries(fs, dir, versions.last).map(_.file)
       else GraftTable.dataFiles(fs, dir)
     if (files.isEmpty) return None
-    val all = readAll(fs, dir)
+    val all = GraftFileLog.stats(fs, dir)
     val fileStats = files.flatMap(f => all.get(new Path(f).getName))
     if (fileStats.size != files.size) return None
     val rows = fileStats.map(_.rows).sum
@@ -618,7 +488,7 @@ object GraftStats {
         GraftTable.readFullEntries(fs, dir, versions.last).map(_.file)
       else GraftTable.dataFiles(fs, dir)
     if (files.isEmpty) return None
-    val all = readAll(fs, dir)
+    val all = GraftFileLog.stats(fs, dir)
     val fileStats = files.flatMap(f => all.get(new Path(f).getName))
     if (fileStats.size != files.size) return None
     val rows = fileStats.map(_.rows).sum
@@ -655,7 +525,7 @@ object GraftStats {
         GraftTable.readFullEntries(fs, dir, versions.last).map(_.file)
       else GraftTable.dataFiles(fs, dir)
     if (files.isEmpty) return None
-    val all = readAll(fs, dir)
+    val all = GraftFileLog.stats(fs, dir)
     val fileStats = files.flatMap(f => all.get(new Path(f).getName))
     if (fileStats.size != files.size) return None
     val rows = fileStats.map(_.rows).sum
@@ -695,7 +565,7 @@ object GraftStats {
       })
     if (eligible.isEmpty) return 0
     val files = table.currentDataFiles(fs)
-    val have = readAll(fs, dir)
+    val have = GraftFileLog.stats(fs, dir)
     // a file needs the pass when any eligible column lacks EITHER sketch
     // kind it should carry — the NDV or (round 13) its quantile twin
     // (doubles for numeric/decimal, items for string)
@@ -797,7 +667,7 @@ object GraftStats {
         c -> cs.copy(ndv = Some(ndvB), kll = kllB, kllStr = klsB)
       }.toMap ++ st.cols.filterNot(kv => names.contains(kv._1)))
     }
-    writeCommitStats(fs, dir, enriched)
+    GraftFileLog.publish(fs, dir, enriched, Nil)
     enriched.size
   }
 
@@ -1170,25 +1040,5 @@ object GraftStats {
     case d: DecimalType => new java.math.BigDecimal(s)
     case BooleanType => java.lang.Boolean.valueOf(s.toBoolean)
     case _ => s
-  }
-
-  /** Lift stats for `files` from their footers as ONE distributed job and
-    * append them to the stats log — the backfill verb (`analyzeTable`) and
-    * the maintenance-rewrite hook. Footer reads are per-task metadata IO,
-    * never driver-side.
-    */
-  def liftFromFooters(spark: SparkSession, dir: Path, files: Seq[String],
-                      schema: StructType): Unit = {
-    if (files.isEmpty) return
-    val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val lifted = spark.sparkContext
-      .parallelize(files, GraftMaintenance.parallelism(spark, files.size))
-      .map { f =>
-        val p = new Path(f)
-        (p.getName, fromFooter(p, conf.value, schema))
-      }
-      .collect().toSeq
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    writeCommitStats(fs, dir, lifted)
   }
 }

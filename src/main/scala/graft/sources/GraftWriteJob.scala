@@ -155,12 +155,10 @@ private[sources] object GraftWriteJob {
 
     def entries: Seq[GraftTable.GraftEntry] = landed.map(GraftTable.GraftEntry(_))
 
-    def publish(): Unit = {
-      GraftStats.writeCommitStats(fs, dir,
-        stats.toSeq.map { case (p, st) => new Path(p).getName -> st })
-      GraftBloom.writeRawEntries(fs, dir,
+    def publish(): Unit =
+      GraftFileLog.publish(fs, dir,
+        stats.toSeq.map { case (p, st) => new Path(p).getName -> st },
         indexes.map { case (p, c, b) => (new Path(p).getName, c, b) })
-    }
 
     def commit(branch: Option[String], meta: Map[String, String])(
         next: GraftTable.Snapshot => Seq[GraftTable.GraftEntry]): Long = {

@@ -3,6 +3,9 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.SparkSpec
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 
 /** Per-file bloom index: point predicates on non-clustered keys prune
@@ -18,6 +21,14 @@ class GraftBloomSpec extends SparkSpec {
   private def sql(q: String) = spark.sql(q)
   private def planned(df: org.apache.spark.sql.DataFrame): Int =
     df.rdd.getNumPartitions
+
+  /** Names of the data files a query's graft scan plans. */
+  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: DataSourceV2ScanRelation => r.scan.asInstanceOf[GraftScan]
+    }.head.planInputPartitions().toSeq.collect {
+      case p: GraftFilePartition => new Path(p.file).getName
+    }.toSet
 
   override def beforeAll(): Unit = {
     super.beforeAll()
@@ -100,10 +111,10 @@ class GraftBloomSpec extends SparkSpec {
     GraftBloom.buildIndex(spark, TestTables.at(s"$warehouse/db/rw"), Seq("id"))
     val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/rw")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    assert(GraftBloom.readAll(fs, dir).nonEmpty)
+    assert(GraftFileLog.blooms(fs, dir).nonEmpty)
     // compaction rewrites under fresh names → old entries retire
     GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/rw"))
-    val after = GraftBloom.readAll(fs, dir)
+    val after = GraftFileLog.blooms(fs, dir)
     val live = GraftTable.dataFiles(fs, dir)
       .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     assert(after.keys.forall { case (f, _) => live.contains(f) },
@@ -128,7 +139,7 @@ class GraftBloomSpec extends SparkSpec {
     // carry (file, w) entries for the pre-add files — the hazard exists
     val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/ed")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    assert(GraftBloom.readAll(fs, dir).keys.exists(_._2 == "w"),
+    assert(GraftFileLog.blooms(fs, dir).keys.exists(_._2 == "w"),
       "precondition: the build must have indexed the defaulted column")
     val served = spark.table("graft_bl.db.ed").where(col("w") === 5)
     assert(served.count() == 1000,
@@ -240,7 +251,7 @@ class GraftBloomSpec extends SparkSpec {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val total = GraftTable.dataFiles(fs, dir).size
     assert(total >= 3)
-    assert(GraftBloom.readAll(fs, dir).size == 2 * total,
+    assert(GraftFileLog.blooms(fs, dir).size == 2 * total,
       "every committed file must carry its bloom + trigram entry")
 
     val point = spark.table("graft_bl.db.iw").where(col("id") === 1234)
@@ -270,11 +281,11 @@ class GraftBloomSpec extends SparkSpec {
     val props = TestTables.at(dir).props
     assert(!props.contains(GraftBloom.TrgmColsProp),
       s"UNSET must remove the key; props=$props")
-    val beforeKeys = GraftBloom.readAll(fs, dir).keySet
+    val beforeKeys = GraftFileLog.blooms(fs, dir).keySet
     spark.range(9000, 9002).toDF("id").withColumn("grp", lit(3L))
       .withColumn("body", lit("post-unset rows"))
       .writeTo("graft_bl.db.iw").append()
-    val newKeys = GraftBloom.readAll(fs, dir).keySet -- beforeKeys
+    val newKeys = GraftFileLog.blooms(fs, dir).keySet -- beforeKeys
     assert(newKeys.nonEmpty && newKeys.forall(_._2 == "id"),
       s"post-unset commits record only the still-declared bloom column, got $newKeys")
     assert(spark.table("graft_bl.db.iw")
@@ -298,7 +309,7 @@ class GraftBloomSpec extends SparkSpec {
       sortCols = Seq("grp"))
     val live = GraftTable.dataFiles(fs, dir)
       .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-    val idx = GraftBloom.readAll(fs, dir)
+    val idx = GraftFileLog.blooms(fs, dir)
     assert(live.forall(n =>
       idx.contains((n, "id")) && idx.contains((n, "body#trgm"))),
       s"compaction outputs must be re-indexed: live=$live keys=${idx.keySet}")
@@ -322,5 +333,115 @@ class GraftBloomSpec extends SparkSpec {
     assert(n >= 2)
     val q = spark.table("graft_bl.db.h").where(col("id") === 777)
     assert(planned(q) < n && q.count() == 1)
+  }
+
+  test("merge-on-read MERGE inserts land indexed on an index-on-write table") {
+    sql("""CREATE TABLE graft_bl.db.mor (id BIGINT, v STRING)
+          |TBLPROPERTIES('history'='true', 'merge-on-read'='true',
+          |              'index.bloom.cols'='id')""".stripMargin)
+    sql("INSERT INTO graft_bl.db.mor VALUES (1, 'a'), (1000, 'b')")
+    val dir = new Path(s"$warehouse/db/mor")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val before = GraftTable.dataFiles(fs, dir).map(new Path(_).getName).toSet
+    // one matched row (a deletion vector plus a reinsert) and two genuine
+    // inserts whose range [100, 900] covers the probe below
+    sql("""MERGE INTO graft_bl.db.mor t
+          |USING (SELECT * FROM VALUES (1, 'a2'), (100, 'c'), (900, 'd')
+          |       AS s(id, v)) s
+          |ON t.id = s.id
+          |WHEN MATCHED THEN UPDATE SET v = s.v
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    val live = TestTables.at(dir).currentDataFiles(fs).map(new Path(_).getName).toSet
+    val inserted = live -- before
+    assert(inserted.nonEmpty, s"the merge appended no file: $live")
+    val idx = GraftFileLog.blooms(fs, dir)
+    assert(live.forall(n => idx.contains((n, "id"))),
+      s"every current file needs a bloom entry: live=$live keys=${idx.keySet}")
+    // stats cannot prune an absent key inside every file's range; the
+    // delta-inserted file's bloom proves it absent
+    val absent = spark.table("graft_bl.db.mor").where(col("id") === 555L)
+    assert(plannedFiles(absent).intersect(inserted).isEmpty,
+      s"the delta-inserted files $inserted must prune: ${plannedFiles(absent)}")
+    assert(absent.count() == 0)
+    assert(spark.table("graft_bl.db.mor").where(col("id") === 900L)
+      .collect().map(_.getString(1)).toSeq == Seq("d"))
+    assert(sql("SELECT v FROM graft_bl.db.mor WHERE id = 1").head().getString(0) == "a2")
+  }
+
+  test("the bloom log consolidates like the stats log; lookups keep pruning") {
+    sql("""CREATE TABLE graft_bl.db.many (id BIGINT)
+          |TBLPROPERTIES('history'='true', 'index.bloom.cols'='id')""".stripMargin)
+    // one file per commit, spanning [-1000 - i, 1000 + i]: min/max prune
+    // no probe in 0..39, only the blooms can
+    val n = 40
+    (0 until n).foreach(i =>
+      sql(s"SELECT explode(array(${-1000 - i}L, ${i}L, ${1000 + i}L)) AS id")
+        .coalesce(1).writeTo("graft_bl.db.many").append())
+    val logFiles = new java.io.File(s"$warehouse/db/many/${GraftFileLog.Bloom.dirName}")
+      .listFiles().filter(_.getName.endsWith(".txt"))
+    assert(logFiles.length <= GraftFileLog.MaxFiles + 1,
+      s"bloom log grew to ${logFiles.length} files over $n commits")
+    val dir = new Path(s"$warehouse/db/many")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val entries = GraftFileLog.blooms(fs, dir).size
+    assert(entries == n, s"$entries entries: one was lost in the folds")
+    val probe = spark.table("graft_bl.db.many").where(col("id") === 17L)
+    assert(plannedFiles(probe).size == 1 && probe.count() == 1)
+  }
+
+  test("compaction lifts stats and builds declared indexes in one job, " +
+    "byte-identical to the build verbs") {
+    sql("""CREATE TABLE graft_bl.db.cj (id BIGINT, grp BIGINT, body STRING)
+          |TBLPROPERTIES('history'='true', 'index.bloom.cols'='id',
+          |              'index.trgm.cols'='body')""".stripMargin)
+    (0 until 3).foreach { k =>
+      spark.range(k * 500L, k * 500L + 500).toDF("id")
+        .withColumn("grp", col("id") % 4)
+        .withColumn("body", concat(lit("row "), col("id"), lit(" text")))
+        .repartition(2).writeTo("graft_bl.db.cj").append()
+    }
+    val dir = new Path(s"$warehouse/db/cj")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    // jobs started after the compaction's commit point carry this group
+    val group = "graft-bloom-spec-post-commit"
+    val marker = "graft-bloom-spec-marker"
+    val afterCommit = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach { g =>
+            if (g == group) afterCommit.incrementAndGet()
+            if (g == marker) markerSeen.countDown()
+          }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      GraftTable.interposeOnce(dir)(
+        spark.sparkContext.setJobGroup(group, "after the compaction commit"))
+      try GraftMaintenance.compactTable(spark, TestTables.at(dir))
+      finally spark.sparkContext.clearJobGroup()
+      // listener events arrive in order: once the marker job is seen,
+      // every job before it has been counted
+      spark.sparkContext.setJobGroup(marker, "marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(afterCommit.get == 1,
+      s"stats and indexes of the compacted files took ${afterCommit.get} jobs")
+
+    val table = TestTables.at(dir)
+    val live = table.currentDataFiles(fs).map(new Path(_).getName).toSet
+    def entries = GraftFileLog.blooms(fs, dir, live.contains)
+      .map { case (k, bytes) => k -> bytes.toSeq }
+    val compacted = entries
+    assert(compacted.keySet == live.flatMap(n => Set((n, "id"), (n, "body#trgm"))),
+      s"live=$live keys=${compacted.keySet}")
+    assert(GraftFileLog.stats(fs, dir, live.contains).keySet == live)
+    sql("SELECT * FROM graft_bloom_build('graft_bl', 'db.cj', 'id')").collect()
+    sql("SELECT * FROM graft_trgm_build('graft_bl', 'db.cj', 'body')").collect()
+    val same = entries == compacted
+    assert(same, "the compaction's entries differ from what the build verbs write")
   }
 }

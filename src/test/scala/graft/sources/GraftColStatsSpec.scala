@@ -195,7 +195,7 @@ class GraftColStatsSpec extends SparkSpec {
     assert(GraftStats.headEqualityEstimate(fs, dir, Seq("grp", "nope")).isEmpty)
     // a live file WITHOUT stats (foreign-registered bytes, simulated by
     // retiring the entry) -> None — a partial union would silently lie
-    GraftStats.retain(fs, dir, _ => false)
+    GraftFileLog.retain(fs, dir, _ => false)
     assert(GraftStats.headEqualityEstimate(fs, dir, "grp").isEmpty,
       "files without stats entries must refuse the estimate")
   }
@@ -342,7 +342,7 @@ class GraftColStatsSpec extends SparkSpec {
     // the retained sketch is truncated items, never whole documents:
     // 500 live rows × 2KB would be ~1MB untruncated; the cap keeps the
     // serialized sketch under a few tens of KB
-    val stats = GraftStats.readAll(fs, dir)
+    val stats = GraftFileLog.stats(fs, dir)
     val sketchBytes = stats.values.flatMap(_.cols.get("text"))
       .flatMap(_.kllStr).map(_.length).sum
     assert(sketchBytes > 0 && sketchBytes < 64 * 1024,

@@ -123,7 +123,7 @@ class GraftComplexTypesSpec extends SparkSpec {
     // write-path stats recorded the scalar column and skipped the rest
     val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/guard")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = GraftStats.readAll(fs, dir)
+    val st = GraftFileLog.stats(fs, dir)
     assert(st.nonEmpty && st.values.forall(s =>
       s.cols.contains("id") && !s.cols.contains("embedding") &&
         !s.cols.contains("payload")),

@@ -290,7 +290,7 @@ class GraftConcurrencySpec extends SparkSpec {
     val referenced = GraftTable.manifestVersions(f, dir)
       .flatMap(GraftTable.readFullEntries(f, dir, _))
       .map(e => new Path(e.file).getName).toSet
-    val stray = GraftStats.readAll(f, dir).keySet -- referenced
+    val stray = GraftFileLog.stats(f, dir).keySet -- referenced
     assert(stray.isEmpty, s"stats entries for unreferenced files: $stray")
   }
 }

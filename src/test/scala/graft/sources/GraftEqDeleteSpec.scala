@@ -153,7 +153,7 @@ class GraftEqDeleteSpec extends SparkSpec {
     assert(eqFilesOnDisk("t4").isEmpty,
       "purge must destroy equality sidecars (they hold raw key bytes)")
     def statsBytes = {
-      val d = new java.io.File(s"$warehouse/db/t4/${GraftStats.StatsDirName}")
+      val d = new java.io.File(s"$warehouse/db/t4/${GraftFileLog.Stats.dirName}")
       if (!d.exists) "" else d.listFiles().filter(_.isFile).map(f =>
         new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
         .mkString("\n")

@@ -17,8 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Fixed costs on the parquet path that do no data work: what a task
   * carries (a conf handle, never the conf), the string order the stats
   * layer compares with (bytes, never `UTF8String.compareTo`), which
-  * stats-log entries a scan decodes (its snapshot's only), and the
-  * commit a compaction with nothing to fold must not make.
+  * metadata-log entries a scan decodes (its snapshot's only), the bloom
+  * log a table without declared indexes never touches, and the commit a
+  * compaction with nothing to fold must not make.
   */
 class GraftFixedCostSpec extends SparkSpec {
 
@@ -32,6 +33,12 @@ class GraftFixedCostSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.graft_fc", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_fc.warehouse", warehouse)
     sql("CREATE NAMESPACE IF NOT EXISTS graft_fc.db")
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFs].getName)
+    spark.conf.set("spark.sql.catalog.graft_fcc", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_fcc.warehouse",
+      s"countfs://$warehouse/counted")
+    sql("CREATE NAMESPACE IF NOT EXISTS graft_fcc.db")
   }
 
   private def scanOf(q: String): GraftScan =
@@ -185,7 +192,7 @@ class GraftFixedCostSpec extends SparkSpec {
       sql(s"UPDATE graft_fc.db.hist SET v = v + $n WHERE id = ${(n % 3) * 100 + 7}")
     val dir = tableDir("hist")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val all = GraftStats.readAll(fs, dir)
+    val all = GraftFileLog.stats(fs, dir)
 
     val q = "SELECT * FROM graft_fc.db.hist"
     val scan = scanOf(q)
@@ -207,10 +214,10 @@ class GraftFixedCostSpec extends SparkSpec {
     // whole log fails on it, a scan never decodes it
     val dead = (all.keySet -- live).head
     val bad = fs.create(new Path(dir,
-      s"${GraftStats.StatsDirName}/stats-9999999999999-zzzzzzzz.txt"), false)
+      s"${GraftFileLog.Stats.dirName}/stats-9999999999999-zzzzzzzz.txt"), false)
     try bad.write(s"$dead\t1\t1\tv,0,v1,v2,!not-base64!".getBytes(UTF_8))
     finally bad.close()
-    intercept[IllegalArgumentException](GraftStats.readAll(fs, dir))
+    intercept[IllegalArgumentException](GraftFileLog.stats(fs, dir))
     val again = scanOf(q)
     assert(lines(again.statsByName) == lines(scan.statsByName))
     assert(again.estimateStatistics().sizeInBytes() == est.sizeInBytes())
@@ -229,17 +236,42 @@ class GraftFixedCostSpec extends SparkSpec {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val q = "SELECT id FROM graft_fc.db.blm WHERE v = 150"
     val live = scanOf(q).snapshotEntryByName.keySet
-    val dead = GraftBloom.readAll(fs, dir).keySet.map(_._1) -- live
+    val dead = GraftFileLog.blooms(fs, dir).keySet.map(_._1) -- live
     assert(live.size == 3 && dead.size == 2, s"live $live, dead $dead")
 
     // an entry of a replaced file that cannot be decoded: reading the
     // whole index fails on it, a scan never decodes it
     val bad = fs.create(new Path(dir,
-      s"${GraftBloom.BloomDirName}/bloom-9999999999999-zzzzzzzz.txt"), false)
+      s"${GraftFileLog.Bloom.dirName}/bloom-9999999999999-zzzzzzzz.txt"), false)
     try bad.write(s"${dead.head}\tv\t!not-base64!".getBytes(UTF_8))
     finally bad.close()
-    intercept[IllegalArgumentException](GraftBloom.readAll(fs, dir))
+    intercept[IllegalArgumentException](GraftFileLog.blooms(fs, dir))
     assert(sql(q).collect().map(_.getLong(0)).toSeq == Seq(150L))
+  }
+
+  test("commits to tables without declared indexes never touch the bloom log") {
+    sql("""CREATE TABLE graft_fcc.db.mor (id BIGINT, v BIGINT)
+          |TBLPROPERTIES('history'='true', 'merge-on-read'='true')""".stripMargin)
+    sql("CREATE TABLE graft_fcc.db.cow (id BIGINT, v BIGINT)")
+    CountingFs.reset()
+    for (t <- Seq("mor", "cow"); k <- 0 until 2)
+      sql(s"INSERT INTO graft_fcc.db.$t SELECT id, id FROM range(${k * 100}, ${k * 100 + 100}, 1, 2)")
+    // merge-on-read deltas, copy-on-write replaces (the eager one drops
+    // the replaced files' entries) and a rewrite's post-landing step
+    for (t <- Seq("mor", "cow")) {
+      sql(s"UPDATE graft_fcc.db.$t SET v = v + 1 WHERE id = 7")
+      sql(s"DELETE FROM graft_fcc.db.$t WHERE id = 150")
+    }
+    GraftMaintenance.compactTable(spark,
+      TestTables.at(s"countfs://$warehouse/counted/db/mor"))
+    val touched = CountingFs.touched
+    assert(touched.exists(_.startsWith("create ")) &&
+      touched.exists(_.contains(s"/${GraftFileLog.Stats.dirName}/")),
+      "the counting file system sees the commits and their stats log")
+    val bloom = touched.filter(_.contains(GraftFileLog.Bloom.dirName))
+    assert(bloom.isEmpty, bloom.mkString("\n"))
+    assert(sql("SELECT count(*), sum(v) FROM graft_fcc.db.mor").head() ==
+      sql("SELECT count(*), sum(v) FROM graft_fcc.db.cow").head())
   }
 
   // ---- no-op day compaction ---------------------------------------------

@@ -114,10 +114,10 @@ class GraftOrphansSpec extends SparkSpec {
     val dirB = new org.apache.hadoop.fs.Path(s"$warehouse/db/vb")
     val fb = GraftTable.dataFiles(fs, dirB).head
     val name = new org.apache.hadoop.fs.Path(fb).getName
-    val real = GraftStats.readAll(fs, dirB)(name)
-    GraftStats.retain(fs, dirB, _ => false) // drop all entries
-    GraftStats.writeCommitStats(fs, dirB,
-      Seq(name -> real.copy(rows = real.rows + 7)))
+    val real = GraftFileLog.stats(fs, dirB)(name)
+    GraftFileLog.retain(fs, dirB, _ => false) // drop all entries
+    GraftFileLog.publish(fs, dirB,
+      Seq(name -> real.copy(rows = real.rows + 7)), Nil)
     val fb1 = sql(
       "SELECT * FROM graft_verify_snapshot('graft_or', 'db.vb', 'deep')")
       .collect()

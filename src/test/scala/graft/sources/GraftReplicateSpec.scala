@@ -174,7 +174,7 @@ class GraftReplicateSpec extends SparkSpec {
     GraftReplicate.replicate(spark, TestTables.at(src), mir)
     // a stats twin the source no longer has (consolidation / re-key on
     // the source between syncs leaves exactly this shape on the mirror)
-    val stale = new Path(mir, s"${GraftStats.StatsDirName}/stats-zzz-stale.txt")
+    val stale = new Path(mir, s"${GraftFileLog.Stats.dirName}/stats-zzz-stale.txt")
     val out = fs.create(stale, true)
     out.write("bogus\n".getBytes("UTF-8")); out.close()
     GraftReplicate.replicate(spark, TestTables.at(src), mir)

@@ -59,7 +59,7 @@ class GraftSortSpec extends SparkSpec {
     val total = dataFiles("s1").size
     assert(total > 1, s"need a multi-file layout, got $total")
     // per-file [min,max] must be DISJOINT — the range shuffle's promise
-    val entries = GraftStats.readAll(fs, tdir("s1"))
+    val entries = GraftFileLog.stats(fs, tdir("s1"))
     val ranges = dataFiles("s1").map(f => entries(new org.apache.hadoop.fs.Path(f).getName))
       .map(st => (st.cols("k").min.get.toLong, st.cols("k").max.get.toLong))
       .sortBy(_._1)

@@ -26,7 +26,7 @@ class GraftStatsSpec extends SparkSpec {
     (r, GraftParquetFilters.footerProbes.get() - before)
   }
   private def statsDir(table: String) =
-    new java.io.File(s"$warehouse/db/$table/${GraftStats.StatsDirName}")
+    new java.io.File(s"$warehouse/db/$table/${GraftFileLog.Stats.dirName}")
 
   override def beforeAll(): Unit = {
     super.beforeAll()
@@ -133,7 +133,7 @@ class GraftStatsSpec extends SparkSpec {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val live = GraftTable.dataFiles(fs, dir)
       .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-    val recorded = GraftStats.readAll(fs, dir).keySet
+    val recorded = GraftFileLog.stats(fs, dir).keySet
     assert(recorded == live,
       s"stats must track exactly the live files: $recorded vs $live")
     val (n, footer) = probes {
@@ -143,7 +143,7 @@ class GraftStatsSpec extends SparkSpec {
     // compaction goes through Spark's writer -> stats lifted from footers
     GraftMaintenance.compactTable(spark, TestTables.at(s"$warehouse/db/t4"),
       targetBytes = 1L << 20, sortCols = Seq("k"))
-    val after = GraftStats.readAll(fs, dir).keySet
+    val after = GraftFileLog.stats(fs, dir).keySet
     val liveAfter = GraftTable.dataFiles(fs, dir)
       .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     assert(after == liveAfter)
@@ -179,7 +179,7 @@ class GraftStatsSpec extends SparkSpec {
     // VALUES rows may split across tasks -> one file per row; the file
     // holding the NaN row must be poisoned (no bounds despite 0 nulls),
     // and null counts must sum across the commit
-    val all = GraftStats.readAll(fs, dir).values.toSeq
+    val all = GraftFileLog.stats(fs, dir).values.toSeq
     assert(all.map(_.cols("x").nulls).sum == 1)
     assert(all.exists(st => st.cols("x").min.isEmpty &&
       st.cols("x").max.isEmpty && st.cols("x").nulls == 0 && st.rows > 0),
@@ -236,7 +236,7 @@ class GraftStatsSpec extends SparkSpec {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val live = GraftTable.dataFiles(fs, dir)
       .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-    assert(GraftStats.readAll(fs, dir).keySet == live)
+    assert(GraftFileLog.stats(fs, dir).keySet == live)
   }
 
   test("tracker matches a naive reference on randomized typed rows") {
@@ -328,13 +328,13 @@ class GraftStatsSpec extends SparkSpec {
     // hold a bounded file count, not one file per commit
     val logFiles = statsDir("many").listFiles()
       .filter(_.getName.endsWith(".txt"))
-    assert(logFiles.length <= GraftStats.MaxStatsFiles + 1,
+    assert(logFiles.length <= GraftFileLog.MaxFiles + 1,
       s"stats log grew to ${logFiles.length} files over $nCommits commits")
     // no entry was lost in the folds: every data file still has stats,
     // and pruning still plans exactly the matching commit's file
     val dir = new org.apache.hadoop.fs.Path(s"$warehouse/db/many")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val all = GraftStats.readAll(fs, dir)
+    val all = GraftFileLog.stats(fs, dir)
     assert(all.size == nCommits,
       s"expected $nCommits stats entries, got ${all.size}")
     val (n, probed) = probes(

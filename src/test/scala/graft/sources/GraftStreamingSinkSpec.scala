@@ -170,7 +170,7 @@ class GraftStreamingSinkSpec extends SparkSpec {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val live = GraftTable.dataFiles(fs, dir)
       .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-    val idx = GraftBloom.readAll(fs, dir)
+    val idx = GraftFileLog.blooms(fs, dir)
     // every committed epoch file carries BOTH entries, no build call ever
     assert(live.nonEmpty && live.forall(n =>
       idx.contains((n, "id")) && idx.contains((n, "body#trgm"))),
